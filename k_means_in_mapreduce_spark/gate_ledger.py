@@ -383,17 +383,9 @@ PRIORITY_OVERRIDE: list[str] = [
     # Default EMPTY (VERDICT r5 item 1): every entry listed here jumps
     # the derived ordering, so a populated list starves the
     # oldest-green-first rotation.  Add a name ONLY for a known
-    # wrong-answer risk that must gate before the backlog tier.
-    #
-    # r22: the ONLY queries whose computation was restructured this round
-    # (connected-components rounds: groupBy+join -> window, lazy
-    # checkpoints — result proven set-identical, oracle MATCH in
-    # driver-sim at sf0.01) would otherwise fall just past the 50-query
-    # window (they were r21-checked, so the oldest-green rotation ranks
-    # them last).  A this-round result-shape restructure is exactly the
-    # "must gate before the backlog" case; the two names they displace
-    # (kmeans_fit_mllib/_bisecting) are r21-hash-green and UNTOUCHED this
-    # round.
-    "dedup_groups_star",
-    "dedup_connected_components",
+    # wrong-answer risk that must gate before the backlog tier.  A name
+    # whose code changed since its last green row is already tier 1 from
+    # its fingerprint alone, so listing it here is redundant — and once it
+    # gates green again, a stale entry would keep displacing the rotation
+    # (tests/test_gate_ledger.py fails on any current-green override).
 ]

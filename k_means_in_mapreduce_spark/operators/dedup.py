@@ -288,8 +288,8 @@ def _dedup_artifact(
 
 def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once exact near-dup pair list: :func:`jaccard_pairs` is the
-    upstream of SIX consumers — the pair query itself, both
-    connected-component groupings, and the three recall metrics — and
+    upstream of every pair consumer — the pair query itself, the
+    connected-component grouping, and the three recall metrics — and
     recomputing the shingle -> posting -> verify pipeline for each was
     the single largest redundant cost in the dedup family."""
     return _dedup_artifact(
@@ -308,115 +308,31 @@ def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Connected components over the near-dup pair graph (keeper selection)
 # ---------------------------------------------------------------------------
-def connected_components(
-    edges: DataFrame, src: str = "doc_a", dst: str = "doc_b", max_iter: int = 50
-) -> DataFrame:
-    """Connected components by iterative min-label propagation: every node
-    starts labeled with itself; each round a node takes the min of its own
-    and its neighbors' labels; converge when no label changes. Returns
-    (doc_id, component) where component = min doc_id reachable.
-
-    This is what turns near-dup PAIRS into dedup GROUPS (keeper = the
-    component id, i.e. lowest doc_id — the same deterministic keeper
-    policy as dedup_exact).
-
-    Scale shape: per round ONE join (labels onto the static symmetrized
-    edge list) + one min-groupBy — O(E) shuffle per round, rounds =
-    graph diameter. Near-dup components are short chains/cliques
-    (diameter ~2-4), so this settles in a handful of rounds; for
-    adversarially long paths the alternating large-star/small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) halves diameter per round — same join/agg
-    primitives, swap-in compatible. Each round ``localCheckpoint``s the
-    labels: the loop would otherwise double the plan depth per round and
-    choke the optimizer long before the data hurts.
-    """
-    und = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    und = (
-        und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = und.select(F.col("a").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-
-    def _label_checksum(df: DataFrame) -> tuple:
-        # count + order-insensitive xor-hash: ONE aggregate job replaces
-        # the labels-vs-labels self-join + count this loop used to pay
-        # every round for convergence detection (same fixed-point test as
-        # connected_components_star; a 64-bit collision masking a real
-        # change is negligible). Min-label propagation never changes the
-        # node set, so equal checksums mean equal label assignments.
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.bit_xor(F.xxhash64("node", "label")), F.lit(0)
-            ).alias("h"),
-        ).first()
-        return row["n"], row["h"]
-
-    prev_ck = _label_checksum(labels)
-    changed = True
-    for _ in range(max_iter):
-        neighbor = und.join(
-            labels, und["b"] == labels["node"]
-        ).select(und["a"].alias("node"), "label")
-        new_labels = (
-            neighbor.union(labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            # lazy: the checksum below materializes the checkpoint inside
-            # the same loop step — one job per round instead of two (see
-            # the identical note in connected_components_star)
-            .localCheckpoint(eager=False)
-        )
-        ck = _label_checksum(new_labels)
-        changed = ck != prev_ck
-        prev_ck = ck
-        labels = new_labels
-        if not changed:
-            break
-    if changed:
-        # Exiting via max_iter with labels still moving would silently
-        # return SPLIT components (wrong groups). Near-dup graphs have
-        # diameter ~2-4, so hitting this means an adversarial long chain:
-        # fail loudly; the large-star/small-star variant (see docstring)
-        # is the diameter escape if such graphs become real.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(labels still changing); graph diameter exceeds max_iter — "
-            "raise max_iter or switch to large-star/small-star"
-        )
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("component")
-    )
-
-
-def connected_components_star(
-    edges: DataFrame, src: str = "doc_a", dst: str = "doc_b", max_iter: int = 25
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the log-diameter escape for graphs where plain min-label
-    propagation's O(diameter) rounds are too many.
+def connected_components_star(edges: DataFrame, max_iter: int = 25) -> DataFrame:
+    """Connected components of the ``(doc_a, doc_b)`` edge list via
+    alternating large-star/small-star rounds (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14). Returns
+    ``(doc_id, component)`` with component = the minimum doc_id reachable:
+    this turns near-dup PAIRS into dedup GROUPS, and the keeper is the
+    lowest doc_id — the same deterministic keeper policy as dedup_exact.
 
     - large-star: every node points its LARGER neighbors at the minimum
       of its neighborhood (incl. itself);
     - small-star: every node points its smaller-or-equal neighbors (and
       itself) at that minimum.
 
-    Each round is two groupBy/join passes over the current edge set —
-    same primitives and shuffle budget per pass as label propagation,
-    but the edge set converges to component stars in O(log d) rounds
-    instead of O(d). Fixed point = the small-star output equals its
-    input (checked by count + order-insensitive xxhash64 checksum; a
-    64-bit collision masking a real change is negligible). Returns the
-    same (doc_id, component = min reachable id) contract as
-    :func:`connected_components`, and raises rather than returning split
-    components if max_iter is exhausted."""
+    Each round is one window pass per star over the current edge set; the
+    edge set converges to component stars in O(log d) rounds for graph
+    diameter d, so long chains need no more rounds than short ones.
+    Fixed point = the small-star output equals its input (checked by
+    count + order-insensitive xxhash64 checksum; a 64-bit collision
+    masking a real change is negligible). Raises rather than returning
+    split components if max_iter is exhausted.
+
+    Self-loops are dropped before the first round: a node whose only edge
+    is ``(n, n)`` gets no row, and an empty edge list gives no rows.
+    Near-dup pairs never carry self-loops (``jaccard_pairs`` emits
+    ``doc_a < doc_b``), so this never changes a query's output."""
 
     from pyspark.sql import Window as W
 
@@ -479,7 +395,8 @@ def connected_components_star(
 
     e = (
         edges.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
+            F.col("doc_a").cast("long").alias("u"),
+            F.col("doc_b").cast("long").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -521,9 +438,9 @@ def connected_components_star(
     )
 
 
-@query(
-    "dedup_groups_star",
-    f"""
+# Oracle for both CC query names: the same components as a recursive-CTE
+# transitive closure over the identical deterministic pair set.
+_CC_SQL = f"""
     WITH RECURSIVE pairs AS ( {_JACCARD_SQL} ),
     und AS (
         SELECT doc_a AS a, doc_b AS b FROM pairs
@@ -537,42 +454,17 @@ def connected_components_star(
     )
     SELECT node AS doc_id, min(peer) AS component
     FROM reach GROUP BY node
-    """,
-)
+    """
+
+
+@query("dedup_connected_components", _CC_SQL)
+@query("dedup_groups_star", _CC_SQL)
 def dedup_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup dedup groups via the log-diameter large-star/small-star
-    algorithm — same oracle (recursive-CTE transitive closure) and same
-    result as ``dedup_connected_components``, different round complexity:
-    this is the variant a 100 TB web-graph-scale dedup actually runs."""
+    """Full near-dup dedup groups: exact Jaccard pairs -> connected
+    components (:func:`connected_components_star`) -> (doc_id, component).
+    Registered under both CC query names; they are one query."""
     pairs = near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
     return connected_components_star(pairs)
-
-
-@query(
-    "dedup_connected_components",
-    f"""
-    WITH RECURSIVE pairs AS ( {_JACCARD_SQL} ),
-    und AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION
-        SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(node, peer) AS (
-        SELECT a, a FROM und
-        UNION
-        SELECT r.node, u.b FROM reach r JOIN und u ON r.peer = u.a
-    )
-    SELECT node AS doc_id, min(peer) AS component
-    FROM reach GROUP BY node
-    """,
-)
-def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full near-dup dedup groups: exact Jaccard pairs -> connected
-    components -> (doc_id, component). The oracle computes the same
-    components via a recursive-CTE transitive closure — exact parity
-    because both sides consume the identical deterministic pair set."""
-    pairs = near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    return connected_components(pairs)
 
 
 # ---------------------------------------------------------------------------

@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 
 from k_means_in_mapreduce_spark import registry
+from k_means_in_mapreduce_spark.operators.dedup import connected_components_star
 from k_means_in_mapreduce_spark.sources import load_table
 
 from .conftest import SF001
@@ -171,63 +172,71 @@ def test_hot_shingle_cap_bounds_pairs_keeps_scores_exact(spark):
     assert (300, 301) not in capped
 
 
-def test_star_cc_matches_label_propagation_and_handles_deep_chains(spark):
-    """large-star/small-star must (a) agree with min-label propagation on
-    a mixed synthetic graph, and (b) solve a diameter-300 chain — which
-    label propagation at its default max_iter=50 must refuse (raise), not
-    silently mis-group — in O(log d) rounds."""
-    import pytest
+def _union_find_components(edges):
+    """Driver-side reference: {(node, min id of its component)}."""
+    parent = {}
 
-    from k_means_in_mapreduce_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-    # (a) chain + triangle + pair, same fixture shape as the test below
-    edges = [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (12, 10), (20, 21)]
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in parent}
+
+
+CHAIN_300 = [(i, i + 1) for i in range(300)]
+
+
+def _hub_and_chain_edges(n_leaves=2000, chain_len=300, seed=0):
+    """One hub with n_leaves leaves, a chain_len-deep chain hanging off
+    one leaf, and ids randomly permuted so the component minimum sits at
+    no fixed position (neither hub nor chain end)."""
+    n = 1 + n_leaves + chain_len
+    ids = np.random.default_rng(seed).permutation(n).tolist()
+    edges = [(0, i) for i in range(1, n_leaves + 1)]
+    edges += [(i, i + 1) for i in range(n_leaves, n - 1)]
+    return [(ids[a], ids[b]) for a, b in edges]
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        # chain 0-1-2-3-4 (diameter 4), a triangle, and an isolated pair
+        [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (12, 10), (20, 21)],
+        CHAIN_300,
+        _hub_and_chain_edges(),
+        [],
+    ],
+    ids=["mixed", "chain300", "hub2000_chain300", "empty"],
+)
+def test_star_cc_matches_union_find(spark, edges):
+    """large-star/small-star gives every node its component's minimum id,
+    exactly as a driver-side union-find does — on short components, a
+    diameter-300 chain, a 2000-leaf hub with that chain attached, and an
+    empty graph (no rows)."""
     e = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got_star = {
-        (r.doc_id, r.component) for r in connected_components_star(e).collect()
-    }
-    got_prop = {
-        (r.doc_id, r.component) for r in connected_components(e).collect()
-    }
-    assert got_star == got_prop
-
-    # (b) a 300-deep chain: star converges (~log2(300) alternating rounds)
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(300)], "doc_a long, doc_b long"
-    )
-    star = connected_components_star(chain).collect()
-    assert {r.component for r in star} == {0}
-    assert {r.doc_id for r in star} == set(range(301))
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain)  # diameter 300 > default max_iter=50
+    got = [(r.doc_id, r.component) for r in connected_components_star(e).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == _union_find_components(edges)
 
 
-def test_connected_components_synthetic_graph(spark):
-    """Min-label propagation on a graph needing multiple rounds: a chain
-    0-1-2-3-4 (diameter 4), a separate triangle, and an isolated pair.
-    Every node must land on its component's minimum id."""
-    from k_means_in_mapreduce_spark.operators.dedup import (
-        connected_components,
-    )
+def test_star_cc_max_iter_guard_and_self_loops(spark):
+    """Exhausting max_iter raises instead of returning split components,
+    and self-loops are dropped: a node whose only edge is (n, n) gets no
+    row."""
+    chain = spark.createDataFrame(CHAIN_300, "doc_a long, doc_b long")
+    with pytest.raises(RuntimeError, match="did not reach a fixed point"):
+        connected_components_star(chain, max_iter=1)
 
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (3, 4),  # chain
-         (10, 11), (11, 12), (10, 12),    # triangle
-         (20, 21)],                        # pair
-        "doc_a long, doc_b long",
-    )
-    got = {
-        r["doc_id"]: r["component"]
-        for r in connected_components(edges).collect()
-    }
-    assert got == {
-        0: 0, 1: 0, 2: 0, 3: 0, 4: 0,
-        10: 10, 11: 10, 12: 10,
-        20: 20, 21: 20,
-    }, got
+    loops = spark.createDataFrame([(5, 5), (1, 2)], "doc_a long, doc_b long")
+    got = {(r.doc_id, r.component) for r in connected_components_star(loops).collect()}
+    assert got == {(1, 1), (2, 1)}
 
 
 def test_exact_dedup_copies(spark):

@@ -194,6 +194,20 @@ def test_priority_override_names_are_all_registered():
     assert not missing, sorted(missing)
 
 
+def test_priority_override_names_are_not_current_green():
+    """An override exists to gate a query the derived order would rank
+    late; one that is current-green (tier 2) at its fingerprint has
+    already gated and only starves the oldest-green rotation — drop it."""
+    entries = gl.load_ledger().get("queries", {})
+    green = [
+        n
+        for n in gl.PRIORITY_OVERRIDE
+        if n in registry.QUERIES
+        and gl.query_tier(n, registry.QUERIES, entries)[0] == 2
+    ]
+    assert not green, green
+
+
 GREEN = {
     "rows_match": True, "schema_match": True, "hash_match": True,
     "spark_rows": 4, "oracle_rows": 4, "err": None,
