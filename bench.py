@@ -47,7 +47,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 BENCH_N = 100_000  # reference benchmark scale (BASELINE.md, Fig 3.1/3.5)
 # second published grid point (Fig 3.5: Hadoop ~26 s/iter, sequential
-# Python 0.24 s at n=400k) — arrow+mllib only, to bound bench wall time
+# Python 0.24 s at n=400k)
 BENCH_N_LARGE = 400_000
 BENCH_K = 4
 BENCH_ITERS = 5
@@ -200,7 +200,6 @@ def force(df) -> None:
 def bench_kmeans_iteration(
     spark,
     bench_n: int = BENCH_N,
-    methods: tuple = ("arrow", "expr"),
     repeats: int = BENCH_REPEATS,
 ) -> dict:
     """Seconds/iteration of the reference dataflow (assign -> CF agg ->
@@ -237,7 +236,7 @@ def bench_kmeans_iteration(
     K.cluster_features_arrow(pts, K.sample_initial_centroids(
         pts, BENCH_K, 42, "embedding"), "embedding")
 
-    # Median of ``repeats`` fits per method: same-code spread across runs
+    # Median of ``repeats`` fits per path: same-code spread across runs
     # reached 2.6x in round 3 (GC pauses, codegen compile landing inside
     # the timed region), which masked real round-over-round deltas.  The
     # median is robust to bad runs in either direction.  An explicit JVM
@@ -250,50 +249,36 @@ def bench_kmeans_iteration(
         except Exception:
             pass  # private API; a bench must never die on it
 
-    out = {"n": n}
-    for method in methods:
+    def _timed(run_fit) -> dict:
         walls, iters = [], 1
         for _ in range(repeats):
             _gc()
             t0 = time.monotonic()
-            model = K.fit(
-                pts,
-                K.KMeansConfig(
-                    k=BENCH_K, max_iter=BENCH_ITERS, tol=0.0, seed=42, method=method
-                ),
-            )
+            n_iter = run_fit()
             walls.append(time.monotonic() - t0)
-            iters = max(1, model.n_iter)
+            iters = max(1, n_iter)
         wall = statistics.median(walls)
-        out[method] = {
+        return {
             "iterations": iters,
             "sec_per_iter": wall / iters,
             "wall": wall,
             "spread": [round(w, 3) for w in sorted(walls)],
         }
 
+    out = {"n": n}
+    out["arrow"] = _timed(lambda: K.fit(
+        pts, K.KMeansConfig(k=BENCH_K, max_iter=BENCH_ITERS, tol=0.0, seed=42)
+    ).n_iter)
+
     # Production path (MLlib KMeans, random init so iteration count is the
     # comparable unit — k-means|| init would bill extra passes to iter 1;
-    # tol=0 runs exactly BENCH_ITERS Lloyd iterations like the paths above).
+    # tol=0 runs exactly BENCH_ITERS Lloyd iterations like the path above).
     from k_means_in_mapreduce_spark.operators.kmeans_mllib import fit_mllib
 
-    walls, iters = [], 1
-    for _ in range(repeats):
-        _gc()
-        t0 = time.monotonic()
-        res = fit_mllib(
-            pts, k=BENCH_K, max_iter=BENCH_ITERS, seed=42, tol=0.0,
-            init_mode="random",
-        )
-        walls.append(time.monotonic() - t0)
-        iters = max(1, res.n_iter)
-    wall = statistics.median(walls)
-    out["mllib"] = {
-        "iterations": iters,
-        "sec_per_iter": wall / iters,
-        "wall": wall,
-        "spread": [round(w, 3) for w in sorted(walls)],
-    }
+    out["mllib"] = _timed(lambda: fit_mllib(
+        pts, k=BENCH_K, max_iter=BENCH_ITERS, seed=42, tol=0.0,
+        init_mode="random",
+    ).n_iter)
 
     pts.unpersist()
     return out
@@ -395,9 +380,7 @@ def main() -> None:
     # within minutes regardless of driver memory (8g vs 16g) or a GC
     # settle sleep, so the spread list is reported as-is and the median
     # is the comparable number.
-    km4 = bench_kmeans_iteration(
-        spark, BENCH_N_LARGE, methods=("arrow",), repeats=5
-    )
+    km4 = bench_kmeans_iteration(spark, BENCH_N_LARGE, repeats=5)
     hl_after_kmeans = read_host_load()
 
     # Warm column = min over the runs AFTER the first (steady state: the
@@ -428,10 +411,9 @@ def main() -> None:
     result_file = os.path.join(repo, "BENCH_RESULT.json")
 
     per_query["_kmeans_100k_per_iter_arrow"] = round(km["arrow"]["sec_per_iter"], 3)
-    per_query["_kmeans_100k_per_iter_expr"] = round(km["expr"]["sec_per_iter"], 3)
     per_query["_kmeans_100k_per_iter_mllib"] = round(km["mllib"]["sec_per_iter"], 3)
     # second published grid point (Fig 3.5: Hadoop ~26 s/iter, sequential
-    # Python 0.24 s); arrow only — the expr path's unit is pinned at 100k
+    # Python 0.24 s)
     per_query["_kmeans_400k_per_iter_arrow"] = round(km4["arrow"]["sec_per_iter"], 3)
     per_query["_kmeans_400k_per_iter_mllib"] = round(km4["mllib"]["sec_per_iter"], 3)
 
@@ -439,18 +421,16 @@ def main() -> None:
     kmeans_grid_load = host_load_delta(hl_start, hl_after_kmeans)
     result = {
         # headline = the engine's own Arrow dataflow (assign -> CF agg),
-        # the recommended production fit path; the expression-oracle and
-        # MLlib numbers ride alongside so no reader has to guess which
-        # path "value" is (VERDICT r6 item 3: 0.325 matched neither label)
+        # the recommended production fit path; the MLlib numbers ride
+        # alongside so no reader has to guess which path "value" is
+        # (VERDICT r6 item 3: 0.325 matched neither label)
         "metric": "kmeans_sec_per_iteration_n100k_arrow",
         "value": round(km["arrow"]["sec_per_iter"], 3),
-        "value_expr": round(km["expr"]["sec_per_iter"], 3),
         "value_mllib": round(km["mllib"]["sec_per_iter"], 3),
         # min-of-reps companions (see iter_min): the contention-robust
         # reading of the same grid — "value" stays the median so the
         # round-over-round trend keeps comparing like with like
         "value_min": iter_min(km["arrow"]),
-        "value_min_expr": iter_min(km["expr"]),
         "value_min_mllib": iter_min(km["mllib"]),
         "unit": "sec",
         "queries": per_query,
@@ -462,11 +442,8 @@ def main() -> None:
             "n": km["n"],
             "k": BENCH_K,
             "iterations": km["arrow"]["iterations"],
-            "sec_per_iter_expr": round(km["expr"]["sec_per_iter"], 3),
             "sec_per_iter_mllib": round(km["mllib"]["sec_per_iter"], 3),
-            "total_wall_sec": round(
-                km["arrow"]["wall"] + km["expr"]["wall"], 3
-            ),
+            "total_wall_sec": round(km["arrow"]["wall"], 3),
         },
         "kmeans_400k": {
             "n": km4["n"],
@@ -492,7 +469,7 @@ def main() -> None:
             kmeans_grid_load,
         ),
         "contention_evidence": (
-            "value/value_expr/value_mllib are medians a contended box can "
+            "value/value_mllib are medians a contended box can "
             "inflate; adjudicate outliers against value_min* (min-of-reps, "
             "uninflatable by a noisy neighbor), the kmeans_spreads rep "
             "lists, the host_load steal/busy fractions above, and the "
@@ -503,7 +480,6 @@ def main() -> None:
         # medians
         "kmeans_spreads": {
             "arrow_100k": km["arrow"]["spread"],
-            "expr_100k": km["expr"]["spread"],
             "mllib_100k": km["mllib"]["spread"],
             "arrow_400k": km4["arrow"]["spread"],
             "mllib_400k": km4["mllib"]["spread"],

@@ -127,7 +127,7 @@ def session_df_memo(memo: dict, key: tuple, spark: SparkSession, build):
     stale plan. Entries whose session died are evicted on the next
     insert — a memoized plan strong-references its session, so without
     eviction dead sessions would stay pinned for process lifetime — and
-    the memo is capped at _MEMO_CAP entries (oldest-inserted dropped):
+    the memo is capped at _MEMO_CAP entries (least-recently-used dropped):
     entries for a LIVE session whose source was since regenerated carry a
     dead fingerprint in their key and would otherwise accumulate without
     bound in a long-lived session that regenerates data repeatedly
@@ -136,12 +136,13 @@ def session_df_memo(memo: dict, key: tuple, spark: SparkSession, build):
 
     hit = memo.get(key)
     if hit is not None and hit[0]() is spark:
+        memo[key] = memo.pop(key, hit)  # a hit moves to the end: LRU eviction
         return hit[1]
     df = build()
     for k in [k for k, v in memo.items() if v[0]() is None]:
         del memo[k]
     while len(memo) >= _MEMO_CAP:
-        del memo[next(iter(memo))]  # dicts iterate in insertion order
+        del memo[next(iter(memo))]  # least recently used comes first
     memo[key] = (weakref.ref(spark), df)
     return df
 

@@ -91,7 +91,6 @@ def main(argv: list[str] | None = None) -> int:
     from .sources.text_points import parse_points
 
     seed = int(os.environ.get("SPARK_GRAFT_SEED", "42"))
-    method = os.environ.get("SPARK_GRAFT_KMEANS_METHOD", "arrow")
     spark = get_session(
         app_name="kmeans-cli", shuffle_partitions=num_reducer
     )
@@ -107,8 +106,7 @@ def main(argv: list[str] | None = None) -> int:
     pts = parse_points(spark, inp).cache()
     try:
         return _run_fit(
-            pts, spark, k, dim, max_iter, epsilon, seed, method, inp, out,
-            fidelity,
+            pts, spark, k, dim, max_iter, epsilon, seed, inp, out, fidelity,
         )
     finally:
         pts.unpersist()
@@ -178,8 +176,7 @@ def _write_centroid_text(spark, centroids, path) -> None:
 
 
 def _run_fit(
-    pts, spark, k, dim, max_iter, epsilon, seed, method, inp, out,
-    fidelity=False,
+    pts, spark, k, dim, max_iter, epsilon, seed, inp, out, fidelity=False,
 ) -> int:
     from pyspark.sql import functions as F
 
@@ -282,7 +279,6 @@ def _run_fit(
             tol=epsilon,
             seed=seed,
             features_col="features",
-            method=method,
         ),
     )
 
@@ -363,7 +359,7 @@ def _run_fit(
                 shutil.rmtree(stale)
 
     report = model.report()
-    report.update({"input": inp, "output": out, "seed": seed, "method": method})
+    report.update({"input": inp, "output": out, "seed": seed})
     # os-level writes can't address a URI output (hdfs://, s3a://): the
     # centroids land remotely via the Spark writer, but the report and
     # cumulative log fall back to the CURRENT WORKING DIRECTORY — which

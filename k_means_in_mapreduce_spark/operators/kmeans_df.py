@@ -1,9 +1,8 @@
-"""Lloyd's k-means as a declarative DataFrame loop — reference-exact semantics.
+"""Lloyd's k-means with the reference's semantics.
 
-This is the fidelity layer: it reproduces the *intended* semantics of the
-reference MapReduce job (LucaArduini/k-means_in_MapReduce,
-``kmeans/src/main/java/it/unipi/hadoop/KMeans.java``) using only built-in
-Catalyst expressions and ``groupBy().agg()``:
+This reproduces the *intended* semantics of the reference MapReduce job
+(LucaArduini/k-means_in_MapReduce,
+``kmeans/src/main/java/it/unipi/hadoop/KMeans.java``):
 
 - random-k-rows init, seeded (reference C1, ``KMeans.java:276-312`` — the
   reference's ``Random`` is unseeded; we take an explicit seed so runs are
@@ -11,26 +10,28 @@ Catalyst expressions and ``groupBy().agg()``:
 - per-row nearest-centroid assignment with lowest-index tie-break
   (``Point.java:57-71``)
 - per-cluster (sum, count) clustering feature -> mean
-  (``ClusteringFeature.java:8-70``). Spark's HashAggregate partial mode IS
-  the reference's in-mapper combiner (``KMeans.java:33-67``): partial
-  (sum,count) per task, shuffle O(tasks·k·d), final merge — no hand-rolling.
+  (``ClusteringFeature.java:8-70``)
 - convergence when Σ_i ‖c_i_old − c_i_new‖₂ < epsilon (sum over clusters of
   L2 movement — reference C3, ``KMeans.java:206-213``)
 - empty-cluster policy: discard ALL centroids and re-sample k fresh ones
   (reference C4, ``KMeans.java:167-171``)
+
+:func:`fit` iterates :func:`cluster_features_arrow`, the reference's
+in-mapper combiner (``KMeans.java:33-67``) over Arrow batches. The same
+Lloyd step as a DataFrame of Catalyst expressions, :func:`cluster_features`
+over :func:`assign_clusters`, serves streaming, ``__spark_entry__.entry``
+and the text-egress query, where the DuckDB oracle checks it.
 
 Scale design (100 TB, 1000 executors):
 - the input is cached once and re-scanned per iteration (the canonical
   Spark-vs-MapReduce win; the reference re-reads HDFS every iteration,
   ``KMeans.java:147``). On a real cluster use ``StorageLevel.MEMORY_AND_DISK``
   (default for ``DataFrame.cache``) so partitions spill instead of OOM.
-- centroids travel as a k×d plan literal (broadcast with the task binary),
-  and come back as exactly k rows through ``collect()`` — driver state is
-  O(k·d), never O(n) (the reference's init reads the whole dataset into the
-  driver, ``KMeans.java:292-298``; we use distributed ``takeSample``).
-- per-iteration shuffle volume is O(shuffle_partitions · k · d) doubles,
-  independent of n — same asymptotics as the reference's in-mapper combiner
-  but with Tungsten codegen row processing.
+- centroids travel as a k×d constant in the task closure; each Arrow batch
+  returns at most k (count, sum) rows, so per-iteration driver traffic is
+  O(batches·k·d) doubles, never O(n·d) (the reference's init reads the
+  whole dataset into the driver, ``KMeans.java:292-298``; we take a
+  distributed top-k sample).
 """
 
 from __future__ import annotations
@@ -55,11 +56,13 @@ class KMeansConfig:
     tol: float = 1e-4  # epsilon: stop when Σ‖Δc‖₂ < tol
     seed: int = 42
     features_col: str = "embedding"
-    # "expr": pure Catalyst expressions (oracle-checkable fidelity layer).
-    # "arrow": Arrow-batched NumPy in-mapper combiner via mapInPandas —
-    # ~3.5x faster per iteration (measured at n=100k, d=64, local[8]:
-    # 0.39s vs 1.34s); same protocol, same results up to fp summation order.
-    method: str = "expr"
+    # fit runs one loop, the Arrow in-mapper combiner; "arrow" is the only
+    # accepted value, kept for callers that still pass it
+    method: str = "arrow"
+
+    def __post_init__(self) -> None:
+        if self.method != "arrow":
+            raise ValueError(f"unknown method {self.method!r}: only 'arrow'")
 
 
 @dataclass
@@ -318,23 +321,20 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
     should give each its own session (``spark.newSession()`` — confs are
     per-session, the cache and cluster are shared).
     """
-    if config.method not in ("expr", "arrow"):
-        # fail fast: a typo'd method would otherwise silently run the
-        # ~3.5x slower expression path
-        raise ValueError(f"unknown method {config.method!r}: use 'expr' or 'arrow'")
     base = df.select(F.col(config.features_col).alias("features"))
 
     import time
 
     t_start = time.monotonic()
-    # AQE has nothing to optimize in the iteration loop (narrow map over a
-    # cache + a k·d-row collect — no exchanges to coalesce or re-plan) but
-    # charges ~40 ms of adaptive planning PER JOB; over max_iter sequential
-    # jobs that is a measurable fixed tax. The try/finally opens BEFORE
-    # the conf change and the cache: a failure anywhere (empty dataset,
-    # fewer-than-k rows in the init sample, a dying executor mid-count)
-    # must still restore AQE and release storage — embedded/notebook
-    # sessions outlive this call.
+    # AQE off for the loop, which has no exchange for it to re-plan. With
+    # AQE on, Spark 4.1 runs the cache fill and each exchange as separate
+    # jobs: 2-4 extra per fit (11 instead of 7 for a 5-iteration fit whose
+    # re-tile grows the partition count). With it off a fit runs exactly
+    # 2 + n_iter jobs: count, init sample, one per iteration (pinned by a
+    # test). The try/finally opens BEFORE the conf change and the cache: a
+    # failure anywhere (empty dataset, fewer-than-k rows in the init
+    # sample, a dying executor mid-count) must still restore AQE and
+    # release storage — embedded/notebook sessions outlive this call.
     sess = df.sparkSession
     prev_aqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
     iter_cache = None
@@ -389,30 +389,8 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
 
         for it in range(1, config.max_iter + 1):
             n_iter = it
-            if config.method == "arrow":
-                triples = cluster_features_arrow(points, centroids, "features")
-                by_id = {c: {"centroid": mean} for c, _n, mean in triples}
-            else:
-                assigned = assign_clusters(points, centroids, "features")
-                # collect the k·d (cluster, dim, mean) grid directly and
-                # reshape driver-side: the loop consumes plain lists, so
-                # cluster_features' second micro-aggregate (grid -> array
-                # column) would only build arrays we immediately unpack —
-                # skipping it removes one of the two shuffles per
-                # iteration. Driver traffic is the same O(k·d) scalars.
-                grid = (
-                    assigned.select(
-                        "cluster_id", F.posexplode("features").alias("_dim", "_v")
-                    )
-                    .groupBy("cluster_id", "_dim")
-                    .agg(F.avg("_v").alias("_m"))
-                    .collect()
-                )
-                by_id = {}
-                for r in grid:
-                    by_id.setdefault(
-                        r["cluster_id"], {"centroid": [0.0] * dim}
-                    )["centroid"][r["_dim"]] = r["_m"]
+            triples = cluster_features_arrow(points, centroids, "features")
+            by_id = {c: mean for c, _n, mean in triples}
             if len(by_id) < config.k:
                 # empty cluster -> discard all, re-sample fresh k (C4);
                 # new seed per event keeps the run deterministic.
@@ -424,7 +402,7 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
             # centroid index integrity (reference C5, KMeans.java:252-257)
             assert sorted(by_id) == list(range(config.k)), sorted(by_id)
 
-            new_centroids = [list(by_id[i]["centroid"]) for i in range(config.k)]
+            new_centroids = [by_id[i] for i in range(config.k)]
             move = _movement(centroids, new_centroids)
             history.append(move)
             centroid_history.append([list(c) for c in new_centroids])

@@ -3,8 +3,8 @@
 Per BASELINE.json ("spark_approach: MLlib KMeans clustering") this is the
 scale path: MLlib's implementation broadcasts centers, uses the
 ‖a−b‖² = ‖a‖²+‖b‖²−2a·b norm shortcut with BLAS-backed per-partition
-evaluation, and supports k-means|| init — strictly better constants than
-the expression path at 100 TB.
+evaluation (the same shortcut ``kmeans_df.fit``'s Arrow loop takes), and
+supports k-means|| init.
 
 Documented fidelity deltas vs the reference (SURVEY §2.11 C3/C4):
 - MLlib stops when EVERY center moves less than ``tol`` in squared

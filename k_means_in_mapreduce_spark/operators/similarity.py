@@ -286,10 +286,7 @@ def build_ivf_index(spark: SparkSession, sf_dir: str) -> tuple[list[list[float]]
             if centroids is None:
                 e = load_table(spark, sf_dir, "embeddings")
                 model = fit(
-                    e,
-                    KMeansConfig(
-                        k=IVF_CELLS, max_iter=5, tol=0.0, seed=7, method="arrow"
-                    ),
+                    e, KMeansConfig(k=IVF_CELLS, max_iter=5, tol=0.0, seed=7)
                 )
                 centroids = [list(map(float, c)) for c in model.centroids]
                 ed = assign_clusters(e, centroids).select(

@@ -242,7 +242,7 @@ def kmeans_fit_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     model = K.fit(
         emb,
-        K.KMeansConfig(k=10, max_iter=10, tol=1e-3, seed=42, method="arrow"),
+        K.KMeansConfig(k=10, max_iter=10, tol=1e-3, seed=42),
     )
     return _fit_invariants(K.assign_clusters(emb, model.centroids), k=10)
 

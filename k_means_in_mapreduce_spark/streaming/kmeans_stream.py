@@ -10,7 +10,8 @@ the deprecated DStream API (``StreamingKMeans``); here it is rebuilt on
 - per batch: nearest-centroid assignment against the CURRENT centroids
   (broadcast k×d plan literal — ``assign_clusters``) and the per-cluster
   (count, sum) clustering feature via the same posexplode hash-agg the
-  batch path uses (``cluster_features``); k rows cross to the driver.
+  oracle-checked batch queries use (``cluster_features``); k rows cross to
+  the driver.
 - decayed update (MLlib StreamingKMeans semantics):
       n_i' = a·n_i + m_i
       c_i' = (a·n_i·c_i + s_i) / n_i'        (a = decay)

@@ -465,8 +465,13 @@ def test_session_df_memo_capped(tmp_path):
 
     s = _S()
     memo: dict = {}
+    A.session_df_memo(memo, "hot", s, lambda: "hot-df")
     for i in range(3 * A._MEMO_CAP):
         A.session_df_memo(memo, ("k", i), s, lambda i=i: f"df{i}")
+        # a hit between inserts keeps the first-inserted entry live:
+        # eviction is least-recently-used, not insertion order
+        assert A.session_df_memo(memo, "hot", s, lambda: "rebuilt") == "hot-df"
     assert len(memo) <= A._MEMO_CAP
     # newest entries survive
     assert ("k", 3 * A._MEMO_CAP - 1) in memo
+    assert ("k", 0) not in memo

@@ -260,8 +260,6 @@ def test_incorporation_rotates_windowed_queries_behind_first_past_window(
     gate window) must sort BEHIND the first query that was past that
     window, so successive all-green rounds walk the whole registry
     instead of re-gating the same oldest prefix forever."""
-    import subprocess
-
     # real registered queries: incorporate_correctness stamps ONLY names
     # it can resolve against the live registry (unknown names are dropped)
     names = sorted(registry.QUERIES)[:4]
@@ -284,11 +282,13 @@ def test_incorporation_rotates_windowed_queries_behind_first_past_window(
     monkeypatch.setattr(gl, "LEDGER_PATH", str(path))
     assert gl.derive_order(sub_queries, oracles=set(names)) == window + past
 
-    head = subprocess.run(
-        ["git", "-C", gl.REPO_ROOT, "rev-parse", "HEAD"],
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    monkeypatch.setattr(gl, "_introducing_commit", lambda name: head)
+    # the round is gated on exactly the code now in the working tree. HEAD
+    # is not that tree while edits are uncommitted (they would make the
+    # re-proven queries look changed-since-green), so the gate tree is
+    # read from the working tree; git-ref stamping has its own tests
+    real_tree = gl._Tree
+    monkeypatch.setattr(gl, "_introducing_commit", lambda name: "gate-tree")
+    monkeypatch.setattr(gl, "_Tree", lambda ref: real_tree(None))
     # the driver gates the 2-slot window and re-proves it green (r5)
     _write_round(tmp_path, "r5", {n: GREEN for n in window})
     assert gl.incorporate_correctness(ledger, repo_root=str(tmp_path))

@@ -108,7 +108,7 @@ def test_empty_cluster_reinit(spark):
 
 
 def test_mllib_path_quality_parity(spark, emb):
-    """MLlib production path vs DF fidelity path: different init/stop rules
+    """MLlib production path vs the kmeans_df fit: different init/stop rules
     (documented deltas, kmeans_mllib.py docstring) can land in different
     local optima on these overlapping blobs, so we assert solution QUALITY
     parity — each path's WCSS within 25% of the other — plus shape checks."""
@@ -136,17 +136,69 @@ def test_text_roundtrip(spark, emb):
     assert bad == 0
 
 
-def test_arrow_method_parity(spark, emb):
-    """The Arrow/NumPy in-mapper-combiner path (method='arrow') produces the
-    same centroids as the pure-expression fidelity path, up to fp summation
-    order."""
-    cfg_e = K.KMeansConfig(k=5, max_iter=4, tol=0.0, seed=7, method="expr")
-    cfg_a = K.KMeansConfig(k=5, max_iter=4, tol=0.0, seed=7, method="arrow")
-    m_e, m_a = K.fit(emb, cfg_e), K.fit(emb, cfg_a)
-    assert m_a.n_iter == m_e.n_iter
-    np.testing.assert_allclose(
-        np.array(m_a.centroids), np.array(m_e.centroids), rtol=1e-9, atol=1e-12
+def test_arrow_step_matches_dataframe_step(spark, emb):
+    """The two Lloyd-step implementations agree on fixed centroids: the fit
+    loop's Arrow combiner (driver lists) and the DataFrame form that
+    streaming, the entry point and the oracle-checked queries use. The far
+    centroid attracts no point, so both must leave its id out."""
+    pts = emb.select(F.col("embedding").alias("features"))
+    rows = [
+        list(map(float, r[0]))
+        for r in emb.orderBy("vec_id").select("embedding").limit(3).collect()
+    ]
+    cents = [rows[0], rows[1], [1e3] * 64, rows[2]]
+    arrow = K.cluster_features_arrow(pts, cents, "features")
+    frame = sorted(
+        (r["cluster_id"], r["num_points"], r["centroid"])
+        for r in K.cluster_features(
+            K.assign_clusters(pts, cents, "features"), 64, "features"
+        ).collect()
     )
+    assert [(c, n) for c, n, _ in arrow] == [(c, n) for c, n, _ in frame]
+    assert [c for c, _, _ in arrow] == [0, 1, 3]
+    assert sum(n for _, n, _ in arrow) == emb.count()
+    np.testing.assert_allclose(
+        np.array([m for _, _, m in arrow]), np.array([m for _, _, m in frame]),
+        rtol=1e-9, atol=1e-12,
+    )
+
+
+def test_config_accepts_only_the_arrow_method():
+    assert K.KMeansConfig(k=2).method == "arrow"
+    with pytest.raises(ValueError, match="'expr'"):
+        K.KMeansConfig(k=2, method="expr")
+
+
+@pytest.mark.parametrize("partitions", [1, 12])
+def test_fit_job_count_and_aqe_restored(spark, partitions):
+    """fit turns AQE off for its loop because with it on Spark 4.1 runs the
+    cache fill and each exchange as separate jobs. With it off a fit runs
+    exactly 2 + n_iter jobs (cache count, init sample, one per iteration)
+    on both re-tile paths: 1 partition grown to the loop's target, 12
+    coalesced down to it. The session's AQE setting reads as before after
+    a fit, and after a fit that fails with fewer than k rows."""
+    sc = spark.sparkContext
+    df = spark.range(0, 240, 1, partitions).select(
+        F.array(F.col("id").cast("double"), F.sin("id")).alias("embedding")
+    )
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    group = f"fit-job-count-{partitions}"
+    sc.setJobGroup(group, group)
+    try:
+        m = K.fit(df, K.KMeansConfig(k=3, max_iter=3, tol=0.0, seed=5))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job start events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert m.n_iter == 3 and m.reinit_count == 0
+    assert len(jobs) == 2 + m.n_iter, sorted(jobs)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+
+    with pytest.raises(ValueError, match="fewer than k"):
+        K.fit(df.limit(2), K.KMeansConfig(k=3, max_iter=3, seed=5))
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
 
 
 def test_cli_reference_invocation(spark, tmp_path):
