@@ -1,8 +1,18 @@
-"""Build-once artifact machinery — a LEAF module by design.
+"""Build-once artifact machinery and the package's one in-process memo —
+a LEAF module by design.
+
+- ``materialized_artifact`` persists a deterministic derived DataFrame
+  as scratch parquet under ``.tmp/``, keyed on source content, params and
+  producing code; ``build_lock`` serializes rebuilds across processes.
+- ``source_fingerprint`` is the content key every freshness check uses;
+  it reads disk on every call.
+- ``session_df_memo`` / ``parquet_plan`` memoize reader PLANS (never data
+  or results) in ``_PLAN_MEMO``, keyed on the session and the source
+  fingerprint, so regenerated files always get a fresh plan.
 
 Nothing here imports from the package core (registry, operators,
 sources), so this file sits in the fingerprint cone ONLY of queries that
-actually serve artifacts. Hosting this machinery in a query-bearing
+actually serve artifacts or memoized plans. Hosting it in a query-bearing
 module (it used to live in sources/filesources.py, which registry.py
 pulls into EVERY query's cone) meant any tweak to it flipped all queries
 to "changed since green" and invalidated every on-disk artifact at once.
@@ -40,53 +50,16 @@ def _scratch(sf_dir: str, name: str) -> str:
     return os.path.join(_REPO_ROOT, ".tmp", f"{name}--{scratch_tag(sf_dir)}")
 
 
-# source_fingerprint memo: abs path -> (shallow stat signature, fingerprint).
-# The fingerprint became a per-invocation tax in r21 (it keys the reader-plan
-# memos, so EVERY query invocation calls it): for a directory table the full
-# recursive walk+stat is exactly the §6 listing cost the memos exist to avoid
-# — a million-object listing per invocation at 100 TB. The walk now runs only
-# when the shallow signature changes (see _shallow_sig for the staleness
-# contract); entries are tiny (two tuples), unbounded growth is not a concern
-# (one entry per distinct table path).
-_FP_MEMO: dict[str, tuple[tuple, str]] = {}
-
-
-def _shallow_sig(path: str) -> tuple:
-    """O(1) staleness signature for :func:`source_fingerprint`'s memo: the
-    stat of the path entry itself plus, for directories, the _SUCCESS
-    marker's stat. Regeneration always invalidates it on this repo's write
-    paths: a single-file table is covered exactly (its own size+mtime IS
-    the fingerprint input), and every directory table is written by Spark
-    ``mode("overwrite")``, which deletes and recreates the directory (new
-    inode + mtime) and rewrites _SUCCESS. The documented staleness trade:
-    a data file mutated IN PLACE inside a subdirectory, preserving the
-    root dir's entry and _SUCCESS, would be missed until process restart —
-    no supported writer does that."""
-    st = os.stat(path)
-    sig: tuple = (st.st_ino, st.st_mtime_ns, st.st_size)
-    if os.path.isdir(path):
-        try:
-            s = os.stat(os.path.join(path, "_SUCCESS"))
-            sig += (s.st_ino, s.st_mtime_ns, s.st_size)
-        except OSError:
-            sig += (None, None, None)
-    return sig
-
-
 def source_fingerprint(path: str) -> str:
     """Cheap content fingerprint of a parquet file/dir: name+size+mtime of
     every data file. Regenerated source data -> different fingerprint ->
     derived artifacts (bucketed copies, ANN indexes) are rebuilt instead
-    of silently reused. Memoized behind an O(1) shallow stat signature
-    (see :func:`_shallow_sig`) so the per-invocation cost is two stat
-    calls, not a recursive listing."""
+    of silently reused. Walks the path on every call: a single-file table
+    costs one stat, so there is nothing for a memo to save, and a
+    directory table rewritten in place is never missed."""
     import hashlib
 
     apath = os.path.abspath(path)
-    sig = _shallow_sig(apath)
-    hit = _FP_MEMO.get(apath)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
     parts = []
     if os.path.isdir(apath):
         for dirpath, _, files in sorted(os.walk(apath)):
@@ -102,38 +75,34 @@ def source_fingerprint(path: str) -> str:
     else:
         st = os.stat(apath)
         parts.append(f"{os.path.basename(apath)}:{st.st_size}:{st.st_mtime_ns}")
-    fp = hashlib.md5("|".join(parts).encode()).hexdigest()
-    _FP_MEMO[apath] = (sig, fp)
-    return fp
+    return hashlib.md5("|".join(parts).encode()).hexdigest()
 
-# bound for every session_df_memo dict: far above the working set (one
-# entry per live (table, session) pair — ~10 tables x a handful of live
-# sessions) while bounding stale-fingerprint growth
+
+# The package's one in-process memo: key -> (session weakref, DataFrame
+# plan). Building a parquet reader lists the path and reads footers on the
+# driver (~0.1 s at sf0.01); a memo hit costs ~0.1 ms. Capped at _MEMO_CAP
+# entries — far above the working set of ~10 tables plus a few artifacts
+# per live session.
+_PLAN_MEMO: dict = {}
 _MEMO_CAP = 64
 
 
-def session_df_memo(memo: dict, key: tuple, spark: SparkSession, build):
-    """Serve an immutable DataFrame PLAN memoized per session.
+def session_df_memo(key: tuple, spark: SparkSession, build):
+    """Serve an immutable DataFrame PLAN from :data:`_PLAN_MEMO`.
 
-    ONE implementation of the r21 reader-plan memo idiom (loaded tables,
-    served artifacts, the IVF cell reader): building a reader re-lists
-    the path and reads parquet footers on the driver every call, while
-    the resulting plan is immutable — every action over it still scans
-    the files themselves, so no data or results are ever cached. ``key``
-    must carry whatever identifies the plan's validity (source content
-    fingerprint, applicationId); the stored session weakref must
-    additionally point at the SAME session object, so a stopped or
-    recreated session (CPython reuses addresses) can never be served a
-    stale plan. Entries whose session died are evicted on the next
-    insert — a memoized plan strong-references its session, so without
-    eviction dead sessions would stay pinned for process lifetime — and
-    the memo is capped at _MEMO_CAP entries (least-recently-used dropped):
-    entries for a LIVE session whose source was since regenerated carry a
-    dead fingerprint in their key and would otherwise accumulate without
-    bound in a long-lived session that regenerates data repeatedly
-    (ADVICE r21)."""
+    A plan holds no data: every action over it still scans the files, so
+    no results are ever cached. ``key`` must carry whatever identifies the
+    plan's validity (source content fingerprint, applicationId); the
+    stored session weakref must additionally point at the SAME session
+    object, so a stopped or recreated session (CPython reuses addresses)
+    is never served a stale plan. Entries whose session died are evicted
+    on the next insert — a memoized plan strong-references its session —
+    and the least-recently-used entry is dropped beyond _MEMO_CAP, which
+    bounds the entries a live session leaves behind each time its source
+    is regenerated (their keys carry a dead fingerprint)."""
     import weakref
 
+    memo = _PLAN_MEMO
     hit = memo.get(key)
     if hit is not None and hit[0]() is spark:
         memo[key] = memo.pop(key, hit)  # a hit moves to the end: LRU eviction
@@ -147,10 +116,13 @@ def session_df_memo(memo: dict, key: tuple, spark: SparkSession, build):
     return df
 
 
-# In-process memo: (abs(sf_dir), artifact name) -> (full meta dict, path,
-# per-session DataFrame memo). The inner dict caches the served
-# spark.read.parquet PLAN per session via :func:`session_df_memo`.
-_ARTIFACT_CACHE: dict[tuple[str, str], tuple[dict, str, dict]] = {}
+def parquet_plan(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, memoized per session and per source
+    content fingerprint, so rewritten files get a fresh plan."""
+    apath = os.path.abspath(path)
+    key = (spark.sparkContext.applicationId, apath, source_fingerprint(apath))
+    return session_df_memo(key, spark, lambda: spark.read.parquet(path))
+
 
 def _meta_is(meta_file: str, data_dir: str, want: dict) -> bool:
     import json
@@ -252,25 +224,11 @@ def materialized_artifact(
     code_fp = importlib.import_module(
         f"{__package__}.gate_ledger"
     ).module_fingerprint(build.__module__)
-    src = os.path.join(sf_dir, source_file)
-    fp = source_fingerprint(src)
-    key = (os.path.abspath(sf_dir), name)
-    # the memo compares the FULL meta (params included) — comparing only
-    # the fingerprints would serve the first call's artifact to a second
-    # same-name call with different params
+    fp = source_fingerprint(os.path.join(sf_dir, source_file))
     want = {"fingerprint": fp, "code": code_fp, **params}
-    hit = _ARTIFACT_CACHE.get(key)
-    if hit is None or hit[0] != want:
-        root = _scratch(sf_dir, f"art_{name}")
-        data_dir = os.path.join(root, "data")
-        meta_file = os.path.join(root, "meta.json")
-        if not _meta_is(meta_file, data_dir, want):
-            _locked_rebuild(root, data_dir, meta_file, want, build)
-        _ARTIFACT_CACHE[key] = (want, data_dir, {})
-        hit = _ARTIFACT_CACHE[key]
-    return session_df_memo(
-        hit[2],
-        (spark.sparkContext.applicationId,),
-        spark,
-        lambda: spark.read.parquet(hit[1]),
-    )
+    root = _scratch(sf_dir, f"art_{name}")
+    data_dir = os.path.join(root, "data")
+    meta_file = os.path.join(root, "meta.json")
+    if not _meta_is(meta_file, data_dir, want):
+        _locked_rebuild(root, data_dir, meta_file, want, build)
+    return parquet_plan(spark, data_dir)

@@ -166,44 +166,6 @@ def _knn_join_exact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_CELLS = 16  # coarse-quantizer size
 IVF_PROBES = 6  # cells searched per query (6/16 of the data per probe)
 
-# In-process memo of built IVF indexes:
-# abspath(sf_dir) -> (source fingerprint, centroids, index_path).
-# The on-disk artifact (centroids.json + cell_id-partitioned parquet) is the
-# cross-process cache: a fresh session reloads it without re-fitting.
-_IVF_INDEX_CACHE: dict[str, tuple[str, list[list[float]], str]] = {}
-
-# Per-session reader-plan memo for the cell parquet (plans, never data —
-# see artifacts.session_df_memo): the partitioned index dir costs a
-# 16-directory listing + footer reads on the driver per spark.read call.
-_IVF_READER_MEMO: dict[tuple[str, str, str], tuple[object, DataFrame]] = {}
-
-
-def _read_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reader for the sf_dir's current IVF cell parquet. Self-contained:
-    resolves the index through ``build_ivf_index`` itself (a memo hit
-    when the caller just built it), so there is no call-ordering
-    contract to violate."""
-    import os
-
-    from ..artifacts import session_df_memo
-
-    _centroids, cells_dir = build_ivf_index(spark, sf_dir)
-    sf_key = os.path.abspath(sf_dir)
-    fp = _IVF_INDEX_CACHE[sf_key][0]
-    key = (spark.sparkContext.applicationId, sf_key, fp)
-    return session_df_memo(
-        _IVF_READER_MEMO, key, spark, lambda: spark.read.parquet(cells_dir)
-    )
-
-
-def _source_fingerprint(path: str) -> str:
-    """See :func:`..sources.filesources.source_fingerprint` (shared with
-    the bucketed-layout reuse check)."""
-    from ..artifacts import source_fingerprint
-
-    return source_fingerprint(path)
-
-
 def build_ivf_index(spark: SparkSession, sf_dir: str) -> tuple[list[list[float]], str]:
     """Build-once IVF-Flat index for an sf_dir: fit the seeded coarse
     quantizer (the engine's own Arrow-path k-means), assign every vector
@@ -237,7 +199,7 @@ def build_ivf_index(spark: SparkSession, sf_dir: str) -> tuple[list[list[float]]
     import os
 
     from ..functions.vector import l2_norm
-    from ..artifacts import _scratch
+    from ..artifacts import _scratch, source_fingerprint
     from .kmeans_df import KMeansConfig, assign_clusters, fit
 
     import importlib
@@ -248,12 +210,7 @@ def build_ivf_index(spark: SparkSession, sf_dir: str) -> tuple[list[list[float]]
         __package__.rsplit(".", 1)[0] + ".gate_ledger"
     ).module_fingerprint(__package__ + ".similarity")
     src = os.path.join(sf_dir, "embeddings.parquet")
-    fp = _source_fingerprint(src) + ":" + code_fp
-    key = os.path.abspath(sf_dir)
-    hit = _IVF_INDEX_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1], hit[2]
-
+    fp = source_fingerprint(src) + ":" + code_fp
     root = _scratch(sf_dir, "ivf_index")
     cells_dir = os.path.join(root, "cells")
     cent_file = os.path.join(root, "centroids.json")
@@ -319,17 +276,15 @@ def build_ivf_index(spark: SparkSession, sf_dir: str) -> tuple[list[list[float]]
                         fh,
                     )
                 os.replace(tmp, cent_file)  # atomic: no torn reads
-    _IVF_INDEX_CACHE[key] = (fp, centroids, cells_dir)
     return centroids, cells_dir
 
 
 @query("ann_ivf_topk")  # approximate — recall-tested vs the exact baseline
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) ANN probe: load the build-once index (fit is
-    skipped when the artifact exists — in-process memo or on-disk
-    centroids.json + partitioned cells), pick the query's IVF_PROBES
-    nearest cells driver-side (k small: O(k·d) scalar work), and exactly
-    re-rank only those cells' vectors by cosine via a partition-pruned
+    skipped when the on-disk centroids.json + partitioned cells match),
+    pick the query's IVF_PROBES nearest cells driver-side (k small:
+    O(k·d) scalar work), and exactly re-rank only those cells' vectors by cosine via a partition-pruned
     scan of the index."""
     centroids, cells_dir = build_ivf_index(spark, sf_dir)
     qv = _query_vector(spark, sf_dir)
@@ -337,9 +292,10 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = [sum((a - b) ** 2 for a, b in zip(qv, c)) for c in centroids]
     probes = sorted(range(IVF_CELLS), key=lambda i: (d2[i], i))[:IVF_PROBES]
 
+    from ..artifacts import parquet_plan
     from ..functions.vector import dot
 
-    idx = _read_ivf_cells(spark, sf_dir)
+    idx = parquet_plan(spark, cells_dir)
     qn = sum(x * x for x in qv) ** 0.5
     qunit = F.array(*[F.lit(float(x) / qn) for x in qv])
     # index vectors are stored pre-normalized -> cosine is ONE dot product
@@ -391,10 +347,11 @@ def ann_ivf_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition pruning, so only probed cell directories are read
     (asserted in tests/test_plans.py). Work per query ≈
     IVF_PROBES/IVF_CELLS of a full scan, exactly the IVF contract."""
+    from ..artifacts import parquet_plan
     from ..functions.vector import dot, l2_norm
 
     centroids, cells_dir = build_ivf_index(spark, sf_dir)
-    idx = _read_ivf_cells(spark, sf_dir)
+    idx = parquet_plan(spark, cells_dir)
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < KNN_JOIN_QUERY_MAX_ID).select(
         F.col("vec_id").alias("qid"),

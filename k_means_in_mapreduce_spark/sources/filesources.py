@@ -23,13 +23,9 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources import load_table
 
-from ..artifacts import _scratch, source_fingerprint  # noqa: F401 — re-export
+from ..artifacts import _scratch, source_fingerprint
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-
-
-
-
 
 
 @query(

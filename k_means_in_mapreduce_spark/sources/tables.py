@@ -36,17 +36,11 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# In-process memo of loaded-table DataFrames (plans, never data/results —
-# see artifacts.session_df_memo): spark.read.parquet() lists the path and
-# reads footers ON THE DRIVER to infer the schema, ~30-60 ms per call,
-# and the bench / driver harness invoke every query several times with
-# 1-3 tables each. Keyed on (applicationId, abs sf_dir, table, SOURCE
-# CONTENT FINGERPRINT) — the staleness rule of artifacts.py and the
-# streaming schema memo — so regenerated data rebuilds the plan.
-_TABLE_MEMO: dict[tuple[str, str, str, str], tuple[object, DataFrame]] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Normalized reader plan for ``<sf_dir>/<name>.parquet``, memoized in
+    the one plan memo (``artifacts.session_df_memo``) per session and
+    source content fingerprint: a rebuild lists the file and reads its
+    footer on the driver, and re-normalizing a raw plan costs ~9 ms."""
     import os
 
     from ..artifacts import session_df_memo, source_fingerprint
@@ -76,7 +70,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         name,
         source_fingerprint(os.path.join(sf_dir, f"{name}.parquet")),
     )
-    return session_df_memo(_TABLE_MEMO, key, spark, build)
+    return session_df_memo(key, spark, build)
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None) -> None:

@@ -27,7 +27,6 @@ bound both.
 from __future__ import annotations
 
 import itertools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,51 +48,22 @@ _EVENTS_RAW_SCHEMA = T.StructType(
 )
 
 
-# (sf_dir, spark application id, source fingerprint) -> probed stream
-# schema. Keyed on the applicationId, NOT id(spark): sessions are
-# recreated across tests and CPython reuses addresses after GC, so an
-# id() key could serve a schema probed under a dead session. Keyed on the
-# source CONTENT fingerprint too: a regenerated events.parquet can change
-# ts vintage (int64-nanos vs TIMESTAMP), and a stale schema would misread
-# it for the rest of the session — same staleness rule as artifacts.py.
-_PROBED_SCHEMA: dict[tuple[str, str, str], T.StructType] = {}
-
-
-def _remember_schema(key: tuple[str, str, str], schema: T.StructType) -> None:
-    """Insert with a size cap (ADVICE r21: stale-fingerprint / dead-session
-    entries never evicted — unbounded in a long-lived regenerating
-    session). Oldest-inserted entries drop first; a dropped live entry
-    only costs one re-probe."""
-    while len(_PROBED_SCHEMA) >= 64:
-        del _PROBED_SCHEMA[next(iter(_PROBED_SCHEMA))]
-    _PROBED_SCHEMA[key] = schema
-
-
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # The stream source needs an explicit schema; probe the actual file's
     # ts physical type with a batch read (generator vintages differ: int64
     # nanos vs TIMESTAMP(MICROS) — see sources.tables.normalize_event_ts).
-    # The probe costs a file listing + footer read (~0.1 s) and every
-    # streaming query pays it, so memoize per (sf_dir, session).
-    from ..artifacts import source_fingerprint
+    # The probe is a reader-plan build, so it is served from the plan memo.
+    from ..artifacts import parquet_plan
     from ..sources.tables import normalize_event_ts
 
-    key = (
-        os.path.abspath(sf_dir),
-        spark.sparkContext.applicationId,
-        source_fingerprint(f"{sf_dir}/events.parquet"),
+    probed = parquet_plan(spark, f"{sf_dir}/events.parquet").schema
+    schema = T.StructType(
+        [
+            T.StructField(f.name, probed[f.name].dataType if f.name == "ts" else f.dataType)
+            for f in _EVENTS_RAW_SCHEMA.fields
+        ]
     )
-    schema = _PROBED_SCHEMA.get(key)
-    if schema is None:
-        probed = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        schema = T.StructType(
-            [
-                T.StructField(f.name, probed[f.name].dataType if f.name == "ts" else f.dataType)
-                for f in _EVENTS_RAW_SCHEMA.fields
-            ]
-        )
-        _remember_schema(key, schema)
     # the file source requires a directory: stream the sf dir, filtered
     # down to the events table file
     raw = (
@@ -424,21 +394,10 @@ def stream_kmeans_scoring(
     # Probe the file's own schema like read_events_stream does — a
     # hard-coded struct silently misreads a regenerated fixture whose
     # embedding element type or column set changed (the batch loader
-    # adapts automatically; the stream source must be told). Memoized per
-    # (sf_dir, session, source fingerprint) in the same _PROBED_SCHEMA
-    # dict the events probe uses — the footer read costs a driver job's
-    # worth of latency per invocation otherwise.
-    from ..artifacts import source_fingerprint
+    # adapts automatically; the stream source must be told).
+    from ..artifacts import parquet_plan
 
-    _key = (
-        os.path.abspath(sf_dir) + "#embeddings",
-        spark.sparkContext.applicationId,
-        source_fingerprint(f"{sf_dir}/embeddings.parquet"),
-    )
-    schema = _PROBED_SCHEMA.get(_key)
-    if schema is None:
-        schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-        _remember_schema(_key, schema)
+    schema = parquet_plan(spark, f"{sf_dir}/embeddings.parquet").schema
     stream = (
         spark.readStream.schema(schema)
         .format("parquet")

@@ -398,24 +398,35 @@ def test_scratch_entry_pattern_adversarial_suffix_dirs():
 
 
 # ---------------------------------------------------------------------------
-# source_fingerprint: memoized behind an O(1) shallow stat signature (r22).
-# These tests pin the regeneration-rebuilds guarantee through the memo: a
-# rewritten file, an overwrite-recreated directory, and a rewritten
-# _SUCCESS marker must all change the fingerprint; an unchanged source must
-# be served from the memo WITHOUT a recursive walk.
+# source_fingerprint walks the source on every call. These tests pin the
+# regeneration-rebuilds guarantee: a rewritten file, an overwrite-recreated
+# directory, a rewritten _SUCCESS marker, and a data file rewritten in
+# place at a directory's root must all change the fingerprint.
 # ---------------------------------------------------------------------------
-def test_source_fingerprint_memo_skips_walk_when_unchanged(tmp_path, monkeypatch):
+def test_source_fingerprint_changes_on_root_in_place_rewrite(tmp_path):
+    """A data file rewritten in place at the table root leaves the
+    directory entry and _SUCCESS untouched; the fingerprint must still
+    change (a stat signature of the root alone would miss it)."""
     d = tmp_path / "table.parquet"
     d.mkdir()
-    (d / "part-0").write_bytes(b"aaa")
+    p = d / "part-0"
+    p.write_bytes(b"aaaa")
     (d / "_SUCCESS").write_bytes(b"")
+    os.utime(p, ns=(1_000, 1_000))
     fp1 = A.source_fingerprint(str(d))
+    root_before = os.stat(d)
+    success_before = os.stat(d / "_SUCCESS")
 
-    walks = []
-    real_walk = os.walk
-    monkeypatch.setattr(os, "walk", lambda *a, **k: walks.append(a) or real_walk(*a, **k))
-    assert A.source_fingerprint(str(d)) == fp1
-    assert walks == []  # memo hit: no recursive listing
+    with open(p, "r+b") as fh:  # same size, same inode, no new entry
+        fh.write(b"bbbb")
+    os.utime(p, ns=(2_000, 2_000))
+
+    for before, path in ((root_before, d), (success_before, d / "_SUCCESS")):
+        after = os.stat(path)
+        assert (after.st_ino, after.st_mtime_ns, after.st_size) == (
+            before.st_ino, before.st_mtime_ns, before.st_size
+        )
+    assert A.source_fingerprint(str(d)) != fp1
 
 
 def test_source_fingerprint_changes_on_file_rewrite(tmp_path):
@@ -459,19 +470,128 @@ def test_source_fingerprint_changes_on_success_rewrite(tmp_path):
     assert A.source_fingerprint(str(d)) != fp1
 
 
-def test_session_df_memo_capped(tmp_path):
+def test_session_df_memo_capped(monkeypatch):
     class _S:  # weakref-able stand-in for a SparkSession
         pass
 
     s = _S()
     memo: dict = {}
-    A.session_df_memo(memo, "hot", s, lambda: "hot-df")
+    monkeypatch.setattr(A, "_PLAN_MEMO", memo)
+    A.session_df_memo("hot", s, lambda: "hot-df")
     for i in range(3 * A._MEMO_CAP):
-        A.session_df_memo(memo, ("k", i), s, lambda i=i: f"df{i}")
+        A.session_df_memo(("k", i), s, lambda i=i: f"df{i}")
         # a hit between inserts keeps the first-inserted entry live:
         # eviction is least-recently-used, not insertion order
-        assert A.session_df_memo(memo, "hot", s, lambda: "rebuilt") == "hot-df"
+        assert A.session_df_memo("hot", s, lambda: "rebuilt") == "hot-df"
     assert len(memo) <= A._MEMO_CAP
     # newest entries survive
     assert ("k", 3 * A._MEMO_CAP - 1) in memo
     assert ("k", 0) not in memo
+
+
+def test_package_keeps_one_module_level_memo():
+    """The plan memo is the package's only in-process memo: every other
+    freshness check reads disk on each call. A module-level empty dict
+    is how a memo starts, so any new one fails here."""
+    import ast
+    import pathlib
+
+    allowed = {
+        "registry.QUERIES",
+        "registry.ORACLES",
+        "artifacts._PLAN_MEMO",
+    }
+    pkg = pathlib.Path(A.__file__).parent
+    found = set()
+    for path in sorted(pkg.rglob("*.py")):
+        mod = ".".join(path.relative_to(pkg).with_suffix("").parts)
+        for node in ast.parse(path.read_text(encoding="utf-8")).body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                targets, value = [node.target], node.value
+            else:
+                continue
+            empty_dict = (isinstance(value, ast.Dict) and not value.keys) or (
+                isinstance(value, ast.Call)
+                and isinstance(value.func, ast.Name)
+                and value.func.id == "dict"
+                and not value.args
+                and not value.keywords
+            )
+            if empty_dict:
+                found |= {f"{mod}.{ast.unparse(t)}" for t in targets}
+    assert found == allowed
+
+
+def test_regenerated_sources_served_fresh_under_live_session(
+    spark, tmp_path, monkeypatch
+):
+    """Regenerate two source tables under a live session after warming a
+    loaded table, an artifact and a stream schema probe: every path must
+    serve the new data, not a plan memoized for the old files."""
+    import shutil
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    import bench
+    from k_means_in_mapreduce_spark import registry
+    from k_means_in_mapreduce_spark.sources import load_table
+
+    from .conftest import SF0001, TABLES, assert_oracle_match, make_duck_con
+
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    for t in TABLES:
+        shutil.copyfile(f"{SF0001}/{t}.parquet", f"{sf}/{t}.parquet")
+
+    probed = []
+    real_plan = A.parquet_plan
+
+    def spy(spark_, path):
+        df = real_plan(spark_, path)
+        if path.endswith("embeddings.parquet"):
+            probed.append(df.schema["embedding"].dataType.elementType)
+        return df
+
+    monkeypatch.setattr(A, "parquet_plan", spy)
+    stream = registry.QUERIES["stream_kmeans_scoring"]
+    quantiles = registry.QUERIES["lineitem_price_quantiles"]
+    try:
+        # warm: the table plan, the artifact, and the stream schema probe
+        assert load_table(spark, sf, "embeddings").count() == 500
+        quantiles(spark, sf).collect()
+        stream(spark, sf).collect()
+        assert probed == [T.FloatType()]
+
+        # regenerate: float64 elements and different rows; fewer lineitems
+        emb = pq.read_table(f"{sf}/embeddings.parquet")
+        vecs = np.array(emb.column("embedding").to_pylist(), dtype=np.float64)
+        new_emb = pa.table({
+            "vec_id": pa.array(range(300), pa.int64()),
+            "embedding": pa.array(list(vecs[::-1][:300] * 2.0 + 0.5),
+                                  pa.list_(pa.float64())),
+            "label": pa.array([i % 7 for i in range(300)], pa.int32()),
+        })
+        pq.write_table(new_emb, f"{sf}/embeddings.parquet")
+        li = pq.read_table(f"{sf}/lineitem.parquet")
+        pq.write_table(li.slice(0, 2500), f"{sf}/lineitem.parquet")
+
+        got = load_table(spark, sf, "embeddings").orderBy("vec_id").collect()
+        assert [r["vec_id"] for r in got] == list(range(300))
+        assert got[0]["embedding"] == new_emb.column("embedding")[0].as_py()
+
+        con = make_duck_con(sf)
+        assert_oracle_match(
+            quantiles(spark, sf), registry.ORACLES["lineitem_price_quantiles"], con
+        )
+        assert_oracle_match(
+            stream(spark, sf), registry.ORACLES["stream_kmeans_scoring"], con
+        )
+        con.close()
+        assert probed[-1] == T.DoubleType()
+    finally:
+        bench.clear_artifact_cache(sf)
