@@ -27,6 +27,10 @@ Scale design (100 TB, 1000 executors):
   Spark-vs-MapReduce win; the reference re-reads HDFS every iteration,
   ``KMeans.java:147``). On a real cluster use ``StorageLevel.MEMORY_AND_DISK``
   (default for ``DataFrame.cache``) so partitions spill instead of OOM.
+- the loop runs one Arrow task per 128 MiB of cached vectors, the
+  reference's one map task per HDFS block: each Python task pays a fixed
+  worker cost, so fewer tasks win until a task's data would not fit
+  (:func:`_iteration_partitions`).
 - centroids travel as a k×d constant in the task closure; each Arrow batch
   returns at most k (count, sum) rows, so per-iteration driver traffic is
   O(batches·k·d) doubles, never O(n·d) (the reference's init reads the
@@ -277,31 +281,29 @@ def _movement(old: list[list[float]], new: list[list[float]]) -> float:
     return total
 
 
-def _iteration_partitions(bytes_est: int, parallelism: int) -> int:
-    """Partition count for the cached iteration loop.
+def _iteration_partitions(bytes_est: int) -> int:
+    """Partition count for the cached iteration loop: one Arrow task per
+    128 MiB of vectors, as the reference runs one map task per 128 MB HDFS
+    split (``KMeans.java:33-67``).
 
-    The loop pays per-task cost (Python worker round-trip, task launch)
-    EVERY iteration, so tiny data must not fan out to full parallelism:
-    measured at d=64 on local[32], 8-16 tasks beat 32 by ~30% at BOTH
-    n=2k and n=100k, and beat 1 task (no parallelism) by ~40%. Three
-    regimes:
+    Every Python task pays a fixed ~0.25 CPU-s whatever its data: pyspark's
+    per-task ``setup_spark_files`` calls ``importlib.invalidate_caches()``,
+    which makes each zipimporter re-read ``pyspark.zip``'s central
+    directory. The kernel takes ~11 ms per 5,000 rows. Medians per
+    5-iteration fit (k=8, d=64, 4-core VM, local[4]), old rule of
+    min(8, cores) tasks -> this one:
 
-    - floor of min(8, parallelism) tasks — below that, job overhead and
-      single-threaded NumPy dominate;
-    - mid-range: ~4 MiB of vectors per task, capped at the cluster's
-      core count (more waves than cores buys nothing for CPU-bound work);
-    - upper bound: never fewer than bytes/128 MiB partitions, so a
-      100 TB cache is NOT coalesced down to core count (125 GB
-      partitions would not fit an executor) — at that scale this term
-      dominates and the result matches the scan's own partitioning,
-      making the adjustment a no-op.
+    - n=20k (10 MB): 4 -> 1 tasks, 8.20 -> 3.37 CPU-s;
+    - n=100k (51 MB): 4 -> 1 tasks, 9.32 -> 5.10 CPU-s, 3.49 -> 3.12 s wall;
+    - n=400k (205 MB): 4 -> 2 tasks, 18.49 -> 14.21 CPU-s, 7.41 -> 6.70 s.
+
+    At scale this is the scan's own split (100 TB -> bytes/128 MiB tasks),
+    so no partition outgrows an executor. The trade-off: on a many-core
+    cluster a mid-size cache runs as fewer tasks than cores (1 GB as 8).
     """
     import math
 
-    mib = 1024 * 1024
-    memory_bound = math.ceil(bytes_est / (128 * mib))
-    cpu_target = min(parallelism, max(8, math.ceil(bytes_est / (4 * mib))))
-    return max(1, memory_bound, cpu_target)
+    return max(1, math.ceil(bytes_est / (128 * 1024 * 1024)))
 
 
 def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
@@ -361,27 +363,20 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
         )
         dim = len(centroids[0])
 
-        # Re-tile the cached points to the iteration-loop sweet spot (see
+        # Re-tile the cached points to one task per 128 MiB (see
         # _iteration_partitions). Shrinking is a narrow coalesce straight
-        # off the cache; growing (only reachable in the tiny-data regime —
-        # a parquet scan of <8 partitions) re-caches the repartitioned
-        # copy so the loop doesn't re-shuffle every iteration. The
-        # tiny-data second cache coexists with `base` (megabytes by
-        # construction): `base` must stay live because SAMPLING runs
-        # against it — F.rand(seed) values depend on partitioning, so
-        # sampling from the re-tiled view would break the documented
-        # determinism contract (same df + same seed => same init,
-        # reproducible externally via sample_initial_centroids).
+        # off the cache. Growing re-caches a repartitioned copy so the loop
+        # doesn't re-shuffle every iteration; it runs only when cached
+        # partitions average over 128 MiB (e.g. one non-splittable .gz text
+        # file). `base` stays cached beside it because sampling runs
+        # against `base`: F.rand(seed) depends on partitioning, so the same
+        # df and seed give the same init as sample_initial_centroids.
         cur = base.rdd.getNumPartitions()
-        target = _iteration_partitions(
-            n * dim * 8, base.sparkSession.sparkContext.defaultParallelism
-        )
+        target = _iteration_partitions(n * dim * 8)
         if target < cur:
             points = base.coalesce(target)
         elif target > cur:
-            # no materializing count: iteration 1 fills this cache as a
-            # side effect of its own pass (one fewer job; iterations 2+
-            # read the cached re-tiled copy exactly as before)
+            # no materializing count: iteration 1 fills this cache
             points = base.repartition(target).cache()
             iter_cache = points
         else:

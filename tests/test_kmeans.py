@@ -169,20 +169,32 @@ def test_config_accepts_only_the_arrow_method():
         K.KMeansConfig(k=2, method="expr")
 
 
-@pytest.mark.parametrize("partitions", [1, 12])
-def test_fit_job_count_and_aqe_restored(spark, partitions):
+@pytest.mark.parametrize(
+    "partitions,target",
+    [
+        pytest.param(1, None, id="1"),
+        pytest.param(12, None, id="12"),
+        pytest.param(1, 3, id="1-grown-to-3"),
+    ],
+)
+def test_fit_job_count_and_aqe_restored(spark, monkeypatch, partitions, target):
     """fit turns AQE off for its loop because with it on Spark 4.1 runs the
     cache fill and each exchange as separate jobs. With it off a fit runs
     exactly 2 + n_iter jobs (cache count, init sample, one per iteration)
-    on both re-tile paths: 1 partition grown to the loop's target, 12
-    coalesced down to it. The session's AQE setting reads as before after
+    on every re-tile path: 1 partition kept, 12 coalesced down to the
+    loop's one task, and (with the target forced to 3) 1 partition grown
+    and re-cached. Each iteration job of the 240-row fit is one stage of
+    one task: every Python task pays a fixed worker cost, so the loop runs
+    one task per 128 MiB. The session's AQE setting reads as before after
     a fit, and after a fit that fails with fewer than k rows."""
+    if target is not None:
+        monkeypatch.setattr(K, "_iteration_partitions", lambda _bytes: target)
     sc = spark.sparkContext
     df = spark.range(0, 240, 1, partitions).select(
         F.array(F.col("id").cast("double"), F.sin("id")).alias("embedding")
     )
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    group = f"fit-job-count-{partitions}"
+    group = f"fit-job-count-{partitions}-{target}"
     sc.setJobGroup(group, group)
     try:
         m = K.fit(df, K.KMeansConfig(k=3, max_iter=3, tol=0.0, seed=5))
@@ -191,9 +203,19 @@ def test_fit_job_count_and_aqe_restored(spark, partitions):
         sc.setLocalProperty("spark.job.description", None)
     # job start events reach the status store asynchronously
     sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
     assert m.n_iter == 3 and m.reinit_count == 0
-    assert len(jobs) == 2 + m.n_iter, sorted(jobs)
+    assert len(jobs) == 2 + m.n_iter, jobs
+    for job in jobs[2:]:  # count, init sample, then one job per iteration
+        tasks = [
+            tracker.getStageInfo(st).numTasks
+            for st in sorted(tracker.getJobInfo(job).stageIds)
+        ]
+        if target is None:
+            assert tasks == [1], (job, tasks)
+        else:  # the re-cached copy's result stage, behind its shuffle
+            assert tasks[-1] == target, (job, tasks)
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
 
     with pytest.raises(ValueError, match="fewer than k"):
@@ -294,22 +316,18 @@ def test_cli_rejects_non_numeric_tokens_and_negative_epsilon(spark, tmp_path):
 
 
 def test_iteration_partitions_regimes():
-    """Pin the three sizing regimes: overhead floor (8 tasks) for tiny
-    data, ~4 MiB/task capped at core count mid-range, and >= bytes/128 MiB
-    at scale so huge caches are never coalesced below what fits executor
-    memory."""
+    """Pin the one sizing rule: one task per 128 MiB of cached vectors,
+    never fewer than 1. Small caches run as one task (each Python task pays
+    a fixed worker cost), and at scale huge caches are never coalesced
+    below what fits executor memory."""
     mib = 1024 * 1024
-    # tiny data: floor of min(8, parallelism)
-    assert K._iteration_partitions(1 * mib, 32) == 8
-    assert K._iteration_partitions(1 * mib, 4) == 4
-    # mid-range: ceil(bytes / 4 MiB), capped at core count
-    assert K._iteration_partitions(51 * mib, 32) == 13
-    assert K._iteration_partitions(512 * mib, 32) == 32
-    # at-scale: memory bound dominates (100 TB -> bytes/128MiB partitions)
+    assert K._iteration_partitions(0) == 1
+    assert K._iteration_partitions(1 * mib) == 1
+    assert K._iteration_partitions(128 * mib) == 1
+    assert K._iteration_partitions(128 * mib + 1) == 2
+    assert K._iteration_partitions(205 * mib) == 2
     tb = 1024**4
-    assert K._iteration_partitions(100 * tb, 1000) == 100 * tb // (128 * mib)
-    # degenerate inputs never go below 1
-    assert K._iteration_partitions(0, 0) == 1
+    assert K._iteration_partitions(100 * tb) == 100 * tb // (128 * mib)
 
 
 def test_cli_fidelity_writes_per_iteration_dirs(spark, tmp_path, capsys):
