@@ -175,20 +175,16 @@ def contention_suspect(value, value_min, kmeans_grid_load) -> bool | None:
 
 
 def make_spark():
-    from pyspark.sql import SparkSession
+    from k_means_in_mapreduce_spark.session import get_session
 
-    return (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("kmeans-engine-bench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
+    return get_session(
+        app_name="kmeans-engine-bench",
+        master=f"local[{CPUS}]",
+        shuffle_partitions=CPUS,
+        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         # no stage progress bars on stdout: they drown the final JSON line
         # inside the driver's bounded tail capture
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .getOrCreate()
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
 
 

@@ -116,6 +116,8 @@ def main(argv: list[str]) -> int:
     import __spark_entry__ as E
     from pyspark.sql import SparkSession
 
+    # SparkSession.builder, not session.get_session: this mirrors the harness's
+    # session, so parity is proven on the stock Python worker daemon
     spark = (
         SparkSession.builder.master(f"local[{args.threads}]")
         .config("spark.sql.shuffle.partitions", str(args.threads))
