@@ -11,11 +11,8 @@ a LEAF module by design.
   fingerprint, so regenerated files always get a fresh plan.
 
 Nothing here imports from the package core (registry, operators,
-sources), so this file sits in the fingerprint cone ONLY of queries that
-actually serve artifacts or memoized plans. Hosting it in a query-bearing
-module (it used to live in sources/filesources.py, which registry.py
-pulls into EVERY query's cone) meant any tweak to it flipped all queries
-to "changed since green" and invalidated every on-disk artifact at once.
+sources), so this file adds only itself to a query's fingerprint cone;
+every query reaches it through the table loader's plan memo.
 """
 
 from __future__ import annotations

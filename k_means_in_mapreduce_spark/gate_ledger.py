@@ -188,12 +188,6 @@ def module_fingerprint(dotted: str, ref: str | None = None) -> str:
     return tree.module_fingerprint(dotted)
 
 
-def invalidate_working_tree_cache() -> None:
-    """Drop memoized working-tree state (files changed mid-process)."""
-    global _WORKING_TREE
-    _WORKING_TREE = _Tree(None)
-
-
 def load_ledger() -> dict:
     if not os.path.isfile(LEDGER_PATH):
         return {"rounds_seen": [], "queries": {}}
@@ -343,9 +337,7 @@ def derive_order(
     flag above the round there would let the 97 oracle rows monopolize
     the ~50-slot window forever and the 9 rows-only queries would never
     be re-gated in steady state. ``oracles`` defaults to the registry's
-    ORACLES mapping (looked up lazily — registry.py must stay out of this
-    module's import graph so editing the ordering never flips query
-    fingerprints)."""
+    ORACLES mapping."""
     if oracles is None:
         import importlib
 
@@ -369,15 +361,9 @@ def derive_order(
 
 
 # ---------------------------------------------------------------------------
-# Hand escape hatch for the gate-window ordering.
-#
-# Lives HERE (not in registry.py) on purpose: registry.py is in every
-# query's transitive fingerprint (all operator modules import the @query
-# decorator from it), so editing an override list hosted there would flip
-# every query to "changed since green" each round — collapsing the derived
-# order back to registration order, the exact failure mode the ledger
-# exists to prevent. gate_ledger.py is excluded from the fingerprint walk
-# (ordering logic is not query behavior), so this list can churn freely.
+# Hand escape hatch for the gate-window ordering. gate_ledger.py is outside
+# every query's fingerprint cone (ordering logic is not query behavior), so
+# this list can churn without flipping any query to "changed since green".
 # ---------------------------------------------------------------------------
 PRIORITY_OVERRIDE: list[str] = [
     # Default EMPTY (VERDICT r5 item 1): every entry listed here jumps

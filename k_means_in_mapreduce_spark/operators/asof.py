@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..catalog import query
 from ..sources import load_table
 
 RANGE_WINDOW_SEC = 600  # range-join window: clicks within 10min after error

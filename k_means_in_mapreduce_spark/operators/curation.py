@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized, tokens, word_ngrams
-from ..registry import query
+from ..catalog import query
 from ..sources import load_table
 
 TRAIN_PCT = 80  # bucket < 80 -> train

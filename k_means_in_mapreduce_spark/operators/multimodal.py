@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..catalog import query
 from ..sources import load_table
 
 MEDIA_TYPES = ("image", "audio", "video")

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized, tokens
-from ..registry import query
+from ..catalog import query
 from ..sources import load_table
 from ..functions.text import punct_ratio as punct_ratio_expr
 from ..functions.text import stopword_ratio as stopword_ratio_expr

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_similarity
-from ..registry import query
+from ..catalog import query
 from ..sources import load_table
 
 TOP_K = 10

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..catalog import query
 from ..sources import load_table
 
 SALT_BUCKETS = 16

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_fingerprint, normalized, tokens, word_ngrams
-from ..registry import query
+from ..catalog import query
 from ..sources import load_table
 
 # Small shared stopword list (duplicated literally in the oracles).

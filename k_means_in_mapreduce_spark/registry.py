@@ -1,13 +1,15 @@
 """Query registry — the single source for ``__spark_entry__``.
 
-Every implemented operator from SURVEY.md §2 registers here as:
-- a callable ``(spark, sf_dir) -> DataFrame`` in :data:`QUERIES`
-- where SQL-expressible, a DuckDB-compatible oracle in :data:`ORACLES`
-  (the driver compares row count + schema + order-insensitive value hash
-  at sf0.01).
+The catalog itself (:data:`QUERIES`, :data:`ORACLES`, :func:`query`)
+lives in the leaf module ``catalog.py``, so that each operator module
+registers its queries without importing this one. This module defines
+the k-means core queries, which share the fixed-centroid fixture, and
+imports every extension module so that all queries are registered.
 
-Column-name contract: every computed column is aliased identically in the
-Spark query and the oracle SQL.
+Oracles are DuckDB-compatible SQL (the driver compares row count +
+schema + order-insensitive value hash at sf0.01). Column-name contract:
+every computed column is aliased identically in the Spark query and the
+oracle SQL.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .catalog import ORACLES, QUERIES, query
 from .operators import kmeans_df as K
 from .sources import load_table
 from .sources.text_points import (
@@ -26,9 +29,6 @@ from .sources.text_points import (
     write_points,
 )
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
 # The driver's correctness gate checks a bounded window of ~50 queries per
 # round, in registration order.  ``ordered_queries()`` is DERIVED from
 # GATE_LEDGER.json (see ``gate_ledger.py``): never-driver-checked queries
@@ -37,11 +37,6 @@ ORACLES: dict[str, str] = {}
 # reader changed under 7 already-green events queries and the hand-written
 # priority list missed it) cannot recur: fingerprints cover transitive
 # intra-package imports.
-#
-# The hand escape hatch PRIORITY_OVERRIDE lives in gate_ledger.py (outside
-# every query's fingerprint cone — editing it there cannot flip queries to
-# "changed since green"; hosting it here would, since this module is a
-# transitive dependency of every registered query).
 
 
 def ordered_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -62,16 +57,6 @@ def ordered_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def ordered_oracles() -> dict[str, str]:
     return {n: ORACLES[n] for n in ordered_queries() if n in ORACLES}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # --------------------------------------------------------------------------
@@ -419,6 +404,70 @@ def points_text_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(
+    "stream_kmeans_scoring",
+    f"""WITH {_ASSIGN_CTE}
+    SELECT cluster_id, count(*) AS num_points FROM assign GROUP BY cluster_id""",
+)
+def stream_kmeans_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """foreachBatch incremental model scoring (SURVEY §2.9): each
+    micro-batch of vectors is assigned to its nearest fixed centroid (same
+    expression as the batch path) and per-cluster counts are merged into a
+    driver-side running state — the streaming analogue of the reference's
+    scoring pass, with the centroid set as the broadcast model. The
+    running totals must equal the batch cluster sizes."""
+    # Probe the file's own schema like streaming.windows.read_events_stream
+    # does — a hard-coded struct silently misreads a regenerated fixture
+    # whose embedding element type or column set changed (the batch loader
+    # adapts automatically; the stream source must be told).
+    from .artifacts import parquet_plan
+
+    centroids = _fixed_centroids(spark, sf_dir)
+    schema = parquet_plan(spark, f"{sf_dir}/embeddings.parquet").schema
+    stream = (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", "1")
+        .option("pathGlobFilter", "embeddings.parquet")
+        .load(sf_dir)
+        .withColumn("embedding", F.col("embedding").cast("array<double>"))
+    )
+
+    totals: dict[int, int] = {}
+
+    def score_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        counts = (
+            K.assign_clusters(batch_df, centroids)
+            .groupBy("cluster_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
+        for r in counts:
+            totals[r["cluster_id"]] = totals.get(r["cluster_id"], 0) + r["n"]
+
+    # stateless foreachBatch: a trailing no-data batch would only call
+    # score_batch with an empty frame — skip it (same rationale and
+    # restore discipline as streaming.windows._run_to_memory)
+    prev_nodata = spark.conf.get(
+        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
+    )
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    try:
+        q = stream.writeStream.foreachBatch(score_batch).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set(
+            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
+        )
+
+    return spark.createDataFrame(
+        sorted(totals.items()), "cluster_id int, num_points bigint"
+    )
+
+
 # --------------------------------------------------------------------------
 # Extension operator modules register themselves via @query on import.
 # Imported via importlib (not `from . import x`) deliberately: these are
@@ -441,7 +490,7 @@ EXTENSION_MODULES: list[str] = [
     "operators.skew",
     "operators.pipeline",
     "sources.filesources",
-    "streaming.queries",
+    "streaming.windows",
     "streaming.stateful",
 ]
 for _mod in EXTENSION_MODULES:

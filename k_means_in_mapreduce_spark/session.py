@@ -21,23 +21,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: the tables the driver materializes per scale factor (TESTDATA.md)
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def local_worker_conf(master: str) -> dict[str, str]:
     """The worker-daemon keys for a ``local`` master; none for a cluster."""
     if not master.startswith("local"):

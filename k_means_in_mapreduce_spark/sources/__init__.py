@@ -1,4 +1,3 @@
 from .tables import load_table, register_views
-from .text_points import format_points, parse_points
 
-__all__ = ["load_table", "register_views", "format_points", "parse_points"]
+__all__ = ["load_table", "register_views"]

@@ -20,7 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..catalog import query
 from ..sources import load_table
 
 from ..artifacts import _scratch, source_fingerprint

@@ -73,9 +73,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return session_df_memo(key, spark, build)
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None) -> None:
-    """Register each table as a temp view so operators can use spark.sql."""
-    from ..session import TABLES
-
-    for name in (names if names is not None else TABLES):
+def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> None:
+    """Register each named table as a temp view so operators can use spark.sql."""
+    for name in names:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..registry import query
+from ..catalog import query
 from .windows import read_events_stream, _run_to_memory
 
 _STATE_SCHEMA = "n bigint, total double, last_ts timestamp"

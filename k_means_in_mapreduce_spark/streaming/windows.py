@@ -8,14 +8,15 @@ processing a production deployment of the same pipeline needs:
 - tumbling / sliding event-time windows (``F.window``)
 - session windows with an inactivity gap (``F.session_window``)
 - watermarking for late data
-- ``foreachBatch`` incremental model scoring (streaming k-means
-  assignment against a broadcast/literal centroid set)
+- stream-stream, stream-static and dedup state over watermarks
 
-Each entry point replays the parquet events table as a file-source stream
-into a memory sink and returns the materialized result, so the SAME
-DuckDB oracles that check the batch forms check the streaming forms: the
+Each query replays the parquet events table as a file-source stream
+into a memory sink and returns the materialized result, and registers
+here with the SAME batch-semantics DuckDB oracle as its batch twin: the
 contract is batch/stream semantic equivalence (same engine, same
-expressions — Structured Streaming's core promise).
+expressions — Structured Streaming's core promise). The ``foreachBatch``
+k-means scoring query lives with the other fixed-centroid queries in
+``registry.py``.
 
 Scale notes: file-source + memory-sink is the test harness only; a real
 deployment swaps source/sink for Kafka + a transactional sink and keeps
@@ -31,6 +32,8 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..catalog import query
 
 _mem_counter = itertools.count()
 
@@ -160,6 +163,17 @@ def _run_to_memory(
     return out
 
 
+@query(
+    "stream_tumbling_hourly",
+    """
+    SELECT date_trunc('hour', ts) AS window_start,
+           event_type,
+           count(*) AS n_events,
+           sum(value) AS total_value
+    FROM events
+    GROUP BY window_start, event_type
+    """,
+)
 def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1h windows by event_type with a 1h watermark — streaming
     twin of the batch ``events_hourly_by_type`` (same oracle)."""
@@ -180,9 +194,22 @@ def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(agg)
 
 
+@query(
+    "stream_sliding_quarter_hour",
+    """
+    SELECT TIMESTAMP '1970-01-01'
+               + INTERVAL (floor(epoch(ts) / 900) * 900 - t.i * 900) SECOND
+               AS window_start,
+           event_type,
+           count(*) AS n_events,
+           sum(value) AS total_value
+    FROM events CROSS JOIN range(0, 4) t(i)
+    GROUP BY window_start, event_type
+    """,
+)
 def stream_sliding_quarter_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding 1h windows advancing every 15min (each event lands in 4
-    windows)."""
+    """Sliding 1h windows advancing every 15min: every event belongs to
+    exactly 4 windows — the oracle enumerates them by bucket arithmetic."""
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     agg = (
         ev.groupBy(F.window("ts", "1 hour", "15 minutes"), "event_type")
@@ -197,6 +224,31 @@ def stream_sliding_quarter_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(agg)
 
 
+@query(
+    "stream_session_windows",
+    """
+    WITH gaps AS (
+        SELECT user_id, ts, value, event_id,
+               CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                         >= INTERVAL 30 MINUTE
+                    OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+                    THEN 1 ELSE 0 END AS new_session
+        FROM events
+    ),
+    sess AS (
+        SELECT user_id, ts, value,
+               sum(new_session) OVER (
+                   PARTITION BY user_id ORDER BY ts, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+               ) AS session_id
+        FROM gaps
+    )
+    SELECT user_id,
+           min(ts) AS session_start, max(ts) AS session_end,
+           count(*) AS n_events, sum(value) AS total_value
+    FROM sess GROUP BY user_id, session_id
+    """,
+)
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows with a 30-minute inactivity gap.
 
@@ -205,8 +257,9 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     of exactly 30:00.000000 starts a new session — identical to the batch
     ``events_sessionized`` rule (gap > 30min splits ... merge iff
     gap < 30min; they differ only at exact equality, which has measure
-    zero in µs data). session_end is reported as last-event-time (window
-    end minus the gap) to match the batch form.
+    zero in µs data). The oracle therefore splits on gap >= 30min.
+    session_end is reported as last-event-time (window end minus the gap)
+    to match the batch form.
     """
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
     agg = (
@@ -228,6 +281,21 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(agg)
 
 
+@query(
+    "stream_range_error_click",
+    """
+    SELECT e.event_id AS error_event_id,
+           c.event_id AS click_event_id,
+           e.user_id,
+           CAST(date_diff('microsecond', e.ts, c.ts) AS DOUBLE) / 1000000.0
+               AS gap_sec
+    FROM (SELECT * FROM events WHERE event_type = 'error') e
+    JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      ON e.user_id = c.user_id
+     AND c.ts > e.ts
+     AND c.ts <= e.ts + INTERVAL 600 SECOND
+    """,
+)
 def stream_stream_error_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join with watermark-bounded state: clicks within
     10 minutes AFTER an error by the same user — the streaming twin of the
@@ -294,6 +362,36 @@ def _error_click_join(errors: DataFrame, clicks: DataFrame, how: str) -> DataFra
     )
 
 
+@query(
+    "stream_left_error_click",
+    """
+    WITH e AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'error'),
+         c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
+         wm AS (
+             SELECT least((SELECT max(ts) FROM e), (SELECT max(ts) FROM c))
+                        - INTERVAL 1 HOUR AS w
+         )
+    SELECT e.event_id AS error_event_id,
+           c.event_id AS click_event_id,
+           e.user_id,
+           CAST(date_diff('microsecond', e.ts, c.ts) AS DOUBLE) / 1000000.0
+               AS gap_sec
+    FROM e JOIN c
+      ON e.user_id = c.user_id
+     AND c.ts > e.ts
+     AND c.ts <= e.ts + INTERVAL 600 SECOND
+    UNION ALL
+    SELECT e.event_id, CAST(NULL AS BIGINT), e.user_id, CAST(NULL AS DOUBLE)
+    FROM e, wm
+    WHERE e.ts + INTERVAL 600 SECOND < wm.w
+      AND NOT EXISTS (
+          SELECT 1 FROM c
+          WHERE c.user_id = e.user_id
+            AND c.ts > e.ts
+            AND c.ts <= e.ts + INTERVAL 600 SECOND
+      )
+    """,
+)
 def stream_stream_error_click_left_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -311,7 +409,8 @@ def stream_stream_error_click_left_join(
     the batch left join MINUS unmatched errors within the trailing
     (delay + 600s) horizon — this is inherent to outer stream joins, not
     an artifact of the harness, and the oracle encodes exactly that
-    cutoff. State size and eviction are identical to the inner form."""
+    cutoff (pinned empirically: identical at sf0.001/0.01/0.1). State size
+    and eviction are identical to the inner form."""
     errors, clicks = _error_click_sides(spark, sf_dir)
     joined = _error_click_join(errors, clicks, "left_outer")
     # no_data_batches=True is REQUIRED here: the unmatched-error rows are
@@ -324,6 +423,14 @@ def stream_stream_error_click_left_join(
     )
 
 
+@query(
+    "stream_static_enriched_purchases",
+    """
+    SELECT e.event_id, e.user_id, c.c_mktsegment, e.value
+    FROM events e JOIN customer c ON e.user_id = c.c_custkey
+    WHERE e.event_type = 'purchase'
+    """,
+)
 def stream_static_enriched_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment join — the stateless lookup every event
     pipeline runs: a purchase stream joined per-micro-batch against a
@@ -333,7 +440,9 @@ def stream_static_enriched_purchases(spark: SparkSession, sf_dir: str) -> DataFr
     requirement: the static side is (re)planned into each micro-batch —
     Catalyst broadcasts it below the auto-broadcast threshold, so at
     100 TB/day stream volume the enrichment is a per-batch broadcast-hash
-    join, the same plan a batch enrichment gets."""
+    join, the same plan a batch enrichment gets. With no state, no
+    watermark and no late-data semantics, the result equals the batch
+    join exactly."""
     from ..sources import load_table
 
     ev = read_events_stream(spark, sf_dir).filter(
@@ -348,6 +457,14 @@ def stream_static_enriched_purchases(spark: SparkSession, sf_dir: str) -> DataFr
     return _run_to_memory(joined, mode="append")
 
 
+@query(
+    "stream_dedup_clicks",
+    """
+    SELECT DISTINCT user_id, event_type,
+           CAST(date_trunc('minute', ts) AS TIMESTAMP) AS minute_start
+    FROM events
+    """,
+)
 def stream_dedup_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming deduplication: collapse repeated (user, event_type)
     activity within the same minute to one row — the exactly-once /
@@ -377,65 +494,3 @@ def stream_dedup_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["user_id", "event_type", "minute_start"])
     )
     return _run_to_memory(keys, mode="append")
-
-
-def stream_kmeans_scoring(
-    spark: SparkSession,
-    sf_dir: str,
-    centroids: list[list[float]],
-) -> DataFrame:
-    """foreachBatch incremental model scoring: each micro-batch of vectors
-    is assigned to its nearest centroid (same expression as the batch
-    path) and per-cluster counts are merged into a driver-side running
-    state — the streaming analogue of the reference's scoring pass, with
-    the centroid set as the broadcast model."""
-    from ..operators.kmeans_df import assign_clusters
-
-    # Probe the file's own schema like read_events_stream does — a
-    # hard-coded struct silently misreads a regenerated fixture whose
-    # embedding element type or column set changed (the batch loader
-    # adapts automatically; the stream source must be told).
-    from ..artifacts import parquet_plan
-
-    schema = parquet_plan(spark, f"{sf_dir}/embeddings.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "embeddings.parquet")
-        .load(sf_dir)
-        .withColumn("embedding", F.col("embedding").cast("array<double>"))
-    )
-
-    totals: dict[int, int] = {}
-
-    def score_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        counts = (
-            assign_clusters(batch_df, centroids)
-            .groupBy("cluster_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        for r in counts:
-            totals[r["cluster_id"]] = totals.get(r["cluster_id"], 0) + r["n"]
-
-    # stateless foreachBatch: a trailing no-data batch would only call
-    # score_batch with an empty frame — skip it (same rationale and
-    # restore discipline as _run_to_memory)
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        q = stream.writeStream.foreachBatch(score_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-
-    rows = [(cid, n) for cid, n in sorted(totals.items())]
-    return spark.createDataFrame(rows, "cluster_id int, num_points bigint")

@@ -497,8 +497,8 @@ def test_package_keeps_one_module_level_memo():
     import pathlib
 
     allowed = {
-        "registry.QUERIES",
-        "registry.ORACLES",
+        "catalog.QUERIES",
+        "catalog.ORACLES",
         "artifacts._PLAN_MEMO",
     }
     pkg = pathlib.Path(A.__file__).parent

@@ -427,7 +427,8 @@ def test_out_of_cone_modules_stay_out_of_every_query_fingerprint():
     window (~50 of 106 queries) can only drain the backlog if rounds can
     fix CLI/tooling issues without touching the fingerprint cone. An
     accidental `import ...cli` from an operator module would silently
-    put every query's green row at risk — this is the tripwire."""
+    put every query's green row at risk — this is the tripwire. The
+    session factory and the worker daemon run no query code either."""
     cone = set()
     for fn in registry.QUERIES.values():
         cone.update(gl.transitive_files(fn.__module__))
@@ -435,9 +436,55 @@ def test_out_of_cone_modules_stay_out_of_every_query_fingerprint():
         "k_means_in_mapreduce_spark/cli.py",
         "k_means_in_mapreduce_spark/__main__.py",
         "k_means_in_mapreduce_spark/gate_ledger.py",
+        "k_means_in_mapreduce_spark/session.py",
+        "k_means_in_mapreduce_spark/worker_daemon.py",
     ):
         assert banned not in cone, (
             f"{banned} entered the fingerprint cone — some query module "
             "now (transitively) imports it; editing it would flip every "
             "dependent query to changed-since-green"
         )
+
+
+def test_catalog_is_a_leaf_and_no_query_module_imports_registry():
+    """Every query module imports the @query decorator, so whatever the
+    catalog imports lands in every cone. It must import nothing from the
+    package, and only gate_ledger (lazily, via importlib) may reach
+    registry.py: one operator importing it would put the k-means core
+    back into that operator's cone."""
+    import pathlib
+
+    pkg = gl.PACKAGE
+    assert gl._WORKING_TREE.module_relpath(f"{pkg}.catalog")
+    assert gl._WORKING_TREE.direct_imports(f"{pkg}.catalog") == ()
+    importers = []
+    for path in sorted(pathlib.Path(gl.PKG_DIR).rglob("*.py")):
+        rel = path.relative_to(gl.REPO_ROOT).with_suffix("")
+        mod = ".".join(rel.parts).removesuffix(".__init__")
+        if f"{pkg}.registry" in gl._WORKING_TREE.direct_imports(mod):
+            importers.append(mod)
+    assert importers == []
+
+
+def test_registry_cone_is_its_own_queries_and_every_cone_shares_only_data_access():
+    """registry.py (and so the k-means core it imports) is in the cone of
+    exactly the queries it defines; the files in EVERY query's cone are
+    the catalog and the data-access layer, so an edit anywhere else
+    flips only the queries that run it."""
+    cones = {
+        name: set(gl.transitive_files(fn.__module__))
+        for name, fn in registry.QUERIES.items()
+    }
+    own = {n for n, fn in registry.QUERIES.items() if fn.__module__ == registry.__name__}
+    reg = "k_means_in_mapreduce_spark/registry.py"
+    assert own and {n for n, c in cones.items() if reg in c} == own
+    assert set.intersection(*cones.values()) == {
+        f"k_means_in_mapreduce_spark/{f}"
+        for f in (
+            "__init__.py",
+            "catalog.py",
+            "artifacts.py",
+            "sources/__init__.py",
+            "sources/tables.py",
+        )
+    }
