@@ -31,6 +31,14 @@ for quick local iteration.
 
 Each query is forced end-to-end with the `noop` sink (full evaluation,
 no driver-side collect cost).
+
+Every query and every k-means grid fit runs under its own Spark job
+group. After each timed rep, outside the timed region, the rep's work is
+read from Spark's status store with ``perfbench.counters.SparkCounters``
+and its process-tree CPU with ``perfbench.run.tree_cpu_s``; the
+``queries_profile`` and ``kmeans_profile`` blocks carry them (see
+``profile``). ``tools/bench_diff.py`` calls regressions from these
+counters, not from wall time.
 """
 
 from __future__ import annotations
@@ -58,27 +66,22 @@ BENCH_REPEATS = 5
 
 
 def iter_min(stats: dict) -> float:
-    """Contention-robust secondary headline: min-of-reps / iterations.
+    """Load-robust secondary headline: min-of-reps / iterations.
 
-    ``value`` stays the median (round-over-round comparability — VERDICT
-    r15 item 3 explicitly freezes it); the min is the statistic a
-    noisy-neighbor box cannot inflate, so when the two disagree wildly
-    the gap itself is contention evidence. ``stats`` is one method's
-    entry from bench_kmeans_iteration (sorted ``spread`` of rep walls +
-    ``iterations``)."""
+    ``value`` stays the median (round-over-round comparability); the min
+    is the statistic a noisy-neighbor box cannot inflate. ``stats`` is
+    one method's entry from bench_kmeans_iteration (sorted ``spread`` of
+    rep walls + ``iterations``)."""
     return round(min(stats["spread"]) / max(1, stats["iterations"]), 3)
 
 
 def read_host_load() -> dict:
-    """One host-load evidence sample, recorded AT RUN TIME (ADVICE r15:
-    contention annotations used to rest on post-hoc comparison against
-    the fastest sibling snapshot — a rule that could mask a real
-    regression). loadavg is box-wide and includes this bench's own work;
-    the /proc/stat aggregate cpu jiffies split is what lets a reader
-    separate that from ``steal`` — time the hypervisor ran someone else
-    while this guest was runnable, the direct signature of the host
-    contention adjudicated in rounds 12-15. Best-effort: returns {} on
-    platforms without these interfaces rather than failing the bench."""
+    """One host-load evidence sample, recorded at run time. loadavg is
+    box-wide and includes this bench's own work; the /proc/stat
+    aggregate cpu jiffies split is what lets a reader separate that from
+    ``steal`` — time the hypervisor ran someone else while this guest
+    was runnable. Best-effort: returns {} on platforms without these
+    interfaces rather than failing the bench."""
     out: dict = {}
     try:
         out["loadavg"] = [round(x, 2) for x in os.getloadavg()]
@@ -103,8 +106,8 @@ def host_load_delta(before: dict, after: dict) -> dict:
     /proc/stat jiffies delta with derived busy/iowait/steal fractions of
     total elapsed jiffies (all cpus). busy_frac ~1.0 is expected while
     the bench itself saturates local[32]; a nonzero steal_frac or an
-    end-loadavg far above this process's own parallelism is the
-    in-snapshot contention evidence the annotations were missing."""
+    end-loadavg far above this process's own parallelism says the box
+    was shared during the run."""
     d: dict = {}
     if "loadavg" in before:
         d["loadavg_start"] = before["loadavg"]
@@ -130,48 +133,71 @@ def host_load_delta(before: dict, after: dict) -> dict:
     return d
 
 
-# contention_suspect thresholds (VERDICT r17 item 3: turn the evidence
-# rounds 14-17 assembled by hand into a one-field verdict in the JSON
-# tail, computed from fields the bench already records — no new
-# measurement). Arm A: the headline median exceeding its own min-of-reps
-# by >15% OF THE MIN — gap/min, i.e. value > 1.15*value_min (ADVICE r18:
-# the first cut divided by the median, which silently raised the fire
-# point to ~17.6% and contradicted this prose) — means a noisy neighbor
-# inflated at least half the reps (the r12/r13/r15 spikes read 50-100%+
-# here; the clean r16-r18 band reads 1-10%, incl. the r18 gate at 5.1%).
-# Arm B: 1-min loadavg already above ~4 BEFORE the kmeans grid
-# starts means the box was loaded by someone else — the bench's own
-# pre-grid work (one warm job + parquet reads) contributes <~2, so 4 is
-# ~2x this process's share at that instant (clean history: 0.5-3.1).
-CONTENTION_GAP_FRAC = 0.15
-CONTENTION_LOADAVG_START = 4.0
+# Work fields that repeat exactly when the same plan runs on the same
+# data; a row whose warm reps agree on all of them is ``counts_stable``
+COUNTS = ("jobs", "stages", "tasks", "shuffle_read_mb", "shuffle_write_mb",
+          "spill_mb")
 
 
-def contention_suspect(value, value_min, kmeans_grid_load) -> bool | None:
-    """Self-serve gate verdict: should this run's headline be adjudicated
-    against siblings before being read as a regression?
+def profile(works: list, cpus: list[float]) -> dict:
+    """Profile of one bench row from its warm reps' ``Work`` and
+    process-tree CPU seconds: the last rep's fields (job groups dropped),
+    executor and tree CPU per rep, and whether every rep did the same
+    counted work."""
+    from dataclasses import asdict
 
-    True = at least one arm fired; False = evidence present, none fired;
-    None = neither arm evaluable (non-Linux: no min recorded and no
-    loadavg) — absence of evidence is not a clean bill. A True here is a
-    SUSPICION, not a conviction: the r17 gate showed a contended box can
-    sit below both thresholds (10% gap over min, loadavg_start 1.75) and still
-    need a same-tree rerun to convict — the flag catches the egregious
-    cases so the driver sees them without hand-assembling the evidence.
-    """
-    evaluable = False
-    if value and value_min and value_min > 0:
-        evaluable = True
-        # gap measured against the MIN (value > 1.15*min fires), matching
-        # the documented "median >15% above its own min-of-reps"
-        if (value - value_min) / value_min > CONTENTION_GAP_FRAC:
-            return True
-    start = (kmeans_grid_load or {}).get("loadavg_start")
-    if start:
-        evaluable = True
-        if start[0] > CONTENTION_LOADAVG_START:
-            return True
-    return False if evaluable else None
+    out = {k: round(v, 6) if isinstance(v, float) else v
+           for k, v in asdict(works[-1]).items() if k != "groups"}
+    out["executor_cpu_s_reps"] = [round(w.executor_cpu_s, 3) for w in works]
+    out["tree_cpu_s_reps"] = [round(c, 3) for c in cpus]
+    out["counts_stable"] = all(
+        getattr(w, k) == getattr(works[0], k) for w in works for k in COUNTS
+    )
+    return out
+
+
+def timed_reps(counters, group: str, repeats: int, rep,
+               before=None) -> tuple[list[float], list, dict]:
+    """Run ``rep()`` ``repeats`` times under the job group ``group``.
+    Only ``rep()`` is timed: ``before()`` runs ahead of the clock, and
+    each rep's work and tree CPU are read after it stops. Returns the
+    walls, the results and the profile of the warm reps: every rep after
+    the first, which pays one-off costs (artifact builds, codegen, JIT;
+    a k-means grid fit's first rep reads ~1.5x the executor CPU of the
+    rest)."""
+    from perfbench.run import tree_cpu_s
+
+    walls, results, works, cpus = [], [], [], []
+    counters.read_new()  # drop jobs submitted before this row
+    counters.set_group(group)
+    try:
+        for _ in range(repeats):
+            if before is not None:
+                before()
+            c0 = tree_cpu_s(os.getpid())
+            t0 = time.monotonic()
+            results.append(rep())
+            walls.append(time.monotonic() - t0)
+            cpus.append(tree_cpu_s(os.getpid()) - c0)
+            works.append(counters.read_new())
+    finally:
+        counters.set_group(None)
+    return walls, results, profile(works[1:], cpus[1:])
+
+
+def bench_query(spark, counters, name: str, fn,
+                sf_dir: str = SF_DIR) -> tuple[float, float, dict]:
+    """Cold wall (the first rep), warm wall (min over the later reps —
+    steady state: the first rep absorbs one-off costs such as artifact
+    builds, shuffle file creation and codegen) and warm-rep profile of
+    one registry query. Streaming queries get an extra rep: their wall
+    includes state-store setup and micro-batch scheduling, which showed
+    a 2-4x same-code spread at sf0.1."""
+    repeats = 4 if name.startswith("stream_") else 3
+    walls, _, prof = timed_reps(
+        counters, name, repeats, lambda: force(fn(spark, sf_dir))
+    )
+    return round(walls[0], 3), round(min(walls[1:]), 3), prof
 
 
 def make_spark():
@@ -182,9 +208,15 @@ def make_spark():
         master=f"local[{CPUS}]",
         shuffle_partitions=CPUS,
         driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        # no stage progress bars on stdout: they drown the final JSON line
-        # inside the driver's bounded tail capture
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
+        extra_conf={
+            # no stage progress bars on stdout: they drown the final JSON
+            # line inside the driver's bounded tail capture
+            "spark.ui.showConsoleProgress": "false",
+            # past this cap the status store evicts skipped stages first,
+            # and SparkCounters cannot read a job whose stage is gone; one
+            # run submits a few thousand stages
+            "spark.ui.retainedStages": "10000",
+        },
     )
 
 
@@ -195,6 +227,7 @@ def force(df) -> None:
 
 def bench_kmeans_iteration(
     spark,
+    counters,
     bench_n: int = BENCH_N,
     repeats: int = BENCH_REPEATS,
 ) -> dict:
@@ -245,24 +278,23 @@ def bench_kmeans_iteration(
         except Exception:
             pass  # private API; a bench must never die on it
 
-    def _timed(run_fit) -> dict:
-        walls, iters = [], 1
-        for _ in range(repeats):
-            _gc()
-            t0 = time.monotonic()
-            n_iter = run_fit()
-            walls.append(time.monotonic() - t0)
-            iters = max(1, n_iter)
+    def _timed(method: str, run_fit) -> dict:
+        walls, n_iters, prof = timed_reps(
+            counters, f"kmeans_{method}_{bench_n // 1000}k", repeats,
+            run_fit, before=_gc,
+        )
+        iters = max(1, n_iters[-1])
         wall = statistics.median(walls)
         return {
             "iterations": iters,
             "sec_per_iter": wall / iters,
             "wall": wall,
             "spread": [round(w, 3) for w in sorted(walls)],
+            "profile": prof,
         }
 
     out = {"n": n}
-    out["arrow"] = _timed(lambda: K.fit(
+    out["arrow"] = _timed("arrow", lambda: K.fit(
         pts, K.KMeansConfig(k=BENCH_K, max_iter=BENCH_ITERS, tol=0.0, seed=42)
     ).n_iter)
 
@@ -271,7 +303,7 @@ def bench_kmeans_iteration(
     # tol=0 runs exactly BENCH_ITERS Lloyd iterations like the path above).
     from k_means_in_mapreduce_spark.operators.kmeans_mllib import fit_mllib
 
-    out["mllib"] = _timed(lambda: fit_mllib(
+    out["mllib"] = _timed("mllib", lambda: fit_mllib(
         pts, k=BENCH_K, max_iter=BENCH_ITERS, seed=42, tol=0.0,
         init_mode="random",
     ).n_iter)
@@ -342,6 +374,7 @@ def clear_artifact_cache(sf_dir: str) -> int:
 
 def main() -> None:
     import __spark_entry__ as E
+    from perfbench.counters import SparkCounters
 
     keep_artifacts = "--keep-artifacts" in sys.argv[1:]
     cleared = 0 if keep_artifacts else clear_artifact_cache(SF_DIR)
@@ -363,12 +396,13 @@ def main() -> None:
     warm.mapInPandas(_warm, "id long").write.mode("overwrite").format(
         "noop"
     ).save()
+    counters = SparkCounters(spark)
 
     # Headline k-means grid FIRST, against a clean JVM: measured last, the
     # n=400k point swung 0.39 -> 1.44 s/iter purely from the GC/memory
     # pressure left behind by 111 queries (isolated re-run: 0.43).
     hl_start = read_host_load()
-    km = bench_kmeans_iteration(spark)
+    km = bench_kmeans_iteration(spark, counters)
     # 400k point: median-of-5 (VERDICT r6 item 3 — the 3-run mllib spread
     # was 2.4x). The pre-run GC + extra repeats stabilized the MEDIAN
     # (mllib_400k median fit 9.0 -> 1.75 s); the recorded min..max spread
@@ -376,27 +410,17 @@ def main() -> None:
     # within minutes regardless of driver memory (8g vs 16g) or a GC
     # settle sleep, so the spread list is reported as-is and the median
     # is the comparable number.
-    km4 = bench_kmeans_iteration(spark, BENCH_N_LARGE, repeats=5)
+    km4 = bench_kmeans_iteration(spark, counters, BENCH_N_LARGE, repeats=5)
     hl_after_kmeans = read_host_load()
 
-    # Warm column = min over the runs AFTER the first (steady state: the
-    # first run absorbs one-off costs — artifact builds, shuffle file
-    # creation, codegen compile). Cold column = that first run. Streaming
-    # queries get an extra repeat: their wall time includes state-store
-    # setup + micro-batch scheduling, which showed a 2-4x same-code spread
-    # at sf0.1 (the r5 "regressions" were min-of-2 catching two bad runs).
     per_query: dict[str, float] = {}
     per_query_cold: dict[str, float] = {}
+    queries_profile: dict[str, dict] = {}
     for name, fn in sorted(E.queries().items()):
-        repeats = 4 if name.startswith("stream_") else 3
         try:
-            walls = []
-            for _ in range(repeats):
-                t0 = time.monotonic()
-                force(fn(spark, SF_DIR))
-                walls.append(time.monotonic() - t0)
-            per_query_cold[name] = round(walls[0], 3)
-            per_query[name] = round(min(walls[1:]), 3)
+            per_query_cold[name], per_query[name], queries_profile[name] = (
+                bench_query(spark, counters, name, fn)
+            )
         except Exception as ex:  # a broken query shows up as -1, not a crash
             per_query[name] = per_query_cold[name] = -1.0
             print(f"# BENCH ERROR {name}: {type(ex).__name__}: {ex}", file=sys.stderr)
@@ -414,7 +438,6 @@ def main() -> None:
     per_query["_kmeans_400k_per_iter_mllib"] = round(km4["mllib"]["sec_per_iter"], 3)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    kmeans_grid_load = host_load_delta(hl_start, hl_after_kmeans)
     result = {
         # headline = the engine's own Arrow dataflow (assign -> CF agg),
         # the recommended production fit path; the MLlib numbers ride
@@ -423,7 +446,7 @@ def main() -> None:
         "metric": "kmeans_sec_per_iteration_n100k_arrow",
         "value": round(km["arrow"]["sec_per_iter"], 3),
         "value_mllib": round(km["mllib"]["sec_per_iter"], 3),
-        # min-of-reps companions (see iter_min): the contention-robust
+        # min-of-reps companions (see iter_min): the load-robust
         # reading of the same grid — "value" stays the median so the
         # round-over-round trend keeps comparing like with like
         "value_min": iter_min(km["arrow"]),
@@ -448,29 +471,22 @@ def main() -> None:
             "sec_per_iter_arrow_min": iter_min(km4["arrow"]),
             "sec_per_iter_mllib_min": iter_min(km4["mllib"]),
         },
-        # at-run-time load evidence per phase (ADVICE r15): steal_frac /
-        # loadavg recorded here let a contention call rest on data from
-        # the run itself, not only on post-hoc sibling comparison
+        # at-run-time load evidence per phase: steal_frac / loadavg
+        # recorded by the run itself
         "host_load": {
-            "kmeans_grid": kmeans_grid_load,
+            "kmeans_grid": host_load_delta(hl_start, hl_after_kmeans),
             "queries": host_load_delta(hl_after_kmeans, hl_end),
             "run": host_load_delta(hl_start, hl_end),
         },
-        # one-field adjudication hint in the JSON tail (VERDICT r17
-        # item 3); value/value_min semantics unchanged — this only READS
-        # them. See contention_suspect() for the two arms + thresholds.
-        "contention_suspect": contention_suspect(
-            round(km["arrow"]["sec_per_iter"], 3),
-            iter_min(km["arrow"]),
-            kmeans_grid_load,
-        ),
-        "contention_evidence": (
-            "value/value_mllib are medians a contended box can "
-            "inflate; adjudicate outliers against value_min* (min-of-reps, "
-            "uninflatable by a noisy neighbor), the kmeans_spreads rep "
-            "lists, the host_load steal/busy fractions above, and the "
-            "contention_outlier annotations in .benchmarks/MANIFEST.json"
-        ),
+        # Spark's own counters per row (see profile); bench_diff calls
+        # regressions from these, wall time only corroborates
+        "queries_profile": queries_profile,
+        "kmeans_profile": {
+            "arrow_100k": km["arrow"]["profile"],
+            "mllib_100k": km["mllib"]["profile"],
+            "arrow_400k": km4["arrow"]["profile"],
+            "mllib_400k": km4["mllib"]["profile"],
+        },
         # per-method wall-clock spreads (sorted; BENCH_REPEATS fits per
         # 100k entry, 5 per 400k one) so variance is visible next to the
         # medians
@@ -508,13 +524,13 @@ def main() -> None:
     ranked = sorted(
         ((k, v) for k, v in per_query.items() if v > 0), key=lambda kv: -kv[1]
     )
-    # host_load/contention_evidence stay file-only: ~0.7 KB of static
-    # evidence prose would crowd real numbers out of the ~2000-char tail
+    # host_load and the profiles stay file-only: they would crowd the
+    # headline numbers out of the ~2000-char tail
     compact = {
         k: v
         for k, v in result.items()
         if k not in ("queries", "queries_cold", "host_load",
-                     "contention_evidence")
+                     "queries_profile", "kmeans_profile")
     }
     # shrink the slowest-query summary until the line fits the driver's
     # ~2000-char tail — never die or overflow after a successful run

@@ -1,9 +1,12 @@
-"""tools/bench_diff.py: round-over-round snapshot comparison (no Spark)."""
+"""tools/bench_diff.py: round-over-round snapshot comparison and its
+counter-based regression call, plus the bench.py fields and per-query
+loop it reads."""
 
 import json
 import os
 import subprocess
 import sys
+import types
 
 import pytest
 
@@ -11,6 +14,10 @@ TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, TOOLS)
 
 import bench_diff  # noqa: E402
+
+import bench  # noqa: E402
+
+from .conftest import SF0001  # noqa: E402
 
 
 def _snap(queries, **extra):
@@ -121,41 +128,130 @@ def test_load_snapshot_unwraps_driver_artifact(tmp_path):
             bench_diff.load_snapshot(str(bad))
 
 
-def test_diff_surfaces_min_headline_and_contention_signals():
-    """r16: diff() carries the min-of-reps companion headline and an
-    in-snapshot evidence summary (median/min gap per path + recorded
-    steal fractions) so a gate comparison shows contention mechanically;
-    pre-r16 snapshots without the fields degrade to None/{} untouched."""
-    old = _snap({"a": 1.0})  # pre-r16 shape: no value_min / host_load
-    new = _snap(
-        {"a": 1.0},
-        value_min=0.25,
-        value_expr=1.0,
-        value_min_expr=0.5,
-        host_load={"kmeans_grid": {"steal_frac": 0.04},
-                   "run": {"steal_frac": 0.01}},
-    )
-    new["value"] = 0.3
+def test_diff_surfaces_min_headline():
+    """diff() carries the min-of-reps companion headline; pre-r16
+    snapshots without ``value_min`` degrade to None."""
+    old = _snap({"a": 1.0})  # pre-r16 shape: no value_min
+    new = _snap({"a": 1.0}, value_min=0.25)
     d = bench_diff.diff(old, new)
     assert d["headline_min"] == {"old": None, "new": 0.25}
-    assert d["contention_old"] == {}
-    sig = d["contention_new"]
-    # 0.3/0.25 and 1.0/0.5: the expr gap flags the contended path
-    assert sig["median_over_min"] == {"arrow": 1.2, "expr": 2.0}
-    assert sig["kmeans_grid_steal_frac"] == 0.04
-    assert sig["run_steal_frac"] == 0.01
-    # a zero/negative recorded min never divides: path simply omitted
-    degen = bench_diff.contention_signals({"value": 0.3, "value_min": 0.0})
-    assert degen == {}
-    # r18+ snapshots carry their own two-arm verdict; the signal summary
-    # lifts it (False = "evaluated, clean" survives; absent stays absent)
-    flagged = bench_diff.contention_signals(
-        {"value": 0.36, "value_min": 0.3, "contention_suspect": True})
-    assert flagged["contention_suspect"] is True
-    clean = bench_diff.contention_signals(
-        {"value": 0.36, "value_min": 0.35, "contention_suspect": False})
-    assert clean["contention_suspect"] is False
-    assert "contention_suspect" not in sig  # pre-r18 shape: no key
+
+
+def _prof(cpu=(1.0, 1.1), **kw):
+    """Synthetic warm-rep profile of one row, as bench.profile writes it."""
+    return {"jobs": 3, "stages": 4, "tasks": 8, "shuffle_read_mb": 0.5,
+            "shuffle_write_mb": 0.5, "spill_mb": 0.0,
+            "executor_cpu_s": cpu[-1], "executor_cpu_s_reps": list(cpu),
+            "tree_cpu_s_reps": [2.0, 2.2], "counts_stable": True, **kw}
+
+
+def _profiled(profs):
+    """Snapshot with profiles; the row ``arrow_100k`` is a k-means grid fit."""
+    grid = {row: p for row, p in profs.items() if row == "arrow_100k"}
+    queries = {row: p for row, p in profs.items() if row not in grid}
+    return _snap({row: 1.0 for row in queries}, queries_profile=queries,
+                 kmeans_profile=grid, kmeans_spreads={"arrow_100k": [1.5, 1.6]})
+
+
+def _main_output(tmp_path, capsys, old, new) -> str:
+    paths = []
+    for name, doc in (("old", old), ("new", new)):
+        paths.append(tmp_path / f"{name}.json")
+        paths[-1].write_text(json.dumps(doc))
+    assert bench_diff.main([str(p) for p in paths]) == 0
+    return capsys.readouterr().out
+
+
+def test_call_names_the_row_whose_stable_count_grew(tmp_path, capsys):
+    rows = ("a", "b", "c", "arrow_100k")
+    old = _profiled({row: _prof() for row in rows})
+    new = _profiled({row: _prof(jobs=4 if row == "b" else 3) for row in rows})
+    assert bench_diff.diff(old, new)["regressions"] == {"b": "jobs 3 -> 4"}
+    # a k-means grid row is called the same way, and the CLI prints each
+    # call with its reason and the wall / tree CPU corroboration
+    new["kmeans_profile"]["arrow_100k"]["tasks"] = 9
+    assert bench_diff.regressions(old, new) == {
+        "arrow_100k": "tasks 8 -> 9", "b": "jobs 3 -> 4"}
+    out = _main_output(tmp_path, capsys, old, new)
+    assert "): 2" in out
+    assert "  b: jobs 3 -> 4  [wall 1.00x, tree CPU 1.00x]" in out
+    assert "  arrow_100k: tasks 8 -> 9  [wall 1.00x, tree CPU 1.00x]" in out
+
+
+def test_wall_growth_with_the_same_counts_is_not_called():
+    old = _profiled({"a": _prof(), "b": _prof()})
+    new = _profiled({"a": _prof(), "b": _prof()})
+    new["queries"]["a"] = 1.4
+    d = bench_diff.diff(old, new)
+    assert d["regressions"] == {}
+    assert d["slowest_growth"][0] == ("a", 1.4)  # the wall ranking only
+
+
+def test_cpu_call_needs_the_bound_disjoint_reps_and_min_cpu():
+    with open(os.path.join(os.path.dirname(TOOLS), "BENCHMARK.json")) as fh:
+        spec = json.load(fh)
+    bound = next(m["bound"] for m in spec["end_to_end"]
+                 if m["name"] == "warm_cpu_s")
+    assert bench_diff.CPU_BOUND == bound
+    old = _prof(cpu=(1.0, 1.5))
+    # min 1.3 is above the bound, but the reps overlap the old ones
+    assert bench_diff.call(old, _prof(cpu=(1.3, 1.6))) is None
+    # disjoint but inside the bound
+    assert bench_diff.call(_prof(cpu=(1.0, 1.05)), _prof(cpu=(1.2, 1.2))) is None
+    # disjoint and above the bound, but under MIN_CPU_S in the old run
+    assert bench_diff.call(_prof(cpu=(0.5, 0.5)), _prof(cpu=(0.9, 0.9))) is None
+    assert "executor CPU 1.0 -> 1.6" in bench_diff.call(old, _prof(cpu=(1.6, 1.7)))
+    # the old reps are scaled by the box's CPU factor, the median ratio
+    # over the shared rows: +40% on a box whose rows all read +30% is not
+    # called, and the same +40% on a steady box is
+    rows = ("a", "b", "c")
+    old_snap = _profiled({row: _prof(cpu=(1.0, 1.0)) for row in rows})
+    slow_box = _profiled({"a": _prof(cpu=(1.4, 1.4)),
+                          "b": _prof(cpu=(1.3, 1.3)),
+                          "c": _prof(cpu=(1.3, 1.3))})
+    assert bench_diff.regressions(old_snap, slow_box) == {}
+    steady = _profiled({"a": _prof(cpu=(1.4, 1.4)),
+                        "b": _prof(cpu=(1.0, 1.0)),
+                        "c": _prof(cpu=(1.0, 1.0))})
+    assert list(bench_diff.regressions(old_snap, steady)) == ["a"]
+
+
+def test_row_with_unstable_counts_is_called_on_cpu_alone():
+    old = _prof()
+    grew = dict(jobs=5, counts_stable=False)
+    assert bench_diff.call(old, _prof(**grew)) is None
+    assert bench_diff.call(_prof(counts_stable=False), _prof(jobs=5)) is None
+    why = bench_diff.call(old, _prof(cpu=(1.5, 1.6), **grew))
+    assert why.startswith("min executor CPU 1.0 -> 1.5")
+
+
+def test_snapshot_without_a_profile_gets_no_calls(tmp_path, capsys):
+    old = _snap({"a": 1.0})
+    new = _profiled({"a": _prof(jobs=9)})
+    assert bench_diff.diff(old, new)["regressions"] is None
+    assert bench_diff.diff(new, old)["regressions"] is None
+    assert "regressions: n/a" in _main_output(tmp_path, capsys, old, new)
+
+
+def test_bench_query_cold_warm_and_profile_live(spark, monkeypatch):
+    """bench.bench_query on two registry queries at sf0.001: cold is the
+    first rep and warm the min of the later ones (pinned with a scripted
+    clock), and the warm reps' Spark counters agree."""
+    import __spark_entry__ as E
+    from perfbench.counters import SparkCounters
+
+    counters = SparkCounters(spark)
+    queries = E.queries()
+    for name in ("lineitem_price_quantiles", "q1_pricing_summary"):
+        ticks = iter([0.0, 5.0, 10.0, 12.0, 20.0, 23.0])  # reps of 5, 2, 3 s
+        monkeypatch.setattr(bench, "time", types.SimpleNamespace(
+            monotonic=lambda: next(ticks)))
+        cold, warm, prof = bench.bench_query(
+            spark, counters, name, queries[name], SF0001)
+        assert (cold, warm) == (5.0, 2.0), name
+        assert prof["jobs"] >= 1 and prof["counts_stable"], (name, prof)
+        assert len(prof["executor_cpu_s_reps"]) == 2
+        assert len(prof["tree_cpu_s_reps"]) == 2
 
 
 def test_bench_value_min_and_host_load_fields():
@@ -165,8 +261,6 @@ def test_bench_value_min_and_host_load_fields():
     ``value`` (unchanged, for trend comparability), plus at-run-time
     host-load evidence so a contention call can rest on data recorded
     during the run, not only post-hoc sibling comparison."""
-    sys.path.insert(0, os.path.dirname(TOOLS))
-    import bench
 
     # min-of-reps / iterations; an iterations=0 report never divides by 0
     assert bench.iter_min({"spread": [1.5, 2.0, 9.9], "iterations": 5}) == 0.3
@@ -220,59 +314,27 @@ def test_bench_value_min_and_host_load_fields():
     assert "guest" not in g["jiffies"] and "guest_nice" not in g["jiffies"]
     assert sum(g["jiffies"].values()) == 100
 
-    # the tracked full-result artifact carries the new fields, so a
-    # reader of BENCH_RESULT.json ALONE can adjudicate a spiky headline
-    # (ADVICE r15: the committed headline had no in-file contention cue)
+    # the tracked full-result artifact carries the fields bench.py
+    # writes today, so a reader of BENCH_RESULT.json alone has the
+    # min-of-reps headline, the host load and Spark's counters per row
     with open(os.path.join(os.path.dirname(TOOLS), "BENCH_RESULT.json")) as fh:
         res = json.load(fh)
-    for k in ("value_min", "value_min_expr", "value_min_mllib",
-              "host_load", "contention_evidence", "contention_suspect"):
+    for k in ("value_min", "value_min_mllib", "host_load",
+              "queries_profile", "kmeans_profile"):
         assert k in res, k
     assert res["value_min"] <= res["value"]
     assert "run" in res["host_load"]
-
-
-def test_contention_suspect_two_trigger_arms():
-    """VERDICT r17 item 3: bench.py turns the contention evidence rounds
-    14-17 adjudicated by hand into a one-field verdict in the JSON tail,
-    computed only from fields the bench already records. Pin both arms,
-    both quiet paths, and the no-evidence None."""
-    sys.path.insert(0, os.path.dirname(TOOLS))
-    import bench
-
-    clean_load = {"loadavg_start": [1.75, 2.41, 2.15]}
-
-    # arm A: headline median > 15% above its own min-of-reps — the
-    # r12/r13/r15 spike signature (they read 50-100% here)
-    assert bench.contention_suspect(0.594, 0.30, clean_load) is True
-    # the clean r16-r17 band (1-9% gap, quiet loadavg) stays False —
-    # including the r17 gate reading, which sat below BOTH thresholds
-    # and needed a same-tree rerun to convict (the flag is a suspicion
-    # for the egregious cases, not the full adjudication)
-    assert bench.contention_suspect(0.449, 0.408, clean_load) is False
-    # the gap is measured against the MIN, as the prose says: a median
-    # 16% above its min fires (under the old /median denominator this
-    # read 13.8% and silently did NOT — ADVICE r18)
-    assert bench.contention_suspect(0.58, 0.50, clean_load) is True
-    # and exactly 15% of the min does not (strict >)
-    assert bench.contention_suspect(0.575, 0.50, clean_load) is False
-
-    # arm B: 1-min loadavg already ~2x this process's pre-grid share
-    # BEFORE the kmeans grid starts — someone else is on the box
-    hot_start = {"loadavg_start": [9.5, 4.0, 2.0]}
-    assert bench.contention_suspect(0.341, 0.317, hot_start) is True
-    # boundary: exactly at the threshold does not fire
-    at = {"loadavg_start": [bench.CONTENTION_LOADAVG_START, 1.0, 1.0]}
-    assert bench.contention_suspect(0.341, 0.317, at) is False
-
-    # either arm alone suffices when the other's inputs are absent
-    assert bench.contention_suspect(0.594, 0.30, {}) is True
-    assert bench.contention_suspect(None, None, hot_start) is True
-
-    # no evaluable evidence (non-Linux: no min, no loadavg) -> None,
-    # never a clean-bill False; degenerate zero min never divides
-    assert bench.contention_suspect(None, None, {}) is None
-    assert bench.contention_suspect(0.3, 0.0, None) is None
+    assert set(res["kmeans_profile"]) == set(res["kmeans_spreads"])
+    assert set(res["queries_profile"]) == {
+        k for k, v in res["queries"].items() if not k.startswith("_") and v > 0
+    }
+    for prof in [*res["queries_profile"].values(),
+                 *res["kmeans_profile"].values()]:
+        assert {*bench.COUNTS, "executor_cpu_s", "task_skew",
+                "executor_cpu_s_reps", "tree_cpu_s_reps",
+                "counts_stable"} <= set(prof)
+        assert "groups" not in prof
+        assert len(prof["executor_cpu_s_reps"]) == len(prof["tree_cpu_s_reps"])
 
 
 def test_cli_survives_closed_stdout_pipe():

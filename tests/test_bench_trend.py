@@ -117,28 +117,6 @@ def test_trend_defensive_enrich_is_tier_scoped_and_side_effect_free(
     assert "_doc" not in e1 and "_doc" not in e2
 
 
-def test_contention_outlier_annotation_flows_to_rows_and_manifest_fields(
-    tmp_path, monkeypatch
-):
-    # a snapshot listed in CONTENTION_OUTLIERS gets the note attached by
-    # enrich() (-> MANIFEST) and carried onto its trend row (hermetic:
-    # live-repo annotation pinning lives in
-    # test_live_contention_annotations_pinned, per ADVICE r14)
-    e1 = _snap_file(tmp_path, "bench_1_sf0.1.json", {"a": 1.0}, 1.0)
-    e2 = _snap_file(tmp_path, "bench_odd_sf0.1.json", {"a": 1.0}, 9.9)
-    monkeypatch.setattr(bench_trend, "REPO", str(tmp_path))
-    monkeypatch.setitem(
-        bench_trend.CONTENTION_OUTLIERS,
-        ".benchmarks/bench_odd_sf0.1.json",
-        "box spike",
-    )
-    enriched = bench_trend.enrich([e1, e2])
-    assert enriched[1]["contention_outlier"] == "box spike"
-    rows = bench_trend.trend(enriched, sf=0.1)
-    assert "contention_outlier" not in rows[0]
-    assert rows[1]["contention_outlier"] == "box spike"
-
-
 def test_trend_carries_min_headline_and_steal_evidence(tmp_path, monkeypatch):
     # r16 snapshots record value_min + host_load (bench.py); enrich()
     # lifts them onto the manifest entry and trend() onto the row, so a
@@ -148,74 +126,25 @@ def test_trend_carries_min_headline_and_steal_evidence(tmp_path, monkeypatch):
     doc = json.loads(snap.read_text())
     doc["value_min"] = 0.9
     doc["host_load"] = {"run": {"steal_frac": 0.03}}
-    # r18+ snapshots also carry bench.py's own two-arm verdict; False is
-    # evidence ("evaluated, clean") and must survive the lift — only
-    # absent/null (pre-r18 / no evaluable arm) stays off the entry
-    doc["contention_suspect"] = False
     snap.write_text(json.dumps(doc))
     monkeypatch.setattr(bench_trend, "REPO", str(tmp_path))
     enriched = bench_trend.enrich([e1])
     assert enriched[0]["headline_min"] == 0.9
     assert enriched[0]["run_steal_frac"] == 0.03
-    assert enriched[0]["contention_suspect"] is False
     rows = bench_trend.trend(enriched, sf=0.1)
     assert rows[0]["headline_min"] == 0.9
     assert rows[0]["run_steal_frac"] == 0.03
-    assert rows[0]["contention_suspect"] is False
     # pre-r16 snapshots: the fields are simply absent, never None-filled
     e2 = _snap_file(tmp_path, "bench_2_sf0.1.json", {"a": 1.0}, 1.0)
     rows2 = bench_trend.trend(bench_trend.enrich([e2]), sf=0.1)
     assert "headline_min" not in rows2[0]
     assert "run_steal_frac" not in rows2[0]
-    assert "contention_suspect" not in rows2[0]
-
-
-def test_live_contention_annotations_pinned():
-    """The real annotated outliers stay adjudicable: every known outlier
-    key is present in CONTENTION_OUTLIERS, names an actual archived
-    snapshot, and the tracked MANIFEST.json carries the exact evidence
-    string — so a manifest rebuild (or a table edit) can't silently drop
-    an annotation or its rationale (VERDICT r14 item 6; keys were pinned
-    in r13, this pins the strings end-to-end). Keys are repo-relative
-    paths matching manifest entries verbatim (ADVICE r14 closed in r16:
-    path keying replaced the basename keying + flat-layout precondition
-    this test used to pin)."""
-    known = [
-        # r12 gate, 400k spike
-        ".benchmarks/bench_20260814_225501_sf0.1.json",
-        # r13 gate, 100k arrow 0.594
-        ".benchmarks/bench_20260815_000622_sf0.1.json",
-        # r15 local, arrow 0.409/expr 2.342
-        ".benchmarks/bench_20260815_025541_sf0.1.json",
-        # r15 driver-gate, arrow 0.57, judge-confirmed contention
-        ".benchmarks/bench_20260815_072140_sf0.1.json",
-    ]
-    for path in known:
-        assert path in bench_trend.CONTENTION_OUTLIERS, path
-    for path, note in bench_trend.CONTENTION_OUTLIERS.items():
-        # a typo'd path would silently annotate nothing
-        assert os.path.exists(os.path.join(REPO, path)), path
-        # evidence must be substantive (a band/sibling comparison), not a bare flag
-        assert len(note) > 40 and "vs" in note, path
-    with open(os.path.join(REPO, ".benchmarks", "MANIFEST.json")) as fh:
-        manifest = json.load(fh)
-    by_path = {s["file"]: s for s in manifest["snapshots"]}
-    for path, note in bench_trend.CONTENTION_OUTLIERS.items():
-        assert by_path[path].get("contention_outlier") == note, path
-    # and no manifest entry claims an annotation the table doesn't define
-    for path, s in by_path.items():
-        if "contention_outlier" in s:
-            assert bench_trend.CONTENTION_OUTLIERS.get(path) == s[
-                "contention_outlier"
-            ], path
 
 
 def test_readme_snapshot_ids_name_archived_snapshots():
-    """ADVICE r15: contention prose lives in three places (the table, the
-    generated manifest, README maintenance notes) and only the first two
-    were pinned to each other — a README snapshot ID could drift to a run
-    that never existed. Mechanical floor: every bench_YYYYMMDD_HHMMSS ID
-    the README cites must name an actually archived snapshot file."""
+    """A README snapshot ID could drift to a run that never existed.
+    Mechanical floor: every bench_YYYYMMDD_HHMMSS ID the README cites
+    must name an actually archived snapshot file."""
     import re
 
     with open(os.path.join(REPO, "README.md")) as fh:
@@ -279,15 +208,9 @@ def test_live_trend_table_keeps_min_steal_columns_before_filename():
     saw_dash = saw_value = False
     for ln in data:
         toks = ln.split()
-        # the filename token is the one ending .json; only the fixed
-        # markers ('!contention', '?suspect') may trail it (ADVICE r19:
-        # a missing token must fail the assertion, not StopIteration)
-        fi = next(
-            (i for i, t in enumerate(toks) if t.endswith(".json")), None
-        )
-        assert fi is not None, f"no filename token in row: {ln}"
-        assert all(t in ("!contention", "?suspect") for t in toks[fi + 1:])
-        min_tok = toks[fi - 2]
+        # the filename is the last token: nothing trails it
+        assert toks[-1].endswith(".json"), f"filename not last in row: {ln}"
+        min_tok = toks[-3]
         saw_dash |= min_tok == "-"
         saw_value |= min_tok != "-"
     # which eras the rendered rows must show is driven by the history
@@ -315,31 +238,3 @@ def test_live_trend_table_keeps_min_steal_columns_before_filename():
         else:
             expect_value = True
     assert saw_dash == expect_dash and saw_value == expect_value
-
-
-def test_format_row_renders_self_flag_and_outlier_markers():
-    """ADVICE r18: a run that flagged ITSELF (contention_suspect true in
-    its JSON tail) must be visible in the default human table, parallel
-    to the hand-curated '!contention' marker — previously only the
-    --json rows and MANIFEST.json carried the self-flag. Pinned on
-    synthetic rows via format_row (no git-history walk)."""
-    base = {"round": 18, "kind": "driver-gate", "headline": 0.374,
-            "cum_box_factor": 1.0, "file": "bench_x_sf0.1.json"}
-    # self-flag alone -> ' ?suspect' trails the filename
-    assert bench_trend.format_row(
-        {**base, "contention_suspect": True}).endswith(
-        "bench_x_sf0.1.json ?suspect")
-    # hand-curated outlier alone -> existing '!contention', no suspect
-    assert bench_trend.format_row(
-        {**base, "contention_outlier": "note"}).endswith(
-        "bench_x_sf0.1.json !contention")
-    # both markers render when both apply (independent evidence tracks)
-    assert bench_trend.format_row(
-        {**base, "contention_outlier": "note",
-         "contention_suspect": True}).endswith(
-        "bench_x_sf0.1.json !contention ?suspect")
-    # an explicit False self-verdict (clean gate) renders NO marker, and
-    # pre-r18 rows without the field don't either
-    assert bench_trend.format_row(
-        {**base, "contention_suspect": False}).endswith(".json")
-    assert bench_trend.format_row(base).endswith(".json")

@@ -9,9 +9,16 @@ snapshots. Accepts either a raw bench snapshot (``BENCH_RESULT.json`` /
 the snapshot under ``"parsed"`` — possibly with a truncated ``queries``
 summary, in which case only the overlapping rows are compared).
 
-The key output is the MEDIAN warm ratio across the shared query rows of
-sizable runtime (>= MIN_SEC in either run; sub-MIN_SEC rows are timer
-noise and synthetic ``_kmeans_*`` grid rows are reported separately):
+When both snapshots carry Spark's counters (``queries_profile`` and
+``kmeans_profile``, written by bench.py), a row is called a REGRESSION
+only from those counters — see ``call``; wall time and process-tree CPU
+are printed beside each call as corroboration. Older snapshots get no
+calls, only the wall ranking below.
+
+The wall ranking's key output is the MEDIAN warm ratio across the
+shared query rows of sizable runtime (>= MIN_SEC in either run;
+sub-MIN_SEC rows are timer noise and synthetic ``_kmeans_*`` grid rows
+are reported separately):
 this repo's queries are code-stable across most rounds, so a median far
 from 1.0 means the BOX was slower/faster, not the code — individual-row
 swings should be read against that baseline before chasing a
@@ -29,6 +36,9 @@ import statistics
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from bench import COUNTS  # noqa: E402
 
 # rows slower than this many seconds in EITHER run are worth naming in
 # the ranked output; faster rows are pure noise at sf0.1
@@ -55,37 +65,88 @@ def newest_two() -> tuple[str, str]:
     return snaps[-2], snaps[-1]
 
 
-def contention_signals(doc: dict) -> dict:
-    """In-snapshot contention evidence summary (fields recorded since
-    r16 by bench.py): the median/min rep gap per headline path plus the
-    at-run-time host-load fractions. A gap well above ~1.2x on any path,
-    or a sizable steal fraction, says "adjudicate against value_min and
-    the MANIFEST sibling annotations before reading the median headline
-    as a code signal". Returns {} for pre-r16 snapshots, which carry
-    neither field."""
-    out: dict = {}
-    gaps = {}
-    for label, med_key, min_key in (
-        ("arrow", "value", "value_min"),
-        ("expr", "value_expr", "value_min_expr"),
-        ("mllib", "value_mllib", "value_min_mllib"),
-    ):
-        med, mn = doc.get(med_key), doc.get(min_key)
-        if med is not None and mn is not None and mn > 0:
-            gaps[label] = round(med / mn, 3)
-    if gaps:
-        out["median_over_min"] = gaps
-    hl = doc.get("host_load") or {}
-    for phase in ("kmeans_grid", "run"):
-        frac = (hl.get(phase) or {}).get("steal_frac")
-        if frac is not None:
-            out[f"{phase}_steal_frac"] = frac
-    # the run's own two-arm verdict (recorded since r18): carried so the
-    # diff view shows the self-flag next to the raw evidence, matching
-    # the manifest rows and the trend table's '?suspect' marker
-    if doc.get("contention_suspect") is not None:
-        out["contention_suspect"] = doc["contention_suspect"]
+def _end_to_end_bound(name: str) -> float:
+    with open(os.path.join(REPO, "BENCHMARK.json")) as fh:
+        spec = json.load(fh)
+    return next(m["bound"] for m in spec["end_to_end"] if m["name"] == name)
+
+
+# a row's min executor CPU may rise by this fraction before it is called:
+# the repo benchmark's own bound on warm process-tree CPU
+CPU_BOUND = _end_to_end_bound("warm_cpu_s")
+# ...and only rows with this much executor CPU in the old run are called
+# on CPU: between two sf0.1 runs of the same code on a 4-core VM, the min
+# executor CPU of rows under 1 s moved 0.58-1.96x, often with both warm
+# reps on one side; rows above 1 s moved 0.80-1.02x
+MIN_CPU_S = 1.0
+
+
+def profiles(doc: dict) -> dict | None:
+    """Row -> profile over the queries and the k-means grid (whose rows
+    share their names with ``kmeans_spreads``); None for a snapshot
+    written before bench.py recorded Spark's counters."""
+    if "queries_profile" not in doc:
+        return None
+    return {**doc["queries_profile"], **doc.get("kmeans_profile", {})}
+
+
+def call(old: dict, new: dict, box: float = 1.0) -> str | None:
+    """Why row profile ``new`` is a regression against ``old``, or None.
+
+    A stable count (COUNTS, equal over each run's warm reps) that grew is
+    a regression on its own. Otherwise the row needs at least MIN_CPU_S
+    of executor CPU in the old run, and its old reps are scaled by the
+    ``box`` factor (see cpu_box): the new min must lie more than
+    CPU_BOUND above the scaled old min, and every new rep above every
+    scaled old one."""
+    if old["counts_stable"] and new["counts_stable"]:
+        grew = [f"{k} {old[k]} -> {new[k]}" for k in COUNTS if new[k] > old[k]]
+        if grew:
+            return ", ".join(grew)
+    oc, nc = old["executor_cpu_s_reps"], new["executor_cpu_s_reps"]
+    scaled = [c * box for c in oc]
+    if (min(oc) >= MIN_CPU_S and min(nc) > min(scaled) * (1 + CPU_BOUND)
+            and min(nc) > max(scaled)):
+        return (f"min executor CPU {min(oc)} -> {min(nc)} s at box factor "
+                f"{box:.3f}, every new rep above every scaled old one")
+    return None
+
+
+def cpu_box(po: dict, pn: dict) -> float:
+    """Median new/old ratio of min executor CPU over the shared rows with
+    at least MIN_SEC of it. A shared host moves CPU time, not only wall
+    time: over four sf0.1 runs of the same package code on a 4-core VM
+    this factor read 0.81-1.24 and tracked the wall-time box factor
+    within 0.06, and unscaled, the CPU call named a grid row in 3 of the
+    12 ordered pairs."""
+    ratios = [
+        min(pn[r]["executor_cpu_s_reps"]) / min(po[r]["executor_cpu_s_reps"])
+        for r in set(po) & set(pn)
+        if min(po[r]["executor_cpu_s_reps"]) >= MIN_SEC
+    ]
+    return statistics.median(ratios) if ratios else 1.0
+
+
+def regressions(old: dict, new: dict) -> dict[str, str] | None:
+    """Row -> reason for every row both profiles share that ``call``
+    calls; None when either snapshot has no profile."""
+    po, pn = profiles(old), profiles(new)
+    if po is None or pn is None:
+        return None
+    box = cpu_box(po, pn)
+    out = {}
+    for row in sorted(set(po) & set(pn)):
+        why = call(po[row], pn[row], box)
+        if why:
+            out[row] = why
     return out
+
+
+def row_wall(doc: dict, row: str) -> float | None:
+    """Warm wall of a profiled row: the query's min-of-warm-reps, or the
+    fastest rep of a k-means grid fit."""
+    spread = (doc.get("kmeans_spreads") or {}).get(row)
+    return min(spread) if spread else doc["queries"].get(row)
 
 
 def diff(old: dict, new: dict) -> dict:
@@ -139,14 +200,12 @@ def diff(old: dict, new: dict) -> dict:
             "new_box_adjusted": adj,
             "metric": new.get("metric"),
         },
-        # min-of-reps companion headline + in-snapshot evidence (r16+
-        # snapshots only; both degrade to None/{} on older files)
+        # min-of-reps companion headline (None on pre-r16 files)
         "headline_min": {
             "old": old.get("value_min"),
             "new": new.get("value_min"),
         },
-        "contention_old": contention_signals(old),
-        "contention_new": contention_signals(new),
+        "regressions": regressions(old, new),
         "median_warm_ratio": round(med, 3),
         "median_from_noise_fallback": med_from_noise,
         "grid_ratios": {k: round(r, 3) for k, r in sorted(grid.items())},
@@ -196,26 +255,9 @@ def main(argv: list[str]) -> int:
         hm_new = hm["new"] if hm["new"] is not None else "-"
         print(
             f"  min-of-reps headline: {hm_old} -> {hm_new}"
-            "  (contention-robust companion; a median far above its min "
+            "  (load-robust companion; a median far above its min "
             "is box noise, not code)"
         )
-    for side, sig in (("old", d["contention_old"]), ("new", d["contention_new"])):
-        if sig:
-            gaps = sig.get("median_over_min", {})
-            gap_s = ", ".join(f"{k} {v}x" for k, v in gaps.items())
-            steal = {
-                k: v for k, v in sig.items() if k.endswith("_steal_frac")
-            }
-            steal_s = ", ".join(f"{k}={v}" for k, v in steal.items())
-            suspect = sig.get("contention_suspect")
-            suspect_s = (
-                "" if suspect is None else f"; self-flag ?suspect={suspect}"
-            )
-            print(
-                f"  in-snapshot evidence ({side}): median/min {gap_s}"
-                + (f"; {steal_s}" if steal_s else "")
-                + suspect_s
-            )
     noise_tag = (
         "  [UNRELIABLE: median from sub-MIN_SEC noise rows — no sizable "
         "shared row]"
@@ -227,6 +269,21 @@ def main(argv: list[str]) -> int:
             f"  box-adjusted new headline: {h['new_box_adjusted']}"
             "  (new / median query ratio; compare THIS to old)" + noise_tag
         )
+    regs = d["regressions"]
+    if regs is None:
+        print("regressions: n/a (a snapshot has no profile; wall ranking "
+              "below only)")
+    else:
+        print(f"regressions (a stable count grew, or box-scaled executor "
+              f"CPU rose >{CPU_BOUND:.0%}; see call): {len(regs)}")
+        po, pn = profiles(old), profiles(new)
+        for row, why in regs.items():
+            # wall and tree CPU only corroborate the call
+            wo, wn = row_wall(old, row), row_wall(new, row)
+            to, tn = (min(p[row]["tree_cpu_s_reps"]) for p in (po, pn))
+            wall_s = f"{wn / wo:.2f}x" if wo and wn else "-"
+            tree_s = f"{tn / to:.2f}x" if to > 0 else "-"
+            print(f"  {row}: {why}  [wall {wall_s}, tree CPU {tree_s}]")
     print(
         f"median warm ratio new/old over the sizable subset of "
         f"{d['n_shared']} shared query rows: {d['median_warm_ratio']}"

@@ -45,104 +45,6 @@ import bench_diff  # noqa: E402
 DRIVER_RE = re.compile(r"^round (\d+):")
 SF_RE = re.compile(r"_sf([0-9.]+)\.json$")
 
-# Snapshots verified as box-contention readings: the headline moved with
-# ZERO operator-code change (judge-confirmed byte-identical trees) and
-# same-night sibling snapshots read the historical band. The chained
-# median mostly cancels box speed, but a contention spike concentrated in
-# a few rows can still leak into the cumulative factor — these rows are
-# flagged in the trend output and annotated in MANIFEST.json so nobody
-# reads them as plan regressions. Keyed by repo-relative snapshot path,
-# exactly as manifest entries record it (ADVICE r14: basename keying was
-# sound only while the archive layout stayed flat; path keying removes
-# that precondition instead of pinning it in a test).
-CONTENTION_OUTLIERS = {
-    ".benchmarks/bench_20260818_025318_sf0.1.json": (
-        "r22 pre-edit baseline: 100k arrow 0.487 s (min 0.478, reps "
-        "2.39-5.10 s) vs the 0.27-0.37 r21 band on a byte-identical "
-        "operator tree, while the untouched mllib control read 0.245 — "
-        "IN band; the snapshot's own kmeans-grid host_load records "
-        "steal_frac 7.2% (run-wide 3.1%) and mllib_400k reps spread "
-        "3.0-11.3 s. The r22 A/Bs therefore lean on min-of-reps, "
-        "reversed-order repeats and driver job counts (OPTIMIZATION_r22)"
-    ),
-    ".benchmarks/bench_20260818_040849_sf0.1.json": (
-        "r22 final: self-flagged suspect (arm A: median 0.343 vs "
-        "min-of-reps 0.265, a 29% gap from two slow reps 1.88/2.10 s "
-        "against 1.32-1.72); the min and the mllib control (0.259) sit "
-        "in the r21 clean band, so the MEDIAN is the inflated reading, "
-        "not the code — grid steal 0.3%, roaming-rep signature"
-    ),
-    ".benchmarks/bench_20260814_225501_sf0.1.json": (
-        "r12 gate: 400k arrow 0.649 s vs 0.33-0.46 band on the identical "
-        "tree (closed as box contention in r13; README maintenance notes)"
-    ),
-    ".benchmarks/bench_20260815_000622_sf0.1.json": (
-        "r13 gate: 100k arrow 0.594 s vs 0.288-0.318 in four same-night "
-        "same-tree snapshots; total 75.0 s vs 59-65 (VERDICT r13)"
-    ),
-    ".benchmarks/bench_20260815_025541_sf0.1.json": (
-        "r15 local: 100k arrow 0.409 s / expr 2.342 s vs 0.284/0.909 in the "
-        "same-tree snapshot 25 min later (030246); rep spread 1.87-5.58 s "
-        "(arrow) and 5.6-37.2 s (expr) on byte-identical code — host-level "
-        "contention, guest idle"
-    ),
-    ".benchmarks/bench_20260815_040409_sf0.1.json": (
-        "r15 local: 100k arrow 0.373 s / expr 2.668 s vs 0.284/0.909 in the "
-        "clean same-tree sibling (030246); expr rep spread 4.6-29.4 s, arrow "
-        "1.81-3.19 s — same host-contention signature as 025541, while "
-        "mllib 0.271 and total 63.6 s stayed in band"
-    ),
-    ".benchmarks/bench_20260815_051017_sf0.1.json": (
-        "r15 local: 100k arrow 0.39 s / 400k arrow 0.563 s vs 0.284/0.451 "
-        "in the clean same-tree sibling (030246); a 14.8 s mllib_400k rep "
-        "(median 2.0) pins intermittent host contention while mllib 100k "
-        "0.243 and expr 0.953 read in band"
-    ),
-    ".benchmarks/bench_20260815_062035_sf0.1.json": (
-        "r15 local: 100k arrow 0.39 s / total 66.8 s vs 0.284/65.1 in the "
-        "clean same-tree sibling (030246); arrow MIN rep 1.87 s plus spike "
-        "reps 3.1/3.8/11.7 s (arrow/mllib/expr) on byte-identical code — "
-        "sustained background load with spikes; mllib 0.273 and 400k arrow "
-        "0.461 in band"
-    ),
-    ".benchmarks/bench_20260815_064417_sf0.1.json": (
-        "r15 local: mllib 0.598 s / 400k arrow 0.909 s vs 0.265/0.451 in "
-        "the clean same-tree sibling (030246) while 100k arrow read 0.34 "
-        "near band — the spike MOVED paths vs 062035 (there arrow was hit, "
-        "mllib clean), the roaming signature of host contention on "
-        "byte-identical code"
-    ),
-    ".benchmarks/bench_20260815_065442_sf0.1.json": (
-        "r15 local: 100k arrow 0.384 s / total 67.6 s vs 0.284/65.1 in the "
-        "clean same-tree sibling (030246); spike reps 2.55/4.51/6.63 s "
-        "(arrow/mllib_100k/mllib_400k) while mllib 0.288 and 400k arrow "
-        "0.458 medians read in band — fifth same-tree reading in the r15 "
-        "contention series"
-    ),
-    ".benchmarks/bench_20260815_072140_sf0.1.json": (
-        "r15 driver-gate: 100k arrow 0.57 s / expr 2.14 / mllib 0.435 / "
-        "total 70.3 s vs the 0.27-0.41 band across seven same-tree r15 "
-        "siblings whose spike ROAMED between paths on byte-identical code "
-        "(arrow-hit/mllib-clean 062035, inverted 064417), and vs the "
-        "judge's post-gate same-tree rerun 073254: 100k arrow 0.29 / expr "
-        "0.811 / mllib 0.255, total 63.1 s — squarely in band; contention "
-        "confirmed independently, not taken on faith (VERDICT r15)"
-    ),
-    ".benchmarks/bench_20260815_102324_sf0.1.json": (
-        "r17 driver-gate: 100k arrow 0.449 s (min 0.408) / expr 1.028 / "
-        "total 70.9 s vs the 0.322-0.352 r16 band on a byte-identical "
-        "operator tree (the whole r17 diff touched only bench tooling, "
-        "tests and artifacts); the snapshot's own host_load block shows "
-        "loadavg ramping 1.75 -> 14.91 across the kmeans grid with steal "
-        "~1%, and the judge's same-tree rerun 25 min later (104654) read "
-        "100k arrow 0.341 / min 0.317, mllib 0.291, total 69.4 s — in "
-        "band, with the familiar roaming single-rep spike (one 1.509 s "
-        "mllib_400k median against a 0.458 min); adjudicated environmental "
-        "(VERDICT r17)"
-    ),
-}
-
-
 def round_after(commit_seq: list[tuple[str, str]]) -> dict[str, int]:
     """Map every commit hash -> the driver round last CLOSED at that commit.
 
@@ -247,9 +149,6 @@ def enrich(entries: list[dict]) -> list[dict]:
     file truncated between the two passes raised an uncaught SystemExit.
     """
     for e in entries:
-        note = CONTENTION_OUTLIERS.get(e["file"])
-        if note:
-            e["contention_outlier"] = note
         path = os.path.join(REPO, e["file"])
         if not os.path.exists(path):  # deleted later in history
             e["missing"] = True
@@ -264,9 +163,9 @@ def enrich(entries: list[dict]) -> list[dict]:
         e["_doc"] = doc
         e["metric"] = doc.get("metric")
         e["headline"] = doc.get("value")
-        # contention-robust companion + recorded steal (r16+ snapshots;
-        # absent on older files) — kept on the manifest entry so a trend
-        # reader can adjudicate a spike from the snapshot's own evidence
+        # load-robust companion + recorded steal (r16+ snapshots; absent
+        # on older files) — kept on the manifest entry so a trend reader
+        # can read a spike against the snapshot's own evidence
         if doc.get("value_min") is not None:
             e["headline_min"] = doc["value_min"]
         steal = ((doc.get("host_load") or {}).get("run") or {}).get(
@@ -274,13 +173,6 @@ def enrich(entries: list[dict]) -> list[dict]:
         )
         if steal is not None:
             e["run_steal_frac"] = steal
-        # r18+ snapshots carry the bench's own two-arm verdict (see
-        # bench.contention_suspect); lifted so manifest/trend readers
-        # see which rows flagged THEMSELVES, next to the hand-curated
-        # CONTENTION_OUTLIERS annotations above (absent pre-r18, and
-        # null when neither arm was evaluable — both stay un-lifted)
-        if doc.get("contention_suspect") is not None:
-            e["contention_suspect"] = doc["contention_suspect"]
         e["total_warm"] = doc.get("total_query_sec")
         e["n_queries"] = len(doc.get("queries", {}))
     return entries
@@ -333,10 +225,6 @@ def trend(entries: list[dict], sf: float) -> list[dict]:
             row["headline_min"] = e["headline_min"]
         if e.get("run_steal_frac") is not None:
             row["run_steal_frac"] = e["run_steal_frac"]
-        if e.get("contention_suspect") is not None:
-            row["contention_suspect"] = e["contention_suspect"]
-        if e.get("contention_outlier"):
-            row["contention_outlier"] = e["contention_outlier"]
         if prev_doc is not None:
             d = bench_diff.diff(prev_doc, doc)
             med = d["median_warm_ratio"]
@@ -353,18 +241,9 @@ def trend(entries: list[dict], sf: float) -> list[dict]:
 
 
 def format_row(r: dict) -> str:
-    """One human-table line for a trend row (split out so the markers can
-    be pinned on synthetic rows without a git-history walk)."""
+    """One human-table line for a trend row."""
     med = r.get("median_vs_prev")
     noise = "~" if r.get("median_from_noise") else ""
-    # trailing markers, both rendered when both apply: '!contention' =
-    # hand-adjudicated outlier (CONTENTION_OUTLIERS), '?suspect' = the
-    # run flagged ITSELF via bench.contention_suspect — previously only
-    # --json/MANIFEST carried the self-flag, so a suspect row was
-    # invisible in the default table view (ADVICE r18)
-    flag = " !contention" if r.get("contention_outlier") else ""
-    if r.get("contention_suspect"):
-        flag += " ?suspect"
     # fixed-width min/steal slots BEFORE the filename ('-' for
     # pre-r16 rows) so columns stay aligned and the key stat isn't
     # pushed past the longest field (ADVICE r16)
@@ -377,7 +256,7 @@ def format_row(r: dict) -> str:
         f"{r['cum_box_factor']:>7} "
         f"{r.get('headline_box_adjusted', '-'):>8} "
         f"{hmin if hmin is not None else '-':>7} "
-        f"{steal if steal is not None else '-':>6}  {r['file']}{flag}"
+        f"{steal if steal is not None else '-':>6}  {r['file']}"
     )
 
 
@@ -416,9 +295,6 @@ def main(argv: list[str]) -> int:
     )
     for r in rows:
         print(format_row(r))
-    outliers = [r for r in rows if r.get("contention_outlier")]
-    for r in outliers:
-        print(f"!contention {r['file']}: {r['contention_outlier']}")
     metrics = {r["metric"] for r in rows}
     if len(metrics) > 1:
         print(
