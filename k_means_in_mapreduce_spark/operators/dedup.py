@@ -26,7 +26,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized, tokens, word_ngrams
@@ -326,8 +326,10 @@ def connected_components_star(edges: DataFrame, max_iter: int = 25) -> DataFrame
     diameter d, so long chains need no more rounds than short ones.
     Fixed point = the small-star output equals its input (checked by
     count + order-insensitive xxhash64 checksum; a 64-bit collision
-    masking a real change is negligible). Raises rather than returning
-    split components if max_iter is exhausted.
+    masking a real change is negligible). Each round runs exactly one
+    action: the eager local checkpoint, which also computes the checksum
+    as an observed metric. Raises rather than returning split components
+    if max_iter is exhausted.
 
     Self-loops are dropped before the first round: a node whose only edge
     is ``(n, n)`` gets no row, and an empty edge list gives no rows.
@@ -344,78 +346,69 @@ def connected_components_star(edges: DataFrame, max_iter: int = 25) -> DataFrame
     # one exchange — the window IS that fusion), and the two-branch unions
     # over the same subtree became explode()s, so no subtree is computed
     # twice. Each star's terminal distinct also collapsed to one: only
-    # small_star keeps it (load-bearing — the fixed-point checksum
-    # compares its output), large_star feeds small_star's window directly,
+    # small-star keeps it (load-bearing — the fixed-point checksum
+    # compares its output), large-star feeds small-star's window directly,
     # where duplicate edges only widen one sort input, not an extra
     # exchange. Result sets are identical (min per key is min per key;
     # explode(array(a, b)) == union of the two projections).
 
-    def large_star(e: DataFrame) -> DataFrame:
-        # symmetrize with ONE pass: (u,v) -> {(u,v), (v,u)}
-        sym = e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u"), F.col("v")),
-                    F.struct(
-                        F.col("v").alias("u"), F.col("u").alias("v")
-                    ),
-                )
-            ).alias("_e")
-        ).select("_e.u", "_e.v")
-        m = F.least(F.min("v").over(W.partitionBy("u")), F.col("u"))
+    # Every round builds the same plan over a new edge set, so its Columns
+    # are built once per call: each F call is ~10 py4j round trips, and
+    # rebuilding them every round cost ~0.1 driver CPU-s a round.
+    by_u = W.partitionBy("u")
+    ne = F.col("u") != F.col("v")
+    # large-star: symmetrize with ONE pass, (u,v) -> {(u,v), (v,u)}, then
+    # point every larger neighbor v of u at m = min(u, u's neighbors)
+    sym = F.inline(
+        F.array(
+            F.struct("u", "v"),
+            F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
+        )
+    )
+    large_m = F.least(F.min("v").over(by_u), F.col("u")).alias("m")
+    large_keep = (F.col("v") > F.col("u")) & (F.col("v") != F.col("m"))
+    large_out = [F.col("v").alias("u"), F.col("m").alias("v")]
+    # small-star: orient every edge high -> low, then point BOTH ends at
+    # the neighborhood minimum in one pass
+    small_in = [F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")]
+    small_m = F.min("v").over(by_u).alias("m")
+    small_out = [F.explode(F.array("v", "u")).alias("u"), F.col("m").alias("v")]
+    # bit_xor, not sum: order-insensitive over the distinct edge set and
+    # immune to ANSI-mode long overflow
+    checksum = [
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(
+            F.bit_xor(F.xxhash64(F.greatest("u", "v"), F.least("u", "v"))),
+            F.lit(0),
+        ).alias("h"),
+    ]
+
+    def star_round(e: DataFrame) -> DataFrame:
+        large = e.select(sym).select("u", "v", large_m).filter(large_keep)
+        small = large.select(*large_out).select(*small_in).filter(ne)
         return (
-            sym.withColumn("m", m)
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
+            small.select("u", "v", small_m)
+            .select(*small_out)
+            .filter(ne)
+            .distinct()
         )
 
-    def small_star(e: DataFrame) -> DataFrame:
-        d = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).filter(F.col("u") != F.col("v"))
-        p = d.withColumn("m", F.min("v").over(W.partitionBy("u")))
-        # point BOTH v and u at the neighborhood minimum in one pass
-        out = p.select(
-            F.explode(F.array("v", "u")).alias("u"), F.col("m").alias("v")
-        )
-        return out.filter(F.col("u") != F.col("v")).distinct()
+    def materialize(e: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+        obs = Observation()
+        e = e.observe(obs, *checksum).localCheckpoint(eager=True)
+        return e, (int(obs.get["n"]), int(obs.get["h"]))
 
-    def checksum(e: DataFrame) -> tuple[int, int]:
-        # bit_xor, not sum: order-insensitive over the distinct edge set
-        # and immune to ANSI-mode long overflow
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.bit_xor(F.xxhash64(F.greatest("u", "v"), F.least("u", "v"))),
-                F.lit(0),
-            ).alias("h"),
-        ).first()
-        return int(row["n"]), int(row["h"])
-
-    e = (
+    e, prev = materialize(
         edges.select(
             F.col("doc_a").cast("long").alias("u"),
             F.col("doc_b").cast("long").alias("v"),
         )
-        .filter(F.col("u") != F.col("v"))
+        .filter(ne)
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    prev = checksum(e)
     converged = False
     for _ in range(max_iter):
-        # lazy localCheckpoint: the checksum right below is the round's
-        # materializing action, so checkpointing eagerly would pay a
-        # SECOND full computation job per round for the same rows. The
-        # exact_quantiles lazy-checkpoint hazard (deferred doCheckpoint
-        # spamming "non-existent accumulator" ERRORs) does not bite here:
-        # the checksum consumes the checkpoint within the same loop step,
-        # so finalization happens inside a live query, not after one has
-        # unregistered its metrics (verified: zero ERROR lines over the
-        # full pytest + driver-sim + bench sweeps).
-        e = small_star(large_star(e)).localCheckpoint(eager=False)
-        cur = checksum(e)
+        e, cur = materialize(star_round(e))
         if cur == prev:
             converged = True
             break

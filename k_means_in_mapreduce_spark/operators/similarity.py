@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity
+from ..functions.vector import cosine_similarity, vector_lit
 from ..catalog import query
 from ..sources import load_table
 
@@ -90,7 +90,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k for the fixed query vector."""
     e = load_table(spark, sf_dir, "embeddings")
     qv = _query_vector(spark, sf_dir)
-    qlit = F.array(*[F.lit(float(x)) for x in qv])
+    qlit = vector_lit(qv)
     return (
         e.filter(F.col("vec_id") != QUERY_VEC_ID)
         .select(
@@ -297,7 +297,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = parquet_plan(spark, cells_dir)
     qn = sum(x * x for x in qv) ** 0.5
-    qunit = F.array(*[F.lit(float(x) / qn) for x in qv])
+    qunit = vector_lit([x / qn for x in qv])
     # index vectors are stored pre-normalized -> cosine is ONE dot product
     return (
         idx.filter(

@@ -71,20 +71,18 @@ DIM = 64  # embeddings arity in all testdata sf dirs
 
 
 def _fixed_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
-    """Collect the K_FIXED fixture centroids — a scheduled k-row collect
-    job on EVERY invocation, deliberately: r21 memoized these collected
-    rows in-process (fingerprint-keyed), which the r21 judge flagged as
-    memoised query *results* across bench invocations — the measurement
-    contract forbids that regardless of size, so the memo is gone and
-    each invocation pays its own collect (~1 driver job; O(k·d) rows)."""
+    """Collect the K_FIXED fixture centroids in one job on every
+    invocation. Not memoized in-process, deliberately: a memo would serve
+    one query's collected rows to later bench invocations. The k rows are
+    sorted on the driver: a Spark ``orderBy`` made the collect a 3-job
+    range sort for 10 rows."""
     emb = load_table(spark, sf_dir, "embeddings")
     rows = (
         emb.filter(F.col("vec_id") < K_FIXED)
-        .orderBy("vec_id")
-        .select("embedding")
+        .select("vec_id", "embedding")
         .collect()
     )
-    return [list(r[0]) for r in rows]
+    return [list(r["embedding"]) for r in sorted(rows, key=lambda r: r["vec_id"])]
 
 
 # Shared oracle CTE: nearest-centroid assignment (reference J1/T1/F1 —
@@ -445,23 +443,10 @@ def stream_kmeans_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in counts:
             totals[r["cluster_id"]] = totals.get(r["cluster_id"], 0) + r["n"]
 
-    # stateless foreachBatch: a trailing no-data batch would only call
-    # score_batch with an empty frame — skip it (same rationale and
-    # restore discipline as streaming.windows._run_to_memory)
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        q = stream.writeStream.foreachBatch(score_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
+    # availableNow runs every file present at start, then stops itself
+    stream.writeStream.foreachBatch(score_batch).trigger(
+        availableNow=True
+    ).start().awaitTermination()
 
     return spark.createDataFrame(
         sorted(totals.items()), "cluster_id int, num_points bigint"

@@ -239,6 +239,52 @@ def test_star_cc_max_iter_guard_and_self_loops(spark):
     assert got == {(1, 1), (2, 1)}
 
 
+def test_star_cc_runs_no_driver_action_on_edges(spark, monkeypatch):
+    """Every round's fixed-point checksum is observed on the round's one
+    checkpoint job: building the components calls no first, collect or
+    count on any DataFrame."""
+    edges = [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11), (11, 12)]
+    e = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    with monkeypatch.context() as m:
+        for name in ("first", "collect", "count"):
+            def forbidden(self, *a, _name=name, **kw):
+                raise AssertionError(f"DataFrame.{_name} inside connected_components_star")
+            m.setattr(type(e), name, forbidden)
+        out = connected_components_star(e)
+    got = {(r.doc_id, r.component) for r in out.collect()}
+    assert got == _union_find_components(edges)
+
+
+def test_star_cc_edgeless_inputs_return_empty(spark, tmp_path):
+    """Inputs with no edge left after the self-loop rule still deliver
+    their observed checksum: only self-loops, and a 0-row parquet file,
+    return no rows instead of blocking on the observation."""
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "edges.parquet")
+    pq.write_table(
+        pa.table({"doc_a": pa.array([], pa.int64()), "doc_b": pa.array([], pa.int64())}),
+        path,
+    )
+    inputs = {
+        "self_loops": spark.createDataFrame([(5, 5), (7, 7)], "doc_a long, doc_b long"),
+        "empty_parquet": spark.read.parquet(path),
+    }
+    for name, e in inputs.items():
+        got = []
+        t = threading.Thread(
+            target=lambda e=e: got.append(connected_components_star(e).collect()),
+            daemon=True,
+        )
+        t.start()
+        t.join(timeout=60)
+        assert not t.is_alive(), f"{name}: connected_components_star blocked"
+        assert got == [[]], name
+
+
 def test_exact_dedup_copies(spark):
     """At sf0.01 all docs are distinct; the operator must report exactly
     one copy per hash and as many hashes as docs."""

@@ -368,3 +368,84 @@ def test_trend_and_histogram_are_single_aggregate_plans(spark):
         assert count_exchanges(df) == 1, (name, plan)
         assert "Window" not in plan, name
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
+
+
+def test_vector_literals_round_trip_bit_exact(spark):
+    """Hypothesis: ``centroid_matrix_lit`` and ``vector_lit`` hand back
+    every double bit-for-bit through their one JSON literal: −0.0,
+    subnormals, ±inf and NaN included. All cases are evaluated in one
+    Spark job."""
+    import math
+    import struct
+
+    from hypothesis import example, given, settings, strategies as st
+
+    from k_means_in_mapreduce_spark.functions.vector import (
+        centroid_matrix_lit,
+        vector_lit,
+    )
+
+    cases = []
+    doubles = st.floats(allow_nan=True, allow_infinity=True, allow_subnormal=True)
+
+    @settings(max_examples=30, deadline=None)
+    @given(st.lists(st.lists(doubles, min_size=1, max_size=6), min_size=1, max_size=4))
+    @example([[-0.0, 0.0, 5e-324, -2.225073858507201e-308],
+              [math.inf, -math.inf, math.nan, 1.7976931348623157e308]])
+    def collect(m):
+        cases.append(m)
+
+    collect()
+
+    cols = []
+    for i, m in enumerate(cases):
+        cols.append(centroid_matrix_lit(m).alias(f"m{i}"))
+        cols.append(vector_lit(m[0]).alias(f"v{i}"))
+    row = spark.range(1).select(*cols).first()
+
+    def bits(xs):
+        return [b"nan" if math.isnan(x) else struct.pack(">d", x) for x in xs]
+
+    for i, m in enumerate(cases):
+        assert [bits(c) for c in row[f"m{i}"]] == [bits(c) for c in m], m
+        assert bits(row[f"v{i}"]) == bits(m[0]), m[0]
+
+
+def test_assign_clusters_centroid_literal_is_folded(spark):
+    """The centroid matrix reaches the optimized plan as one folded
+    literal: no JSON parse is left for the rows to pay."""
+    emb = load_table(spark, SF001, "embeddings")
+    cents = registry._fixed_centroids(spark, SF001)
+    plan = K.assign_clusters(emb, cents)._jdf.queryExecution().optimizedPlan().toString()
+    assert "from_json" not in plan and "JsonToStructs" not in plan, plan
+
+
+def test_fixed_centroids_one_job_in_vec_id_order(spark, tmp_path):
+    """``_fixed_centroids`` is one job on a served table plan, and it
+    returns the fixture rows in vec_id order even when the file holds
+    them in another order."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from .conftest import SF0001
+
+    emb = pq.read_table(f"{SF0001}/embeddings.parquet")
+    perm = np.random.default_rng(7).permutation(emb.num_rows)
+    pq.write_table(emb.take(perm), tmp_path / "embeddings.parquet")
+    by_id = dict(zip(emb.column("vec_id").to_pylist(),
+                     emb.column("embedding").to_pylist()))
+    want = [[float(x) for x in by_id[i]] for i in range(registry.K_FIXED)]
+
+    load_table(spark, str(tmp_path), "embeddings")  # schema inference job
+    sc = spark.sparkContext
+    group = "fixed-centroids-one-job"
+    sc.setJobGroup(group, group)
+    try:
+        got = registry._fixed_centroids(spark, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job start events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert got == want

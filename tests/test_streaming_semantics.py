@@ -741,3 +741,39 @@ def test_streaming_kmeans_decay_discounts_idle_clusters(spark):
     # idle cluster 1's weight must halve each batch, not stay frozen
     assert model.weights[1] == w1_after_first * 0.25
     assert model.weights[0] > 0
+
+
+def test_stream_kmeans_scoring_runs_no_empty_batch(spark):
+    """``stream_kmeans_scoring`` runs to completion under an availableNow
+    trigger: every progress event a listener sees carries input rows (no
+    trailing no-data batch), and the merged totals match the oracle."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from k_means_in_mapreduce_spark import registry
+    from .conftest import SF0001, assert_oracle_match, make_duck_con
+
+    class Rows(StreamingQueryListener):
+        def __init__(self):
+            self.rows = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.rows.append(event.progress.numInputRows)
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Rows()
+    spark.streams.addListener(listener)
+    try:
+        out = registry.QUERIES["stream_kmeans_scoring"](spark, SF0001)
+        # progress events reach the listener asynchronously
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.rows and 0 not in listener.rows, listener.rows
+    con = make_duck_con(SF0001)
+    assert_oracle_match(out, registry.ORACLES["stream_kmeans_scoring"], con)
+    con.close()
