@@ -349,7 +349,10 @@ def clear_artifact_cache(sf_dir: str) -> int:
     cold build, not a read of last run's output. Note the cold column is
     per-ARTIFACT, not per-query: when several queries share one artifact
     (e.g. the Jaccard pair list), only the first consumer's first run
-    pays the build; later consumers' "cold" rows time a warm serve."""
+    pays the build; later consumers' "cold" rows time a warm serve. The
+    two connected-components names (``dedup_connected_components`` and
+    ``dedup_groups_star``) are one query over one groups artifact, so
+    whichever runs second has a cold row that times a warm serve."""
     import shutil
 
     from k_means_in_mapreduce_spark.artifacts import scratch_tag

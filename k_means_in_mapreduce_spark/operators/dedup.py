@@ -22,6 +22,10 @@ Scale design:
 - MinHash signatures/banding are pure Catalyst expressions on xxhash64 —
   constant-size state per doc (num_perm longs), bucket join on (band,
   bucket-hash) only.
+- The exact pair list and the ``(doc_id, component)`` groups table are
+  each built once per ``documents.parquet`` fingerprint and code version
+  and served as parquet after that: the large-star/small-star loop runs
+  only when the groups table is built, not on every call.
 """
 
 from __future__ import annotations
@@ -106,6 +110,12 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # residual risk, same order as the checksum collision accepted in
 # connected_components_star (~n²/2⁶⁴).
 HOT_SHINGLE_DF_CAP = 1000
+# the parameters that define the pair list, and so every table built from it
+_PAIR_PARAMS = {
+    "ngram_n": NGRAM_N,
+    "df_cap": HOT_SHINGLE_DF_CAP,
+    "threshold": JACCARD_THRESHOLD,
+}
 
 # NOTE: the oracle mirrors the engine's df-cap (HOT_SHINGLE_DF_CAP)
 # in candidate GENERATION — only pairs sharing at least one shingle with
@@ -273,10 +283,13 @@ def _dedup_artifact(
     """Build-once materialization for DETERMINISTIC dedup intermediates
     keyed on the source parquet's content fingerprint + algorithm
     parameters — see ``artifacts.materialized_artifact`` (shared with the
-    IVF index and exact-quantile artifacts). Pair lists and signature
-    tables are first-class materialized artifacts in a real pipeline —
-    grouping, audit metrics, and keeper selection all consume them — not
-    ephemeral subqueries recomputed per consumer. ``source_file``
+    IVF index and exact-quantile artifacts). Pair lists, signature
+    tables and component tables are first-class materialized artifacts
+    in a real pipeline — grouping, audit metrics, and keeper selection
+    all consume them — not ephemeral subqueries recomputed per consumer.
+    An artifact may build from another (the groups table from the pair
+    list); its build then takes the inner artifact's lock while holding
+    its own, never the other way round. ``source_file``
     defaults to the documents table; embedding-keyed artifacts (cosine
     truth, IVF pairs) pass embeddings.parquet."""
     from ..artifacts import materialized_artifact
@@ -296,11 +309,7 @@ def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "jaccard_pairs",
-        {
-            "ngram_n": NGRAM_N,
-            "df_cap": HOT_SHINGLE_DF_CAP,
-            "threshold": JACCARD_THRESHOLD,
-        },
+        _PAIR_PARAMS,
         lambda: jaccard_pairs(_shingled(spark, sf_dir)),
     )
 
@@ -455,9 +464,24 @@ _CC_SQL = f"""
 def dedup_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full near-dup dedup groups: exact Jaccard pairs -> connected
     components (:func:`connected_components_star`) -> (doc_id, component).
-    Registered under both CC query names; they are one query."""
-    pairs = near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    return connected_components_star(pairs)
+    Registered under both CC query names; they are one query.
+
+    The component table is built once per ``documents.parquet``
+    fingerprint and per code version of this module's cone, like the
+    pair list it is derived from; every later call reads that parquet,
+    so the star loop runs only on a build. Locks nest in one order only:
+    the groups build holds its own ``build_lock`` and then takes the
+    pairs lock inside :func:`near_dup_pairs`. No path takes the groups
+    lock while holding the pairs lock, so two processes cannot deadlock."""
+    return _dedup_artifact(
+        spark,
+        sf_dir,
+        "groups_star",
+        _PAIR_PARAMS,
+        lambda: connected_components_star(
+            near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -527,9 +527,10 @@ def test_package_keeps_one_module_level_memo():
 def test_regenerated_sources_served_fresh_under_live_session(
     spark, tmp_path, monkeypatch
 ):
-    """Regenerate two source tables under a live session after warming a
-    loaded table, an artifact and a stream schema probe: every path must
-    serve the new data, not a plan memoized for the old files."""
+    """Regenerate three source tables under a live session after warming
+    a loaded table, two artifacts and a stream schema probe: every path
+    must serve the new data, not a plan memoized for the old files or a
+    table built from them."""
     import shutil
 
     import numpy as np
@@ -560,10 +561,12 @@ def test_regenerated_sources_served_fresh_under_live_session(
     monkeypatch.setattr(A, "parquet_plan", spy)
     stream = registry.QUERIES["stream_kmeans_scoring"]
     quantiles = registry.QUERIES["lineitem_price_quantiles"]
+    groups = registry.QUERIES["dedup_groups_star"]
     try:
-        # warm: the table plan, the artifact, and the stream schema probe
+        # warm: the table plan, the artifacts, and the stream schema probe
         assert load_table(spark, sf, "embeddings").count() == 500
         quantiles(spark, sf).collect()
+        assert groups(spark, sf).count() > 0
         stream(spark, sf).collect()
         assert probed == [T.FloatType()]
 
@@ -579,6 +582,27 @@ def test_regenerated_sources_served_fresh_under_live_session(
         pq.write_table(new_emb, f"{sf}/embeddings.parquet")
         li = pq.read_table(f"{sf}/lineitem.parquet")
         pq.write_table(li.slice(0, 2500), f"{sf}/lineitem.parquet")
+        # near-dup groups {10, 11, 12} and {20, 21}; 30 and 31 share no
+        # shingle with anything, so they get no row
+        alpha = [f"alpha{i}" for i in range(20)]
+        beta = [f"beta{i}" for i in range(20)]
+        texts = {
+            10: alpha,
+            11: alpha[:-1] + ["alphax"],
+            12: ["alphay"] + alpha[1:-1] + ["alphax"],
+            20: beta,
+            21: beta,
+            30: [f"gamma{i}" for i in range(20)],
+            31: [f"delta{i}" for i in range(20)],
+        }
+        docs = [" ".join(words) for words in texts.values()]
+        pq.write_table(pa.table({
+            "doc_id": pa.array(list(texts), pa.int64()),
+            "text": pa.array(docs, pa.string()),
+            "lang": pa.array(["en"] * len(docs), pa.string()),
+            "source": pa.array(["src0"] * len(docs), pa.string()),
+            "n_chars": pa.array([len(d) for d in docs], pa.int64()),
+        }), f"{sf}/documents.parquet")
 
         got = load_table(spark, sf, "embeddings").orderBy("vec_id").collect()
         assert [r["vec_id"] for r in got] == list(range(300))
@@ -587,6 +611,12 @@ def test_regenerated_sources_served_fresh_under_live_session(
         con = make_duck_con(sf)
         assert_oracle_match(
             quantiles(spark, sf), registry.ORACLES["lineitem_price_quantiles"], con
+        )
+        assert {(r.doc_id, r.component) for r in groups(spark, sf).collect()} == {
+            (10, 10), (11, 10), (12, 10), (20, 20), (21, 20)
+        }
+        assert_oracle_match(
+            groups(spark, sf), registry.ORACLES["dedup_groups_star"], con
         )
         assert_oracle_match(
             stream(spark, sf), registry.ORACLES["stream_kmeans_scoring"], con

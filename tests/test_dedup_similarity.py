@@ -285,6 +285,51 @@ def test_star_cc_edgeless_inputs_return_empty(spark, tmp_path):
         assert got == [[]], name
 
 
+def test_served_groups_skip_the_star_loop(spark, tmp_path, monkeypatch):
+    """After one building call, the groups table is served: a second
+    call forced with the noop sink runs one job and never reaches the
+    star loop or the pair builder, and its rows are the built ones,
+    which a driver-side union-find over the pair list reproduces."""
+    import shutil
+
+    import bench
+    from k_means_in_mapreduce_spark.operators import dedup
+
+    from .conftest import SF0001
+
+    sf = str(tmp_path)
+    shutil.copyfile(f"{SF0001}/documents.parquet", f"{sf}/documents.parquet")
+    groups = registry.QUERIES["dedup_groups_star"]
+    try:
+        built = {(r.doc_id, r.component) for r in groups(spark, sf).collect()}
+
+        def forbidden(*a, **kw):
+            raise AssertionError("served groups reran the star loop or the pair build")
+
+        monkeypatch.setattr(dedup, "connected_components_star", forbidden)
+        monkeypatch.setattr(dedup, "jaccard_pairs", forbidden)
+        sc = spark.sparkContext
+        group = "served-groups-one-job"
+        sc.setJobGroup(group, group)
+        try:
+            served = groups(spark, sf)
+            served.write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # job start events reach the status store asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+        pairs = [(r.doc_a, r.doc_b) for r in dedup.near_dup_pairs(spark, sf).collect()]
+        assert pairs, "the corpus should contain near-dup pairs"
+        got = [(r.doc_id, r.component) for r in served.collect()]
+        assert len(got) == len(set(got))
+        assert set(got) == built == _union_find_components(pairs)
+    finally:
+        bench.clear_artifact_cache(sf)
+
+
 def test_exact_dedup_copies(spark):
     """At sf0.01 all docs are distinct; the operator must report exactly
     one copy per hash and as many hashes as docs."""

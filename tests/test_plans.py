@@ -106,15 +106,16 @@ def test_embedding_cosine_no_join(spark):
 def test_embedding_cosine_no_driver_materialization(spark, monkeypatch):
     """The block-NLJ cosine BUILDER must never pull the table through the
     driver: building AND executing with DataFrame.collect() forbidden
-    still yields the full pair set (executor-side row-group scans only)."""
-    from pyspark.sql import DataFrame
-
+    still yields the full pair set (executor-side row-group scans only).
+    The patch goes on the session's own DataFrame class: it defines its
+    own collect, so a patch on the abstract pyspark.sql.DataFrame would
+    never fire."""
     from k_means_in_mapreduce_spark.operators.dedup import _exact_cosine_compute
 
     def _no_collect(self):
         raise AssertionError("driver-side collect() in dedup_embedding_cosine")
 
-    monkeypatch.setattr(DataFrame, "collect", _no_collect)
+    monkeypatch.setattr(type(spark.range(1)), "collect", _no_collect)
     df = _exact_cosine_compute(spark, SF001)
     assert df.count() > 0
 
