@@ -161,10 +161,13 @@ def _write_centroid_text(spark, centroids, path) -> None:
     (KMeans.java:90,150; Point.java:96-106)."""
     from pyspark.sql import functions as F
 
+    from .functions.vector import literal_table
     from .sources.text_points import format_points
 
-    cents = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)],
+    cents = literal_table(
+        spark,
+        [{"cluster_id": i, "features": [float(x) for x in c]}
+         for i, c in enumerate(centroids)],
         "cluster_id int, features array<double>",
     )
     lines = format_points(cents).select(

@@ -16,11 +16,14 @@ This reproduces the *intended* semantics of the reference MapReduce job
 - empty-cluster policy: discard ALL centroids and re-sample k fresh ones
   (reference C4, ``KMeans.java:167-171``)
 
-:func:`fit` iterates :func:`cluster_features_arrow`, the reference's
-in-mapper combiner (``KMeans.java:33-67``) over Arrow batches. The same
-Lloyd step as a DataFrame of Catalyst expressions, :func:`cluster_features`
-over :func:`assign_clusters`, serves streaming, ``__spark_entry__.entry``
-and the text-egress query, where the DuckDB oracle checks it.
+:func:`cluster_features_arrow` is the reference's in-mapper combiner
+(``KMeans.java:33-67``) over Arrow batches. It is every per-batch Lloyd
+step in the package: :func:`fit` iterates it, and both streaming paths
+(``stream_kmeans_scoring`` and ``StreamingKMeansState.update``) run it once
+per micro-batch. The same step as a DataFrame of Catalyst expressions,
+:func:`cluster_features` over :func:`assign_clusters`, serves
+``__spark_entry__.entry``, the text-egress query and the assignment
+queries, where the DuckDB oracle checks it.
 
 Scale design (100 TB, 1000 executors):
 - the input is cached once and re-scanned per iteration (the canonical
@@ -179,6 +182,60 @@ def cluster_features(
     )
 
 
+def arrow_combiner(centroids: list[list[float]]):
+    """The per-task body of :func:`cluster_features_arrow`: a function from
+    an iterator of Arrow batches (one list<double> column) to per-cluster
+    ``(cluster_id, n, s)`` partial batches. Callable on the driver as well.
+
+    Exact-duplicate centroid rows collapse to their first occurrence
+    before the GEMM, and the argmin's columns map back to original ids.
+    Multithreaded BLAS may round two identical columns of ``X @ Cᵀ``
+    differently, which would put a point on the higher-index duplicate;
+    the reference's rule is the lowest index (``Point.java:65``), and the
+    C4 re-init needs duplicate init rows to leave one cluster empty. With
+    distinct centroids the GEMM input is ``C`` itself, so results are
+    unchanged bit for bit.
+    """
+    import numpy as np
+
+    C = np.asarray(centroids, dtype=np.float64)
+    k, d = C.shape
+    # first occurrence of each distinct row, in original order
+    first = np.sort(np.unique(C, axis=0, return_index=True)[1])
+    U = C[first]
+    un2 = (U * U).sum(axis=1)
+
+    # Self-contained closure (cloudpickle ships it by value — executor
+    # Python workers don't have this package on sys.path).
+    def partial_cf(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for batch in batches:
+            col = batch.column(0)
+            X = (
+                col.flatten()
+                .to_numpy(zero_copy_only=False)
+                .astype(np.float64, copy=False)
+                .reshape(len(col), d)
+            )
+            d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ U.T) + un2[None, :]
+            cid = first[d2.argmin(1)]
+            counts = np.bincount(cid, minlength=k)
+            sums = np.zeros((k, d))
+            np.add.at(sums, cid, X)
+            nz = np.nonzero(counts)[0]
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "cluster_id": pa.array(nz.astype(np.int32)),
+                    "n": pa.array(counts[nz].astype(np.int64)),
+                    "s": pa.array(sums[nz].tolist(), type=pa.list_(pa.float64())),
+                }
+            )
+
+    return partial_cf
+
+
 def cluster_features_arrow(
     points: DataFrame,
     centroids: list[list[float]],
@@ -195,7 +252,8 @@ def cluster_features_arrow(
 
     Returns [(cluster_id, num_points, mean_vector)] for non-empty clusters.
     ``np.argmin`` takes the first minimum — the reference's lowest-index
-    tie-break (``Point.java:65``).
+    tie-break (``Point.java:65``); exact-duplicate centroids collapse to
+    their first occurrence first (:func:`arrow_combiner`).
 
     Uses ``mapInArrow`` rather than ``mapInPandas``: the Arrow list column
     flattens to the dense n×d matrix without the per-row ``tolist()``
@@ -204,40 +262,8 @@ def cluster_features_arrow(
     """
     import numpy as np
 
-    C = np.asarray(centroids, dtype=np.float64)
-
-    # Self-contained closure (cloudpickle ships it by value — executor
-    # Python workers don't have this package on sys.path).
-    def partial_cf(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        cn2 = (C * C).sum(axis=1)
-        k, d = C.shape
-        for batch in batches:
-            col = batch.column(0)
-            X = (
-                col.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False)
-                .reshape(len(col), -1)
-            )
-            d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ C.T) + cn2[None, :]
-            cid = d2.argmin(1)
-            counts = np.bincount(cid, minlength=k)
-            sums = np.zeros((k, d))
-            np.add.at(sums, cid, X)
-            nz = np.nonzero(counts)[0]
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "cluster_id": pa.array(nz.astype(np.int32)),
-                    "n": pa.array(counts[nz].astype(np.int64)),
-                    "s": pa.array(sums[nz].tolist(), type=pa.list_(pa.float64())),
-                }
-            )
-
     parts = points.select(features_col).mapInArrow(
-        partial_cf, "cluster_id int, n long, s array<double>"
+        arrow_combiner(centroids), "cluster_id int, n long, s array<double>"
     ).collect()
 
     agg: dict[int, tuple[int, "np.ndarray"]] = {}

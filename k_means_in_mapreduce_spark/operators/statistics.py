@@ -112,10 +112,15 @@ def exact_quantiles(
     Same definition as Spark ``percentile`` / DuckDB ``quantile_cont`` /
     ``numpy.percentile(method="linear")`` — property-tested against NumPy
     in tests/test_extensions.py. Output: one row per group with columns
-    ``(key_col, n_rows, *quantiles.keys())``. ~2x faster than
-    ``percentile`` at sf0.1 and bounded-memory at any scale; the sketch
-    alternative for when exactness isn't required is ``approx_percentile``
-    (see ``lineitem_price_quantiles_approx``).
+    ``(key_col, n_rows, *quantiles.keys())``. Bounded-memory at any
+    scale, but slower than ``percentile`` below ~10M distinct values per
+    group. At sf0.1 (the ``lineitem_price_quantiles`` build, 3 groups of
+    ~200k values) the CDF ran 12 jobs and 10–12 CPU-s against
+    ``percentile``'s 2 jobs and 2.6–2.9 CPU-s. It wins only from ~10M
+    distinct values per group: 39 s against 63 s at 10M, and at 30M
+    ``percentile`` killed the JVM (one group, 8g driver, 4-core VM). The
+    sketch alternative for when exactness isn't required is
+    ``approx_percentile`` (see ``lineitem_price_quantiles_approx``).
 
     The running sum in step 2 is DISTRIBUTED, not one window task per
     group (a near-continuous value column at 100 TB would funnel each

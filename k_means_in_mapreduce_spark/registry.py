@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import ORACLES, QUERIES, query
+from .functions.vector import literal_table
 from .operators import kmeans_df as K
 from .sources import load_table
 from .sources.text_points import (
@@ -409,11 +410,13 @@ def points_text_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_kmeans_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch incremental model scoring (SURVEY §2.9): each
-    micro-batch of vectors is assigned to its nearest fixed centroid (same
-    expression as the batch path) and per-cluster counts are merged into a
-    driver-side running state — the streaming analogue of the reference's
-    scoring pass, with the centroid set as the broadcast model. The
-    running totals must equal the batch cluster sizes."""
+    micro-batch of vectors runs the fit's Arrow combiner
+    (``cluster_features_arrow``) against the fixed centroids — one narrow
+    Arrow stage, no exchange, k rows to the driver — and its per-cluster
+    counts are merged into a driver-side running state: the streaming
+    analogue of the reference's scoring pass, with the centroid set as
+    the broadcast model. The running totals must equal the batch cluster
+    sizes, which the oracle computes with the direct-form distance."""
     # Probe the file's own schema like streaming.windows.read_events_stream
     # does — a hard-coded struct silently misreads a regenerated fixture
     # whose embedding element type or column set changed (the batch loader
@@ -434,22 +437,18 @@ def stream_kmeans_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals: dict[int, int] = {}
 
     def score_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        counts = (
-            K.assign_clusters(batch_df, centroids)
-            .groupBy("cluster_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        for r in counts:
-            totals[r["cluster_id"]] = totals.get(r["cluster_id"], 0) + r["n"]
+        for c, n, _mean in K.cluster_features_arrow(batch_df, centroids, "embedding"):
+            totals[c] = totals.get(c, 0) + n
 
     # availableNow runs every file present at start, then stops itself
     stream.writeStream.foreachBatch(score_batch).trigger(
         availableNow=True
     ).start().awaitTermination()
 
-    return spark.createDataFrame(
-        sorted(totals.items()), "cluster_id int, num_points bigint"
+    return literal_table(
+        spark,
+        [{"cluster_id": c, "num_points": n} for c, n in sorted(totals.items())],
+        "cluster_id int, num_points bigint",
     )
 
 

@@ -7,10 +7,10 @@ arriving mini-batch into the model once. MLlib has this operator only in
 the deprecated DStream API (``StreamingKMeans``); here it is rebuilt on
 ``foreachBatch`` over the engine's own building blocks:
 
-- per batch: nearest-centroid assignment against the CURRENT centroids
-  (broadcast k×d plan literal — ``assign_clusters``) and the per-cluster
-  (count, sum) clustering feature via the same posexplode hash-agg the
-  oracle-checked batch queries use (``cluster_features``); k rows cross to
+- per batch: one Lloyd step against the CURRENT centroids, run by the
+  batch fit's own Arrow combiner (``cluster_features_arrow``): each task
+  assigns its rows and emits per-cluster (count, sum) partials in one
+  narrow stage with no exchange; at most k rows per Arrow batch cross to
   the driver.
 - decayed update (MLlib StreamingKMeans semantics):
       n_i' = a·n_i + m_i
@@ -21,7 +21,7 @@ the deprecated DStream API (``StreamingKMeans``); here it is rebuilt on
   analogue of reference A7's missing-group policy.
 
 Driver state is O(k·d) floats — the same footprint as the batch loop; all
-per-row work stays distributed and JVM-side. At scale the batch interval
+per-row work stays distributed. At scale the batch interval
 bounds latency and the update is one tiny collect per trigger.
 """
 
@@ -31,7 +31,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
-from ..operators.kmeans_df import assign_clusters, cluster_features
+from ..operators.kmeans_df import cluster_features_arrow
 
 
 @dataclass
@@ -49,9 +49,7 @@ class StreamingKMeansState:
     def update(self, batch_df: DataFrame, epoch_id: int,
                features_col: str = "features") -> None:
         """Fold one mini-batch into the model (the foreachBatch body)."""
-        assigned = assign_clusters(batch_df, self.centroids, features_col)
-        rows = cluster_features(assigned, len(self.centroids[0]),
-                                features_col).collect()
+        rows = cluster_features_arrow(batch_df, self.centroids, features_col)
         # MLlib StreamingKMeans semantics: EVERY cluster's weight is
         # discounted each batch — including clusters that received no
         # points — or an intermittently-active cluster would keep its full
@@ -60,10 +58,8 @@ class StreamingKMeansState:
         a = self.decay
         self.weights = [a * w for w in self.weights]
         moved = 0.0
-        for r in rows:
-            i = r["cluster_id"]
-            m = float(r["num_points"])
-            mean = list(r["centroid"])
+        for i, n, mean in rows:
+            m = float(n)
             w = self.weights[i]
             new_w = w + m
             old = self.centroids[i]
@@ -77,7 +73,7 @@ class StreamingKMeansState:
         self.history.append(
             {
                 "epoch": epoch_id,
-                "batch_points": int(sum(r["num_points"] for r in rows)),
+                "batch_points": sum(n for _, n, _ in rows),
                 "movement": moved,
             }
         )

@@ -137,10 +137,11 @@ def test_text_roundtrip(spark, emb):
 
 
 def test_arrow_step_matches_dataframe_step(spark, emb):
-    """The two Lloyd-step implementations agree on fixed centroids: the fit
-    loop's Arrow combiner (driver lists) and the DataFrame form that
-    streaming, the entry point and the oracle-checked queries use. The far
-    centroid attracts no point, so both must leave its id out."""
+    """The two Lloyd-step implementations agree on fixed centroids: the
+    Arrow combiner that the fit and both streaming paths run (driver
+    lists) and the Catalyst DataFrame form that the entry point and the
+    oracle-checked text-egress query use. The far centroid attracts no
+    point, so both must leave its id out."""
     pts = emb.select(F.col("embedding").alias("features"))
     rows = [
         list(map(float, r[0]))
@@ -161,6 +162,70 @@ def test_arrow_step_matches_dataframe_step(spark, emb):
         np.array([m for _, _, m in arrow]), np.array([m for _, _, m in frame]),
         rtol=1e-9, atol=1e-12,
     )
+
+
+def test_arrow_combiner_keeps_duplicate_centroids_on_lowest_index():
+    """Exact-duplicate centroids: every point goes to the FIRST copy
+    (``Point.java:65``) whatever BLAS threading does to the GEMM's
+    duplicate columns, and the combiner's counts equal a direct-form
+    NumPy argmin. 741 draws on sf0.001: for each k in 2..39, k-1 distinct
+    data rows plus one later duplicate of each of them in turn."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    col = pq.read_table(f"{SF0001}/embeddings.parquet").column("embedding")
+    col = col.combine_chunks().cast(pa.list_(pa.float64()))
+    batch = pa.RecordBatch.from_arrays([col], ["features"])
+    X = np.asarray(col.flatten()).reshape(len(col), -1)
+    rng = np.random.default_rng(0)
+    cases = 0
+    for k in range(2, 40):
+        rows = rng.choice(len(X), k - 1, replace=False)
+        for j in range(k - 1):
+            at = int(rng.integers(j + 1, k))  # a later position than j
+            C = np.insert(X[rows], at, X[rows[j]], axis=0)
+            out = next(K.arrow_combiner(C.tolist())(iter([batch])))
+            counts = np.zeros(k, dtype=np.int64)
+            counts[out.column(0).to_numpy()] = out.column(1).to_numpy()
+            direct = ((X[:, None, :] - C[None, :, :]) ** 2).sum(2).argmin(1)
+            assert counts[at] == 0, (k, j, at)
+            np.testing.assert_array_equal(
+                counts, np.bincount(direct, minlength=k), err_msg=f"{k} {j}"
+            )
+            cases += 1
+    assert cases == 741
+
+
+def test_write_centroid_text_is_bit_exact_without_create_dataframe(
+    spark, tmp_path, monkeypatch
+):
+    """The CLI's centroid egress builds its table as a plan literal, not
+    through ``createDataFrame`` (whose pickled Python RDD starts a second
+    Python worker pool), and every written value parses back to its input
+    bit for bit: −0.0, the smallest subnormal, the largest double and a
+    non-terminating sum."""
+    import glob
+
+    from k_means_in_mapreduce_spark import cli
+
+    def refuse(*a, **kw):
+        raise AssertionError("createDataFrame called")
+
+    monkeypatch.setattr(type(spark), "createDataFrame", refuse)
+    vals = [-0.0, 5e-324, 1.7976931348623157e308, 0.1 + 0.2]
+    cents = [vals, vals[::-1], [1.0, 2.0, 3.0, 4.0]]
+    out = str(tmp_path / "cents")
+    cli._write_centroid_text(spark, cents, out)
+
+    parsed = {}
+    for part in glob.glob(f"{out}/part-*"):
+        for line in open(part).read().splitlines():
+            cid, vec = line.split("\t", 1)
+            assert vec.startswith("<") and vec.endswith(">"), line
+            parsed[int(cid)] = [float(x) for x in vec[1:-1].split(", ")]
+    assert sorted(parsed) == [0, 1, 2]
+    for i, c in enumerate(cents):
+        assert [x.hex() for x in parsed[i]] == [x.hex() for x in c], i
 
 
 def test_config_accepts_only_the_arrow_method():

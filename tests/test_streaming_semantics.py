@@ -746,7 +746,10 @@ def test_streaming_kmeans_decay_discounts_idle_clusters(spark):
 def test_stream_kmeans_scoring_runs_no_empty_batch(spark):
     """``stream_kmeans_scoring`` runs to completion under an availableNow
     trigger: every progress event a listener sees carries input rows (no
-    trailing no-data batch), and the merged totals match the oracle."""
+    trailing no-data batch), and the merged totals match the oracle.
+    Its shape is pinned too: the one micro-batch is one job of one stage
+    (the Arrow combiner, no exchange), and the returned table is a plan
+    literal, not a scan of a Python RDD."""
     from pyspark.sql.streaming import StreamingQueryListener
 
     from k_means_in_mapreduce_spark import registry
@@ -755,9 +758,10 @@ def test_stream_kmeans_scoring_runs_no_empty_batch(spark):
     class Rows(StreamingQueryListener):
         def __init__(self):
             self.rows = []
+            self.run_ids = []
 
         def onQueryStarted(self, event):
-            pass
+            self.run_ids.append(str(event.runId))
 
         def onQueryProgress(self, event):
             self.rows.append(event.progress.numInputRows)
@@ -774,6 +778,14 @@ def test_stream_kmeans_scoring_runs_no_empty_batch(spark):
     finally:
         spark.streams.removeListener(listener)
     assert listener.rows and 0 not in listener.rows, listener.rows
+    # streaming runs each micro-batch's jobs under the run id's job group
+    (run_id,) = listener.run_ids
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(run_id)
+    assert len(jobs) == 1, jobs
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
     con = make_duck_con(SF0001)
     assert_oracle_match(out, registry.ORACLES["stream_kmeans_scoring"], con)
     con.close()
