@@ -53,7 +53,7 @@ def entry(spark: SparkSession) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     cents = registry._fixed_centroids(spark, sf_dir)
     assigned = K.assign_clusters(emb, cents)
-    return K.cluster_features(assigned, registry.DIM)
+    return K.cluster_features(assigned)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -125,7 +125,6 @@ def assign_clusters(
 
 def cluster_features(
     assigned: DataFrame,
-    dim: int,
     features_col: str = "embedding",
     cluster_col: str = "cluster_id",
 ) -> DataFrame:
@@ -146,8 +145,7 @@ def cluster_features(
     form): measured 2x slower at n=100k, d=64 — 64 wide agg buffers with
     per-buffer array indexing lose to one tight (cluster, dim) hash-agg
     over exploded rows, and the wide form's generated code grows with d
-    while this plan is d-independent. ``dim`` is kept in the signature for
-    call-site documentation; the plan no longer depends on it.
+    while this plan is d-independent: arity comes from the data itself.
 
     Data-model contract (the reference's, SURVEY §1.3): vectors are
     FIXED-ARITY and NON-NULL — no null elements, no empty arrays. Under
@@ -157,7 +155,6 @@ def cluster_features(
     matching the reference, which has no null handling at all
     (a malformed point kills the job, ``KMeans.java:269``).
     """
-    del dim  # plan is d-independent; arity comes from the data itself
     exploded = assigned.select(
         cluster_col, F.posexplode(features_col).alias("_dim", "_v")
     )

@@ -413,13 +413,14 @@ def part_catalog_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def orders_monthly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-month order stats. The median comes from the range-distributed
-    CDF operator (statistics.exact_quantiles), NOT Spark's ``percentile``
+    """Per-month order stats. The median comes from the one-window CDF
+    operator (statistics.exact_quantiles), NOT Spark's ``percentile``
     aggregate: percentile's partial state is a counts-map of every
     distinct value a group has seen, and o_totalprice is near-continuous
     — at 100 TB each month's map is ~that month's row count and the
-    final merge task OOMs. The CDF form stays hash-aggregable end to end;
-    the month-level join it costs is a broadcast of one row per month."""
+    final merge task OOMs. The CDF's window sorts each month's distinct
+    values and spills when they outgrow memory; the month-level join it
+    costs is a broadcast of one row per month."""
     from .statistics import exact_quantiles
 
     o = load_table(spark, sf_dir, "orders").select(

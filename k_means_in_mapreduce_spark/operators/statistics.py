@@ -2,8 +2,8 @@
 (SURVEY §2.4 "[absent]" distinct/statistics rows + §2.7 json functions —
 completing the scalar/aggregate surface with Spark builtins).
 
-- exact quantiles (``percentile`` — linear interpolation, matches
-  DuckDB's ``quantile_cont``)
+- exact quantiles (one CDF window over distinct values — linear
+  interpolation, matches DuckDB's ``quantile_cont``)
 - moments: stddev/variance/skewness-free stats per group
 - exact COUNT(DISTINCT) (plans as a two-stage partial-distinct
   aggregate) and the HLL sketch variant (``approx_count_distinct``) as
@@ -34,10 +34,10 @@ from ..sources import load_table
     """,
 )
 def lineitem_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated quantiles per return flag via the distributed
-    CDF operator ``exact_quantiles`` (see its docstring for the scale
-    rationale vs Spark's buffer-everything ``percentile`` aggregate).
-    Matches DuckDB ``quantile_cont`` bit-for-bit. The (k rows × |q|)
+    """Exact interpolated quantiles per return flag via the one-window
+    CDF operator ``exact_quantiles`` (its docstring says why it is not
+    Spark's ``percentile`` and what it costs). Matches DuckDB
+    ``quantile_cont`` bit-for-bit. The (k rows × |q|)
     result is served as a build-once fingerprint-keyed artifact — it
     feeds this query AND the sketch-error bound
     (``lineitem_price_quantiles_bound``), and exact order statistics over
@@ -64,22 +64,6 @@ def lineitem_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Value-range buckets for the distributed CDF in exact_quantiles: each
-# (key, bucket) running-sum task handles ~1/buckets of the group's
-# distinct values. Floor for small/local runs; scales with the cluster.
-CDF_BUCKETS_MIN = 32
-
-
-def _cdf_buckets(spark: SparkSession) -> int:
-    """Bucket count ~ cluster parallelism, floored at CDF_BUCKETS_MIN.
-
-    On local[32] this is 32 (unchanged plans/tests); on a 1000-executor
-    cluster defaultParallelism rises and every (key, bucket) running-sum
-    task keeps handling ~1/parallelism of each group — the property that
-    makes the CDF sort fan out instead of funneling per group."""
-    return max(CDF_BUCKETS_MIN, spark.sparkContext.defaultParallelism)
-
-
 def exact_quantiles(
     df: DataFrame,
     key_col: str,
@@ -87,157 +71,76 @@ def exact_quantiles(
     quantiles: dict[str, float],
 ) -> DataFrame:
     """EXACT linearly-interpolated quantiles per group, computed from the
-    per-group CDF over DISTINCT values — a scalable replacement for
+    per-group CDF over DISTINCT values — a bounded-memory replacement for
     Spark's ``percentile`` aggregate.
 
     ``percentile`` is a TypedImperativeAggregate whose partial state is a
     counts-map of every value it has seen — the shuffle carries the whole
-    value distribution and one final task per group materializes it
-    (unbounded memory per group at 100 TB). The CDF form keeps every
-    stage hash-aggregable and mergeable:
+    value distribution and one final task per group materializes it in
+    memory. The CDF form holds no such map; its one sort spills:
 
       1. ``groupBy(key, val).count`` — classic partial/final hash agg;
          the shuffle carries one row per DISTINCT (key, value);
-      2. running ``sum(cnt)`` window per key over value order — the CDF;
+      2. ONE window per key over value order carries both the running
+         ``sum(cnt)`` (the CDF, ``cum``) and the group total ``n_rows``.
+         Both frames share one partition/order spec, so the plan has one
+         Window node; values are distinct per key after step 1, so ROWS
+         frames equal RANGE frames;
       3. the interpolation definition ``t = (n-1)q`` needs only the order
-         statistics at ranks ``floor(t)+1`` and ``floor(t)+2``: with the
-         group total ``n_rows`` carried on every CDF row (it comes along
-         with the bucket split points in the one per-key broadcast), the
-         2·|q| target ranks are plain row arithmetic — a narrow
-         explode + rank-interval filter inside the CDF's own codegen
-         stage, one CDF scan for ALL quantiles at once;
+         statistics at ranks ``floor(t)+1`` and ``floor(t)+2``: with
+         ``n_rows`` on every CDF row the 2·|q| target ranks are plain row
+         arithmetic — a narrow explode + rank-interval filter, one CDF
+         scan for ALL quantiles at once;
       4. ONE final hash-agg per group assembles both order statistics per
          quantile and interpolates.
 
     Same definition as Spark ``percentile`` / DuckDB ``quantile_cont`` /
     ``numpy.percentile(method="linear")`` — property-tested against NumPy
     in tests/test_extensions.py. Output: one row per group with columns
-    ``(key_col, n_rows, *quantiles.keys())``. Bounded-memory at any
-    scale, but slower than ``percentile`` below ~10M distinct values per
-    group. At sf0.1 (the ``lineitem_price_quantiles`` build, 3 groups of
-    ~200k values) the CDF ran 12 jobs and 10–12 CPU-s against
-    ``percentile``'s 2 jobs and 2.6–2.9 CPU-s. It wins only from ~10M
-    distinct values per group: 39 s against 63 s at 10M, and at 30M
-    ``percentile`` killed the JVM (one group, 8g driver, 4-core VM). The
-    sketch alternative for when exactness isn't required is
-    ``approx_percentile`` (see ``lineitem_price_quantiles_approx``).
+    ``(key_col, n_rows, *quantiles.keys())``.
 
-    The running sum in step 2 is DISTRIBUTED, not one window task per
-    group (a near-continuous value column at 100 TB would funnel each
-    group's ~n distinct values through a single sort task). Classic
-    two-pass range-partitioned CDF:
+    Each group's running sum is one window task. An earlier form spread
+    it across value-range buckets (an eager checkpoint, an
+    ``approx_percentile`` split pass, two broadcasts, two windows); it
+    returned the same rows and measured slower at every size tried
+    (4-core VM, ``local[4]``, medians, process-tree CPU; bucketed → one
+    window):
 
-      2a. bucket each (key, value) row by value range — split points from
-          a coarse ``approx_percentile`` per key (any monotone bucketing
-          works; equi-depth keeps buckets balanced under skew);
-      2b. per-(key, bucket) totals -> running offsets over the tiny
-          (key × n_buckets) grid — a window over <= n_buckets rows
-          per key, bounded state regardless of n;
-      2c. running sum WITHIN each (key, bucket) — parallel across
-          buckets; ``cum = bucket_offset + local running sum``.
+      - sf0.1 ``lineitem_price_quantiles`` build, 3 flags: 12 → 3 jobs,
+        2.52 → 1.09 s wall, 7.68 → 2.53 CPU-s;
+      - sf0.1 month medians, 80 groups: 12 → 3 jobs, 1.36 → 0.50 s,
+        2.43 → 0.71 CPU-s;
+      - one group of 10M distinct values, 8g driver: 23.5 → 15.0 s,
+        87.1 → 33.5 CPU-s (single runs);
+      - one group of 30M distinct values, 8g driver: 63.6 → 35.8 s,
+        235 → 72.5 CPU-s (single runs). ``percentile`` killed the JVM
+        at this size.
 
-    The bucket count is derived from the session's defaultParallelism
-    (floored at CDF_BUCKETS_MIN — see ``_cdf_buckets``), so no task ever
-    sorts more than ~1/parallelism of a group at any cluster size."""
+    The sketch alternative for when exactness isn't required is
+    ``approx_percentile`` (see ``lineitem_price_quantiles_approx``)."""
     from pyspark.sql import Window as W
 
-    n_buckets = _cdf_buckets(df.sparkSession)
     # NULL values are excluded up front — quantile_cont / percentile /
     # numpy all ignore NULLs; without this filter they would enter the CDF
     # (sorting first) and shift every rank.
     df = df.filter(F.col(val_col).isNotNull())
-    # ONE scan of the base table: everything downstream (split points,
-    # group totals, the CDF itself) derives from the distinct-value counts.
-    # localCheckpoint so the consumers share the materialized result
-    # instead of re-scanning (measured 4.9s -> 1.8s at sf0.1; at 100 TB
-    # this is the difference between one pass and three). Eager on
-    # purpose: a lazy checkpoint materialized by the first consumer saves
-    # one job but makes Spark's deferred doCheckpoint() pass spam
-    # "non-existent accumulator" ERRORs when it runs after the consumer
-    # query's metrics are unregistered (measured: 50 such lines per
-    # bench sweep) — not worth one small job.
-    counts = (
-        df.groupBy(key_col, val_col)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
+    # 1-2: distinct-value counts, then the CDF and the group total
+    counts = df.groupBy(key_col, val_col).agg(F.count(F.lit(1)).alias("cnt"))
+    w = W.partitionBy(key_col).orderBy(val_col)
+    cdf = counts.select(
+        key_col,
+        val_col,
+        "cnt",
+        F.sum("cnt")
+        .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
+        .alias("cum"),
+        F.sum("cnt")
+        .over(w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+        .alias("n_rows"),
     )
-    # 2a: ONE per-key pass over the distinct values computes BOTH the
-    # bucket split points AND the group total n_rows (r21: these were two
-    # separate aggregations over counts, each shipped to the executors as
-    # its own broadcast — same answers, one fewer full pass + broadcast).
-    # Split points are approximate and unweighted, which is fine — ANY
-    # assignment monotone in value yields a correct CDF; accuracy only
-    # affects balance, and the running-sum stage being balanced needs
-    # equi-DISTINCT-depth buckets, which is exactly what unweighted
-    # percentiles over the distinct set give. accuracy scales with the
-    # bucket count: a fixed accuracy=100 bounds rank error at 1/100 of
-    # the distinct set, so requesting more than ~100 split points would
-    # make adjacent points collide and silently cap the effective
-    # parallelism of the running-sum stage at ~100 buckets — exactly
-    # wrong on the large clusters where n_buckets (derived from
-    # defaultParallelism) is highest.
-    perkey = counts.groupBy(key_col).agg(
-        F.approx_percentile(
-            val_col,
-            F.array(
-                *[
-                    F.lit(i / n_buckets)
-                    for i in range(1, n_buckets)
-                ]
-            ),
-            F.lit(max(100, 4 * n_buckets)),
-        ).alias("_splits"),
-        F.sum("cnt").alias("n_rows"),
-    )
-    # bucket id = number of split points strictly below the value — a
-    # narrow map after a broadcast join of the k×(B-1) split table;
-    # n_rows rides along on every row (needed by the rank arithmetic
-    # below), so no second per-key aggregate/broadcast exists.
-    bucketed = counts.join(F.broadcast(perkey), key_col).withColumn(
-        "_bkt",
-        F.size(F.filter("_splits", lambda s: s < F.col(val_col))),
-    )
-    # 2b: per-bucket totals -> exclusive running offset per (key, bucket);
-    # window over <= n_buckets rows per key — bounded driver-of-skew-free
-    # state at any n. boff is (keys x buckets) rows — the same size class
-    # as the splits table already broadcast above, so broadcast it too
-    # instead of letting the planner sort-merge the distinct-value table
-    # against it.
-    btot = bucketed.groupBy(key_col, "_bkt").agg(F.sum("cnt").alias("_btot"))
-    boff = btot.withColumn(
-        "_boff",
-        F.coalesce(
-            F.sum("_btot").over(
-                W.partitionBy(key_col)
-                .orderBy("_bkt")
-                .rowsBetween(W.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).select(key_col, "_bkt", "_boff")
-    # 2c: local running sum within the bucket + the bucket's offset
-    cdf = (
-        bucketed.join(F.broadcast(boff), [key_col, "_bkt"])
-        .withColumn(
-            "cum",
-            F.col("_boff")
-            + F.sum("cnt").over(
-                W.partitionBy(key_col, "_bkt").orderBy(val_col)
-            ),
-        )
-        .drop("_splits", "_bkt", "_boff")
-    )
-    # 3: rank targets INLINE on the CDF rows (r21). The interpolation
-    # definition t = (n_rows-1)·q needs the order statistics at ranks
-    # floor(t)+1 and floor(t)+2; since n_rows is already a column on
-    # every CDF row, the target ranks are plain row arithmetic — the old
-    # shape built a separate (key, q, rank) table from a third pass over
-    # counts and broadcast-joined it back, costing an aggregate job, a
-    # broadcast build, and a hash probe per row for the same rows. The
-    # explode fans each CDF row to |q|·2 candidates inside the same
-    # codegen stage and the rank-interval filter keeps exactly the rows
-    # the old join kept: rank r lives on the distinct-value row whose CDF
-    # interval (cum-cnt, cum] contains r.
+    # 3: rank targets inline on the CDF rows: each row fans out to |q|·2
+    # candidates, and the filter keeps rank r on the distinct-value row
+    # whose CDF interval (cum-cnt, cum] contains r.
     ex = cdf.select(
         key_col,
         F.col(val_col).alias("_v"),
@@ -274,10 +177,7 @@ def exact_quantiles(
         & (F.col("_w.rank") <= F.col("cum"))
     )
     # 4: ONE final hash-agg per key assembles v0/v1/frac for every
-    # quantile and interpolates (the old two-level groupBy — first
-    # (key, q), then key — cost an extra exchange for the same scalars;
-    # vals holds exactly 2·|q| rows per key, so the single-level agg's
-    # state is the same handful of doubles).
+    # quantile and interpolates; vals holds exactly 2·|q| rows per key.
     aggs = [F.max("n_rows").alias("n_rows")]
     out_cols = [F.col(key_col), F.col("n_rows")]
     for name, q in quantiles.items():

@@ -389,7 +389,7 @@ def points_text_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = _fixed_centroids(spark, sf_dir)
-    cf = K.cluster_features(K.assign_clusters(emb, cents), DIM)
+    cf = K.cluster_features(K.assign_clusters(emb, cents))
     path = _scratch(sf_dir, "centroids_text")
     write_points(cf, path, "centroid")
     parsed = parse_points(spark, path)

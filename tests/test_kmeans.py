@@ -152,7 +152,7 @@ def test_arrow_step_matches_dataframe_step(spark, emb):
     frame = sorted(
         (r["cluster_id"], r["num_points"], r["centroid"])
         for r in K.cluster_features(
-            K.assign_clusters(pts, cents, "features"), 64, "features"
+            K.assign_clusters(pts, cents, "features"), features_col="features"
         ).collect()
     )
     assert [(c, n) for c, n, _ in arrow] == [(c, n) for c, n, _ in frame]

@@ -57,7 +57,7 @@ def test_kmeans_cf_shuffles_and_no_python(spark):
     (no BatchEvalPython / ArrowEvalPython operators)."""
     emb = load_table(spark, SF001, "embeddings")
     cents = registry._fixed_centroids(spark, SF001)
-    df = K.cluster_features(K.assign_clusters(emb, cents), 64)
+    df = K.cluster_features(K.assign_clusters(emb, cents))
     plan = explain_string(df)
     assert count_exchanges(df) == 2, plan
     # partial aggregation (map-side combine) must precede both exchanges
@@ -332,16 +332,13 @@ def test_run_report_shape(spark):
     assert rep["wall_sec"] > 0 and len(rep["movement_history"]) == 2
 
 
-def test_exact_quantiles_cdf_window_is_range_distributed(spark):
-    """The CDF running sum must partition by (key, value-range bucket),
-    never by key alone — a key-only window funnels each group's whole
-    distinct-value set through one sort task at 100 TB. The only
-    key-partitioned window allowed is the bucket-offset pass over the
-    <= CDF_BUCKETS-row per-key grid."""
+def test_exact_quantiles_cdf_is_one_key_window(spark):
+    """The CDF is one window partitioned by the key alone: the running
+    sum and the group total share its spec, so the plan holds one Window
+    node, and no broadcast, checkpointed RDD or split-point sketch."""
     import re
 
     from k_means_in_mapreduce_spark.operators.statistics import exact_quantiles
-    from k_means_in_mapreduce_spark.sources import load_table
 
     # inspect the BUILDER plan — the registry query serves the result as a
     # fingerprint-keyed artifact, whose own plan is just a parquet scan
@@ -350,12 +347,55 @@ def test_exact_quantiles_cdf_window_is_range_distributed(spark):
         li, "l_returnflag", "l_extendedprice", {"p50": 0.5}
     )
     plan = explain_string(df)
+    assert len(re.findall(r"^\(\d+\) Window$", plan, re.M)) == 1, plan
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     assert specs, plan
-    # every window over the value column must also partition by _bkt
     for s in specs:
         if "l_extendedprice" in s:
-            assert "_bkt" in s, s
+            partition = s.split(", l_extendedprice")[0]
+            assert re.fullmatch(r"l_returnflag#\d+", partition), s
+    for absent in ("BroadcastExchange", "ExistingRDD", "percentile_approx"):
+        assert absent not in plan, absent
+
+
+def _jobs_in_group(spark, group, action):
+    """Run ``action`` under its own job group; return its result and the
+    number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job start events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_exact_quantiles_job_counts(spark):
+    """The quantile builder collect is 3 jobs: the distinct-count
+    exchange, the window's exchange on the key (which the final agg
+    reuses), and the result stage. A warm ``orders_monthly_stats`` is 6."""
+    from k_means_in_mapreduce_spark.operators.statistics import exact_quantiles
+
+    def build():
+        li = load_table(spark, SF001, "lineitem")
+        return exact_quantiles(
+            li, "l_returnflag", "l_extendedprice", {"p25": 0.25, "p75": 0.75}
+        ).collect()
+
+    def monthly():
+        return registry.QUERIES["orders_monthly_stats"](spark, SF001).collect()
+
+    # each count is of a fresh plan after a warm-up call: a re-collected
+    # DataFrame reuses its finished shuffle stages
+    for group, action, jobs in (
+        ("exact-quantiles-build", build, 3),
+        ("orders-monthly-stats-warm", monthly, 6),
+    ):
+        action()
+        assert _jobs_in_group(spark, group, action)[1] == jobs, group
 
 
 def test_trend_and_histogram_are_single_aggregate_plans(spark):
@@ -438,15 +478,9 @@ def test_fixed_centroids_one_job_in_vec_id_order(spark, tmp_path):
     want = [[float(x) for x in by_id[i]] for i in range(registry.K_FIXED)]
 
     load_table(spark, str(tmp_path), "embeddings")  # schema inference job
-    sc = spark.sparkContext
-    group = "fixed-centroids-one-job"
-    sc.setJobGroup(group, group)
-    try:
-        got = registry._fixed_centroids(spark, str(tmp_path))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job start events reach the status store asynchronously
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    got, n = _jobs_in_group(
+        spark, "fixed-centroids-one-job",
+        lambda: registry._fixed_centroids(spark, str(tmp_path)),
+    )
+    assert n == 1
     assert got == want

@@ -589,7 +589,7 @@ def test_streaming_kmeans_single_batch_equals_batch_cf(spark):
     batch = {
         r["cluster_id"]: r
         for r in cluster_features(
-            assign_clusters(emb, init, "features"), 64, "features"
+            assign_clusters(emb, init, "features"), features_col="features"
         ).collect()
     }
     for i in range(3):
