@@ -16,29 +16,36 @@ This reproduces the *intended* semantics of the reference MapReduce job
 - empty-cluster policy: discard ALL centroids and re-sample k fresh ones
   (reference C4, ``KMeans.java:167-171``)
 
-:func:`cluster_features_arrow` is the reference's in-mapper combiner
+:func:`arrow_combiner` is the reference's in-mapper combiner
 (``KMeans.java:33-67``) over Arrow batches. It is every per-batch Lloyd
-step in the package: :func:`fit` iterates it, and both streaming paths
-(``stream_kmeans_scoring`` and ``StreamingKMeansState.update``) run it once
-per micro-batch. The same step as a DataFrame of Catalyst expressions,
-:func:`cluster_features` over :func:`assign_clusters`, serves
+step in the package: :func:`fit` runs it as its loop job, and
+:func:`cluster_features_arrow` runs it for one round, which both streaming
+paths (``stream_kmeans_scoring`` and ``StreamingKMeansState.update``) call
+once per micro-batch. The same step as a DataFrame of Catalyst
+expressions, :func:`cluster_features` over :func:`assign_clusters`, serves
 ``__spark_entry__.entry``, the text-egress query and the assignment
 queries, where the DuckDB oracle checks it.
 
 Scale design (100 TB, 1000 executors):
-- the input is cached once and re-scanned per iteration (the canonical
+- the input is cached once and re-scanned per round (the canonical
   Spark-vs-MapReduce win; the reference re-reads HDFS every iteration,
-  ``KMeans.java:147``). On a real cluster use ``StorageLevel.MEMORY_AND_DISK``
+  ``KMeans.java:147``); an input the caller already cached is read
+  through its cache. On a real cluster use ``StorageLevel.MEMORY_AND_DISK``
   (default for ``DataFrame.cache``) so partitions spill instead of OOM.
 - the loop runs one Arrow task per 128 MiB of cached vectors, the
-  reference's one map task per HDFS block: each Python task pays a fixed
-  worker cost, so fewer tasks win until a task's data would not fit
-  (:func:`_iteration_partitions`).
+  reference's one map task per HDFS block (:func:`_iteration_partitions`).
+  Over several tasks each round is one Spark job, as the reference runs
+  one MapReduce job per iteration (``KMeans.java:130-187``). When the
+  vectors fit one task, that task keeps its decoded batches and runs
+  every remaining round itself, so the whole fit is one loop job: per-job
+  scheduling and planning, not the kernel, dominate a round at that size.
 - centroids travel as a k×d constant in the task closure; each Arrow batch
-  returns at most k (count, sum) rows, so per-iteration driver traffic is
-  O(batches·k·d) doubles, never O(n·d) (the reference's init reads the
-  whole dataset into the driver, ``KMeans.java:292-298``; we take a
-  distributed top-k sample).
+  returns at most k (count, sum) rows per round, so driver traffic is
+  O(rounds·batches·k·d) doubles, never O(n·d) (the reference's init reads
+  the whole dataset into the driver, ``KMeans.java:292-298``; we take a
+  distributed top-k sample). The driver replays every returned round
+  with the task's own merge-and-mean, and stays the only authority over
+  convergence and re-init.
 """
 
 from __future__ import annotations
@@ -179,10 +186,56 @@ def cluster_features(
     )
 
 
-def arrow_combiner(centroids: list[list[float]]):
-    """The per-task body of :func:`cluster_features_arrow`: a function from
-    an iterator of Arrow batches (one list<double> column) to per-cluster
-    ``(cluster_id, n, s)`` partial batches. Callable on the driver as well.
+def _build_merge_step():
+    """The arithmetic between two Lloyd rounds as nested functions: the
+    task closure of :func:`arrow_combiner` captures them by value
+    (cloudpickle ships nested functions whole; a module-level function
+    would pickle by reference and fail on executors without this package),
+    and :func:`fit` calls the very same functions, so the task and the
+    driver derive centroids and movement with one arithmetic."""
+
+    def merge_means(parts):
+        """Σn and Σs per cluster over ``(cluster_id, n, s)`` partials, added
+        in the order given, then the mean (``ClusteringFeature.java:60-70``):
+        ``[(cluster_id, n, mean)]`` for the non-empty clusters, by id."""
+        import numpy as np
+
+        acc = {}
+        for c, n, s in parts:
+            s = np.asarray(s, dtype=np.float64)
+            acc[c] = (acc[c][0] + n, acc[c][1] + s) if c in acc else (n, s)
+        return [(int(c), int(n), s / n) for c, (n, s) in sorted(acc.items())]
+
+    def movement(old, new):
+        """Σ over clusters of per-centroid L2 movement (reference C3
+        exactly: sum, not max, not squared — ``KMeans.java:206-213``)."""
+        total = 0.0
+        for a, b in zip(old, new):
+            total += sum((x - y) ** 2 for x, y in zip(a, b)) ** 0.5
+        return total
+
+    return merge_means, movement
+
+
+_merge_means, _movement = _build_merge_step()
+
+
+def arrow_combiner(centroids: list[list[float]], rounds: int = 1,
+                   tol: float = 0.0):
+    """The per-task body of the Lloyd loop: a function from an iterator of
+    Arrow batches (one list<double> column) to per-batch
+    ``(cluster_id, n, s, round)`` partial batches, at most k rows each.
+    Callable on the driver as well.
+
+    With ``rounds == 1`` it streams: each batch is decoded, reduced and
+    emitted before the next is read. With more rounds the task decodes its
+    batches once, keeps them, and runs up to ``rounds`` Lloyd steps over
+    them: after each round it merges the round's partials in batch order
+    into the next centroids with the driver's own :func:`_merge_means`.
+    It stops early after a round that leaves a cluster empty (the driver
+    re-samples, reference C4) or moves the centroids by Σ‖Δc‖ < ``tol``.
+    The early stop only saves work: the driver replays every round it is
+    sent and drops the ones it would not reach.
 
     Exact-duplicate centroid rows collapse to their first occurrence
     before the GEMM, and the argmin's columns map back to original ids.
@@ -195,12 +248,9 @@ def arrow_combiner(centroids: list[list[float]]):
     """
     import numpy as np
 
-    C = np.asarray(centroids, dtype=np.float64)
-    k, d = C.shape
-    # first occurrence of each distinct row, in original order
-    first = np.sort(np.unique(C, axis=0, return_index=True)[1])
-    U = C[first]
-    un2 = (U * U).sum(axis=1)
+    C0 = np.asarray(centroids, dtype=np.float64)
+    k, d = C0.shape
+    merge_means, movement = _merge_means, _movement  # nested: by value
 
     # Self-contained closure (cloudpickle ships it by value — executor
     # Python workers don't have this package on sys.path).
@@ -208,29 +258,66 @@ def arrow_combiner(centroids: list[list[float]]):
         import numpy as np
         import pyarrow as pa
 
-        for batch in batches:
-            col = batch.column(0)
-            X = (
-                col.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False)
-                .reshape(len(col), d)
-            )
-            d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ U.T) + un2[None, :]
-            cid = first[d2.argmin(1)]
-            counts = np.bincount(cid, minlength=k)
-            sums = np.zeros((k, d))
-            np.add.at(sums, cid, X)
-            nz = np.nonzero(counts)[0]
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "cluster_id": pa.array(nz.astype(np.int32)),
-                    "n": pa.array(counts[nz].astype(np.int64)),
-                    "s": pa.array(sums[nz].tolist(), type=pa.list_(pa.float64())),
-                }
-            )
+        xs = (
+            b.column(0).flatten()
+            .to_numpy(zero_copy_only=False)
+            .astype(np.float64, copy=False)
+            .reshape(b.num_rows, d)
+            for b in batches
+        )
+        if rounds > 1:
+            xs = list(xs)  # decoded once, re-read every round
+        C = C0
+        for r in range(rounds):
+            # first occurrence of each distinct row, in original order
+            first = np.sort(np.unique(C, axis=0, return_index=True)[1])
+            U = C[first]
+            un2 = (U * U).sum(axis=1)
+            parts = []
+            for X in xs:
+                d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ U.T) + un2[None, :]
+                cid = first[d2.argmin(1)]
+                counts = np.bincount(cid, minlength=k)
+                sums = np.zeros((k, d))
+                np.add.at(sums, cid, X)
+                nz = np.nonzero(counts)[0]
+                parts.extend(zip(nz, counts[nz], sums[nz]))
+                yield pa.RecordBatch.from_pydict(
+                    {
+                        "cluster_id": pa.array(nz.astype(np.int32)),
+                        "n": pa.array(counts[nz].astype(np.int64)),
+                        "s": pa.array(sums[nz].tolist(), type=pa.list_(pa.float64())),
+                        "round": pa.array(np.full(len(nz), r, np.int32)),
+                    }
+                )
+            if r + 1 == rounds:
+                return
+            means = merge_means(parts)
+            if len(means) < k:
+                return  # an empty cluster: the driver re-samples
+            new = np.stack([m for _c, _n, m in means])
+            if movement(C.tolist(), new.tolist()) < tol:
+                return
+            C = new
 
     return partial_cf
+
+
+def _lloyd_job(points: DataFrame, centroids: list[list[float]], rounds: int,
+               tol: float) -> list[list[tuple]]:
+    """One Spark job over the one-column ``points``: every task runs
+    :func:`arrow_combiner` for up to ``rounds`` Lloyd steps. Returns each
+    round the tasks ran, in order, as :func:`_merge_means` of its partials
+    in collect order (task, then batch): ``[(cluster_id, n, mean)]``."""
+    by_round: list[list] = []
+    for r in points.mapInArrow(
+        arrow_combiner(centroids, rounds, tol),
+        "cluster_id int, n long, s array<double>, round int",
+    ).collect():
+        while len(by_round) <= r["round"]:
+            by_round.append([])
+        by_round[r["round"]].append((r["cluster_id"], r["n"], r["s"]))
+    return [_merge_means(parts) for parts in by_round]
 
 
 def cluster_features_arrow(
@@ -245,7 +332,8 @@ def cluster_features_arrow(
     but vectorized: each Arrow batch computes the full n×k squared-distance
     matrix via the ‖x‖²−2x·Cᵀ+‖c‖² expansion (the same norm trick MLlib
     uses) and emits per-cluster (count, sum) partials — O(batches·k·d)
-    shuffle-free output, merged in the driver (k·d doubles).
+    shuffle-free output, merged in the driver (k·d doubles). Batches
+    stream through the task; none is held.
 
     Returns [(cluster_id, num_points, mean_vector)] for non-empty clusters.
     ``np.argmin`` takes the first minimum — the reference's lowest-index
@@ -257,20 +345,8 @@ def cluster_features_arrow(
     boxing of the pandas path (measured ~20% faster per iteration at
     n=100k, d=64).
     """
-    import numpy as np
-
-    parts = points.select(features_col).mapInArrow(
-        arrow_combiner(centroids), "cluster_id int, n long, s array<double>"
-    ).collect()
-
-    agg: dict[int, tuple[int, "np.ndarray"]] = {}
-    for r in parts:
-        c, n, s = r["cluster_id"], r["n"], np.asarray(r["s"])
-        if c in agg:
-            agg[c] = (agg[c][0] + n, agg[c][1] + s)
-        else:
-            agg[c] = (n, s)
-    return [(c, n, (s / n).tolist()) for c, (n, s) in sorted(agg.items())]
+    rounds = _lloyd_job(points.select(features_col), centroids, 1, 0.0)
+    return [(c, n, m.tolist()) for c, n, m in (rounds[0] if rounds else [])]
 
 
 def sample_initial_centroids(
@@ -295,33 +371,26 @@ def sample_initial_centroids(
     return [list(r[0]) for r in rows]
 
 
-def _movement(old: list[list[float]], new: list[list[float]]) -> float:
-    """Σ over clusters of per-centroid L2 movement (reference C3 exactly:
-    sum, not max, not squared — ``KMeans.java:206-213``)."""
-    total = 0.0
-    for a, b in zip(old, new):
-        total += sum((x - y) ** 2 for x, y in zip(a, b)) ** 0.5
-    return total
-
-
 def _iteration_partitions(bytes_est: int) -> int:
     """Partition count for the cached iteration loop: one Arrow task per
     128 MiB of vectors, as the reference runs one map task per 128 MB HDFS
-    split (``KMeans.java:33-67``).
+    split (``KMeans.java:33-67``). It also sets how many Lloyd rounds one
+    Spark job runs:
 
-    Every Python task pays a fixed ~0.25 CPU-s whatever its data: pyspark's
-    per-task ``setup_spark_files`` calls ``importlib.invalidate_caches()``,
-    which makes each zipimporter re-read ``pyspark.zip``'s central
-    directory. The kernel takes ~11 ms per 5,000 rows. Medians per
-    5-iteration fit (k=8, d=64, 4-core VM, local[4]), old rule of
-    min(8, cores) tasks -> this one:
-
-    - n=20k (10 MB): 4 -> 1 tasks, 8.20 -> 3.37 CPU-s;
-    - n=100k (51 MB): 4 -> 1 tasks, 9.32 -> 5.10 CPU-s, 3.49 -> 3.12 s wall;
-    - n=400k (205 MB): 4 -> 2 tasks, 18.49 -> 14.21 CPU-s, 7.41 -> 6.70 s.
+    - one task (≤128 MiB, e.g. 20k or 100k points at d=64): the task keeps
+      its decoded batches and loops every remaining round, so a fit is one
+      loop job (plus one per C4 re-init), not one job per round. On a
+      4-core VM (``local[4]``) a job costs ~0.25 CPU-s of scheduling,
+      planning and JIT work whatever its size, while the kernel takes
+      ~11 ms per 5,000 rows and a Python task ~0.02 CPU-s with the local
+      worker daemon;
+    - several tasks: one job per round, the reference's one MapReduce job
+      per iteration, since each round's centroids need every task's
+      partials.
 
     At scale this is the scan's own split (100 TB -> bytes/128 MiB tasks),
-    so no partition outgrows an executor. The trade-off: on a many-core
+    so no partition outgrows an executor, and a looping task holds at most
+    its own 128 MiB of decoded points. The trade-off: on a many-core
     cluster a mid-size cache runs as fewer tasks than cores (1 GB as 8).
     """
     import math
@@ -337,6 +406,17 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
     jobs, ``KMeans.java:113,130`` — a documented off-by-one we do NOT
     reproduce).
 
+    The driver is the only authority over the result: each loop job
+    returns the per-round partials its task ran, and the loop body below
+    replays them in order (mean, movement, history, the C4 re-init, the
+    tol stop), dropping any round past the point where it stops. A
+    one-task fit therefore gives the same model, bit for bit, as one job
+    per round.
+
+    A cached ``df`` (``df.storageLevel`` set) is read through its cache;
+    any other input is cached for the fit and released afterwards. The
+    caller's cache is never released.
+
     Concurrency note: the loop disables ``spark.sql.adaptive.enabled``
     for its duration and restores the prior value on exit (see the
     comment below for why). SQL confs are SESSION-global, so two
@@ -346,6 +426,8 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
     should give each its own session (``spark.newSession()`` — confs are
     per-session, the cache and cluster are shared).
     """
+    from pyspark.storagelevel import StorageLevel
+
     base = df.select(F.col(config.features_col).alias("features"))
 
     import time
@@ -353,16 +435,17 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
     t_start = time.monotonic()
     # AQE off for the loop, which has no exchange for it to re-plan. With
     # AQE on, Spark 4.1 runs the cache fill and each exchange as separate
-    # jobs: 2-4 extra per fit (11 instead of 7 for a 5-iteration fit whose
-    # re-tile grows the partition count). With it off a fit runs exactly
-    # 2 + n_iter jobs: count, init sample, one per iteration (pinned by a
-    # test). The try/finally opens BEFORE the conf change and the cache: a
-    # failure anywhere (empty dataset, fewer-than-k rows in the init
-    # sample, a dying executor mid-count) must still restore AQE and
-    # release storage — embedded/notebook sessions outlive this call.
+    # jobs: 2-4 extra per fit. With it off a one-task fit runs 3 jobs
+    # (count, init sample, one loop job) and a fit over several tasks
+    # 2 + n_iter (one per round), plus one loop job per C4 re-init on the
+    # one-task path; a test pins both. The try/finally opens BEFORE the
+    # conf change and the cache: a failure anywhere (empty dataset,
+    # fewer-than-k rows in the init sample, a dying executor mid-count)
+    # must still restore AQE and release storage — embedded/notebook
+    # sessions outlive this call.
     sess = df.sparkSession
     prev_aqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    iter_cache = None
+    owned = []  # caches this fit made, released on exit
     history: list[float] = []
     centroid_history: list[list[list[float]]] = []
     reinits = 0
@@ -371,7 +454,9 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
 
     try:
         sess.conf.set("spark.sql.adaptive.enabled", "false")
-        base = base.cache()
+        if df.storageLevel == StorageLevel.NONE:
+            base = base.cache()
+            owned.append(base)
         n = base.count()  # materialize the cache before iterating
         if n == 0:
             raise ValueError("empty dataset")
@@ -399,39 +484,41 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
         if target < cur:
             points = base.coalesce(target)
         elif target > cur:
-            # no materializing count: iteration 1 fills this cache
+            # no materializing count: the first loop job fills this cache
             points = base.repartition(target).cache()
-            iter_cache = points
+            owned.append(points)
         else:
             points = base
 
-        for it in range(1, config.max_iter + 1):
-            n_iter = it
-            triples = cluster_features_arrow(points, centroids, "features")
-            by_id = {c: mean for c, _n, mean in triples}
-            if len(by_id) < config.k:
-                # empty cluster -> discard all, re-sample fresh k (C4);
-                # new seed per event keeps the run deterministic.
-                reinits += 1
-                centroids = sample_initial_centroids(
-                    base, config.k, config.seed + 1000 * reinits, "features"
-                )
-                continue
-            # centroid index integrity (reference C5, KMeans.java:252-257)
-            assert sorted(by_id) == list(range(config.k)), sorted(by_id)
+        while n_iter < config.max_iter and not converged:
+            rounds = config.max_iter - n_iter if target == 1 else 1
+            for means in _lloyd_job(points, centroids, rounds, config.tol):
+                n_iter += 1
+                if len(means) < config.k:
+                    # empty cluster -> discard all, re-sample fresh k (C4);
+                    # new seed per event keeps the run deterministic. The
+                    # task stopped at this round too: the next job starts
+                    # from the fresh sample.
+                    reinits += 1
+                    centroids = sample_initial_centroids(
+                        base, config.k, config.seed + 1000 * reinits, "features"
+                    )
+                    break
+                # centroid index integrity (reference C5, KMeans.java:252-257)
+                ids = [c for c, _n, _m in means]
+                assert ids == list(range(config.k)), ids
 
-            new_centroids = [by_id[i] for i in range(config.k)]
-            move = _movement(centroids, new_centroids)
-            history.append(move)
-            centroid_history.append([list(c) for c in new_centroids])
-            centroids = new_centroids
-            if move < config.tol:
-                converged = True
-                break
+                new_centroids = [m.tolist() for _c, _n, m in means]
+                move = _movement(centroids, new_centroids)
+                history.append(move)
+                centroid_history.append([list(c) for c in new_centroids])
+                centroids = new_centroids
+                if move < config.tol:
+                    converged = True
+                    break
     finally:
-        base.unpersist()  # `points` may be a (non-cached) coalesce view
-        if iter_cache is not None:
-            iter_cache.unpersist()
+        for cached in owned:
+            cached.unpersist()
         sess.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
     return KMeansModel(

@@ -107,6 +107,173 @@ def test_empty_cluster_reinit(spark):
     assert m.reinit_count == 4 and not m.converged
 
 
+# Eight 2-D points and an init under which Lloyd updates twice, then
+# leaves cluster 2 empty at iteration 3 (C4 mid-fit); the re-drawn
+# centroids then update to the end.
+_MID_REINIT_X = [[5.0, 2.0], [0.0, 9.0], [2.0, 0.0], [7.0, 9.0],
+                 [5.0, 3.0], [8.0, 9.0], [9.0, 8.0], [0.0, 3.0]]
+_MID_REINIT_DRAWS = [[[7.5, 1.5], [1.5, 8.5], [3.5, 4.5]],
+                     [[5.0, 2.0], [0.0, 9.0], [8.0, 9.0]]]
+
+
+def _draws_by_seed(monkeypatch, seed, draws):
+    """Make sample_initial_centroids return draws[r] for seed + 1000·r."""
+    monkeypatch.setattr(
+        K, "sample_initial_centroids",
+        lambda _df, _k, s, _col="embedding": [list(c) for c in draws[(s - seed) // 1000]],
+    )
+
+
+def _numpy_replay(X, draws, max_iter, tol):
+    """The fit's loop in NumPy, by the rule of perfbench's ``lloyd``
+    (lowest-index argmin of the norm expansion, an empty cluster re-draws
+    and updates nothing), recording what KMeansModel records."""
+    c = np.asarray(draws[0], dtype=np.float64)
+    x2 = (X * X).sum(axis=1)[:, None]
+    out = {"n_iter": 0, "reinit_count": 0, "converged": False,
+           "movement_history": [], "centroid_history": [], "steps": ""}
+    for _ in range(max_iter):
+        out["n_iter"] += 1
+        a = (x2 - 2.0 * X @ c.T + (c * c).sum(axis=1)[None, :]).argmin(axis=1)
+        if (np.bincount(a, minlength=len(c)) == 0).any():
+            out["reinit_count"] += 1
+            out["steps"] += "E"
+            c = np.asarray(draws[out["reinit_count"]], dtype=np.float64)
+            continue
+        new = np.stack([X[a == i].mean(axis=0) for i in range(len(c))])
+        out["steps"] += "U"
+        out["movement_history"].append(np.linalg.norm(new - c, axis=1).sum())
+        out["centroid_history"].append(new)
+        c = new
+        if out["movement_history"][-1] < tol:
+            out["converged"] = True
+            break
+    return out
+
+
+def test_empty_cluster_reinit_mid_fit(spark, monkeypatch):
+    """C4 after two successful updates: iteration 3 leaves a cluster
+    empty, the fit re-draws with seed + 1000 and updates to max_iter.
+    Every recorded field matches the NumPy replay."""
+    X = np.array(_MID_REINIT_X)
+    _draws_by_seed(monkeypatch, 7, _MID_REINIT_DRAWS)
+    df = spark.createDataFrame([(r,) for r in _MID_REINIT_X], "embedding array<double>")
+    m = K.fit(df, K.KMeansConfig(k=3, max_iter=6, tol=0.0, seed=7))
+    want = _numpy_replay(X, _MID_REINIT_DRAWS, 6, 0.0)
+    assert want["steps"] == "UUEUUU"
+    assert (m.n_iter, m.reinit_count, m.converged) == (6, 1, False)
+    assert len(m.movement_history) == len(m.centroid_history) == 5
+    np.testing.assert_allclose(m.movement_history, want["movement_history"],
+                               rtol=1e-12, atol=1e-12)
+    np.testing.assert_allclose(np.array(m.centroid_history),
+                               np.array(want["centroid_history"]),
+                               rtol=1e-12, atol=1e-12)
+    assert m.centroids == m.centroid_history[-1]
+
+
+def _blobs(spark, n, cast="double"):
+    """n seeded 8-d points around 4 centres one sigma apart (slow to
+    converge), in one partition, so several Arrow batches make one task."""
+    return spark.range(0, n, 1, 1).select(
+        F.array(
+            *[(F.randn(11 + j) + (F.col("id") % 4) * (1.0 if j % 2 else -1.0))
+              for j in range(8)]
+        ).cast(f"array<{cast}>").alias("embedding")
+    )
+
+
+def _model_fields(m):
+    return (m.centroids, m.n_iter, m.converged, m.movement_history,
+            m.centroid_history, m.reinit_count)
+
+
+@pytest.mark.parametrize("case", ["blobs", "tol-stop", "mid-reinit", "float"])
+def test_one_job_fit_equals_one_job_per_round(spark, monkeypatch, case):
+    """A one-task fit runs all its rounds in one loop job; forced to one
+    job per round over the same one partition, the model is ``==`` in
+    every field. 25k points make three Arrow batches per task."""
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    assert 25_000 > 2 * batch
+    cfg = K.KMeansConfig(k=4, max_iter=8, tol=0.0, seed=3)
+    df = _blobs(spark, 25_000, "float" if case == "float" else "double").cache()
+    if case == "tol-stop":
+        h = K.fit(df, cfg).movement_history
+        i = next(i for i in range(2, len(h) - 1) if h[i] < min(h[:i]))
+        cfg.tol = (h[i] + min(h[:i])) / 2
+    elif case == "mid-reinit":
+        df = spark.createDataFrame([(r,) for r in _MID_REINIT_X],
+                                   "embedding array<double>")
+        cfg = K.KMeansConfig(k=3, max_iter=6, tol=0.0, seed=7)
+        _draws_by_seed(monkeypatch, 7, _MID_REINIT_DRAWS)
+
+    orig = K._lloyd_job
+    rounds = []
+    with monkeypatch.context() as mp:
+        mp.setattr(K, "_lloyd_job",
+                   lambda p, c, r, tol: rounds.append(r) or orig(p, c, r, tol))
+        one_job = K.fit(df, cfg)
+    with monkeypatch.context() as mp:
+        mp.setattr(K, "_lloyd_job", lambda p, c, _r, tol: orig(p, c, 1, tol))
+        per_round = K.fit(df, cfg)
+    df.unpersist()
+
+    assert _model_fields(one_job) == _model_fields(per_round)
+    if case == "tol-stop":
+        assert one_job.converged and one_job.n_iter < cfg.max_iter
+        assert rounds == [cfg.max_iter]
+    elif case == "mid-reinit":
+        assert one_job.reinit_count == 1 and rounds == [6, 3]
+    else:
+        assert one_job.n_iter == cfg.max_iter and rounds == [cfg.max_iter]
+
+
+def test_fit_reads_through_a_cached_input(spark, monkeypatch):
+    """A cached input is read through its own cache: no second in-memory
+    relation appears during the fit, the caller's DataFrame stays cached
+    afterwards (also when the fit fails with fewer than k rows), and the
+    model equals a fit of the same rows uncached, so the seeded init
+    sample is unchanged."""
+    from pyspark.storagelevel import StorageLevel
+
+    sc = spark.sparkContext
+
+    def cached_relations() -> int:
+        return len(sc._jsc.sc().getRDDStorageInfo())
+
+    def make():
+        return spark.range(0, 2000, 1, 3).select(
+            F.array(F.col("id").cast("double"), F.cos("id")).alias("embedding")
+        )
+
+    cfg = K.KMeansConfig(k=3, max_iter=4, tol=0.0, seed=9)
+    want = K.fit(make(), cfg)
+    df = make().cache()
+    df.count()
+    tiny = make().limit(2).cache()
+    tiny.count()
+    before = cached_relations()
+
+    seen = []
+    orig = K.sample_initial_centroids
+
+    def spy(*a, **kw):
+        seen.append(cached_relations())
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(K, "sample_initial_centroids", spy)
+    try:
+        got = K.fit(df, cfg)
+        assert seen == [before]
+        assert df.storageLevel != StorageLevel.NONE
+        assert _model_fields(got) == _model_fields(want)
+        with pytest.raises(ValueError, match="fewer than k"):
+            K.fit(tiny, cfg)
+        assert tiny.storageLevel != StorageLevel.NONE
+    finally:
+        df.unpersist()
+        tiny.unpersist()
+
+
 def test_mllib_path_quality_parity(spark, emb):
     """MLlib production path vs the kmeans_df fit: different init/stop rules
     (documented deltas, kmeans_mllib.py docstring) can land in different
@@ -244,14 +411,13 @@ def test_config_accepts_only_the_arrow_method():
 )
 def test_fit_job_count_and_aqe_restored(spark, monkeypatch, partitions, target):
     """fit turns AQE off for its loop because with it on Spark 4.1 runs the
-    cache fill and each exchange as separate jobs. With it off a fit runs
-    exactly 2 + n_iter jobs (cache count, init sample, one per iteration)
-    on every re-tile path: 1 partition kept, 12 coalesced down to the
-    loop's one task, and (with the target forced to 3) 1 partition grown
-    and re-cached. Each iteration job of the 240-row fit is one stage of
-    one task: every Python task pays a fixed worker cost, so the loop runs
-    one task per 128 MiB. The session's AQE setting reads as before after
-    a fit, and after a fit that fails with fewer than k rows."""
+    cache fill and each exchange as separate jobs. With it off a fit whose
+    cached vectors fit one task (1 partition kept, 12 coalesced down to
+    it) runs 3 jobs: cache count, init sample, and one loop job of one
+    stage and one task that runs every round. With the target forced to 3
+    (1 partition grown and re-cached) the fit runs one job per round,
+    2 + n_iter in all. The session's AQE setting reads as before after a
+    fit, and after a fit that fails with fewer than k rows."""
     if target is not None:
         monkeypatch.setattr(K, "_iteration_partitions", lambda _bytes: target)
     sc = spark.sparkContext
@@ -271,8 +437,8 @@ def test_fit_job_count_and_aqe_restored(spark, monkeypatch, partitions, target):
     tracker = sc.statusTracker()
     jobs = sorted(tracker.getJobIdsForGroup(group))
     assert m.n_iter == 3 and m.reinit_count == 0
-    assert len(jobs) == 2 + m.n_iter, jobs
-    for job in jobs[2:]:  # count, init sample, then one job per iteration
+    assert len(jobs) == (3 if target is None else 2 + m.n_iter), jobs
+    for job in jobs[2:]:  # count, init sample, then the loop job(s)
         tasks = [
             tracker.getStageInfo(st).numTasks
             for st in sorted(tracker.getJobInfo(job).stageIds)
