@@ -4,8 +4,10 @@ Five dedup families over ``documents`` / ``embeddings``:
 
 - exact dedup (hash groupBy) .............. ``dedup_exact`` [oracle]
 - n-gram Jaccard near-dup ................. ``dedup_ngram_jaccard`` [oracle]
-- MinHash + LSH banding ................... ``dedup_minhash_lsh`` [rows-only;
-  recall vs the exact Jaccard baseline asserted in tests/test_dedup.py]
+- MinHash LSH near-dup .................... ``dedup_minhash_lsh`` =
+  ``dedup_minhash_mllib`` [rows-only; one builder: banded candidates,
+  exact-Jaccard verify; recall vs the exact baseline asserted in
+  tests/test_dedup_similarity.py]
 - SimHash ................................. ``dedup_simhash`` [rows-only;
   property-tested]
 - embedding-cosine near-dup ............... ``dedup_embedding_cosine`` [oracle]
@@ -17,8 +19,9 @@ Scale design:
 - Jaccard candidate generation is the standard inverted-index self-join on
   shared shingles (shuffle on shingle). Hot shingles are the skew risk:
   candidates are deduped per pair before scoring, AQE skew-join handles
-  stragglers, and the MinHash/LSH path replaces the exact join at scale
-  (bounded signature width instead of full shingle sets).
+  stragglers, and the MinHash/LSH path replaces the exact join's
+  candidate generation at scale (bounded signature width instead of full
+  shingle sets); both paths score candidates with the same exact verify.
 - MinHash signatures/banding are pure Catalyst expressions on xxhash64 —
   constant-size state per doc (num_perm longs), bucket join on (band,
   bucket-hash) only.
@@ -161,6 +164,45 @@ _JACCARD_SQL = f"""
 """
 
 
+def _hashed_shingles(sh: DataFrame) -> DataFrame:
+    """Per-doc sorted ``xxhash64`` shingle set ``hs``. It feeds candidate
+    generation and both verify sides, so it is shingled ONCE.
+    localCheckpoint (not cache): materializes eagerly, truncates lineage,
+    and its storage is released when this DataFrame is GC'd — a cache()
+    here leaked pinned blocks for the session lifetime because callers
+    never saw the handle to unpersist (each registered query builds its
+    own pipeline, so leaks accumulated per invocation)."""
+    return sh.select(
+        "doc_id",
+        F.array_sort(
+            F.transform("shingles", lambda s: F.xxhash64(s))
+        ).alias("hs"),
+    ).localCheckpoint(eager=True)
+
+
+def _verify_exact(cand: DataFrame, hashed: DataFrame) -> DataFrame:
+    """The verify half of filter-verify: join distinct ``(doc_a, doc_b)``
+    candidates to both docs' hashed shingle sets, score the EXACT Jaccard
+    with ``array_intersect`` and keep pairs >= JACCARD_THRESHOLD. Every
+    pair builder scores through here, so a found pair carries the true
+    Jaccard whichever filter proposed it."""
+    a = hashed.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
+    b = hashed.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb"))
+    scored = (
+        cand.join(a, "doc_a")
+        .join(b, "doc_b")
+        .withColumn("n_common", F.size(F.array_intersect("ha", "hb")))
+        .withColumn(
+            "jaccard",
+            F.col("n_common").cast("double")
+            / (F.size("ha") + F.size("hb") - F.col("n_common")),
+        )
+    )
+    return scored.filter(F.col("jaccard") >= JACCARD_THRESHOLD).select(
+        "doc_a", "doc_b", "jaccard"
+    )
+
+
 def jaccard_pairs(sh: DataFrame, df_cap: int = HOT_SHINGLE_DF_CAP) -> DataFrame:
     """Exact word-n-gram Jaccard near-dup pairs >= threshold, filter-verify
     shape:
@@ -173,27 +215,16 @@ def jaccard_pairs(sh: DataFrame, df_cap: int = HOT_SHINGLE_DF_CAP) -> DataFrame:
        expression-side.
     2. verify — join the (small) distinct candidate set back to the
        per-doc hashed shingle sets and compute the EXACT intersection
-       size with ``array_intersect``; candidates << corpus, so Spark
-       broadcasts the pair side and the verify joins add no shuffle of
-       the corpus.
+       size with ``array_intersect`` (:func:`_verify_exact`); candidates
+       << corpus, so Spark broadcasts the pair side and the verify joins
+       add no shuffle of the corpus.
 
     The one-pass no-rejoin form this replaces counted n_common in the
     pair groupBy — exact, but unguardable against hot-shingle blowup
     (dropping a posting list would undercount n_common). Splitting
     candidate-gen from scoring is what makes the cap lossless for values.
     """
-    # Feeds candidate-gen + both verify sides: shingle ONCE.
-    # localCheckpoint (not cache): materializes eagerly, truncates lineage,
-    # and its storage is released when this DataFrame is GC'd — a cache()
-    # here leaked pinned blocks for the session lifetime because callers
-    # never saw the handle to unpersist (each registered query builds its
-    # own pipeline, so leaks accumulated per invocation).
-    hashed = sh.select(
-        "doc_id",
-        F.array_sort(
-            F.transform("shingles", lambda s: F.xxhash64(s))
-        ).alias("hs"),
-    ).localCheckpoint(eager=True)
+    hashed = _hashed_shingles(sh)
     # explode_outer, NOT explode: InferFiltersFromGenerate would add a
     # size()>0 filter that predicate-pushdown inlines into re-evaluating
     # the whole shingling expression per row (measured 7.8s -> 0.9s for
@@ -243,21 +274,7 @@ def jaccard_pairs(sh: DataFrame, df_cap: int = HOT_SHINGLE_DF_CAP) -> DataFrame:
         .select("p.doc_a", "p.doc_b")
         .distinct()
     )
-    a = hashed.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
-    b = hashed.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb"))
-    scored = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .withColumn("n_common", F.size(F.array_intersect("ha", "hb")))
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.size("ha") + F.size("hb") - F.col("n_common")),
-        )
-    )
-    return scored.filter(F.col("jaccard") >= JACCARD_THRESHOLD).select(
-        "doc_a", "doc_b", "jaccard"
-    )
+    return _verify_exact(cand, hashed)
 
 
 @query("dedup_ngram_jaccard", _JACCARD_SQL)
@@ -485,37 +502,38 @@ def dedup_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MinHash + LSH (the scale path; approximate -> recall-tested, not oracled)
+# MinHash + LSH (the scale path: banded candidates, exact verify)
 # ---------------------------------------------------------------------------
-def minhash_signatures(sh: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
-    """num_perm-wide minhash signature per doc: each shingle is string-
-    hashed ONCE (xxhash64 over the variable-length text), then the
-    num_perm permutations re-hash that fixed 8-byte value
-    (``xxhash64(h, i)``) — O(1) string hashing per shingle instead of
-    num_perm full-text passes. sig[i] = min over shingles of
-    xxhash64(xxhash64(shingle), i)."""
-    base = F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
+def minhash_signatures(hashed: DataFrame, num_perm: int = NUM_PERM) -> DataFrame:
+    """num_perm-wide minhash signature per doc from its hashed shingle set
+    ``hs`` (:func:`_hashed_shingles`): the shingle text is hashed once,
+    then the num_perm permutations re-hash that fixed 8-byte value —
+    sig[i] = min over shingles of xxhash64(xxhash64(shingle), i)."""
 
     def perm_min(i: int) -> F.Column:
         # NOTE: the lambda must take exactly ONE arg — a second parameter
         # (even with a default) makes Spark bind it to the array index.
         return F.array_min(
-            F.transform(F.col("_hs"), lambda h: F.xxhash64(h, F.lit(i)))
+            F.transform(F.col("hs"), lambda h: F.xxhash64(h, F.lit(i)))
         )
 
     sig = F.array(*[perm_min(i) for i in range(num_perm)])
-    return (
-        sh.withColumn("_hs", base)
-        .select("doc_id", sig.alias("sig"))
-    )
+    return hashed.select("doc_id", sig.alias("sig"))
 
 
-@query("dedup_minhash_lsh")  # approximate — recall-tested vs exact Jaccard
+@query("dedup_minhash_mllib")  # approximate — recall-tested vs exact Jaccard
+@query("dedup_minhash_lsh")
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup candidates: band the signature, bucket-join on
-    (band, band-hash), estimate Jaccard as matching-minhash fraction, keep
-    pairs >= threshold. Deterministic (seeded hashes), so the pair list is
-    a build-once artifact shared with the recall metric."""
+    """MinHash near-dup pairs, one builder under both MinHash query names:
+    banded LSH proposes candidates, :func:`_verify_exact` scores them.
+    ``est_jaccard`` is therefore the exact Jaccard and every returned pair
+    is a true near-dup; only recall is approximate (a true pair is missed
+    when none of its 16 bands collides). Deterministic (seeded hashes), so
+    the pair list is a build-once artifact shared with the recall metric.
+
+    MLlib's ``MinHashLSH`` is not used: it ORs single-hash tables with no
+    AND inside a table, so its candidate set grows as n², not with the
+    true pairs (156,861 candidates against banding's 614 at 5k docs)."""
     return _dedup_artifact(
         spark,
         sf_dir,
@@ -526,9 +544,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _shingled(spark, sf_dir)
-    # localCheckpoint, not cache — same leak rationale as jaccard_pairs
-    sigs = minhash_signatures(sh).localCheckpoint(eager=True)
+    hashed = _hashed_shingles(_shingled(spark, sf_dir))
+    # checkpointed: both sides of the band self-join read the signatures;
+    # recomputing the 64 permutations per side took the whole build from
+    # 4.9 to 6.8 CPU-s at 5k docs (4-core VM, local[4])
+    sigs = minhash_signatures(hashed).localCheckpoint(eager=True)
     rows_per_band = NUM_PERM // LSH_BANDS
     bands = sigs.select(
         "doc_id",
@@ -563,87 +583,7 @@ def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "est_jaccard",
-            F.size(
-                F.filter(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                    lambda m: m,
-                )
-            ).cast("double")
-            / F.lit(NUM_PERM),
-        )
-    )
-    return est.filter(F.col("est_jaccard") >= JACCARD_THRESHOLD).select(
-        "doc_a", "doc_b", "est_jaccard"
-    )
-
-
-@query("dedup_minhash_mllib")  # approximate — recall-tested vs exact Jaccard
-def dedup_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MLlib-native near-dup path: HashingTF(shingles) -> MinHashLSH ->
-    approxSimilarityJoin (SURVEY §2.12's stated MLlib mapping, kept
-    alongside the expression-built MinHash above). MLlib computes the
-    EXACT Jaccard distance on the hashed-TF vectors for each LSH
-    candidate pair, so the threshold below is exact-on-candidates.
-
-    The shingle->TF pipeline feeds three consumers (fit + both sides of
-    the self-join), and approxSimilarityJoin would additionally re-derive
-    the MinHash signatures per side — persist the TF vectors and
-    pre-transform the signatures ONCE (MLlib skips its internal transform
-    when the output column already exists): 24s -> 5.6s cold at sf0.1.
-    The pinned blocks are small (sparse TF of the corpus) and evicted
-    LRU; on a cluster this is the standard persist-before-LSH pattern.
-    Seeded, hence deterministic — served as a build-once artifact."""
-    return _dedup_artifact(
-        spark,
-        sf_dir,
-        "minhash_mllib",
-        {"bands": LSH_BANDS, "threshold": JACCARD_THRESHOLD, "tf": 1 << 18},
-        lambda: _minhash_mllib_pairs(spark, sf_dir),
-    )
-
-
-def _minhash_mllib_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    sh = _shingled(spark, sf_dir)
-    tf = HashingTF(
-        inputCol="shingles", outputCol="tf", numFeatures=1 << 18, binary=True
-    )
-    v = (
-        tf.transform(sh)
-        .select("doc_id", "tf")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    model = MinHashLSH(
-        inputCol="tf", outputCol="sig", numHashTables=LSH_BANDS, seed=42
-    ).fit(v)
-    vt = model.transform(v).persist(StorageLevel.MEMORY_AND_DISK)
-    vt.count()  # materialize signatures before the self-join fans out
-    # approxSimilarityJoin keeps distance STRICTLY below the threshold,
-    # but the truth set and the expression-LSH twin are both inclusive
-    # (jaccard >= JACCARD_THRESHOLD) — a pair at exactly the threshold
-    # would silently fall out of this path only. Widen the join by an
-    # epsilon and apply the inclusive filter explicitly.
-    pairs = model.approxSimilarityJoin(
-        vt, vt, 1.0 - JACCARD_THRESHOLD + 1e-9, distCol="jaccard_dist"
-    )
-    return (
-        pairs.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .filter((1.0 - F.col("jaccard_dist")) >= F.lit(JACCARD_THRESHOLD))
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            (1.0 - F.col("jaccard_dist")).alias("est_jaccard"),
-        )
-    )
+    return _verify_exact(cand, hashed).withColumnRenamed("jaccard", "est_jaccard")
 
 
 # ---------------------------------------------------------------------------
@@ -995,7 +935,7 @@ def dedup_embedding_cosine_ivf_precision(spark: SparkSession, sf_dir: str) -> Da
 # the exact Jaccard truth IS — the truth set is _JACCARD_SQL (the oracle's
 # own query), n_true_pairs binds exactly, and the bound booleans are
 # scalars the gate hash covers. Bounds carry margin under measured values
-# (both MinHash variants recover 25/25 true pairs at sf0.01; SimHash max
+# (MinHash recovers 25/25 true pairs at sf0.01; SimHash max
 # hamming over true pairs is 11 of 63 bits vs ~31.5 expected for random
 # pairs) so a testdata regeneration can't flip them; the tight values are
 # pinned by tests/test_dedup_similarity.py.
@@ -1024,22 +964,14 @@ _PAIR_RECALL_ORACLE = f"""
 """
 
 
+@query("dedup_minhash_mllib_recall", _PAIR_RECALL_ORACLE)
 @query("dedup_minhash_lsh_recall", _PAIR_RECALL_ORACLE)
 def dedup_minhash_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall of the expression-built MinHash-LSH candidates against the
+    """Recall of the MinHash pairs (both names, one builder) against the
     exact n-gram Jaccard truth (>= threshold pairs). n_true_pairs binds
     exactly; recall bound >= MINHASH_RECALL_MIN_PCT% (measured 100%)."""
     truth = near_dup_pairs(spark, sf_dir)
     found = dedup_minhash_lsh(spark, sf_dir)
-    return _pair_recall(truth, found, MINHASH_RECALL_MIN_PCT)
-
-
-@query("dedup_minhash_mllib_recall", _PAIR_RECALL_ORACLE)
-def dedup_minhash_mllib_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall of the MLlib MinHashLSH approxSimilarityJoin pairs against
-    the exact Jaccard truth — same contract as the expression variant."""
-    truth = near_dup_pairs(spark, sf_dir)
-    found = dedup_minhash_mllib(spark, sf_dir)
     return _pair_recall(truth, found, MINHASH_RECALL_MIN_PCT)
 
 

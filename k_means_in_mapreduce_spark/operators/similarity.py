@@ -64,6 +64,10 @@ def _query_vector(spark: SparkSession, sf_dir: str) -> list[float]:
     row = (
         e.filter(F.col("vec_id") == QUERY_VEC_ID).select("embedding").first()
     )
+    if row is None:
+        raise ValueError(
+            f"embeddings has no query vector (vec_id={QUERY_VEC_ID}) in {sf_dir}"
+        )
     return list(row[0])
 
 

@@ -634,10 +634,15 @@ def lineitem_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     row = li.agg(
         F.min("l_extendedprice").alias("lo"), F.max("l_extendedprice").alias("hi")
     ).first()
-    lo, hi = float(row["lo"]), float(row["hi"])
-    width = (hi - lo) / HIST_BINS
+    if row["lo"] is None:
+        # no priced row: the oracle's bounds row is NULL, so every bin is
+        # NULL, and an empty lineitem groups to no rows at all
+        lo = width = F.lit(None).cast("double")
+    else:
+        lo_v, hi_v = float(row["lo"]), float(row["hi"])
+        lo, width = F.lit(lo_v), F.lit((hi_v - lo_v) / HIST_BINS)
     bin_col = F.least(
-        F.floor((F.col("l_extendedprice") - F.lit(lo)) / F.lit(width)),
+        F.floor((F.col("l_extendedprice") - lo) / width),
         F.lit(HIST_BINS - 1),
     ).cast("bigint")
     return (

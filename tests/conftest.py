@@ -29,6 +29,18 @@ def spark():
     yield s
 
 
+def degenerate_fixture(tmp_path, n_rows: int, src: str = SF0001) -> str:
+    """Write every table of ``src`` into ``tmp_path`` with its schema kept
+    and only its first ``n_rows`` rows (0 gives empty tables); return the
+    new sf_dir. The source fixture is only read."""
+    import pyarrow.parquet as pq
+
+    for t in TABLES:
+        table = pq.read_table(f"{src}/{t}.parquet")
+        pq.write_table(table.slice(0, n_rows), str(tmp_path / f"{t}.parquet"))
+    return str(tmp_path)
+
+
 def make_duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """Mirror the driver's oracle setup: each parquet table as a view."""
     con = duckdb.connect()

@@ -20,17 +20,33 @@ def exact_pairs(spark):
     return {(r.doc_a, r.doc_b): r.jaccard for r in df.itertuples()}
 
 
-def test_minhash_lsh_recall_and_estimate(spark, exact_pairs):
-    est = registry.QUERIES["dedup_minhash_lsh"](spark, SF001).toPandas()
-    got = {(r.doc_a, r.doc_b): r.est_jaccard for r in est.itertuples()}
+@pytest.mark.parametrize("name", ["dedup_minhash_lsh", "dedup_minhash_mllib"])
+def test_minhash_pairs_are_exact_and_recall_strong_pairs(
+    spark, exact_pairs, monkeypatch, name
+):
+    """Both MinHash names are one builder: banded LSH candidates scored by
+    the exact-Jaccard verifier. Each name returns the same rows; every
+    pair is a true near-dup whose est_jaccard is its exact Jaccard bit for
+    bit; strong pairs are recalled; a build leaves nothing cached."""
+    import k_means_in_mapreduce_spark.operators.dedup as dd
+
+    (other,) = {"dedup_minhash_lsh", "dedup_minhash_mllib"} - {name}
+    served = sorted(map(tuple, registry.QUERIES[other](spark, SF001).collect()))
+    # run the builder itself, not the build-once artifact it is served from
+    monkeypatch.setattr(
+        dd, "_dedup_artifact", lambda spark, sf_dir, family, params, build: build()
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached_before = cache.numCachedEntries()
+    built = sorted(map(tuple, registry.QUERIES[name](spark, SF001).collect()))
+    assert cache.numCachedEntries() == cached_before
+    assert built == served
     assert exact_pairs, "fixture should contain near-dup pairs"
-    # recall: every exact near-dup pair (j >= 0.6 threshold + margin) found
+    for a, b, est in built:
+        assert exact_pairs.get((a, b)) == est, (a, b, est)
     strong = {p for p, j in exact_pairs.items() if j >= 0.75}
-    found = strong & set(got)
+    found = strong & {(a, b) for a, b, _ in built}
     assert len(found) >= 0.9 * len(strong), (len(found), len(strong))
-    # estimates for true pairs are close to the true jaccard
-    for p in found:
-        assert abs(got[p] - exact_pairs[p]) < 0.25, (p, got[p], exact_pairs[p])
 
 
 def test_simhash_separates_near_dups(spark, exact_pairs):

@@ -205,27 +205,6 @@ def test_stream_left_outer_join_emits_expired_unmatched(spark):
     assert out[out.click_event_id.isna()].gap_sec.isna().all()
 
 
-def test_mllib_minhash_recall(spark):
-    """MLlib MinHashLSH path recovers the exact high-Jaccard pairs."""
-    from k_means_in_mapreduce_spark.operators.dedup import (
-        dedup_minhash_mllib,
-        dedup_ngram_jaccard,
-    )
-    from .conftest import SF0001
-
-    exact = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup_ngram_jaccard(spark, SF0001).collect()
-    }
-    got = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup_minhash_mllib(spark, SF0001).collect()
-    }
-    if exact:
-        recall = len(exact & got) / len(exact)
-        assert recall >= 0.8, (recall, len(exact), len(got))
-
-
 def test_ns_timestamp_truncation_matches_duckdb(spark, tmp_path):
     """Pin the oracle-boundary semantics sources/tables.py relies on: for
     parquet TIMESTAMP(NANOS) with sub-microsecond components, Spark's
