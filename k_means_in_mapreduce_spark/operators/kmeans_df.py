@@ -32,13 +32,22 @@ Scale design (100 TB, 1000 executors):
   ``KMeans.java:147``); an input the caller already cached is read
   through its cache. On a real cluster use ``StorageLevel.MEMORY_AND_DISK``
   (default for ``DataFrame.cache``) so partitions spill instead of OOM.
+  The init sample scans every partition, so that one job fills the cache
+  and counts the rows (an observed metric): no separate count job.
 - the loop runs one Arrow task per 128 MiB of cached vectors, the
   reference's one map task per HDFS block (:func:`_iteration_partitions`).
   Over several tasks each round is one Spark job, as the reference runs
   one MapReduce job per iteration (``KMeans.java:130-187``). When the
   vectors fit one task, that task keeps its decoded batches and runs
-  every remaining round itself, so the whole fit is one loop job: per-job
-  scheduling and planning, not the kernel, dominate a round at that size.
+  every remaining round itself, so the whole fit is two jobs (sample,
+  loop): per-job scheduling and planning, not the kernel, dominate a
+  round at that size. The fit sets no session conf: AQE stays as the
+  caller set it, and only the rare grow-and-cache path in :func:`fit` has
+  an exchange for it to run as jobs of their own.
+- each batch's step is two GEMMs: the distances by the norm expansion
+  ‖x‖²−2x·Cᵀ+‖c‖² (‖x‖² computed once per decoded batch) and the
+  per-cluster sums as a k×batch one-hot times the batch, both
+  O(batch·k) memory.
 - centroids travel as a k×d constant in the task closure; each Arrow batch
   returns at most k (count, sum) rows per round, so driver traffic is
   O(rounds·batches·k·d) doubles, never O(n·d) (the reference's init reads
@@ -77,6 +86,10 @@ class KMeansConfig:
     def __post_init__(self) -> None:
         if self.method != "arrow":
             raise ValueError(f"unknown method {self.method!r}: only 'arrow'")
+        if self.k < 1:
+            raise ValueError(f"k must be >= 1, got {self.k}")
+        if self.max_iter < 0:
+            raise ValueError(f"max_iter must be >= 0, got {self.max_iter}")
 
 
 @dataclass
@@ -237,6 +250,12 @@ def arrow_combiner(centroids: list[list[float]], rounds: int = 1,
     The early stop only saves work: the driver replays every round it is
     sent and drops the ones it would not reach.
 
+    Per batch, ``‖x‖²`` is computed once when the batch is decoded, and
+    the per-cluster sums are one GEMM, a k×batch one-hot times the batch
+    (the same O(batch·k) size as the distance matrix). They differ from an
+    ``np.add.at`` scatter by rounding only, since BLAS adds in another
+    order, and are the same bits on every call.
+
     Exact-duplicate centroid rows collapse to their first occurrence
     before the GEMM, and the argmin's columns map back to original ids.
     Multithreaded BLAS may round two identical columns of ``X @ Cᵀ``
@@ -258,15 +277,19 @@ def arrow_combiner(centroids: list[list[float]], rounds: int = 1,
         import numpy as np
         import pyarrow as pa
 
-        xs = (
-            b.column(0).flatten()
-            .to_numpy(zero_copy_only=False)
-            .astype(np.float64, copy=False)
-            .reshape(b.num_rows, d)
-            for b in batches
-        )
+        def decode(b):
+            X = (
+                b.column(0).flatten()
+                .to_numpy(zero_copy_only=False)
+                .astype(np.float64, copy=False)
+                .reshape(b.num_rows, d)
+            )
+            return X, (X * X).sum(1)[:, None]
+
+        xs = (decode(b) for b in batches)
         if rounds > 1:
             xs = list(xs)  # decoded once, re-read every round
+        ids = np.arange(k)[:, None]
         C = C0
         for r in range(rounds):
             # first occurrence of each distinct row, in original order
@@ -274,12 +297,11 @@ def arrow_combiner(centroids: list[list[float]], rounds: int = 1,
             U = C[first]
             un2 = (U * U).sum(axis=1)
             parts = []
-            for X in xs:
-                d2 = (X * X).sum(1)[:, None] - 2.0 * (X @ U.T) + un2[None, :]
+            for X, x2 in xs:
+                d2 = x2 - 2.0 * (X @ U.T) + un2[None, :]
                 cid = first[d2.argmin(1)]
                 counts = np.bincount(cid, minlength=k)
-                sums = np.zeros((k, d))
-                np.add.at(sums, cid, X)
+                sums = (cid == ids).astype(np.float64) @ X  # k×batch one-hot
                 nz = np.nonzero(counts)[0]
                 parts.extend(zip(nz, counts[nz], sums[nz]))
                 yield pa.RecordBatch.from_pydict(
@@ -331,9 +353,12 @@ def cluster_features_arrow(
     (``KMeans.java:33-67``: k-slot accumulate per task, emit k partials)
     but vectorized: each Arrow batch computes the full n×k squared-distance
     matrix via the ‖x‖²−2x·Cᵀ+‖c‖² expansion (the same norm trick MLlib
-    uses) and emits per-cluster (count, sum) partials — O(batches·k·d)
-    shuffle-free output, merged in the driver (k·d doubles). Batches
-    stream through the task; none is held.
+    uses), sums each cluster's points with one one-hot GEMM, and emits
+    per-cluster (count, sum) partials — O(batches·k·d) shuffle-free
+    output, merged in the driver (k·d doubles). Batches stream through
+    the task; none is held. One call is one Spark job over
+    ``points``' own partitioning: the streaming paths' micro-batches, and
+    the fit's loop when it runs over several tasks.
 
     Returns [(cluster_id, num_points, mean_vector)] for non-empty clusters.
     ``np.argmin`` takes the first minimum — the reference's lowest-index
@@ -378,12 +403,14 @@ def _iteration_partitions(bytes_est: int) -> int:
     Spark job runs:
 
     - one task (≤128 MiB, e.g. 20k or 100k points at d=64): the task keeps
-      its decoded batches and loops every remaining round, so a fit is one
-      loop job (plus one per C4 re-init), not one job per round. On a
-      4-core VM (``local[4]``) a job costs ~0.25 CPU-s of scheduling,
-      planning and JIT work whatever its size, while the kernel takes
-      ~11 ms per 5,000 rows and a Python task ~0.02 CPU-s with the local
-      worker daemon;
+      its decoded batches and loops every remaining round, so a fit is the
+      init sample (which also counts the rows) and one loop job, plus one
+      loop job per C4 re-init, not one job per round. ``fit`` coalesces
+      straight to one task without reading the input's partition count.
+      On a 4-core VM (``local[4]``) a job costs ~0.1 CPU-s of scheduling
+      and planning whatever its size, while the kernel takes ~2.5 ms per
+      5,000 rows at d=64, k=8 and a Python task ~0.02 CPU-s with the
+      local worker daemon;
     - several tasks: one job per round, the reference's one MapReduce job
       per iteration, since each round's centroids need every task's
       partials.
@@ -417,34 +444,24 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
     any other input is cached for the fit and released afterwards. The
     caller's cache is never released.
 
-    Concurrency note: the loop disables ``spark.sql.adaptive.enabled``
-    for its duration and restores the prior value on exit (see the
-    comment below for why). SQL confs are SESSION-global, so two
-    concurrent ``fit()`` calls on the SAME SparkSession would race the
-    toggle/restore, and unrelated queries running on that session
-    meanwhile execute without AQE. Callers needing concurrent fits
-    should give each its own session (``spark.newSession()`` — confs are
-    per-session, the cache and cluster are shared).
+    Jobs: the init sample, which also fills the cache and counts the rows
+    (no separate count job), then the loop. A one-task fit runs 2 jobs,
+    plus one loop job per C4 re-init; a fit over several tasks runs one
+    loop job per round. ``fit`` sets no session conf, so concurrent fits
+    on one SparkSession do not interfere, and the session's other queries
+    keep its AQE setting.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    base = df.select(F.col(config.features_col).alias("features"))
-
     import time
 
+    from pyspark.sql import Observation
+    from pyspark.storagelevel import StorageLevel
+
     t_start = time.monotonic()
-    # AQE off for the loop, which has no exchange for it to re-plan. With
-    # AQE on, Spark 4.1 runs the cache fill and each exchange as separate
-    # jobs: 2-4 extra per fit. With it off a one-task fit runs 3 jobs
-    # (count, init sample, one loop job) and a fit over several tasks
-    # 2 + n_iter (one per round), plus one loop job per C4 re-init on the
-    # one-task path; a test pins both. The try/finally opens BEFORE the
-    # conf change and the cache: a failure anywhere (empty dataset,
-    # fewer-than-k rows in the init sample, a dying executor mid-count)
-    # must still restore AQE and release storage — embedded/notebook
-    # sessions outlive this call.
-    sess = df.sparkSession
-    prev_aqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
+    base = df.select(F.col(config.features_col).alias("features"))
+    # The try/finally opens BEFORE the cache: a failure anywhere (empty
+    # dataset, fewer-than-k rows in the init sample, a dying executor)
+    # must still release storage — embedded/notebook sessions outlive
+    # this call.
     owned = []  # caches this fit made, released on exit
     history: list[float] = []
     centroid_history: list[list[list[float]]] = []
@@ -453,22 +470,27 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
     n_iter = 0
 
     try:
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
         if df.storageLevel == StorageLevel.NONE:
             base = base.cache()
             owned.append(base)
-        n = base.count()  # materialize the cache before iterating
-        if n == 0:
-            raise ValueError("empty dataset")
-
-        # Init sample FIRST (against the just-materialized cache): its
-        # k rows also give `dim` for the re-tile sizing below, so the
-        # separate 1-row `first()` probe job this loop used to pay is
-        # gone (r21 — same sample, same seed, same partitioning of
-        # `base`, so the drawn centroids are unchanged).
-        centroids = sample_initial_centroids(
-            base, config.k, config.seed, "features"
-        )
+        # The init sample is the fit's first job: its TakeOrderedAndProject
+        # scans every partition, so it also fills the cache and, through
+        # the observation, counts the rows. The rows and the draw are those
+        # of sample_initial_centroids(base, ...): observe is a narrow node,
+        # so F.rand(seed) sees the same partitions in the same order. Its
+        # k rows also give `dim` for the sizing below.
+        seen = Observation()
+        try:
+            centroids = sample_initial_centroids(
+                base.observe(seen, F.count(F.lit(1)).alias("n")),
+                config.k, config.seed, "features",
+            )
+        except ValueError:
+            # raised only after the sample's job ran, so the count is in
+            if seen.get["n"] == 0:
+                raise ValueError("empty dataset") from None
+            raise
+        n = seen.get["n"]
         dim = len(centroids[0])
 
         # Re-tile the cached points to one task per 128 MiB (see
@@ -476,12 +498,14 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
         # off the cache. Growing re-caches a repartitioned copy so the loop
         # doesn't re-shuffle every iteration; it runs only when cached
         # partitions average over 128 MiB (e.g. one non-splittable .gz text
-        # file). `base` stays cached beside it because sampling runs
-        # against `base`: F.rand(seed) depends on partitioning, so the same
-        # df and seed give the same init as sample_initial_centroids.
-        cur = base.rdd.getNumPartitions()
+        # file), and with AQE on it costs 3 + n_iter jobs per fit: the
+        # repartition's map stage and the copy's cache fill run as jobs of
+        # their own once. `base` stays cached beside it because sampling
+        # runs against `base`: F.rand(seed) depends on partitioning, so the
+        # same df and seed give the same init as sample_initial_centroids.
         target = _iteration_partitions(n * dim * 8)
-        if target < cur:
+        cur = base.rdd.getNumPartitions() if target > 1 else None
+        if target == 1 or target < cur:
             points = base.coalesce(target)
         elif target > cur:
             # no materializing count: the first loop job fills this cache
@@ -519,7 +543,6 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
     finally:
         for cached in owned:
             cached.unpersist()
-        sess.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
     return KMeansModel(
         centroids=centroids,

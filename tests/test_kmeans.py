@@ -117,11 +117,17 @@ _MID_REINIT_DRAWS = [[[7.5, 1.5], [1.5, 8.5], [3.5, 4.5]],
 
 
 def _draws_by_seed(monkeypatch, seed, draws):
-    """Make sample_initial_centroids return draws[r] for seed + 1000·r."""
-    monkeypatch.setattr(
-        K, "sample_initial_centroids",
-        lambda _df, _k, s, _col="embedding": [list(c) for c in draws[(s - seed) // 1000]],
-    )
+    """Make sample_initial_centroids return draws[r] for seed + 1000·r.
+    The real sample still runs first: the fit reads its row count from
+    the init sample's job, so a draw that ran no job would leave it
+    waiting for that count."""
+    real = K.sample_initial_centroids
+
+    def drawn(df, k, s, col="embedding"):
+        real(df, k, s, col)
+        return [list(c) for c in draws[(s - seed) // 1000]]
+
+    monkeypatch.setattr(K, "sample_initial_centroids", drawn)
 
 
 def _numpy_replay(X, draws, max_iter, tol):
@@ -401,6 +407,19 @@ def test_config_accepts_only_the_arrow_method():
         K.KMeansConfig(k=2, method="expr")
 
 
+def _no_conf_set(monkeypatch):
+    """Record every ``RuntimeConfig.set`` call made from Python."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    calls = []
+    orig = RuntimeConfig.set
+    monkeypatch.setattr(
+        RuntimeConfig, "set",
+        lambda self, key, value: calls.append(key) or orig(self, key, value),
+    )
+    return calls
+
+
 @pytest.mark.parametrize(
     "partitions,target",
     [
@@ -410,16 +429,19 @@ def test_config_accepts_only_the_arrow_method():
     ],
 )
 def test_fit_job_count_and_aqe_restored(spark, monkeypatch, partitions, target):
-    """fit turns AQE off for its loop because with it on Spark 4.1 runs the
-    cache fill and each exchange as separate jobs. With it off a fit whose
-    cached vectors fit one task (1 partition kept, 12 coalesced down to
-    it) runs 3 jobs: cache count, init sample, and one loop job of one
-    stage and one task that runs every round. With the target forced to 3
-    (1 partition grown and re-cached) the fit runs one job per round,
-    2 + n_iter in all. The session's AQE setting reads as before after a
-    fit, and after a fit that fails with fewer than k rows."""
+    """With the session's AQE left on, a fit whose cached vectors fit one
+    task (1 partition kept, 12 coalesced down to it) runs 2 jobs: the init
+    sample, which also fills the cache and counts the rows, then one loop
+    job of one stage and one task that runs every round. With the target
+    forced to 3 (1 partition grown and re-cached, the path taken only when
+    cached partitions average over 128 MiB) the fit runs 3 + n_iter jobs:
+    AQE runs the repartition's map stage and the copy's cache fill as jobs
+    of their own, once per fit, then one job per round. No fit sets a
+    session conf, also one that fails with fewer than k rows, and the
+    session's AQE setting reads as before."""
     if target is not None:
         monkeypatch.setattr(K, "_iteration_partitions", lambda _bytes: target)
+    sets = _no_conf_set(monkeypatch)
     sc = spark.sparkContext
     df = spark.range(0, 240, 1, partitions).select(
         F.array(F.col("id").cast("double"), F.sin("id")).alias("embedding")
@@ -437,21 +459,152 @@ def test_fit_job_count_and_aqe_restored(spark, monkeypatch, partitions, target):
     tracker = sc.statusTracker()
     jobs = sorted(tracker.getJobIdsForGroup(group))
     assert m.n_iter == 3 and m.reinit_count == 0
-    assert len(jobs) == (3 if target is None else 2 + m.n_iter), jobs
-    for job in jobs[2:]:  # count, init sample, then the loop job(s)
+    assert len(jobs) == (2 if target is None else 3 + m.n_iter), jobs
+    if target is None:
         tasks = [
             tracker.getStageInfo(st).numTasks
-            for st in sorted(tracker.getJobInfo(job).stageIds)
+            for st in sorted(tracker.getJobInfo(jobs[1]).stageIds)
         ]
-        if target is None:
-            assert tasks == [1], (job, tasks)
-        else:  # the re-cached copy's result stage, behind its shuffle
+        assert tasks == [1], (jobs[1], tasks)
+    else:  # each round reads the re-cached copy: `target` tasks
+        for job in jobs[-m.n_iter:]:
+            tasks = [
+                tracker.getStageInfo(st).numTasks
+                for st in sorted(tracker.getJobInfo(job).stageIds)
+            ]
             assert tasks[-1] == target, (job, tasks)
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
 
     with pytest.raises(ValueError, match="fewer than k"):
         K.fit(df.limit(2), K.KMeansConfig(k=3, max_iter=3, seed=5))
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+    assert sets == []
+
+
+def test_concurrent_fits_on_one_session_equal_serial_fits(spark, monkeypatch):
+    """Two fits in two threads on one session give the models of the same
+    fits run one after the other, and no fit sets a session conf."""
+    import threading
+
+    sets = _no_conf_set(monkeypatch)
+    jobs = [
+        (_blobs(spark, 6_000), K.KMeansConfig(k=4, max_iter=5, tol=0.0, seed=3)),
+        (spark.range(0, 3_000, 1, 3).select(
+            F.array(F.col("id").cast("double"), F.cos("id")).alias("embedding")
+        ), K.KMeansConfig(k=3, max_iter=4, tol=0.0, seed=9)),
+    ]
+    serial = [K.fit(df, cfg) for df, cfg in jobs]
+    got, errors = [None, None], []
+
+    def run(i):
+        try:
+            got[i] = K.fit(*jobs[i])
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    for a, b in zip(got, serial):
+        assert _model_fields(a) == _model_fields(b)
+    assert sets == []
+
+
+@pytest.mark.parametrize("cached", [False, True], ids=["uncached", "cached"])
+@pytest.mark.parametrize("partitions", [1, 3, 12])
+def test_fit_counts_rows_in_the_init_sample(spark, monkeypatch, partitions,
+                                            cached):
+    """The fit's row count comes from the init sample's job: it sizes the
+    loop with ``n == df.count()``, and the init (a 0-iteration fit
+    returns it) is ``==`` to a standalone sample of the same df and seed.
+    An empty input still raises "empty dataset", and 2 rows with k=3
+    still raise "fewer than k"."""
+    df = spark.range(0, 500, 1, partitions).select(
+        F.array(F.col("id").cast("double"), F.sin("id"), F.cos("id"))
+        .alias("embedding")
+    )
+    empty, two = df.limit(0), df.limit(2)
+    if cached:
+        df, empty, two = df.cache(), empty.cache(), two.cache()
+    sized = []
+    orig = K._iteration_partitions
+    monkeypatch.setattr(K, "_iteration_partitions",
+                        lambda b: sized.append(b) or orig(b))
+    cfg = K.KMeansConfig(k=4, max_iter=0, seed=partitions)
+    try:
+        m = K.fit(df, cfg)
+        want = K.sample_initial_centroids(
+            df.select(F.col("embedding").alias("features")), 4, cfg.seed,
+            "features",
+        )
+        assert m.centroids == want and m.n_iter == 0
+        assert sized == [df.count() * 3 * 8]
+        with pytest.raises(ValueError, match="empty dataset"):
+            K.fit(empty, cfg)
+        with pytest.raises(ValueError, match="fewer than k"):
+            K.fit(two, K.KMeansConfig(k=3, seed=1))
+    finally:
+        for d in (df, empty, two):
+            d.unpersist()
+
+
+def test_config_rejects_k_below_one_and_negative_max_iter():
+    """k < 1 and max_iter < 0 fail at construction with a ValueError that
+    names the field (max_iter=0 is legal: the fit returns its init)."""
+    for k in (0, -2):
+        with pytest.raises(ValueError, match="^k must be >= 1"):
+            K.KMeansConfig(k=k)
+    with pytest.raises(ValueError, match="^max_iter must be >= 0"):
+        K.KMeansConfig(k=2, max_iter=-1)
+    assert K.KMeansConfig(k=1, max_iter=0).max_iter == 0
+
+
+def test_arrow_combiner_gemm_sums_match_add_at():
+    """The combiner's per-cluster sums are one one-hot GEMM per batch:
+    over several float32 batches, with one centroid that attracts no
+    point, every batch's ``(cluster_id, n, s)`` equals an ``np.add.at``
+    scatter of the same assignment within rtol 1e-12, and a second call
+    gives the same bits."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(5)
+    centres = np.array([[5.0] * 6, [20.0] * 6, [1e4] * 6, [40.0] * 6])
+    k = len(centres)
+    batches, xs = [], []
+    for size in (700, 1_024, 33):
+        X = (centres[rng.choice([0, 1, 3], size)]
+             + rng.normal(size=(size, 6))).astype(np.float32)
+        xs.append(X.astype(np.float64))
+        col = pa.ListArray.from_arrays(
+            pa.array(np.arange(0, X.size + 1, X.shape[1], dtype=np.int32)),
+            pa.array(X.ravel()),
+        )
+        batches.append(pa.RecordBatch.from_arrays([col], ["features"]))
+
+    def run():
+        return list(K.arrow_combiner(centres.tolist())(iter(batches)))
+
+    out = run()
+    assert len(out) == len(batches)
+    for X, b in zip(xs, out):
+        a = ((X[:, None, :] - centres[None, :, :]) ** 2).sum(2).argmin(1)
+        n = np.bincount(a, minlength=k)
+        s = np.zeros((k, X.shape[1]))
+        np.add.at(s, a, X)
+        nz = np.nonzero(n)[0]
+        assert 2 not in nz
+        assert b.column("cluster_id").to_pylist() == nz.tolist()
+        assert b.column("n").to_pylist() == n[nz].tolist()
+        np.testing.assert_allclose(
+            np.array(b.column("s").to_pylist()), s[nz], rtol=1e-12, atol=0
+        )
+    again = run()
+    for b, c in zip(out, again):
+        assert b.equals(c)
 
 
 def test_cli_reference_invocation(spark, tmp_path):
