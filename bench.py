@@ -333,7 +333,7 @@ def scratch_entry_pattern(tag: str):
     import re
 
     return re.compile(
-        r"^(?:art_[A-Za-z0-9_]+|bkt_[A-Za-z0-9_]+|ivf_index|centroids_text"
+        r"^(?:art_[A-Za-z0-9_]+|bkt_[A-Za-z0-9_]+|centroids_text"
         r"|orders_csv|events_json|orders_part|lineitem_orc"
         r"|orders_corrupt_csv|points_text)--"
         + re.escape(tag)
@@ -343,7 +343,7 @@ def scratch_entry_pattern(tag: str):
 
 def clear_artifact_cache(sf_dir: str) -> int:
     """Delete EVERY fingerprint-keyed scratch entry for this sf_dir (the
-    `art_*` artifacts, the persisted IVF index, bucketed table copies and
+    `art_*` artifacts, the IVF index among them, bucketed table copies and
     their .fingerprint markers — anything artifacts._scratch named with
     the sf tag) so the first run of an artifact-backed query measures the
     cold build, not a read of last run's output. Note the cold column is

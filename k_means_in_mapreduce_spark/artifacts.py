@@ -1,9 +1,10 @@
 """Build-once artifact machinery and the package's one in-process memo —
 a LEAF module by design.
 
-- ``materialized_artifact`` persists a deterministic derived DataFrame
-  as scratch parquet under ``.tmp/``, keyed on source content, params and
-  producing code; ``build_lock`` serializes rebuilds across processes.
+- ``artifact_dir`` keeps deterministic derived data (the parquet of
+  ``materialized_artifact``, the IVF index) under ``.tmp/``, keyed on
+  source content, params and producing code; ``build_lock`` serializes
+  rebuilds across processes.
 - ``source_fingerprint`` is the content key every freshness check uses;
   it reads disk on every call.
 - ``session_df_memo`` / ``parquet_plan`` memoize reader PLANS (never data
@@ -138,15 +139,13 @@ def _meta_is(meta_file: str, data_dir: str, want: dict) -> bool:
 
 @contextmanager
 def build_lock(root: str):
-    """Exclusive cross-process lock for rebuilding a scratch artifact
-    rooted at ``root`` — an ``flock`` because the kernel releases it when
-    the holder dies (no staleness heuristic, whose steal path is
-    inherently racy between two waiters: the slower stealer can delete
-    the lock the faster one just re-acquired). The lock FILE persists on
-    disk; only the advisory lock matters, so a leftover file from a
-    crashed run never blocks. Shared by ``materialized_artifact`` and the
-    IVF index builder (similarity.build_ivf_index) — any multi-file
-    scratch build that overwrite-writes a shared directory must hold it."""
+    """Exclusive cross-process lock for rebuilding the artifact rooted at
+    ``root``: an ``flock``, because the kernel releases it when the holder
+    dies (no staleness heuristic, whose steal path is racy between two
+    waiters: the slower stealer can delete the lock the faster one just
+    re-acquired). The lock FILE persists on disk; only the advisory lock
+    matters, so a leftover file from a crashed run never blocks. Every
+    artifact rebuild takes it through :func:`artifact_dir`."""
     import fcntl
 
     os.makedirs(root, exist_ok=True)
@@ -159,14 +158,15 @@ def build_lock(root: str):
 
 
 def _locked_rebuild(
-    root: str, data_dir: str, meta_file: str, want: dict, build
+    root: str, data_dir: str, meta_file: str, want: dict, write
 ) -> None:
-    """Rebuild the artifact under :func:`build_lock`.
+    """Rebuild the artifact under :func:`build_lock`; ``write(data_dir)``
+    writes the data and leaves ``_SUCCESS``.
 
     Two processes sharing the sf_dir (e.g. bench.py and pytest) can both
-    observe a stale meta and race overlapping ``mode("overwrite")`` writes
-    into data_dir — the atomic meta rename only protects against crashes,
-    not concurrency. The loser blocks until the winner finishes, then
+    observe a stale meta and race overlapping overwrite writes into
+    data_dir; the atomic meta rename only protects against crashes, not
+    concurrency. The loser blocks until the winner finishes, then
     re-checks freshness (usually the winner built exactly this meta, so
     the loser serves it without rebuilding)."""
     import json
@@ -181,11 +181,46 @@ def _locked_rebuild(
         # matching the old meta would serve mixed-code output)
         if os.path.exists(meta_file):
             os.remove(meta_file)
-        build().write.mode("overwrite").parquet(data_dir)
+        write(data_dir)
         tmp = meta_file + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(want, fh)
         os.replace(tmp, meta_file)  # atomic commit point
+
+
+def artifact_dir(
+    sf_dir: str, source_file: str, name: str, params: dict, write, module: str
+) -> str:
+    """Build-once scratch dir of DETERMINISTIC derived data; returns its
+    data dir once that holds a committed build. The build is keyed on (a)
+    the content fingerprint of ``<sf_dir>/<source_file>``, (b) ``params``,
+    and (c) a CODE fingerprint of ``module`` and its transitive
+    intra-package imports, so editing the producing code rebuilds the
+    artifact instead of serving data written by the old code (which would
+    let a re-gate of changed code go green against stale outputs).
+
+    On a miss, ``write(data_dir)`` runs under :func:`build_lock`; it may
+    leave ``_``-prefixed side files beside the data, which Spark's file
+    listing skips. ``meta.json`` is swapped in atomically AFTER ``write``
+    returns, so a torn build is never served."""
+    import importlib
+
+    # importlib on purpose: gate_ledger provides the fingerprint MECHANISM
+    # but its own content never changes any query's results, so it must
+    # stay out of the AST fingerprint walk (a visible import here would
+    # put gate_ledger.py — including its hand-edited PRIORITY_OVERRIDE —
+    # into the fingerprint cone of every artifact-serving query).
+    code_fp = importlib.import_module(
+        f"{__package__}.gate_ledger"
+    ).module_fingerprint(module)
+    fp = source_fingerprint(os.path.join(sf_dir, source_file))
+    want = {"fingerprint": fp, "code": code_fp, **params}
+    root = _scratch(sf_dir, f"art_{name}")
+    data_dir = os.path.join(root, "data")
+    meta_file = os.path.join(root, "meta.json")
+    if not _meta_is(meta_file, data_dir, want):
+        _locked_rebuild(root, data_dir, meta_file, want, write)
+    return data_dir
 
 
 def materialized_artifact(
@@ -196,36 +231,15 @@ def materialized_artifact(
     params: dict,
     build,
 ) -> DataFrame:
-    """Build-once materialization of a DETERMINISTIC derived DataFrame.
+    """The DETERMINISTIC DataFrame ``build()`` as build-once parquet in an
+    :func:`artifact_dir` keyed on ``build``'s module, served as a reader
+    plan: the dedup pair, groups and truth tables, the exact k-NN truth
+    and the exact-quantile results. At 100 TB these are the intermediates
+    a pipeline persists as first-class tables."""
 
-    ``build()`` produces the DataFrame; the result is persisted as a
-    scratch parquet keyed on (a) the content fingerprint of
-    ``<sf_dir>/<source_file>``, (b) the algorithm parameters, and (c) a
-    CODE fingerprint of ``build``'s defining module including its
-    transitive intra-package imports (gate_ledger's working-tree walk) —
-    so editing the producing code rebuilds the artifact instead of
-    silently serving parquet built by the old code (which would let a
-    re-gate of changed code go green against stale outputs). meta.json is
-    swapped in atomically AFTER the data commit, so a torn build is
-    invisible to readers. Pattern shared by the IVF index, the dedup
-    pair/signature artifacts, and the exact-quantile results; at 100 TB
-    these are exactly the intermediates a pipeline persists as
-    first-class tables."""
-    import importlib
+    def write(data_dir: str) -> None:
+        build().write.mode("overwrite").parquet(data_dir)
 
-    # importlib on purpose: gate_ledger provides the fingerprint MECHANISM
-    # but its own content never changes any query's results, so it must
-    # stay out of the AST fingerprint walk (a visible import here would
-    # put gate_ledger.py — including its hand-edited PRIORITY_OVERRIDE —
-    # into the fingerprint cone of every artifact-serving query).
-    code_fp = importlib.import_module(
-        f"{__package__}.gate_ledger"
-    ).module_fingerprint(build.__module__)
-    fp = source_fingerprint(os.path.join(sf_dir, source_file))
-    want = {"fingerprint": fp, "code": code_fp, **params}
-    root = _scratch(sf_dir, f"art_{name}")
-    data_dir = os.path.join(root, "data")
-    meta_file = os.path.join(root, "meta.json")
-    if not _meta_is(meta_file, data_dir, want):
-        _locked_rebuild(root, data_dir, meta_file, want, build)
-    return parquet_plan(spark, data_dir)
+    return parquet_plan(
+        spark, artifact_dir(sf_dir, source_file, name, params, write, build.__module__)
+    )

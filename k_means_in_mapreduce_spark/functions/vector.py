@@ -67,7 +67,9 @@ def l2_norm(a: ColumnOrName) -> Column:
 
 
 def cosine_similarity(a: ColumnOrName, b: ColumnOrName) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    """Cosine of two array<double> columns; NULL when either is a zero
+    vector (ANSI ``/`` would raise on the zero divisor)."""
+    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
 def scale(a: ColumnOrName, divisor: Column) -> Column:

@@ -300,7 +300,7 @@ def _dedup_artifact(
     """Build-once materialization for DETERMINISTIC dedup intermediates
     keyed on the source parquet's content fingerprint + algorithm
     parameters — see ``artifacts.materialized_artifact`` (shared with the
-    IVF index and exact-quantile artifacts). Pair lists, signature
+    exact k-NN truth and exact-quantile artifacts). Pair lists, signature
     tables and component tables are first-class materialized artifacts
     in a real pipeline — grouping, audit metrics, and keeper selection
     all consume them — not ephemeral subqueries recomputed per consumer.
@@ -818,7 +818,7 @@ def _ivf_pairs_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .similarity import build_ivf_index, probe_cells_expr
 
-    centroids, _cells_dir = build_ivf_index(spark, sf_dir)
+    centroids, _ = build_ivf_index(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )

@@ -1,21 +1,32 @@
 """Similarity search over the embedding column (north-star ANN ops).
 
-- ``ann_bruteforce_topk`` [oracle]: exact cosine top-k for a fixed query
-  vector — the correctness baseline. At 100 TB this is a single narrow
-  map + ``ORDER BY LIMIT k`` (Spark plans TakeOrderedAndProject: per-
-  partition top-k then a k-row merge on the driver — no full sort, no
-  full shuffle).
-- ``ann_knn_join_exact`` [oracle]: k-NN for EVERY vector of a query
-  sample via crossJoin + window top-k — the exact baseline for the
-  recall tests.
-- ``ann_lsh_topk`` [rows-only]: random-hyperplane LSH variant — buckets
-  vectors by sign pattern, searches only the query's bucket ring.
-  Approximate by construction; tests/test_similarity.py asserts recall
-  against the exact baseline.
+Exact queries, each with a DuckDB oracle:
 
-The LSH hyperplanes are generated from a fixed seed with a deterministic
-LCG (no numpy at query-build time keeps the plan literal reproducible
-across processes).
+- ``ann_bruteforce_topk``: cosine top-k for a fixed query vector. At
+  100 TB this is a narrow map + ``ORDER BY LIMIT k`` (Spark plans
+  TakeOrderedAndProject: per-partition top-k then a k-row merge on the
+  driver; no full sort, no full shuffle).
+- ``ann_knn_join_exact``: k-NN for every vector of a query sample, a
+  build-once artifact; the truth for the IVF k-NN join recall.
+- ``embeddings_quantize_int8``: per-vector int8 quantization.
+
+Approximate queries (rows-only) and the recall metric that checks each
+against the exact baseline with an oracle:
+
+- ``ann_ivf_topk`` -> ``ann_ivf_recall_at_10``: probe of the build-once
+  IVF index (``build_ivf_index``);
+- ``ann_ivf_knn_join`` -> ``ann_ivf_knn_join_recall``: the batch k-NN
+  join over the same index;
+- ``ann_lsh_topk`` -> ``ann_lsh_recall_at_10``: multi-table
+  random-hyperplane LSH.
+
+Tight recall values are pinned by tests/test_dedup_similarity.py and
+tests/test_extensions.py. A cosine with a zero vector on either side is
+NULL and sorts last under DESC, as in DuckDB.
+
+The LSH hyperplanes come from a plain LCG with a fixed seed, so they do
+not depend on NumPy's generators; the query builds them into a NumPy
+matrix on the driver and ships it in the Arrow closure.
 """
 
 from __future__ import annotations
@@ -170,11 +181,14 @@ def _knn_join_exact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_CELLS = 16  # coarse-quantizer size
 IVF_PROBES = 6  # cells searched per query (6/16 of the data per probe)
 
-def build_ivf_index(spark: SparkSession, sf_dir: str) -> tuple[list[list[float]], str]:
+def build_ivf_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[list[float]], DataFrame]:
     """Build-once IVF-Flat index for an sf_dir: fit the seeded coarse
     quantizer (the engine's own Arrow-path k-means), assign every vector
-    a cell, and write the assignments as parquet PARTITIONED BY cell_id
-    under ``.tmp/`` — the "index build once, probe many" artifact.
+    a cell, and write the assignments as parquet PARTITIONED BY cell_id —
+    the "index build once, probe many" artifact. Returns the centroids and
+    the reader plan of the cells.
 
     At 100 TB this is exactly the stored layout: cell id is the partition
     key, so a probe of IVF_PROBES cells is a partition-pruned scan reading
@@ -183,125 +197,79 @@ def build_ivf_index(spark: SparkSession, sf_dir: str) -> tuple[list[list[float]]
     sample (FAISS-style, ~30-256 vectors per cell); at testdata scale the
     full set is that sample.
 
-    Storage layout (format 2, FAISS-style preprocessed vectors): each row
-    is ``(vec_id, unit array<double>, norm double)`` partitioned by
-    cell_id — the vector is stored PRE-NORMALIZED, so probe scoring is a
-    single dot product instead of dot + two norms per candidate pair
+    Each row is ``(vec_id, unit array<double>, norm double)``, FAISS-style
+    preprocessed: the vector is stored PRE-NORMALIZED, so probe scoring is
+    a single dot product instead of dot + two norms per candidate pair
     (3x less inner-loop work in the batch k-NN join; the raw vector is
-    recoverable as ``unit * norm`` when an exact-rerank needs it).
+    recoverable as ``unit * norm`` when an exact-rerank needs it). A
+    zero vector's unit is NULL, so every cosine against it is NULL.
 
-    Reuse is keyed on a content fingerprint of ``embeddings.parquet``,
-    the layout format, AND a code fingerprint of this module + its
-    transitive imports (stored inside centroids.json): a regenerated
-    source, an older-format artifact, or an index built by edited code is
-    rebuilt, never silently reused.
-    ``centroids.json`` is swapped in atomically AFTER the cell parquet
-    finishes, so a concurrent reader either sees a complete matching
-    artifact or rebuilds.
+    The cells and ``_centroids.json`` share one data dir of an
+    ``artifacts.artifact_dir`` entry, so one ``meta.json`` commit covers
+    both: a regenerated source, an edited cone of this module, or a
+    rebuild that died part way is rebuilt, never served.
     """
     import json
     import os
 
+    from ..artifacts import artifact_dir, parquet_plan
     from ..functions.vector import l2_norm
-    from ..artifacts import _scratch, source_fingerprint
     from .kmeans_df import KMeansConfig, assign_clusters, fit
 
-    import importlib
+    def write(data_dir: str) -> None:
+        e = load_table(spark, sf_dir, "embeddings")
+        model = fit(e, KMeansConfig(k=IVF_CELLS, max_iter=5, tol=0.0, seed=7))
+        centroids = [list(map(float, c)) for c in model.centroids]
+        ed = assign_clusters(e, centroids).select(
+            "vec_id",
+            F.col("embedding").cast("array<double>").alias("e"),
+            F.col("cluster_id").alias("cell_id"),
+        )
+        # norm as its own projection first, so the per-element division
+        # references a computed column instead of inlining the norm
+        # aggregate into every element's expression
+        (
+            ed.withColumn("norm", l2_norm("e"))
+            .select(
+                "vec_id",
+                F.transform("e", lambda x: F.try_divide(x, "norm")).alias("unit"),
+                "norm",
+                "cell_id",
+            )
+            .write.mode("overwrite")
+            .partitionBy("cell_id")
+            .parquet(data_dir)
+        )
+        with open(os.path.join(data_dir, "_centroids.json"), "w") as fh:
+            json.dump(centroids, fh)
 
-    # importlib: keep gate_ledger out of the AST fingerprint walk (it is
-    # cache-keying mechanism, not query behavior — see filesources)
-    code_fp = importlib.import_module(
-        __package__.rsplit(".", 1)[0] + ".gate_ledger"
-    ).module_fingerprint(__package__ + ".similarity")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    fp = source_fingerprint(src) + ":" + code_fp
-    root = _scratch(sf_dir, "ivf_index")
-    cells_dir = os.path.join(root, "cells")
-    cent_file = os.path.join(root, "centroids.json")
-
-    def _fresh_centroids():
-        if os.path.exists(cent_file) and os.path.exists(
-            os.path.join(cells_dir, "_SUCCESS")
-        ):
-            with open(cent_file) as fh:
-                meta = json.load(fh)
-            if (
-                isinstance(meta, dict)
-                and meta.get("fingerprint") == fp
-                and meta.get("format") == 2
-            ):
-                return meta["centroids"]
-        return None
-
-    centroids = _fresh_centroids()
-    if centroids is None:
-        # Same concurrency hazard as materialized_artifact: two processes
-        # sharing the sf_dir must not overwrite-write cells_dir at once
-        # (interleaved part-files + a matching centroids.json would be
-        # served forever). Winner builds under the flock; the loser
-        # re-checks and serves the winner's index.
-        from ..artifacts import build_lock
-
-        with build_lock(root):
-            centroids = _fresh_centroids()
-            if centroids is None:
-                e = load_table(spark, sf_dir, "embeddings")
-                model = fit(
-                    e, KMeansConfig(k=IVF_CELLS, max_iter=5, tol=0.0, seed=7)
-                )
-                centroids = [list(map(float, c)) for c in model.centroids]
-                ed = assign_clusters(e, centroids).select(
-                    "vec_id",
-                    F.col("embedding").cast("array<double>").alias("e"),
-                    F.col("cluster_id").alias("cell_id"),
-                )
-                # norm as its own projection first, so the per-element
-                # division references a computed column instead of
-                # inlining the norm aggregate into every element's
-                # expression
-                (
-                    ed.withColumn("norm", l2_norm("e"))
-                    .select(
-                        "vec_id",
-                        F.transform("e", lambda x: x / F.col("norm")).alias(
-                            "unit"
-                        ),
-                        "norm",
-                        "cell_id",
-                    )
-                    .write.mode("overwrite")
-                    .partitionBy("cell_id")
-                    .parquet(cells_dir)
-                )
-                tmp = cent_file + ".tmp"
-                with open(tmp, "w") as fh:
-                    json.dump(
-                        {"fingerprint": fp, "format": 2, "centroids": centroids},
-                        fh,
-                    )
-                os.replace(tmp, cent_file)  # atomic: no torn reads
-    return centroids, cells_dir
+    data_dir = artifact_dir(
+        sf_dir, "embeddings.parquet", "ivf_index", {"cells": IVF_CELLS}, write, __name__
+    )
+    with open(os.path.join(data_dir, "_centroids.json")) as fh:
+        centroids = json.load(fh)
+    return centroids, parquet_plan(spark, data_dir)
 
 
 @query("ann_ivf_topk")  # approximate — recall-tested vs the exact baseline
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (inverted-file) ANN probe: load the build-once index (fit is
-    skipped when the on-disk centroids.json + partitioned cells match),
-    pick the query's IVF_PROBES nearest cells driver-side (k small:
-    O(k·d) scalar work), and exactly re-rank only those cells' vectors by cosine via a partition-pruned
-    scan of the index."""
-    centroids, cells_dir = build_ivf_index(spark, sf_dir)
+    """IVF (inverted-file) ANN probe: load the build-once index (the fit
+    runs only when the index is built), pick the query's IVF_PROBES
+    nearest cells driver-side (k small: O(k·d) scalar work), and exactly
+    re-rank only those cells' vectors by cosine via a partition-pruned
+    scan of the index. A zero query vector scores NULL everywhere."""
+    from ..functions.vector import dot
+
+    centroids, idx = build_ivf_index(spark, sf_dir)
     qv = _query_vector(spark, sf_dir)
     # driver-side probe selection: distances from the query to all cells
     d2 = [sum((a - b) ** 2 for a, b in zip(qv, c)) for c in centroids]
     probes = sorted(range(IVF_CELLS), key=lambda i: (d2[i], i))[:IVF_PROBES]
 
-    from ..artifacts import parquet_plan
-    from ..functions.vector import dot
-
-    idx = parquet_plan(spark, cells_dir)
     qn = sum(x * x for x in qv) ** 0.5
-    qunit = vector_lit([x / qn for x in qv])
+    qunit = (
+        vector_lit([x / qn for x in qv]) if qn else F.lit(None).cast("array<double>")
+    )
     # index vectors are stored pre-normalized -> cosine is ONE dot product
     return (
         idx.filter(
@@ -351,11 +319,9 @@ def ann_ivf_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition pruning, so only probed cell directories are read
     (asserted in tests/test_plans.py). Work per query ≈
     IVF_PROBES/IVF_CELLS of a full scan, exactly the IVF contract."""
-    from ..artifacts import parquet_plan
     from ..functions.vector import dot, l2_norm
 
-    centroids, cells_dir = build_ivf_index(spark, sf_dir)
-    idx = parquet_plan(spark, cells_dir)
+    centroids, idx = build_ivf_index(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < KNN_JOIN_QUERY_MAX_ID).select(
         F.col("vec_id").alias("qid"),
@@ -366,7 +332,7 @@ def ann_ivf_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single dot product instead of dot + two norms — 3x less inner-loop
     # work where it multiplies (|pairs| = |Q| x probed cells' rows)
     qn = q.withColumn("_n", l2_norm("qe")).select(
-        "qid", "qe", F.transform("qe", lambda x: x / F.col("_n")).alias("qu")
+        "qid", "qe", F.transform("qe", lambda x: F.try_divide(x, "_n")).alias("qu")
     )
     # probe-cell selection runs on the RAW vector — the same L2 space the
     # coarse quantizer was trained/assigned in; only SCORING uses units
@@ -477,7 +443,10 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )  # (L*k) x d
     qbits = (P @ qv) > 0
-    qn = qv / np.linalg.norm(qv)
+    # a zero norm on either side makes the cosine NaN, which the Arrow
+    # transfer turns into NULL: the same NULL as the SQL cosine paths
+    with np.errstate(invalid="ignore"):
+        qn = qv / np.linalg.norm(qv)
     n_planes, n_tables = LSH_PLANES, LSH_TABLES
     query_vec_id = QUERY_VEC_ID
 
@@ -495,7 +464,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not hit.any():
                 continue
             Xh = X[hit]
-            cos = (Xh @ qn) / np.linalg.norm(Xh, axis=1)
+            with np.errstate(invalid="ignore"):
+                cos = (Xh @ qn) / np.linalg.norm(Xh, axis=1)
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].to_numpy()[hit], "cos_sim": cos}
             )

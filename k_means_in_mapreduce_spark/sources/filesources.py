@@ -126,7 +126,9 @@ def partitioned_sink_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("o_orderstatus")
         .parquet(path)
     )
-    back = spark.read.parquet(path)
+    # the schema is given, not inferred: an empty orders table writes no
+    # data file to infer it from
+    back = spark.read.schema(o.schema).parquet(path)
     return (
         back.filter(F.col("o_orderstatus") == "F")
         .groupBy("o_orderpriority")
@@ -186,8 +188,7 @@ def bucketed_join_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     local-test side, which would hide the bucketing (on the 100 TB target
     neither side broadcasts).
 
-    Reuse is keyed on a content fingerprint of the source parquet (the
-    same pattern as ``operators/similarity.py:build_ivf_index``): the
+    Reuse is keyed on a content fingerprint of the source parquet: the
     bucketed copy is rebuilt whenever the catalog entry is missing (fresh
     session — the catalog is in-memory) or the recorded fingerprint does
     not match the current source, so a stale copy can never be served

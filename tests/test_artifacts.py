@@ -13,25 +13,16 @@ import time
 from k_means_in_mapreduce_spark import artifacts as A
 
 
-class _FakeWrite:
-    """Stands in for DataFrame.write.mode('overwrite').parquet(path)."""
+def _fake_write(log):
+    """A ``write(data_dir)`` that commits an empty build and logs it."""
 
-    def __init__(self, log):
-        self.log = log
-
-    def mode(self, _m):
-        return self
-
-    def parquet(self, path):
+    def write(path):
         os.makedirs(path, exist_ok=True)
         with open(os.path.join(path, "_SUCCESS"), "w"):
             pass
-        self.log.append(path)
+        log.append(path)
 
-
-class _FakeDF:
-    def __init__(self, log):
-        self.write = _FakeWrite(log)
+    return write
 
 
 def _commit_artifact(root, want):
@@ -59,7 +50,7 @@ def test_meta_is_requires_success_marker_and_exact_meta(tmp_path):
 def test_locked_rebuild_waits_for_concurrent_builder(tmp_path):
     """The flock loser blocks until the holder releases; if the holder
     committed exactly the wanted meta, the loser serves it WITHOUT
-    rebuilding (build() must not run)."""
+    rebuilding (write() must not run)."""
     root = str(tmp_path)
     data = os.path.join(root, "data")
     meta = os.path.join(root, "meta.json")
@@ -79,11 +70,11 @@ def test_locked_rebuild_waits_for_concurrent_builder(tmp_path):
     t = threading.Thread(target=other_process)
     t.start()
 
-    def build():  # pragma: no cover - the assertion is that it never runs
+    def write(_data_dir):  # pragma: no cover - the assertion is that it never runs
         raise AssertionError("build ran despite a concurrent identical build")
 
     t0 = time.monotonic()
-    A._locked_rebuild(root, data, meta, want, build)
+    A._locked_rebuild(root, data, meta, want, write)
     t.join()
     assert time.monotonic() - t0 >= 0.5  # actually waited for the holder
     assert A._meta_is(meta, data, want)
@@ -103,7 +94,7 @@ def test_locked_rebuild_ignores_leftover_lock_file(tmp_path):
 
     built = []
     t0 = time.monotonic()
-    A._locked_rebuild(root, data, meta, want, lambda: _FakeDF(built))
+    A._locked_rebuild(root, data, meta, want, _fake_write(built))
     assert time.monotonic() - t0 < 2.0  # no dead-wait
     assert built == [data]
     assert A._meta_is(meta, data, want)
@@ -122,29 +113,22 @@ def _race_worker(root, idx, log_path):
     meta = os.path.join(root, "meta.json")
     want = {"fingerprint": "f", "code": "c"}
 
-    class W:
-        def mode(self, _m):
-            return self
+    def write(path):
+        # torn-write detector: mark in-progress, linger, then commit.
+        # If two builders overlap, the second sees the first's marker.
+        flag = os.path.join(path, "_IN_PROGRESS")
+        os.makedirs(path, exist_ok=True)
+        overlapped = os.path.exists(flag)
+        with open(flag, "w"):
+            pass
+        time.sleep(0.5)
+        with open(os.path.join(path, "_SUCCESS"), "w"):
+            pass
+        os.remove(flag)
+        with open(log_path, "a") as fh:
+            fh.write(json.dumps({"idx": idx, "overlapped": overlapped}) + "\n")
 
-        def parquet(self, path):
-            # torn-write detector: mark in-progress, linger, then commit.
-            # If two builders overlap, the second sees the first's marker.
-            flag = os.path.join(path, "_IN_PROGRESS")
-            os.makedirs(path, exist_ok=True)
-            overlapped = os.path.exists(flag)
-            with open(flag, "w"):
-                pass
-            time.sleep(0.5)
-            with open(os.path.join(path, "_SUCCESS"), "w"):
-                pass
-            os.remove(flag)
-            with open(log_path, "a") as fh:
-                fh.write(json.dumps({"idx": idx, "overlapped": overlapped}) + "\n")
-
-    class D:
-        write = W()
-
-    A._locked_rebuild(root, data, meta, want, lambda: D())
+    A._locked_rebuild(root, data, meta, want, write)
 
 
 def test_locked_rebuild_excludes_concurrent_processes(tmp_path):
@@ -187,9 +171,62 @@ def test_locked_rebuild_replaces_mismatched_meta(tmp_path):
     want = {"fingerprint": "new", "code": "new"}
 
     built = []
-    A._locked_rebuild(root, data, meta, want, lambda: _FakeDF(built))
+    A._locked_rebuild(root, data, meta, want, _fake_write(built))
     assert built == [data]
     assert A._meta_is(meta, data, want)
+
+
+def test_interrupted_ivf_rebuild_is_never_served(spark, tmp_path, monkeypatch):
+    """Code A builds the IVF index; under code B a rebuild dies after its
+    cells commit; back on A (say, after a checkout) the next call must
+    re-fit, because the cells on disk are B's. Serving A's centroids with
+    B's cells is the mixed-code case the meta commit rules out."""
+    import shutil
+
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    import bench
+    from k_means_in_mapreduce_spark import gate_ledger
+    from k_means_in_mapreduce_spark.operators import kmeans_df as KDF
+    from k_means_in_mapreduce_spark.operators.similarity import build_ivf_index
+
+    from .conftest import SF0001
+
+    sf = str(tmp_path)
+    shutil.copyfile(f"{SF0001}/embeddings.parquet", f"{sf}/embeddings.parquet")
+    code = ["A"]
+    monkeypatch.setattr(
+        gate_ledger, "module_fingerprint", lambda dotted, ref=None: code[0]
+    )
+    fits = []
+    real_fit = KDF.fit
+
+    def counting_fit(*args, **kwargs):
+        fits.append(code[0])
+        return real_fit(*args, **kwargs)
+
+    monkeypatch.setattr(KDF, "fit", counting_fit)
+    real_parquet = DataFrameWriter.parquet
+
+    def dies_after_commit(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        raise RuntimeError("rebuild died after the cells commit")
+
+    try:
+        build_ivf_index(spark, sf)
+        build_ivf_index(spark, sf)
+        assert fits == ["A"]  # the warm call serves A's build
+        code[0] = "B"
+        monkeypatch.setattr(DataFrameWriter, "parquet", dies_after_commit)
+        with pytest.raises(RuntimeError, match="after the cells commit"):
+            build_ivf_index(spark, sf)
+        monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+        code[0] = "A"
+        build_ivf_index(spark, sf)
+        assert fits == ["A", "B", "A"]
+    finally:
+        bench.clear_artifact_cache(sf)
 
 
 def test_clear_artifact_cache_matches_known_names_and_exact_tag(tmp_path):
@@ -208,12 +245,12 @@ def test_clear_artifact_cache_matches_known_names_and_exact_tag(tmp_path):
     doomed = [
         f"art_pairs--{tag}",            # artifact family
         f"bkt_orders--{tag}.fingerprint",  # bucketed-copy marker
-        f"ivf_index--{tag}",            # fixed name, exact tag
-        f"centroids_text--{tag}",
+        f"centroids_text--{tag}",       # fixed name, exact tag
+        f"points_text--{tag}",
     ]
     survivors = [
         f"unrelated--{tag}",            # not a scratch family name
-        f"ivf_indexx--{tag}",           # fixed name must match exactly
+        f"centroids_textx--{tag}",      # fixed name must match exactly
         # a DIFFERENT sf_dir (/other/bench_test_zone/data/sf1) whose tag
         # has ours as a suffix, behind a fixed-name entry: the old
         # endswith(tag) deleted this
@@ -263,7 +300,7 @@ def test_scratch_entry_pattern_covers_every_scratch_call_site():
     pat = bench.scratch_entry_pattern(tag)
 
     def sample_name(node):
-        # literal: "ivf_index"; f-string: f"art_{name}" -> "art_sample"
+        # literal: "orders_csv"; f-string: f"art_{name}" -> "art_sample"
         if isinstance(node, ast.Constant) and isinstance(node.value, str):
             return node.value
         if isinstance(node, ast.JoinedStr):
@@ -342,7 +379,7 @@ def test_scratch_entry_pattern_adversarial_suffix_dirs():
     from k_means_in_mapreduce_spark.artifacts import scratch_tag
 
     FIXED = (
-        "ivf_index", "centroids_text", "orders_csv", "events_json",
+        "centroids_text", "orders_csv", "events_json",
         "orders_part", "lineitem_orc", "orders_corrupt_csv", "points_text",
     )
     seg = st.text(alphabet="abxz059.-", min_size=1, max_size=8)
@@ -385,7 +422,7 @@ def test_scratch_entry_pattern_adversarial_suffix_dirs():
         # pre-delimiter legacy entries never match (orphaned on rename,
         # swept once manually when the delimiter landed)
         assert not pat_a.match(f"art_pairs{tag_a}")
-        assert not pat_a.match(f"ivf_index{tag_a}")
+        assert not pat_a.match(f"centroids_text{tag_a}")
 
         # string-suffix WITHOUT the path boundary (/zdata/sf1 vs
         # /data/sf1 style): still no cross-match

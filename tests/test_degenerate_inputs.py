@@ -1,6 +1,6 @@
 """Queries on empty and tiny tables (fixtures from ``degenerate_fixture``):
 each either matches its oracle or raises a ``ValueError`` that names the
-table it needs."""
+table it needs. A zero embedding scores a NULL cosine."""
 
 import pytest
 
@@ -30,3 +30,74 @@ def test_price_histogram_matches_oracle_on_tiny_lineitem(spark, tmp_path, n_rows
         registry.QUERIES[name](spark, sf_dir), registry.ORACLES[name], con
     )
     con.close()
+
+
+@pytest.mark.parametrize("n_rows", [0, 3])
+def test_partitioned_sink_matches_oracle_on_tiny_orders(spark, tmp_path, n_rows):
+    """An empty orders table writes no data file to infer a schema from;
+    the read-back takes the table's own schema and gives no rows, as the
+    oracle does."""
+    import bench
+
+    sf_dir = degenerate_fixture(tmp_path, n_rows)
+    con = make_duck_con(sf_dir)
+    name = "partitioned_sink_pruned_scan"
+    try:
+        assert_oracle_match(
+            registry.QUERIES[name](spark, sf_dir), registry.ORACLES[name], con
+        )
+    finally:
+        con.close()
+        bench.clear_artifact_cache(sf_dir)
+
+
+@pytest.mark.parametrize("zero_id", [5, QUERY_VEC_ID])
+def test_zero_norm_embedding_scores_null(spark, tmp_path, zero_id):
+    """A cosine with a zero vector is NULL, as DuckDB's ``x / 0.0`` is, and
+    both engines sort it last under DESC. With one embedding zeroed (a
+    k-NN sample vector, or the fixed query vector) the oracle-bearing
+    queries match their oracles, and the approximate ones score exactly
+    the pairs that touch the zero vector NULL."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import bench
+
+    sf_dir = degenerate_fixture(tmp_path, 10**9)  # every row
+    path = f"{sf_dir}/embeddings.parquet"
+    emb = pq.read_table(path)
+    vecs = emb.column("embedding").to_pylist()
+    vecs[emb.column("vec_id").to_pylist().index(zero_id)] = [0.0] * len(vecs[0])
+    i = emb.schema.get_field_index("embedding")
+    pq.write_table(
+        emb.set_column(i, "embedding", pa.array(vecs, emb.schema.field(i).type)), path
+    )
+    oracled = [
+        "ann_bruteforce_topk",
+        "ann_knn_join_exact",
+        "dedup_embedding_cosine",
+        "ann_ivf_knn_join_recall",
+        "dedup_embedding_cosine_ivf_recall",
+        "dedup_embedding_cosine_ivf_precision",
+    ]
+    if zero_id != QUERY_VEC_ID:
+        # a zero query ties every cosine at NULL, so its top-10 recall
+        # compares two vec_id orders of one tie
+        oracled += ["ann_ivf_recall_at_10", "ann_lsh_recall_at_10"]
+    con = make_duck_con(sf_dir)
+    try:
+        for name in oracled:
+            assert_oracle_match(
+                registry.QUERIES[name](spark, sf_dir), registry.ORACLES[name], con
+            )
+        for name in ("ann_ivf_topk", "ann_ivf_knn_join", "ann_lsh_topk"):
+            rows = registry.QUERIES[name](spark, sf_dir).collect()
+            assert rows, name
+            for r in rows:
+                ends = (r["vec_id"], r.asDict().get("qid", QUERY_VEC_ID))
+                assert (r["cos_sim"] is None) == (zero_id in ends), (name, r)
+        pairs = registry.QUERIES["dedup_embedding_cosine_ivf"](spark, sf_dir).collect()
+        assert pairs and all(zero_id not in (p.vec_a, p.vec_b) for p in pairs)
+    finally:
+        con.close()
+        bench.clear_artifact_cache(sf_dir)

@@ -183,7 +183,7 @@ def test_range_join_binned_boundaries(spark, monkeypatch):
 
 
 def test_ivf_recall_vs_bruteforce(spark):
-    """IVF with 4/16 probes must recover most of the exact top-10."""
+    """IVF with 6/16 probes must recover most of the exact top-10."""
     from k_means_in_mapreduce_spark.operators.similarity import (
         ann_bruteforce_topk,
         ann_ivf_topk,

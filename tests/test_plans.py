@@ -484,3 +484,14 @@ def test_fixed_centroids_one_job_in_vec_id_order(spark, tmp_path):
     )
     assert n == 1
     assert got == want
+
+
+def test_warm_ivf_queries_job_counts(spark):
+    """Serving the IVF index reads its meta and centroids on the driver and
+    starts no Spark job: a warm ``ann_ivf_topk`` is 2 jobs (the query
+    vector fetch and the top-k) and a warm ``ann_ivf_knn_join`` is 3."""
+    for name, jobs in (("ann_ivf_topk", 2), ("ann_ivf_knn_join", 3)):
+        q = registry.QUERIES[name]
+        q(spark, SF001).collect()
+        got = _jobs_in_group(spark, f"{name}-warm", lambda: q(spark, SF001).collect())
+        assert got[1] == jobs, name
