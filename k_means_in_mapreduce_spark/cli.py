@@ -16,8 +16,10 @@ can switch by replacing the ``hadoop jar`` prefix with
   ``KMeans.java:119-127,189-193`` — the reference appends in its working
   directory; inside the output dir it would be wiped by the next run's
   overwrite)
-- ``dim``: validated against the parsed data (the reference trusts each
-  line's arity, ``Point.java:26``; we fail fast on mismatch)
+- ``dim``: a line that is not exactly ``dim`` numbers parses as a NULL
+  vector, which the fit's first job refuses: exit code 1 (the reference
+  trusts each line's arity, ``Point.java:26``, and dies on a malformed
+  token, ``KMeans.java:269``)
 - ``num_reducer``: becomes ``spark.sql.shuffle.partitions``
   (``KMeans.java:133`` setNumReduceTasks)
 
@@ -87,6 +89,8 @@ def main(argv: list[str] | None = None) -> int:
         print(f"epsilon must be >= 0\n{USAGE}", file=sys.stderr)
         return 2
 
+    from pyspark.sql import functions as F
+
     from .session import get_session
     from .sources.text_points import parse_points
 
@@ -99,17 +103,16 @@ def main(argv: list[str] | None = None) -> int:
     # num_reducer mapping unconditionally (KMeans.java:133)
     spark.conf.set("spark.sql.shuffle.partitions", str(num_reducer))
 
-    # try/finally: the validation early-return path must also release the
-    # cached input — in embedded/notebook sessions the SparkSession
-    # outlives this call, so a missed unpersist pins storage for the
-    # session lifetime
-    pts = parse_points(spark, inp).cache()
-    try:
-        return _run_fit(
-            pts, spark, k, dim, max_iter, epsilon, seed, inp, out, fidelity,
-        )
-    finally:
-        pts.unpersist()
+    # a line that is not exactly `dim` numbers becomes a NULL vector,
+    # which fit's init-sample job counts and refuses; fit caches the rows
+    f = F.col("features")
+    pts = parse_points(spark, inp).select(
+        F.when((F.size(f) == dim) & ~F.exists(f, lambda x: x.isNull()), f)
+        .alias("features")
+    )
+    return _run_fit(
+        pts, spark, k, dim, max_iter, epsilon, seed, inp, out, fidelity,
+    )
 
 
 def _format_vetted(base_path: str, touchable: set[int]) -> str:
@@ -181,8 +184,6 @@ def _write_centroid_text(spark, centroids, path) -> None:
 def _run_fit(
     pts, spark, k, dim, max_iter, epsilon, seed, inp, out, fidelity=False,
 ) -> int:
-    from pyspark.sql import functions as F
-
     from .operators.kmeans_df import KMeansConfig, fit
 
     # --fidelity pre-flight, BEFORE any Spark work: every pre-existing
@@ -259,31 +260,26 @@ def _run_fit(
             print(_format_vetted(base_path, touchable), file=sys.stderr)
 
     # Fail fast like the reference (NumberFormatException kills the job,
-    # KMeans.java:269): wrong arity OR any non-numeric token. The parser's
-    # element-wise cast turns a bad token into a NULL element that would
-    # otherwise pass the arity check and poison centroids with NaN.
-    bad = pts.filter(
-        (F.size("features") != dim)
-        | F.exists("features", lambda x: x.isNull())
-    ).count()
-    if bad:
+    # KMeans.java:269): a line with a non-numeric token or not exactly
+    # `dim` numbers is a NULL vector, and fit refuses those in its first job
+    try:
+        model = fit(
+            pts,
+            KMeansConfig(
+                k=k,
+                max_iter=max_iter,
+                tol=epsilon,
+                seed=seed,
+                features_col="features",
+            ),
+        )
+    except ValueError as ex:
         print(
-            f"{bad} input line(s) do not have the declared dim={dim} "
-            "or contain non-numeric values",
+            f"invalid input: {ex} (each line must be exactly dim={dim} "
+            "numbers)",
             file=sys.stderr,
         )
         return 1
-
-    model = fit(
-        pts,
-        KMeansConfig(
-            k=k,
-            max_iter=max_iter,
-            tol=epsilon,
-            seed=seed,
-            features_col="features",
-        ),
-    )
 
     # final centroids in the reference's TextOutputFormat shape
     _write_centroid_text(spark, model.centroids, out)

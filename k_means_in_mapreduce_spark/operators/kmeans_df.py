@@ -32,8 +32,9 @@ Scale design (100 TB, 1000 executors):
   ``KMeans.java:147``); an input the caller already cached is read
   through its cache. On a real cluster use ``StorageLevel.MEMORY_AND_DISK``
   (default for ``DataFrame.cache``) so partitions spill instead of OOM.
-  The init sample scans every partition, so that one job fills the cache
-  and counts the rows (an observed metric): no separate count job.
+  The init sample scans every partition, so that one job fills the cache,
+  counts the rows and checks arity and NULL vectors (observed metrics):
+  no separate count or validation job.
 - the loop runs one Arrow task per 128 MiB of cached vectors, the
   reference's one map task per HDFS block (:func:`_iteration_partitions`).
   Over several tasks each round is one Spark job, as the reference runs
@@ -276,10 +277,23 @@ def arrow_combiner(centroids: list[list[float]], rounds: int = 1,
     def partial_cf(batches):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         def decode(b):
+            # refuse what reshape would silently re-slice or turn into NaN
+            col = b.column(0)
+            flat = col.flatten()
+            lo, hi = pc.min_max(pc.list_value_length(col)).values()
+            if col.null_count or flat.null_count or (
+                b.num_rows and not lo.as_py() == hi.as_py() == d
+            ):
+                raise ValueError(
+                    f"a batch holds {col.null_count} NULL vector(s), "
+                    f"{flat.null_count} NULL element(s) and sizes {lo}..{hi}"
+                    f", not d={d}"
+                )
             X = (
-                b.column(0).flatten()
+                flat
                 .to_numpy(zero_copy_only=False)
                 .astype(np.float64, copy=False)
                 .reshape(b.num_rows, d)
@@ -393,6 +407,8 @@ def sample_initial_centroids(
     )
     if len(rows) < k:
         raise ValueError(f"dataset has fewer than k={k} rows")
+    if any(r[0] is None for r in rows):
+        raise ValueError("the sample drew a NULL vector")
     return [list(r[0]) for r in rows]
 
 
@@ -425,6 +441,20 @@ def _iteration_partitions(bytes_est: int) -> int:
     return max(1, math.ceil(bytes_est / (128 * 1024 * 1024)))
 
 
+def _check_vectors(seen: dict) -> int:
+    """The input contract on the init sample's observed metrics; returns
+    the row count."""
+    if seen["n"] == 0:
+        raise ValueError("empty dataset")
+    if seen["nulls"]:
+        raise ValueError(f"{seen['nulls']} of {seen['n']} vectors are NULL")
+    if seen["lo"] != seen["hi"]:
+        raise ValueError(
+            f"vectors are not fixed-arity: sizes {seen['lo']}..{seen['hi']}"
+        )
+    return seen["n"]
+
+
 def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
     """Iterate-until-converged driver loop (reference C2-C5).
 
@@ -444,8 +474,15 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
     any other input is cached for the fit and released afterwards. The
     caller's cache is never released.
 
-    Jobs: the init sample, which also fills the cache and counts the rows
-    (no separate count job), then the loop. A one-task fit runs 2 jobs,
+    Input contract (the reference's, SURVEY §1.3): fixed-arity, non-NULL
+    vectors. The init sample's job checks it: ``ValueError`` names the
+    count of NULL vectors, or the range of vector sizes, before any loop
+    job runs. A NULL element is refused by the loop's own kernel
+    (:func:`arrow_combiner`), on the executor.
+
+    Jobs: the init sample, which also fills the cache, counts the rows and
+    checks the contract (no separate count job), then the loop. A
+    one-task fit runs 2 jobs,
     plus one loop job per C4 re-init; a fit over several tasks runs one
     loop job per round. ``fit`` sets no session conf, so concurrent fits
     on one SparkSession do not interfere, and the session's other queries
@@ -475,22 +512,30 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
             owned.append(base)
         # The init sample is the fit's first job: its TakeOrderedAndProject
         # scans every partition, so it also fills the cache and, through
-        # the observation, counts the rows. The rows and the draw are those
+        # the observation, counts the rows and NULL vectors and takes the
+        # size range (a NULL element would cost an `exists` lambda per
+        # row; the kernel refuses it). The rows and the draw are those
         # of sample_initial_centroids(base, ...): observe is a narrow node,
         # so F.rand(seed) sees the same partitions in the same order. Its
         # k rows also give `dim` for the sizing below.
         seen = Observation()
+        vec = F.col("features")
+        observed = base.observe(
+            seen,
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(vec.isNull()).alias("nulls"),
+            F.min(F.size(vec)).alias("lo"),
+            F.max(F.size(vec)).alias("hi"),
+        )
         try:
             centroids = sample_initial_centroids(
-                base.observe(seen, F.count(F.lit(1)).alias("n")),
-                config.k, config.seed, "features",
+                observed, config.k, config.seed, "features"
             )
         except ValueError:
-            # raised only after the sample's job ran, so the count is in
-            if seen.get["n"] == 0:
-                raise ValueError("empty dataset") from None
+            # raised only after the sample's job ran, so the observation is in
+            _check_vectors(seen.get)
             raise
-        n = seen.get["n"]
+        n = _check_vectors(seen.get)
         dim = len(centroids[0])
 
         # Re-tile the cached points to one task per 128 MiB (see

@@ -513,12 +513,32 @@ _TOPK_RECALL_ORACLE = f"""
 """
 
 
+def _check_rankable(spark: SparkSession, sf_dir: str, min_rows: int = 0) -> None:
+    """The constant recall oracle assumes the query ranks ``TOP_K``
+    neighbours: a zero query vector ties every cosine at NULL, and a table
+    of fewer than ``min_rows`` rows has too few neighbours."""
+    if not any(_query_vector(spark, sf_dir)):
+        raise ValueError(
+            f"embeddings query vector (vec_id={QUERY_VEC_ID}) has zero norm "
+            f"in {sf_dir}: every cosine is NULL, so no top-{TOP_K} ranks it"
+        )
+    if min_rows:
+        n = load_table(spark, sf_dir, "embeddings").count()
+        if n < min_rows:
+            raise ValueError(
+                f"embeddings has {n} rows in {sf_dir}: the recall needs "
+                f"{min_rows}, the query and its top-{TOP_K}"
+            )
+
+
 @query("ann_ivf_recall_at_10", _TOPK_RECALL_ORACLE)
 def ann_ivf_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the IVF probe vs the exact cosine top-10 (same query
     vector, same tie-break). Binds both result sizes exactly and the
     overlap >= IVF_RECALL_MIN_AT_10 claim; the tight observed overlap is
-    pinned by tests/test_dedup_similarity.py."""
+    pinned by tests/test_dedup_similarity.py. Raises ``ValueError`` on a
+    zero query vector; below ``IVF_CELLS`` rows the IVF build raises."""
+    _check_rankable(spark, sf_dir)
     return _topk_recall(
         ann_bruteforce_topk(spark, sf_dir),
         ann_ivf_topk(spark, sf_dir),
@@ -529,7 +549,10 @@ def ann_ivf_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("ann_lsh_recall_at_10", _TOPK_RECALL_ORACLE)
 def ann_lsh_recall_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the multi-table hyperplane LSH probe vs the exact
-    cosine top-10 (measured 10/10 at sf0.001/sf0.01; bound leaves margin)."""
+    cosine top-10 (measured 10/10 at sf0.001/sf0.01; bound leaves margin).
+    Raises ``ValueError`` on a zero query vector or fewer than
+    ``TOP_K + 1`` rows."""
+    _check_rankable(spark, sf_dir, TOP_K + 1)
     return _topk_recall(
         ann_bruteforce_topk(spark, sf_dir),
         ann_lsh_topk(spark, sf_dir),

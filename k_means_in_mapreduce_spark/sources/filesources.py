@@ -315,16 +315,11 @@ def text_points_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (KMeans.java:261-274 semantics), then aggregated. Float->string->
     double roundtrip is exact for float32 values printed at full
     precision."""
-    from .text_points import format_points, parse_points_df
+    from .text_points import parse_points, write_points
 
     path = _scratch(sf_dir, "points_text")
-    emb = load_table(spark, sf_dir, "embeddings")
-    format_points(emb, "embedding").select("point_str").write.mode(
-        "overwrite"
-    ).text(path)
-    parsed = parse_points_df(
-        spark.read.text(path), "value"
-    )
+    write_points(load_table(spark, sf_dir, "embeddings"), path, "embedding")
+    parsed = parse_points(spark, path)
     return parsed.select(F.size("features").alias("dim"), "features").groupBy(
         "dim"
     ).agg(

@@ -18,28 +18,23 @@ def _parse_expr(col: str) -> F.Column:
     """Expression parsing one ``<a, b, c>`` line into array<double>.
 
     Element-wise ``try_cast``: a non-numeric token becomes a NULL element
-    instead of throwing mid-job from the ANSI cast — the CLI's validation
-    gate then rejects such rows with a clean error and exit code (the
-    reference dies on NumberFormatException, KMeans.java:269; we fail
-    just as loudly but controlled). Valid data parses identically."""
+    instead of throwing mid-job from the ANSI cast — the CLI turns such a
+    line into a NULL vector, which the fit refuses with a clean error and
+    exit code (the reference dies on NumberFormatException,
+    KMeans.java:269; we fail just as loudly but controlled). Valid data
+    parses identically."""
     toks = F.split(F.regexp_replace(F.trim(F.col(col)), "[<>]", ""), ",\\s*")
     return F.transform(toks, lambda s: s.try_cast("double"))
 
 
 def parse_points(spark: SparkSession, path: str) -> DataFrame:
-    """Read a reference-format text file into (point_id, features).
-
-    point_id is a stable per-run id (monotonically increasing, not
-    necessarily contiguous — same contract as Hadoop's byte offsets which
-    the reference discards anyway).
-    """
+    """Read a reference-format text file into one ``features`` column,
+    skipping blank lines. No point id: the reference discards Hadoop's
+    byte-offset keys too."""
     return (
         spark.read.text(path)
         .filter(F.length(F.trim("value")) > 0)
-        .select(
-            F.monotonically_increasing_id().alias("point_id"),
-            _parse_expr("value").alias("features"),
-        )
+        .select(_parse_expr("value").alias("features"))
     )
 
 

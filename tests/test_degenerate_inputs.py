@@ -2,12 +2,29 @@
 each either matches its oracle or raises a ``ValueError`` that names the
 table it needs. A zero embedding scores a NULL cosine."""
 
+import re
+
 import pytest
 
 from k_means_in_mapreduce_spark import registry
-from k_means_in_mapreduce_spark.operators.similarity import QUERY_VEC_ID
+from k_means_in_mapreduce_spark.operators.similarity import QUERY_VEC_ID, TOP_K
 
 from .conftest import assert_oracle_match, degenerate_fixture, make_duck_con
+
+
+def _zero_embedding(sf_dir: str, vec_id: int) -> None:
+    """Overwrite one embedding of the fixture in ``sf_dir`` with zeros."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = f"{sf_dir}/embeddings.parquet"
+    emb = pq.read_table(path)
+    vecs = emb.column("embedding").to_pylist()
+    vecs[emb.column("vec_id").to_pylist().index(vec_id)] = [0.0] * len(vecs[0])
+    i = emb.schema.get_field_index("embedding")
+    pq.write_table(
+        emb.set_column(i, "embedding", pa.array(vecs, emb.schema.field(i).type)), path
+    )
 
 
 @pytest.mark.parametrize(
@@ -17,6 +34,31 @@ def test_query_vector_missing_names_the_table(spark, tmp_path, name):
     sf_dir = degenerate_fixture(tmp_path, 0)
     with pytest.raises(ValueError, match=f"embeddings .*vec_id={QUERY_VEC_ID}"):
         registry.QUERIES[name](spark, sf_dir).collect()
+
+
+@pytest.mark.parametrize("name", ["ann_ivf_recall_at_10", "ann_lsh_recall_at_10"])
+def test_recall_refuses_a_zero_query_vector(spark, tmp_path, name):
+    """A zero query vector ties every cosine at NULL, so the constant
+    recall oracle cannot hold: both recall companions raise, naming the
+    table and the sf_dir, before any index is built."""
+    sf_dir = degenerate_fixture(tmp_path, 10**9)  # every row
+    _zero_embedding(sf_dir, QUERY_VEC_ID)
+    with pytest.raises(
+        ValueError,
+        match=f"^embeddings .*vec_id={QUERY_VEC_ID}.* zero norm in {re.escape(sf_dir)}",
+    ):
+        registry.QUERIES[name](spark, sf_dir).collect()
+
+
+def test_lsh_recall_needs_top_k_plus_one_rows(spark, tmp_path):
+    """Three rows give the query two neighbours, not ``TOP_K``: the LSH
+    recall companion raises, naming the table and the rows it needs."""
+    sf_dir = degenerate_fixture(tmp_path, 3)
+    with pytest.raises(
+        ValueError,
+        match=f"^embeddings has 3 rows in {re.escape(sf_dir)}: .*needs {TOP_K + 1}",
+    ):
+        registry.QUERIES["ann_lsh_recall_at_10"](spark, sf_dir).collect()
 
 
 @pytest.mark.parametrize("n_rows", [0, 3])
@@ -58,20 +100,10 @@ def test_zero_norm_embedding_scores_null(spark, tmp_path, zero_id):
     k-NN sample vector, or the fixed query vector) the oracle-bearing
     queries match their oracles, and the approximate ones score exactly
     the pairs that touch the zero vector NULL."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     import bench
 
     sf_dir = degenerate_fixture(tmp_path, 10**9)  # every row
-    path = f"{sf_dir}/embeddings.parquet"
-    emb = pq.read_table(path)
-    vecs = emb.column("embedding").to_pylist()
-    vecs[emb.column("vec_id").to_pylist().index(zero_id)] = [0.0] * len(vecs[0])
-    i = emb.schema.get_field_index("embedding")
-    pq.write_table(
-        emb.set_column(i, "embedding", pa.array(vecs, emb.schema.field(i).type)), path
-    )
+    _zero_embedding(sf_dir, zero_id)
     oracled = [
         "ann_bruteforce_topk",
         "ann_knn_join_exact",
@@ -81,8 +113,8 @@ def test_zero_norm_embedding_scores_null(spark, tmp_path, zero_id):
         "dedup_embedding_cosine_ivf_precision",
     ]
     if zero_id != QUERY_VEC_ID:
-        # a zero query ties every cosine at NULL, so its top-10 recall
-        # compares two vec_id orders of one tie
+        # a zero query ties every cosine at NULL: the recall companions
+        # refuse it (test_recall_refuses_a_zero_query_vector)
         oracled += ["ann_ivf_recall_at_10", "ann_lsh_recall_at_10"]
     con = make_duck_con(sf_dir)
     try:

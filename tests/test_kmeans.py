@@ -552,6 +552,87 @@ def test_fit_counts_rows_in_the_init_sample(spark, monkeypatch, partitions,
             d.unpersist()
 
 
+def _jobs_of(spark, group, fn):
+    """Run ``fn()`` under the Spark job group ``group``; return the ids of
+    the jobs it ran, also when it raised (the exception propagates)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        # job start events reach the status store asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_RAGGED = [[1.0], [2.0, 3.0, 4.0], [5.0, 6.0], [7.0, 8.0]]  # 8 values = 4×2
+
+
+@pytest.mark.parametrize(
+    "rows,k,match",
+    [
+        pytest.param(_RAGGED, 2, r"^vectors are not fixed-arity: sizes 1\.\.3$",
+                     id="ragged"),
+        pytest.param([[1.0, 2.0], [3.0, 4.0], None, [5.0, 6.0]], 2,
+                     "^1 of 4 vectors are NULL$", id="null-vector"),
+        # k == n: the sample surely draws the NULL vector
+        pytest.param([[1.0, 2.0], [3.0, 4.0], None, [5.0, 6.0]], 4,
+                     "^1 of 4 vectors are NULL$", id="null-vector-sampled"),
+    ],
+)
+def test_fit_refuses_ragged_and_null_vectors_in_its_first_job(
+    spark, rows, k, match
+):
+    """The init sample's job checks the data-model contract (fixed-arity,
+    non-NULL vectors): ``fit`` raises ``ValueError`` after that one job,
+    before any loop job. Ragged rows whose values total n·d would
+    otherwise be re-sliced into d-vectors by the kernel's reshape."""
+    df = spark.createDataFrame([(r,) for r in rows], "embedding array<double>")
+    cfg = K.KMeansConfig(k=k, max_iter=3, tol=0.0, seed=1)
+
+    def run():
+        with pytest.raises(ValueError, match=match):
+            K.fit(df, cfg)
+
+    jobs = _jobs_of(spark, f"fit-refuses-{k}-{match}", run)
+    assert len(jobs) == 1, jobs
+
+
+def test_arrow_combiner_refuses_batches_it_cannot_decode(spark):
+    """The kernel refuses a batch holding a NULL vector, a NULL element, or
+    a vector whose size is not the centroids' d, on the driver and inside
+    a Spark job, instead of reshaping the flat values or summing NaN."""
+    import pyarrow as pa
+    from pyspark.errors import PythonException
+
+    cents = [[0.0, 0.0], [10.0, 10.0]]
+    cases = [
+        (_RAGGED, r"sizes 1\.\.3, not d=2"),
+        ([[1.0, 2.0, 3.0], [4.0, 5.0, 6.0]], r"sizes 3\.\.3, not d=2"),
+        ([[1.0, 2.0], [3.0, None]], "0 NULL vector.* 1 NULL element"),
+        ([[1.0, 2.0], None], "1 NULL vector.* 0 NULL element"),
+    ]
+    for rows, match in cases:
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(rows, pa.list_(pa.float64()))], ["features"]
+        )
+        for rounds in (1, 3):
+            with pytest.raises(ValueError, match=match):
+                list(K.arrow_combiner(cents, rounds)(iter([batch])))
+
+    ragged = spark.createDataFrame([(r,) for r in _RAGGED],
+                                   "features array<double>").coalesce(1)
+    with pytest.raises(PythonException, match=r"sizes 1\.\.3, not d=2"):
+        K.cluster_features_arrow(ragged, cents)
+    # a NULL element passes fit's first job and stops at the loop's kernel
+    holed = spark.createDataFrame([([1.0, 2.0],), ([3.0, None],)],
+                                  "embedding array<double>")
+    with pytest.raises(PythonException, match="1 NULL element"):
+        K.fit(holed, K.KMeansConfig(k=1, max_iter=2, seed=1))
+
+
 def test_config_rejects_k_below_one_and_negative_max_iter():
     """k < 1 and max_iter < 0 fail at construction with a ValueError that
     names the field (max_iter=0 is legal: the fit returns its init)."""
@@ -697,6 +778,56 @@ def test_cli_rejects_non_numeric_tokens_and_negative_epsilon(spark, tmp_path):
 
     rc2 = main([str(inp), "2", "3", out, "2", "-0.5", "2"])
     assert rc2 == 2
+
+
+@pytest.mark.parametrize(
+    "text,dim",
+    [
+        pytest.param("<1.0, 2.0>\n<3.0, abc>\n<5.0, 6.0>\n", 2, id="non-numeric"),
+        pytest.param("<1.0, 2.0>\n<3.0>\n<5.0, 6.0>\n", 2, id="ragged"),
+        pytest.param("<1.0, 2.0>\n<3.0, 4.0>\n<5.0, 6.0>\n", 3, id="wrong-dim"),
+    ],
+)
+def test_cli_refuses_malformed_input_after_one_job(spark, tmp_path, capsys,
+                                                    text, dim):
+    """A line that is not exactly ``dim`` numbers parses as a NULL vector,
+    which the fit's init-sample job counts: ``main`` returns 1 after that
+    one job, with the count on stderr, and writes no output."""
+    from k_means_in_mapreduce_spark.cli import main
+
+    inp = tmp_path / "pts"
+    inp.mkdir()
+    (inp / "points.txt").write_text(text)
+    out = tmp_path / "out"
+    rc = []
+    jobs = _jobs_of(
+        spark, f"cli-malformed-{tmp_path.name}",
+        lambda: rc.append(main([str(inp), "2", "3", str(out), str(dim), "0", "8"])),
+    )
+    assert rc == [1] and len(jobs) == 1, (rc, jobs)
+    bad = 3 if dim == 3 else 1
+    assert f"{bad} of 3 vectors are NULL" in capsys.readouterr().err
+    assert not out.exists()
+
+
+def test_cli_run_is_three_jobs(spark, tmp_path):
+    """A valid CLI run at perfbench's ``kmeans_lloyd`` shape (20k×64 blobs,
+    k=8, 5 iterations, epsilon 0) is 3 Spark jobs: the init sample, which
+    also fills the fit's cache and checks the input, the loop job, and the
+    centroid write."""
+    from k_means_in_mapreduce_spark.cli import main
+    from perfbench import gen
+
+    x = gen.blobs(7)
+    text = str(tmp_path / "blobs.txt")
+    gen.write_blobs(x, str(tmp_path / "blobs.parquet"), text)
+    out = str(tmp_path / "out")
+    rc = []
+    jobs = _jobs_of(
+        spark, "cli-valid-run",
+        lambda: rc.append(main([text, "8", "5", out, "64", "0", "8"])),
+    )
+    assert rc == [0] and len(jobs) == 3, (rc, jobs)
 
 
 def test_iteration_partitions_regimes():
