@@ -49,11 +49,6 @@ def sq_dist(a: ColumnOrName, b: ColumnOrName) -> Column:
     )
 
 
-def l2_dist(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """Euclidean (L2) distance (reference: Point.java:47-55)."""
-    return F.sqrt(sq_dist(a, b))
-
-
 def dot(a: ColumnOrName, b: ColumnOrName) -> Column:
     return F.aggregate(
         F.zip_with(_col(a), _col(b), lambda x, y: x * y),

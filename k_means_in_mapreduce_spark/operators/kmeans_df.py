@@ -19,12 +19,12 @@ This reproduces the *intended* semantics of the reference MapReduce job
 :func:`arrow_combiner` is the reference's in-mapper combiner
 (``KMeans.java:33-67``) over Arrow batches. It is every per-batch Lloyd
 step in the package: :func:`fit` runs it as its loop job, and
-:func:`cluster_features_arrow` runs it for one round, which both streaming
-paths (``stream_kmeans_scoring`` and ``StreamingKMeansState.update``) call
-once per micro-batch. The same step as a DataFrame of Catalyst
-expressions, :func:`cluster_features` over :func:`assign_clusters`, serves
-``__spark_entry__.entry``, the text-egress query and the assignment
-queries, where the DuckDB oracle checks it.
+:func:`cluster_features_arrow` runs it for one round, which
+``stream_kmeans_scoring`` calls once per micro-batch. The same step as a
+DataFrame of Catalyst expressions, :func:`cluster_features` over
+:func:`assign_clusters`, serves ``__spark_entry__.entry``, the
+text-egress query and the assignment queries, where the DuckDB oracle
+checks it.
 
 Scale design (100 TB, 1000 executors):
 - the input is cached once and re-scanned per round (the canonical
@@ -106,10 +106,6 @@ class KMeansModel:
     centroid_history: list[list[list[float]]] = field(default_factory=list)
     reinit_count: int = 0  # empty-cluster full re-inits (reference C4)
     wall_sec: float = 0.0
-
-    def assign(self, df: DataFrame, features_col: str = "embedding",
-               output_col: str = "cluster_id") -> DataFrame:
-        return assign_clusters(df, self.centroids, features_col, output_col)
 
     def report(self) -> dict:
         """Structured run report — the engine's C6 (the reference appends
@@ -371,8 +367,8 @@ def cluster_features_arrow(
     per-cluster (count, sum) partials — O(batches·k·d) shuffle-free
     output, merged in the driver (k·d doubles). Batches stream through
     the task; none is held. One call is one Spark job over
-    ``points``' own partitioning: the streaming paths' micro-batches, and
-    the fit's loop when it runs over several tasks.
+    ``points``' own partitioning: ``stream_kmeans_scoring``'s
+    micro-batches, and the fit's loop when it runs over several tasks.
 
     Returns [(cluster_id, num_points, mean_vector)] for non-empty clusters.
     ``np.argmin`` takes the first minimum — the reference's lowest-index
@@ -599,16 +595,3 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
         wall_sec=time.monotonic() - t_start,
     )
 
-
-def wcss(df: DataFrame, centroids: list[list[float]], features_col: str = "embedding") -> float:
-    """Within-cluster sum of squared distances (the reference's 'error';
-    used by the Lloyd-monotonicity invariant test, SURVEY §5.2.3a)."""
-    from ..functions.vector import distance_vector
-
-    return (
-        df.select(
-            F.array_min(distance_vector(features_col, centroids)).alias("d2")
-        )
-        .agg(F.sum("d2").alias("wcss"))
-        .first()["wcss"]
-    )

@@ -8,7 +8,7 @@ cross the JVM<->Python boundary once per batch, never per row.
 
 The decode step is REAL for codec-free public containers — binary PPM
 images, PCM WAV audio, and YUV4MPEG2 raw video are parsed by
-``decode_media`` with nothing beyond the standard library (PIL is an
+``_CODECS["decode"]`` with nothing beyond the standard library (PIL is an
 optional fallback for compressed images), and ``multimodal_decode_real``
 oracle-checks the parser end-to-end against arithmetically predicted
 header fields. The deterministic ``fake_decode`` twin remains for the
@@ -71,7 +71,7 @@ def _build_fake_decode():
     return fake_decode
 
 
-#: deterministic stand-in for decode_media over the text-byte fixture
+#: deterministic stand-in for the real decoder over the text-byte fixture
 fake_decode = _build_fake_decode()
 
 
@@ -339,7 +339,7 @@ def multimodal_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   image: binary PPM (Netpbm P6; P5 greyscale also accepted)
 #   audio: PCM WAV (RIFF; parsed with the stdlib ``wave`` module)
 #   video: YUV4MPEG2 (.y4m, 4:2:0) — mplayer/ffmpeg's raw interchange form
-# ``decode_media`` sniffs magic bytes and parses for real; PIL remains an
+# ``decode`` sniffs magic bytes and parses for real; PIL remains an
 # optional fallback for compressed images (PNG/JPEG) when installed.
 #
 # Everything is defined inside ``_build_codecs`` and captured by closures
@@ -479,6 +479,9 @@ def _build_codecs() -> dict:
         }
 
     def decode(blob: bytes, media_type: str | None = None) -> dict:
+        """Typed metadata + mean sample level of a PPM / WAV / Y4M
+        container (PIL-gated PNG/JPEG fallback); NotImplementedError for
+        formats that need a codec library."""
         if blob[:2] in (b"P6", b"P5"):
             return decode_ppm(blob)
         if blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
@@ -553,14 +556,6 @@ def _build_codecs() -> dict:
 _CODECS = _build_codecs()
 
 
-def decode_media(blob: bytes, media_type: str | None = None) -> dict:
-    """Decode a real media container (PPM image / PCM WAV audio / Y4M
-    video; PIL-gated PNG/JPEG fallback) into typed metadata + mean sample
-    level. Raises NotImplementedError only for formats that genuinely
-    need a codec library this container lacks."""
-    return _CODECS["decode"](blob, media_type)
-
-
 # Deterministic real-blob parameter schedule: every field is arithmetic
 # in doc_id, so the DuckDB oracle can state the EXPECTED decoder output
 # and a header misparse fails the gate. ONE Python definition
@@ -613,9 +608,8 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched mapInPandas — the oracle states the expected header
     fields and mean sample level arithmetically, so a decoder bug (wrong
     endianness, off-by-one header scan, bad plane math) fails the gate.
-    This replaces the round-1..4 stub: ``decode_media`` now actually
-    decodes; only genuinely codec-bound formats (PNG/JPEG without PIL)
-    raise."""
+    ``_CODECS["decode"]`` decodes for real; only genuinely codec-bound
+    formats (PNG/JPEG without PIL) raise."""
     # Encode AND decode inside ONE Arrow stage (r21): the container bytes
     # are produced and parsed on the same executor worker, so the blobs
     # never cross the JVM<->Python boundary at all — only doc_id goes in

@@ -104,87 +104,3 @@ def stream_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary-stateful streaming op: final per-user running totals must
     equal the batch aggregation (the batch/stream equivalence contract)."""
     return running_totals_stateful(spark, sf_dir)
-
-
-# ---------------------------------------------------------------------------
-# State EVICTION: event-time-timeout sessions (append-mode closed sessions)
-# ---------------------------------------------------------------------------
-_SESSION_STATE_SCHEMA = (
-    "n bigint, total double, start_ts timestamp, last_ts timestamp"
-)
-_SESSION_OUT_SCHEMA = (
-    "user_id bigint, session_start timestamp, session_end timestamp, "
-    "n_events bigint, total_value double"
-)
-
-
-def idle_timeout_sessions(ev: DataFrame, gap_sec: int = 1800) -> DataFrame:
-    """Per-user sessions with custom payload, CLOSED BY STATE TIMEOUT —
-    the eviction contract ``running_totals_agg`` deliberately skips
-    (NoTimeout is fine for O(users) keys; session-like keys are unbounded
-    and MUST evict or the state store grows forever).
-
-    Each user's open session lives in the state store; every batch folds
-    events and re-arms an event-time timeout at ``last_ts + gap``. When
-    the WATERMARK passes that timestamp, Spark hands the group back with
-    ``state.hasTimedOut`` (in a no-data micro-batch if necessary) — the
-    closed session is emitted exactly once (append mode) and the state is
-    removed. This is the applyInPandasWithState form of what
-    ``session_window`` computes declaratively, needed the moment a
-    session carries custom payload or close-time logic.
-
-    Caller must set ``withWatermark`` on ``ev`` — the timeout clock IS
-    the watermark."""
-    # captured by the closure: applyInPandasWithState hands the UDF naive
-    # timestamps LOCALIZED to the session timezone, while
-    # setTimeoutTimestamp expects UTC epoch millis — localize before
-    # converting or the timeout is offset by the tz delta on any non-UTC
-    # session (sessions would close hours early/late).
-    session_tz = ev.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
-
-    # Self-contained closure (executor workers lack this package).
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import datetime as dt
-
-        import pandas as pd
-
-        if state.hasTimedOut:
-            n, total, start_ts, last_ts = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "session_start": [start_ts],
-                    "session_end": [last_ts],
-                    "n_events": [n],
-                    "total_value": [total],
-                }
-            )
-            return
-        n, total, start_ts, last_ts = (
-            state.get if state.exists else (0, 0.0, None, None)
-        )
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            b_min, b_max = pdf["ts"].min(), pdf["ts"].max()
-            start_ts = b_min if start_ts is None else min(start_ts, b_min)
-            last_ts = b_max if last_ts is None else max(last_ts, b_max)
-        state.update((n, total, start_ts, last_ts))
-        # re-arm: close when the watermark passes last event + gap
-        close_at = (
-            pd.Timestamp(last_ts).tz_localize(session_tz)
-            + pd.Timedelta(seconds=gap_sec)
-        )
-        state.setTimeoutTimestamp(int(close_at.timestamp() * 1000))
-        yield from ()  # append mode: open sessions emit nothing
-
-    return ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_SESSION_OUT_SCHEMA,
-        stateStructType=_SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )

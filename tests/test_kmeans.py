@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from k_means_in_mapreduce_spark.functions.vector import distance_vector
 from k_means_in_mapreduce_spark.operators import kmeans_df as K
 from k_means_in_mapreduce_spark.operators.kmeans_mllib import fit_mllib, transform_mllib
 from k_means_in_mapreduce_spark.sources import load_table
@@ -27,6 +28,13 @@ def test_tiebreak_lowest_index(spark):
     cents = [[1.0, 1.0], [-1.0, 1.0], [1.0, -1.0]]
     got = K.assign_clusters(df, cents, "features").first()["cluster_id"]
     assert got == 0
+
+
+def _wcss(df, centroids, features_col="embedding"):
+    """Within-cluster sum of squared distances (the reference's 'error'),
+    the oracle of the Lloyd-monotonicity invariant (SURVEY §5.2.3a)."""
+    d2 = F.array_min(distance_vector(features_col, centroids))
+    return df.select(d2.alias("d2")).agg(F.sum("d2")).first()[0]
 
 
 def _numpy_lloyd(X, init, n_iter):
@@ -66,10 +74,10 @@ def test_wcss_nonincreasing(spark, emb):
     init = K.sample_initial_centroids(
         emb.select(F.col("embedding").alias("features")), cfg.k, cfg.seed, "features"
     )
-    values = [K.wcss(emb, init)]
+    values = [_wcss(emb, init)]
     for n in (1, 2, 3):
         m = K.fit(emb, K.KMeansConfig(k=5, max_iter=n, tol=0.0, seed=7))
-        values.append(K.wcss(emb, m.centroids))
+        values.append(_wcss(emb, m.centroids))
     assert all(b <= a + 1e-9 for a, b in zip(values, values[1:])), values
 
 
@@ -292,7 +300,7 @@ def test_mllib_path_quality_parity(spark, emb):
     )
     assert n_clusters == 10
     m = K.fit(emb, K.KMeansConfig(k=10, max_iter=30, tol=1e-4, seed=2))
-    wcss_df = K.wcss(emb, m.centroids)
+    wcss_df = _wcss(emb, m.centroids)
     wcss_ml = res.wcss
     assert wcss_ml <= wcss_df * 1.25 and wcss_df <= wcss_ml * 1.25, (wcss_ml, wcss_df)
 
@@ -311,7 +319,7 @@ def test_text_roundtrip(spark, emb):
 
 def test_arrow_step_matches_dataframe_step(spark, emb):
     """The two Lloyd-step implementations agree on fixed centroids: the
-    Arrow combiner that the fit and both streaming paths run (driver
+    Arrow combiner that the fit and ``stream_kmeans_scoring`` run (driver
     lists) and the Catalyst DataFrame form that the entry point and the
     oracle-checked text-egress query use. The far centroid attracts no
     point, so both must leave its id out."""

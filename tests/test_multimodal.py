@@ -4,17 +4,20 @@ import pytest
 
 from k_means_in_mapreduce_spark import registry
 from k_means_in_mapreduce_spark.operators.multimodal import (
-    decode_media,
+    _CODECS,
     fake_decode,
     media_blob_table,
 )
 
 from .conftest import SF001
 
+# the decoder the registry's UDFs ship to executors
+decode = _CODECS["decode"]
+
 
 def test_decode_stub_raises():
     with pytest.raises(NotImplementedError):
-        decode_media(b"\x89PNG", "image")
+        decode(b"\x89PNG", "image")
 
 
 def test_fake_decode_deterministic():
@@ -50,19 +53,17 @@ def test_frame_sample_fanout(spark):
 def test_real_codec_round_trips():
     """encode->decode inverts exactly for all three codec-free containers;
     unrecognized magic raises (PIL-gated fallback absent in container)."""
-    from k_means_in_mapreduce_spark.operators import multimodal as M
-
-    c = M._CODECS
-    assert M.decode_media(c["encode_ppm"](12, 9, 77)) == {
+    c = _CODECS
+    assert decode(c["encode_ppm"](12, 9, 77)) == {
         "width": 12, "height": 9, "n_frames": 1,
         "sample_rate": 0, "n_channels": 3, "mean_level": 77.0,
     }
-    assert M.decode_media(c["encode_wav"](11000, 2, 130, -512)) == {
+    assert decode(c["encode_wav"](11000, 2, 130, -512)) == {
         "width": 0, "height": 0, "n_frames": 130,
         "sample_rate": 11000, "n_channels": 2, "mean_level": -512.0,
     }
     # frame f's fill is (200 + f) % 256 -> mean over 3 frames = 201.0
-    assert M.decode_media(c["encode_y4m"](20, 18, 3, 200)) == {
+    assert decode(c["encode_y4m"](20, 18, 3, 200)) == {
         "width": 20, "height": 18, "n_frames": 3,
         "sample_rate": 0, "n_channels": 3, "mean_level": 201.0,
     }
@@ -72,22 +73,16 @@ def test_real_codec_round_trips():
 
 
 def test_ppm_decoder_handles_comments_and_p5():
-    from k_means_in_mapreduce_spark.operators import multimodal as M
-
     blob = b"P6\n# a netpbm comment\n4 2\n255\n" + bytes([10]) * 24
-    assert M.decode_media(blob)["width"] == 4
+    assert decode(blob)["width"] == 4
     grey = b"P5\n3 3\n255\n" + bytes([9]) * 9
-    d = M.decode_media(grey)
+    d = decode(grey)
     assert d["n_channels"] == 1 and d["mean_level"] == 9.0
 
 
 def test_unknown_container_raises_not_implemented():
-    import pytest
-
-    from k_means_in_mapreduce_spark.operators import multimodal as M
-
     with pytest.raises(NotImplementedError):
-        M.decode_media(b"\x89PNG\r\n\x1a\n----")
+        decode(b"\x89PNG\r\n\x1a\n----")
 
 
 def test_real_codec_round_trip_properties():
@@ -96,16 +91,14 @@ def test_real_codec_round_trip_properties():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from k_means_in_mapreduce_spark.operators import multimodal as M
-
-    c = M._CODECS
+    c = _CODECS
 
     @settings(max_examples=60, deadline=None)
     @given(
         w=st.integers(1, 64), h=st.integers(1, 48), fill=st.integers(0, 255)
     )
     def ppm_prop(w, h, fill):
-        d = M.decode_media(c["encode_ppm"](w, h, fill))
+        d = decode(c["encode_ppm"](w, h, fill))
         assert (d["width"], d["height"], d["mean_level"]) == (w, h, float(fill))
 
     @settings(max_examples=60, deadline=None)
@@ -116,7 +109,7 @@ def test_real_codec_round_trip_properties():
         val=st.integers(-32768, 32767),
     )
     def wav_prop(sr, ch, n, val):
-        d = M.decode_media(c["encode_wav"](sr, ch, n, val))
+        d = decode(c["encode_wav"](sr, ch, n, val))
         assert (d["sample_rate"], d["n_channels"], d["n_frames"]) == (sr, ch, n)
         assert d["mean_level"] == float(val)
 
@@ -128,7 +121,7 @@ def test_real_codec_round_trip_properties():
         fill=st.integers(0, 255),
     )
     def y4m_prop(w, h, nf, fill):
-        d = M.decode_media(c["encode_y4m"](w, h, nf, fill))
+        d = decode(c["encode_y4m"](w, h, nf, fill))
         assert (d["width"], d["height"], d["n_frames"]) == (w, h, nf)
         want = sum((fill + f) % 256 for f in range(nf)) / nf
         assert abs(d["mean_level"] - want) < 1e-12

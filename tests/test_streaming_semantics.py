@@ -394,334 +394,6 @@ def test_stream_stream_join_checkpoint_restart(spark, tmp_path):
     assert pairs_b == {(101, 201), (102, 202)}, pairs_b
 
 
-def test_rate_transport_runs_shared_transform_stack(spark, tmp_path):
-    """The transport-agnostic contract: the SAME windowed aggregation the
-    file-source queries use runs unchanged on the rate-micro-batch
-    transport, and the deterministic synthesis yields exact per-type
-    counts for batch 0 (rows 0..99 -> 25 events of each of 4 types)."""
-    import time
-
-    from k_means_in_mapreduce_spark.streaming.kafka_source import (
-        events_rate_stream,
-    )
-
-    ev = events_rate_stream(spark, rows_per_batch=100).withWatermark("ts", "1 hour")
-    agg = ev.groupBy(F.window("ts", "1 hour"), "event_type").agg(
-        F.count(F.lit(1)).alias("n_events")
-    )
-    batches: list = []
-
-    def sink(batch_df, epoch_id):
-        if not batch_df.isEmpty():
-            batches.append(
-                {
-                    (r["window"]["start"], r["event_type"]): r["n_events"]
-                    for r in batch_df.collect()
-                }
-            )
-
-    q = (
-        agg.writeStream.outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "rate_ckpt"))
-        .foreachBatch(sink)
-        .start()
-    )
-    try:
-        deadline = time.monotonic() + 60
-        while not batches and time.monotonic() < deadline:
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    assert batches, "no micro-batch arrived within 60s"
-    first = batches[0]
-    # batch 0 = rows 0..99: 25 of each type; rows are 1 minute apart so
-    # they span hours 0 and 1 — sum per type across windows must be 25
-    per_type: dict = {}
-    for (_, etype), n in first.items():
-        per_type[etype] = per_type.get(etype, 0) + n
-    assert per_type == {
-        "click": 25, "view": 25, "purchase": 25, "error": 25,
-    }, per_type
-
-
-def test_kafka_transport_fails_cleanly_without_connector(spark):
-    """Without the spark-sql-kafka artifact the Kafka branch must fail at
-    .load() with the connector-naming AnalysisException — not some later
-    opaque executor error. (If a connector IS present this test instead
-    verifies the parsed schema — both paths exercise the branch.)"""
-    from k_means_in_mapreduce_spark.streaming.kafka_source import (
-        EVENT_SCHEMA,
-        events_kafka_stream,
-    )
-
-    try:
-        df = events_kafka_stream(spark, "localhost:9092", "events")
-    except Exception as e:  # pragma: no cover - connector-absent path
-        msg = str(e).lower()
-        assert "kafka" in msg, msg
-    else:  # pragma: no cover - connector-present path
-        assert df.schema == EVENT_SCHEMA
-
-
-def test_epoch_committed_sink_is_exactly_once(spark, tmp_path):
-    """Replaying a committed epoch into the transactional sink must be a
-    no-op (exactly-once on top of foreachBatch's at-least-once contract),
-    and readers must see only committed epochs."""
-    from k_means_in_mapreduce_spark.streaming.sinks import (
-        EpochCommittedParquetSink,
-    )
-
-    sink = EpochCommittedParquetSink(str(tmp_path / "tx_table"))
-    b0 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    b1 = spark.createDataFrame([(3, "c")], "id long, v string")
-
-    sink(b0, 0)
-    sink(b1, 1)
-    assert sink.committed_epochs() == [0, 1]
-
-    # crash-replay of epoch 1: same data arrives again -> skipped
-    sink(b1, 1)
-    assert sink.replayed_epochs == [1]
-    got = {r["id"] for r in sink.read_committed(spark).collect()}
-    assert got == {1, 2, 3}  # no duplicates from the replay
-
-    # a torn, uncommitted epoch directory is invisible to readers
-    (tmp_path / "tx_table" / "epoch=2").mkdir()
-    b_torn = spark.createDataFrame([(99, "x")], "id long, v string")
-    b_torn.write.mode("overwrite").parquet(str(tmp_path / "tx_table" / "epoch=2"))
-    # note: directory written but manifest entry never created
-    got2 = {r["id"] for r in sink.read_committed(spark).collect()}
-    assert got2 == {1, 2, 3}
-
-
-def test_epoch_committed_sink_end_to_end_stream(spark, tmp_path):
-    """Drive the sink from a real streaming query: run 1 commits epochs;
-    run 2 restarts from the same checkpoint with the same sink directory
-    and must not duplicate any rows even though the file source re-lists."""
-    from k_means_in_mapreduce_spark.streaming.sinks import (
-        EpochCommittedParquetSink,
-    )
-
-    src = str(tmp_path / "sink_src")
-    ckpt = str(tmp_path / "sink_ckpt")
-    os.makedirs(src, exist_ok=True)
-    sink = EpochCommittedParquetSink(str(tmp_path / "sink_table"))
-
-    def write_file(name: str, rows):
-        df = spark.createDataFrame(rows, "id long, v double")
-        df.coalesce(1).write.mode("overwrite").parquet(f"{src}/_stage")
-        part = [
-            f
-            for f in os.listdir(f"{src}/_stage")
-            if f.endswith(".parquet") and not f.startswith("_")
-        ][0]
-        shutil.copy(f"{src}/_stage/{part}", f"{src}/{name}")
-
-    def run_once():
-        stream = (
-            spark.readStream.schema("id long, v double")
-            .format("parquet")
-            .load(src)
-        )
-        q = (
-            stream.writeStream.option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    write_file("a.parquet", [(i, float(i)) for i in range(10)])
-    run_once()
-    write_file("b.parquet", [(i, float(i)) for i in range(10, 15)])
-    run_once()
-
-    ids = sorted(r["id"] for r in sink.read_committed(spark).collect())
-    assert ids == list(range(15)), ids
-
-
-def test_streaming_kmeans_single_batch_equals_batch_cf(spark):
-    """With decay=1 and zero prior weight, folding ONE batch must equal
-    the batch clustering-feature means for the same fixed centroids —
-    the streaming operator is the batch dataflow applied incrementally."""
-    import numpy as np
-
-    from k_means_in_mapreduce_spark.operators.kmeans_df import (
-        assign_clusters,
-        cluster_features,
-    )
-    from k_means_in_mapreduce_spark.sources import load_table
-    from k_means_in_mapreduce_spark.streaming.kmeans_stream import (
-        streaming_kmeans,
-    )
-    from .conftest import SF001
-
-    emb = load_table(spark, SF001, "embeddings").select(
-        F.col("embedding").alias("features")
-    )
-    init = [list(r["features"]) for r in emb.limit(3).collect()]
-    model = streaming_kmeans(init, decay=1.0)
-    model.update(emb, epoch_id=0)
-
-    batch = {
-        r["cluster_id"]: r
-        for r in cluster_features(
-            assign_clusters(emb, init, "features"), features_col="features"
-        ).collect()
-    }
-    for i in range(3):
-        assert np.allclose(model.centroids[i], list(batch[i]["centroid"]))
-        assert model.weights[i] == batch[i]["num_points"]
-
-
-def test_streaming_kmeans_two_batches_invariants(spark, tmp_path):
-    """Drive the operator from a real file-source stream, one file per
-    trigger: every point is folded exactly once (decayed counts sum to n
-    at decay=1) and each batch moves the centroids."""
-    from k_means_in_mapreduce_spark.sources import load_table
-    from k_means_in_mapreduce_spark.streaming.kmeans_stream import (
-        streaming_kmeans,
-    )
-    from .conftest import SF001
-
-    emb = load_table(spark, SF001, "embeddings").select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("features")
-    )
-    src = str(tmp_path / "km_src")
-    os.makedirs(src, exist_ok=True)
-    emb.filter(F.col("id") % 2 == 0).coalesce(1).write.mode("overwrite").parquet(
-        f"{src}/even"
-    )
-    emb.filter(F.col("id") % 2 == 1).coalesce(1).write.mode("overwrite").parquet(
-        f"{src}/odd"
-    )
-    n_total = emb.count()
-
-    init = [list(r["features"]) for r in emb.limit(4).collect()]
-    model = streaming_kmeans(init, decay=1.0)
-    stream = (
-        spark.readStream.schema("id long, features array<double>")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(f"{src}/*")
-    )
-    q = (
-        stream.select("features")
-        .writeStream.option(
-            "checkpointLocation", str(tmp_path / "km_ckpt")
-        )
-        .foreachBatch(model.sink("features"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    assert model.n_batches == 2, model.history
-    assert sum(model.weights) == n_total
-    assert sum(h["batch_points"] for h in model.history) == n_total
-    assert all(h["movement"] > 0 for h in model.history)
-
-
-def test_idle_timeout_sessions_evict_and_emit_once(spark, tmp_path):
-    """State-eviction contract of the event-time-timeout session op:
-    a session is emitted exactly once AFTER the watermark passes its
-    last event + gap, with the folded payload; users still inside the
-    gap stay open (no emission, state retained)."""
-    from k_means_in_mapreduce_spark.streaming.stateful import (
-        idle_timeout_sessions,
-    )
-
-    src = str(tmp_path / "sess_src")
-    ckpt = str(tmp_path / "sess_ckpt")
-    os.makedirs(src, exist_ok=True)
-
-    def write_file(name: str, rows):
-        df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-        df.coalesce(1).write.mode("overwrite").parquet(f"{src}/_stage")
-        part = [
-            f
-            for f in os.listdir(f"{src}/_stage")
-            if f.endswith(".parquet") and not f.startswith("_")
-        ][0]
-        shutil.copy(f"{src}/_stage/{part}", f"{src}/{name}")
-
-    T = lambda h, m=0: dt.datetime(2024, 1, 1, h, m)
-    # users 0/1: short sessions in the morning; user 2 appears at noon,
-    # pushing the watermark (delay 10min) far past 0/1's last+30min gap
-    write_file("a.parquet", [
-        (0, T(9, 0), 1.0), (0, T(9, 10), 2.0),
-        (1, T(9, 5), 5.0),
-    ])
-
-    emitted: list[dict] = []
-
-    def sink(batch_df, epoch_id):
-        emitted.extend(r.asDict() for r in batch_df.collect())
-
-    def run_once():
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp, value double")
-            .format("parquet")
-            .load(src)
-            .withWatermark("ts", "10 minutes")
-        )
-        q = (
-            idle_timeout_sessions(stream, gap_sec=1800)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    run_once()
-    assert emitted == [], emitted  # watermark hasn't passed any close time
-
-    write_file("b.parquet", [(2, T(12, 0), 7.0)])
-    run_once()  # watermark -> 11:50 > 9:40/9:35 -> users 0 and 1 close
-
-    closed = {r["user_id"]: r for r in emitted}
-    assert set(closed) == {0, 1}, emitted
-    assert closed[0]["n_events"] == 2 and closed[0]["total_value"] == 3.0
-    assert closed[0]["session_start"] == T(9, 0)
-    assert closed[0]["session_end"] == T(9, 10)
-    assert closed[1]["n_events"] == 1 and closed[1]["total_value"] == 5.0
-    # user 2's session is still open: no emission, state retained
-
-
-def test_streaming_kmeans_decay_discounts_idle_clusters(spark):
-    """decay<1 must discount EVERY cluster's weight per batch, including
-    ones that received no points — otherwise forgetting fails for
-    intermittent clusters (MLlib StreamingKMeans semantics)."""
-    from k_means_in_mapreduce_spark.streaming.kmeans_stream import (
-        streaming_kmeans,
-    )
-
-    # batch 0 hits BOTH clusters; batches 1..n only hit cluster 0
-    model = streaming_kmeans([[0.0, 0.0], [100.0, 100.0]], decay=0.5)
-    both = spark.createDataFrame(
-        [([0.1, 0.1],), ([99.9, 100.1],)], "features array<double>"
-    )
-    only0 = spark.createDataFrame(
-        [([0.2, -0.1],), ([0.0, 0.1],)], "features array<double>"
-    )
-    model.update(both, 0)
-    w1_after_first = model.weights[1]
-    assert w1_after_first == 1.0  # one point landed on cluster 1
-    model.update(only0, 1)
-    model.update(only0, 2)
-    # idle cluster 1's weight must halve each batch, not stay frozen
-    assert model.weights[1] == w1_after_first * 0.25
-    assert model.weights[0] > 0
-
-
 def test_stream_kmeans_scoring_runs_no_empty_batch(spark):
     """``stream_kmeans_scoring`` runs to completion under an availableNow
     trigger: every progress event a listener sees carries input rows (no
