@@ -10,8 +10,6 @@ Layout:
     operators/      k-means (DataFrame + MLlib), relational, dedup, similarity,
                     text analysis, multimodal
     streaming/      Structured Streaming over the events table
-    plans/          physical-plan introspection helpers (pushdown / broadcast
-                    assertions used by tests)
 """
 
 __version__ = "0.1.0"

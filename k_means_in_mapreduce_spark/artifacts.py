@@ -2,9 +2,10 @@
 a LEAF module by design.
 
 - ``artifact_dir`` keeps deterministic derived data (the parquet of
-  ``materialized_artifact``, the IVF index) under ``.tmp/``, keyed on
-  source content, params and producing code; ``build_lock`` serializes
-  rebuilds across processes.
+  ``materialized_artifact``, the IVF index) under ``.tmp/``, one
+  ``v-<md5>`` directory per build, named by the source content, params
+  and producing code it was built from; ``build_lock`` serializes builds
+  across processes.
 - ``source_fingerprint`` is the content key every freshness check uses;
   it reads disk on every call.
 - ``session_df_memo`` / ``parquet_plan`` memoize reader PLANS (never data
@@ -122,30 +123,15 @@ def parquet_plan(spark: SparkSession, path: str) -> DataFrame:
     return session_df_memo(key, spark, lambda: spark.read.parquet(path))
 
 
-def _meta_is(meta_file: str, data_dir: str, want: dict) -> bool:
-    import json
-
-    if not (
-        os.path.exists(meta_file)
-        and os.path.exists(os.path.join(data_dir, "_SUCCESS"))
-    ):
-        return False
-    try:
-        with open(meta_file) as fh:
-            return json.load(fh) == want
-    except (OSError, ValueError):
-        return False
-
-
 @contextmanager
 def build_lock(root: str):
-    """Exclusive cross-process lock for rebuilding the artifact rooted at
+    """Exclusive cross-process lock for building the artifact rooted at
     ``root``: an ``flock``, because the kernel releases it when the holder
     dies (no staleness heuristic, whose steal path is racy between two
     waiters: the slower stealer can delete the lock the faster one just
     re-acquired). The lock FILE persists on disk; only the advisory lock
     matters, so a leftover file from a crashed run never blocks. Every
-    artifact rebuild takes it through :func:`artifact_dir`."""
+    artifact build takes it through :func:`artifact_dir`."""
     import fcntl
 
     os.makedirs(root, exist_ok=True)
@@ -157,53 +143,25 @@ def build_lock(root: str):
         os.close(fd)  # closing the fd releases the flock
 
 
-def _locked_rebuild(
-    root: str, data_dir: str, meta_file: str, want: dict, write
-) -> None:
-    """Rebuild the artifact under :func:`build_lock`; ``write(data_dir)``
-    writes the data and leaves ``_SUCCESS``.
-
-    Two processes sharing the sf_dir (e.g. bench.py and pytest) can both
-    observe a stale meta and race overlapping overwrite writes into
-    data_dir; the atomic meta rename only protects against crashes, not
-    concurrency. The loser blocks until the winner finishes, then
-    re-checks freshness (usually the winner built exactly this meta, so
-    the loser serves it without rebuilding)."""
-    import json
-
-    with build_lock(root):
-        # the previous holder may have built this exact meta while we
-        # waited — serve it instead of rebuilding
-        if _meta_is(meta_file, data_dir, want):
-            return
-        # drop the stale meta BEFORE rebuilding: a crash mid-overwrite
-        # must never leave old meta paired with new data (a later run
-        # matching the old meta would serve mixed-code output)
-        if os.path.exists(meta_file):
-            os.remove(meta_file)
-        write(data_dir)
-        tmp = meta_file + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(want, fh)
-        os.replace(tmp, meta_file)  # atomic commit point
-
-
 def artifact_dir(
     sf_dir: str, source_file: str, name: str, params: dict, write, module: str
 ) -> str:
-    """Build-once scratch dir of DETERMINISTIC derived data; returns its
-    data dir once that holds a committed build. The build is keyed on (a)
-    the content fingerprint of ``<sf_dir>/<source_file>``, (b) ``params``,
-    and (c) a CODE fingerprint of ``module`` and its transitive
-    intra-package imports, so editing the producing code rebuilds the
-    artifact instead of serving data written by the old code (which would
-    let a re-gate of changed code go green against stale outputs).
+    """Directory of the committed build ``<root>/v-<md5 of want>`` of
+    DETERMINISTIC derived data; ``want`` is the content fingerprint of
+    ``<sf_dir>/<source_file>``, the CODE fingerprint of ``module``'s
+    intra-package import cone, and ``params``, so the build is fresh
+    exactly when that directory exists.
 
-    On a miss, ``write(data_dir)`` runs under :func:`build_lock`; it may
-    leave ``_``-prefixed side files beside the data, which Spark's file
-    listing skips. ``meta.json`` is swapped in atomically AFTER ``write``
-    returns, so a torn build is never served."""
+    On a miss, under :func:`build_lock` and after a second check,
+    ``write(dir)`` writes ``<dir>.tmp`` (``_``-prefixed side files
+    included, which Spark's listing skips) and one rename commits it, so
+    a torn build is never served. Still under the lock, every other
+    directory of the root goes except the newest previous version: a plan
+    one version old keeps its files, a plan two versions old does not."""
+    import hashlib
     import importlib
+    import json
+    import shutil
 
     # importlib on purpose: gate_ledger provides the fingerprint MECHANISM
     # but its own content never changes any query's results, so it must
@@ -215,11 +173,25 @@ def artifact_dir(
     ).module_fingerprint(module)
     fp = source_fingerprint(os.path.join(sf_dir, source_file))
     want = {"fingerprint": fp, "code": code_fp, **params}
+    key = hashlib.md5(json.dumps(want, sort_keys=True).encode()).hexdigest()
     root = _scratch(sf_dir, f"art_{name}")
-    data_dir = os.path.join(root, "data")
-    meta_file = os.path.join(root, "meta.json")
-    if not _meta_is(meta_file, data_dir, want):
-        _locked_rebuild(root, data_dir, meta_file, want, write)
+    data_dir = os.path.join(root, f"v-{key}")
+    if os.path.isdir(data_dir):
+        return data_dir
+    with build_lock(root):
+        if os.path.isdir(data_dir):
+            return data_dir
+        tmp = data_dir + ".tmp"
+        shutil.rmtree(tmp, ignore_errors=True)  # left by a build that died
+        write(tmp)
+        os.rename(tmp, data_dir)  # the commit point
+        with os.scandir(root) as entries:
+            old = [e for e in entries if e.is_dir() and e.path != data_dir]
+        built = [e for e in old if not e.name.endswith(".tmp")]
+        keep = max(built, key=lambda e: e.stat().st_mtime_ns, default=None)
+        for e in old:
+            if e is not keep:
+                shutil.rmtree(e.path, ignore_errors=True)
     return data_dir
 
 
@@ -233,9 +205,10 @@ def materialized_artifact(
 ) -> DataFrame:
     """The DETERMINISTIC DataFrame ``build()`` as build-once parquet in an
     :func:`artifact_dir` keyed on ``build``'s module, served as a reader
-    plan: the dedup pair, groups and truth tables, the exact k-NN truth
-    and the exact-quantile results. At 100 TB these are the intermediates
-    a pipeline persists as first-class tables."""
+    plan of that build's version directory, which a rebuild never
+    overwrites: the dedup pair, groups and truth tables, the exact k-NN
+    truth and the exact-quantile results. At 100 TB these are the
+    intermediates a pipeline persists as first-class tables."""
 
     def write(data_dir: str) -> None:
         build().write.mode("overwrite").parquet(data_dir)

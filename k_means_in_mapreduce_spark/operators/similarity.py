@@ -204,10 +204,10 @@ def build_ivf_index(
     recoverable as ``unit * norm`` when an exact-rerank needs it). A
     zero vector's unit is NULL, so every cosine against it is NULL.
 
-    The cells and ``_centroids.json`` share one data dir of an
-    ``artifacts.artifact_dir`` entry, so one ``meta.json`` commit covers
-    both: a regenerated source, an edited cone of this module, or a
-    rebuild that died part way is rebuilt, never served.
+    The cells and ``_centroids.json`` share one version dir of an
+    ``artifacts.artifact_dir`` entry, so one rename commits both: a
+    regenerated source or an edited cone of this module builds a new
+    version, and a rebuild that died part way is never served.
     """
     import json
     import os

@@ -29,6 +29,22 @@ def spark():
     yield s
 
 
+def jobs_in_group(spark, group: str, action):
+    """Run ``action()`` under the Spark job group ``group``; return its
+    result and the sorted ids of the jobs it started. An exception from
+    ``action`` propagates."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job start events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def degenerate_fixture(tmp_path, n_rows: int, src: str = SF0001) -> str:
     """Write every table of ``src`` into ``tmp_path`` with its schema kept
     and only its first ``n_rows`` rows (0 gives empty tables); return the

@@ -3,8 +3,8 @@
 The 100 TB design contract is checked mechanically: filters reach the
 parquet scan (PushedFilters), scans read only needed columns (ReadSchema),
 small dims join as BroadcastHashJoin, and aggregations keep exactly one
-Exchange (partial -> shuffle -> final). tests/test_plans.py asserts these
-for the headline queries so a regression that silently de-optimizes a plan
+Exchange (partial -> shuffle -> final). test_plans.py asserts these for
+the headline queries so a regression that silently de-optimizes a plan
 fails CI, not the 1000-executor run.
 """
 

@@ -1,20 +1,42 @@
-"""Artifact build-once machinery: meta freshness, and the cross-process
-build lock (two processes sharing an sf_dir must not race overlapping
-overwrite writes into the same data dir — ADVICE r5)."""
+"""Artifact build-once machinery: version-directory freshness, the
+rename commit, and the cross-process build lock (two processes sharing an
+sf_dir must not race overlapping writes into one build — ADVICE r5)."""
 
 from __future__ import annotations
 
 import fcntl
 import json
 import os
+import shutil
 import threading
 import time
+
+import pytest
 
 from k_means_in_mapreduce_spark import artifacts as A
 
 
+def _in_sf(sf_dir, name):
+    return os.path.join(sf_dir, name)
+
+
+@pytest.fixture
+def sf(tmp_path, monkeypatch):
+    """An sf_dir holding one source file ``src``, whose artifact entries
+    live inside it instead of the repo's ``.tmp``."""
+    (tmp_path / "src").write_bytes(b"rows")
+    monkeypatch.setattr(A, "_scratch", _in_sf)
+    return str(tmp_path)
+
+
+def _build(sf_dir, write, p=1):
+    """``artifact_dir`` of entry ``art_t`` over ``<sf_dir>/src``, params
+    ``{"p": p}``."""
+    return A.artifact_dir(sf_dir, "src", "t", {"p": p}, write, A.__name__)
+
+
 def _fake_write(log):
-    """A ``write(data_dir)`` that commits an empty build and logs it."""
+    """A ``write(dir)`` that writes an empty build and logs its dir."""
 
     def write(path):
         os.makedirs(path, exist_ok=True)
@@ -25,96 +47,77 @@ def _fake_write(log):
     return write
 
 
-def _commit_artifact(root, want):
-    data = os.path.join(root, "data")
-    os.makedirs(data, exist_ok=True)
-    with open(os.path.join(data, "_SUCCESS"), "w"):
-        pass
-    with open(os.path.join(root, "meta.json"), "w") as fh:
-        json.dump(want, fh)
+def _never_write(_path):  # pragma: no cover - the assertion is that it never runs
+    raise AssertionError("write ran for a committed build")
 
 
-def test_meta_is_requires_success_marker_and_exact_meta(tmp_path):
-    root = str(tmp_path)
-    data = os.path.join(root, "data")
-    meta = os.path.join(root, "meta.json")
-    want = {"fingerprint": "f", "code": "c", "p": 1}
-    assert not A._meta_is(meta, data, want)  # nothing on disk
-    _commit_artifact(root, want)
-    assert A._meta_is(meta, data, want)
-    assert not A._meta_is(meta, data, {**want, "p": 2})  # param mismatch
-    os.remove(os.path.join(data, "_SUCCESS"))
-    assert not A._meta_is(meta, data, want)  # torn data commit
+def test_uncommitted_build_or_other_want_is_never_served(sf):
+    """A build is served only once its ``<dir>.tmp`` is renamed into
+    place, and only under its own ``want``."""
+    built = []
+    d1 = _build(sf, _fake_write(built))
+    assert built == [d1 + ".tmp"] and os.path.basename(d1).startswith("v-")
+    assert _build(sf, _never_write) == d1
+
+    def dies(path):
+        _fake_write(built)(path)
+        raise RuntimeError("died before the commit")
+
+    with pytest.raises(RuntimeError, match="before the commit"):
+        _build(sf, dies, p=2)
+    assert os.path.isdir(built[-1])  # the torn build is on disk, uncommitted
+    d2 = _build(sf, _fake_write(built), p=2)  # rebuilt, not served
+    assert d2 != d1 and built == [d1 + ".tmp", d2 + ".tmp", d2 + ".tmp"]
 
 
-def test_locked_rebuild_waits_for_concurrent_builder(tmp_path):
+def test_locked_rebuild_waits_for_concurrent_builder(sf):
     """The flock loser blocks until the holder releases; if the holder
-    committed exactly the wanted meta, the loser serves it WITHOUT
-    rebuilding (write() must not run)."""
-    root = str(tmp_path)
-    data = os.path.join(root, "data")
-    meta = os.path.join(root, "meta.json")
-    want = {"fingerprint": "f", "code": "c"}
-    os.makedirs(root, exist_ok=True)
-    lock = os.path.join(root, ".build.lock")
+    committed exactly the wanted build, the loser serves it WITHOUT
+    building (write() must not run)."""
+    d = _build(sf, _fake_write([]))
+    shutil.rmtree(d)  # nothing committed: the next call misses
     # flock conflicts apply between separate open file descriptions even
     # within one process, so a thread faithfully models a second process
+    lock = os.path.join(sf, "art_t", ".build.lock")
     holder_fd = os.open(lock, os.O_CREAT | os.O_RDWR)
     fcntl.flock(holder_fd, fcntl.LOCK_EX)
 
     def other_process():
         time.sleep(0.6)
-        _commit_artifact(root, want)
+        os.makedirs(d)  # the holder commits the same want
         os.close(holder_fd)  # releases the flock
 
     t = threading.Thread(target=other_process)
     t.start()
-
-    def write(_data_dir):  # pragma: no cover - the assertion is that it never runs
-        raise AssertionError("build ran despite a concurrent identical build")
-
     t0 = time.monotonic()
-    A._locked_rebuild(root, data, meta, want, write)
-    t.join()
+    assert _build(sf, _never_write) == d
+    t.join(timeout=30)
+    assert not t.is_alive()
     assert time.monotonic() - t0 >= 0.5  # actually waited for the holder
-    assert A._meta_is(meta, data, want)
 
 
-def test_locked_rebuild_ignores_leftover_lock_file(tmp_path):
+def test_locked_rebuild_ignores_leftover_lock_file(sf):
     """A lock FILE left by a crashed builder holds no flock (the kernel
     released it with the process) — acquisition is immediate, no
     staleness heuristic involved."""
-    root = str(tmp_path)
-    data = os.path.join(root, "data")
-    meta = os.path.join(root, "meta.json")
-    want = {"fingerprint": "f2", "code": "c2"}
-    os.makedirs(root, exist_ok=True)
-    with open(os.path.join(root, ".build.lock"), "w"):
+    os.makedirs(os.path.join(sf, "art_t"))
+    with open(os.path.join(sf, "art_t", ".build.lock"), "w"):
         pass  # leftover file, nobody holds the flock
 
     built = []
     t0 = time.monotonic()
-    A._locked_rebuild(root, data, meta, want, _fake_write(built))
+    d = _build(sf, _fake_write(built))
     assert time.monotonic() - t0 < 2.0  # no dead-wait
-    assert built == [data]
-    assert A._meta_is(meta, data, want)
+    assert built == [d + ".tmp"] and os.path.isdir(d)
 
 
-def _race_worker(root, idx, log_path):
+def _race_worker(sf_dir, idx, log_path):
     """Subprocess body for the cross-process race test (module-level so
     multiprocessing can pickle it)."""
-    import json
-    import os
-    import time
-
-    from k_means_in_mapreduce_spark import artifacts as A
-
-    data = os.path.join(root, "data")
-    meta = os.path.join(root, "meta.json")
-    want = {"fingerprint": "f", "code": "c"}
+    A._scratch = _in_sf  # a spawned process does not inherit monkeypatch
 
     def write(path):
-        # torn-write detector: mark in-progress, linger, then commit.
+        # torn-write detector: mark in-progress, linger, then finish.
         # If two builders overlap, the second sees the first's marker.
         flag = os.path.join(path, "_IN_PROGRESS")
         os.makedirs(path, exist_ok=True)
@@ -128,21 +131,19 @@ def _race_worker(root, idx, log_path):
         with open(log_path, "a") as fh:
             fh.write(json.dumps({"idx": idx, "overlapped": overlapped}) + "\n")
 
-    A._locked_rebuild(root, data, meta, want, write)
+    _build(sf_dir, write)
 
 
-def test_locked_rebuild_excludes_concurrent_processes(tmp_path):
-    """Two real OS processes racing the same stale artifact: exactly one
+def test_locked_rebuild_excludes_concurrent_processes(sf, tmp_path):
+    """Two real OS processes racing the same missing build: exactly one
     must build (the flock holder); the loser serves the winner's commit.
-    No overlapping writes into data_dir."""
-    import json
+    No overlapping writes into one build."""
     import multiprocessing as mp
 
-    root = str(tmp_path / "art")
     log_path = str(tmp_path / "log.jsonl")
     ctx = mp.get_context("spawn")
     procs = [
-        ctx.Process(target=_race_worker, args=(root, i, log_path))
+        ctx.Process(target=_race_worker, args=(sf, i, log_path))
         for i in range(2)
     ]
     for p in procs:
@@ -153,37 +154,101 @@ def test_locked_rebuild_excludes_concurrent_processes(tmp_path):
     builds = [json.loads(ln) for ln in open(log_path)]
     assert len(builds) == 1, builds  # loser must NOT rebuild
     assert not builds[0]["overlapped"]
-    want = {"fingerprint": "f", "code": "c"}
-    assert A._meta_is(
-        str(tmp_path / "art" / "meta.json"),
-        str(tmp_path / "art" / "data"),
-        want,
+    assert os.path.isfile(os.path.join(_build(sf, _never_write), "_SUCCESS"))
+
+
+def test_locked_rebuild_builds_a_changed_want(sf):
+    """A changed ``want`` (here its params) builds a new version beside
+    the committed one instead of serving or overwriting it."""
+    built = []
+    d1 = _build(sf, _fake_write(built))
+    d2 = _build(sf, _fake_write(built), p=2)
+    assert d2 != d1 and built == [d1 + ".tmp", d2 + ".tmp"]
+    assert os.path.isdir(d1) and os.path.isdir(d2)
+
+
+def test_entry_keeps_the_two_newest_versions(sf):
+    """After builds under three ``want``s, with a build that raised in
+    between, the entry holds exactly the two newest versions and its lock
+    file: the commit sweeps older versions and ``.tmp`` leftovers."""
+    _build(sf, _fake_write([]), p=1)
+    d2 = _build(sf, _fake_write([]), p=2)
+
+    def dies(path):
+        os.makedirs(path, exist_ok=True)
+        raise RuntimeError("died before the commit")
+
+    with pytest.raises(RuntimeError, match="before the commit"):
+        _build(sf, dies, p=9)
+    d3 = _build(sf, _fake_write([]), p=3)
+    assert sorted(os.listdir(os.path.join(sf, "art_t"))) == sorted(
+        [".build.lock", os.path.basename(d2), os.path.basename(d3)]
     )
 
 
-def test_locked_rebuild_replaces_mismatched_meta(tmp_path):
-    """A stale (different-code) artifact is rebuilt under the lock and the
-    meta re-committed atomically."""
-    root = str(tmp_path)
-    data = os.path.join(root, "data")
-    meta = os.path.join(root, "meta.json")
-    _commit_artifact(root, {"fingerprint": "old", "code": "old"})
-    want = {"fingerprint": "new", "code": "new"}
+def _quantiles_sf(tmp_path):
+    from .conftest import SF0001
 
-    built = []
-    A._locked_rebuild(root, data, meta, want, _fake_write(built))
-    assert built == [data]
-    assert A._meta_is(meta, data, want)
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    shutil.copyfile(f"{SF0001}/lineitem.parquet", f"{sf}/lineitem.parquet")
+    return sf
+
+
+def test_held_plan_survives_a_rebuild_on_rewritten_source(spark, tmp_path):
+    """A ``lineitem_price_quantiles`` DataFrame held across a rebuild (the
+    source rewritten with the same rows, so its fingerprint moves) still
+    collects its rows: the rebuild writes a new version beside the one
+    the held plan lists."""
+    import pyarrow.parquet as pq
+
+    import bench
+    from k_means_in_mapreduce_spark import registry
+
+    sf = _quantiles_sf(tmp_path)
+    q = registry.QUERIES["lineitem_price_quantiles"]
+    try:
+        held = q(spark, sf)
+        rows = sorted(held.collect())
+        src = f"{sf}/lineitem.parquet"
+        before = A.source_fingerprint(src)
+        pq.write_table(pq.read_table(src), src)  # the same rows, a new file
+        assert A.source_fingerprint(src) != before
+        assert sorted(q(spark, sf).collect()) == rows  # rebuilt
+        assert sorted(held.collect()) == rows
+    finally:
+        bench.clear_artifact_cache(sf)
+
+
+def test_held_plan_survives_a_rebuild_under_changed_code(
+    spark, tmp_path, monkeypatch
+):
+    """A DataFrame planned before a rebuild under a changed code
+    fingerprint still collects its rows after that rebuild."""
+    import bench
+    from k_means_in_mapreduce_spark import gate_ledger, registry
+
+    sf = _quantiles_sf(tmp_path)
+    code = ["A"]
+    monkeypatch.setattr(
+        gate_ledger, "module_fingerprint", lambda dotted, ref=None: code[0]
+    )
+    q = registry.QUERIES["lineitem_price_quantiles"]
+    try:
+        held = q(spark, sf)
+        rows = sorted(held.collect())
+        code[0] = "B"
+        assert sorted(q(spark, sf).collect()) == rows  # rebuilt
+        assert sorted(held.collect()) == rows
+    finally:
+        bench.clear_artifact_cache(sf)
 
 
 def test_interrupted_ivf_rebuild_is_never_served(spark, tmp_path, monkeypatch):
     """Code A builds the IVF index; under code B a rebuild dies after its
-    cells commit; back on A (say, after a checkout) the next call must
-    re-fit, because the cells on disk are B's. Serving A's centroids with
-    B's cells is the mixed-code case the meta commit rules out."""
-    import shutil
-
-    import pytest
+    cells are written. Back on A (say, after a checkout) A's committed
+    index is served, cells and centroids, without a re-fit: B's torn
+    build never replaced it. The next call under B re-fits."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     import bench
@@ -209,22 +274,27 @@ def test_interrupted_ivf_rebuild_is_never_served(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(KDF, "fit", counting_fit)
     real_parquet = DataFrameWriter.parquet
 
-    def dies_after_commit(self, path, *args, **kwargs):
+    def dies_after_cells(self, path, *args, **kwargs):
         real_parquet(self, path, *args, **kwargs)
-        raise RuntimeError("rebuild died after the cells commit")
+        raise RuntimeError("rebuild died after the cells were written")
 
     try:
-        build_ivf_index(spark, sf)
+        centroids, idx = build_ivf_index(spark, sf)
+        files = sorted(idx.inputFiles())
         build_ivf_index(spark, sf)
         assert fits == ["A"]  # the warm call serves A's build
         code[0] = "B"
-        monkeypatch.setattr(DataFrameWriter, "parquet", dies_after_commit)
-        with pytest.raises(RuntimeError, match="after the cells commit"):
+        monkeypatch.setattr(DataFrameWriter, "parquet", dies_after_cells)
+        with pytest.raises(RuntimeError, match="after the cells"):
             build_ivf_index(spark, sf)
         monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
         code[0] = "A"
+        served, idx = build_ivf_index(spark, sf)
+        assert fits == ["A", "B"]
+        assert served == centroids and sorted(idx.inputFiles()) == files
+        code[0] = "B"
         build_ivf_index(spark, sf)
-        assert fits == ["A", "B", "A"]
+        assert fits == ["A", "B", "B"]
     finally:
         bench.clear_artifact_cache(sf)
 
@@ -274,8 +344,6 @@ def test_clear_artifact_cache_matches_known_names_and_exact_tag(tmp_path):
         for name in survivors:
             assert os.path.exists(os.path.join(tmp, name)), name
     finally:
-        import shutil
-
         for name in doomed + survivors:
             full = os.path.join(tmp, name)
             if os.path.isdir(full):
@@ -475,8 +543,6 @@ def test_source_fingerprint_changes_on_file_rewrite(tmp_path):
 
 
 def test_source_fingerprint_changes_on_dir_regeneration(tmp_path):
-    import shutil
-
     d = tmp_path / "cells"
     d.mkdir()
     (d / "part-0").write_bytes(b"old")
@@ -568,8 +634,6 @@ def test_regenerated_sources_served_fresh_under_live_session(
     a loaded table, two artifacts and a stream schema probe: every path
     must serve the new data, not a plan memoized for the old files or a
     table built from them."""
-    import shutil
-
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq

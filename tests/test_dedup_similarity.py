@@ -311,7 +311,7 @@ def test_served_groups_skip_the_star_loop(spark, tmp_path, monkeypatch):
     import bench
     from k_means_in_mapreduce_spark.operators import dedup
 
-    from .conftest import SF0001
+    from .conftest import SF0001, jobs_in_group
 
     sf = str(tmp_path)
     shutil.copyfile(f"{SF0001}/documents.parquet", f"{sf}/documents.parquet")
@@ -324,18 +324,13 @@ def test_served_groups_skip_the_star_loop(spark, tmp_path, monkeypatch):
 
         monkeypatch.setattr(dedup, "connected_components_star", forbidden)
         monkeypatch.setattr(dedup, "jaccard_pairs", forbidden)
-        sc = spark.sparkContext
-        group = "served-groups-one-job"
-        sc.setJobGroup(group, group)
-        try:
-            served = groups(spark, sf)
-            served.write.format("noop").mode("overwrite").save()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        # job start events reach the status store asynchronously
-        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        def serve():
+            df = groups(spark, sf)
+            df.write.format("noop").mode("overwrite").save()
+            return df
+
+        served, jobs = jobs_in_group(spark, "served-groups-one-job", serve)
+        assert len(jobs) == 1
 
         pairs = [(r.doc_a, r.doc_b) for r in dedup.near_dup_pairs(spark, sf).collect()]
         assert pairs, "the corpus should contain near-dup pairs"

@@ -9,7 +9,7 @@ from k_means_in_mapreduce_spark.operators import kmeans_df as K
 from k_means_in_mapreduce_spark.operators.kmeans_mllib import fit_mllib, transform_mllib
 from k_means_in_mapreduce_spark.sources import load_table
 
-from .conftest import SF0001
+from .conftest import SF0001, jobs_in_group
 
 
 @pytest.fixture(scope="module")
@@ -450,22 +450,15 @@ def test_fit_job_count_and_aqe_restored(spark, monkeypatch, partitions, target):
     if target is not None:
         monkeypatch.setattr(K, "_iteration_partitions", lambda _bytes: target)
     sets = _no_conf_set(monkeypatch)
-    sc = spark.sparkContext
     df = spark.range(0, 240, 1, partitions).select(
         F.array(F.col("id").cast("double"), F.sin("id")).alias("embedding")
     )
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    group = f"fit-job-count-{partitions}-{target}"
-    sc.setJobGroup(group, group)
-    try:
-        m = K.fit(df, K.KMeansConfig(k=3, max_iter=3, tol=0.0, seed=5))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job start events reach the status store asynchronously
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    tracker = sc.statusTracker()
-    jobs = sorted(tracker.getJobIdsForGroup(group))
+    m, jobs = jobs_in_group(
+        spark, f"fit-job-count-{partitions}-{target}",
+        lambda: K.fit(df, K.KMeansConfig(k=3, max_iter=3, tol=0.0, seed=5)),
+    )
+    tracker = spark.sparkContext.statusTracker()
     assert m.n_iter == 3 and m.reinit_count == 0
     assert len(jobs) == (2 if target is None else 3 + m.n_iter), jobs
     if target is None:
@@ -560,21 +553,6 @@ def test_fit_counts_rows_in_the_init_sample(spark, monkeypatch, partitions,
             d.unpersist()
 
 
-def _jobs_of(spark, group, fn):
-    """Run ``fn()`` under the Spark job group ``group``; return the ids of
-    the jobs it ran, also when it raised (the exception propagates)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        # job start events reach the status store asynchronously
-        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    return sorted(sc.statusTracker().getJobIdsForGroup(group))
-
-
 _RAGGED = [[1.0], [2.0, 3.0, 4.0], [5.0, 6.0], [7.0, 8.0]]  # 8 values = 4×2
 
 
@@ -604,7 +582,7 @@ def test_fit_refuses_ragged_and_null_vectors_in_its_first_job(
         with pytest.raises(ValueError, match=match):
             K.fit(df, cfg)
 
-    jobs = _jobs_of(spark, f"fit-refuses-{k}-{match}", run)
+    _, jobs = jobs_in_group(spark, f"fit-refuses-{k}-{match}", run)
     assert len(jobs) == 1, jobs
 
 
@@ -808,7 +786,7 @@ def test_cli_refuses_malformed_input_after_one_job(spark, tmp_path, capsys,
     (inp / "points.txt").write_text(text)
     out = tmp_path / "out"
     rc = []
-    jobs = _jobs_of(
+    _, jobs = jobs_in_group(
         spark, f"cli-malformed-{tmp_path.name}",
         lambda: rc.append(main([str(inp), "2", "3", str(out), str(dim), "0", "8"])),
     )
@@ -831,7 +809,7 @@ def test_cli_run_is_three_jobs(spark, tmp_path):
     gen.write_blobs(x, str(tmp_path / "blobs.parquet"), text)
     out = str(tmp_path / "out")
     rc = []
-    jobs = _jobs_of(
+    _, jobs = jobs_in_group(
         spark, "cli-valid-run",
         lambda: rc.append(main([text, "8", "5", out, "64", "0", "8"])),
     )

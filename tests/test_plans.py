@@ -7,16 +7,16 @@ paths (BatchEvalPython absent).
 
 from k_means_in_mapreduce_spark import registry
 from k_means_in_mapreduce_spark.operators import kmeans_df as K
-from k_means_in_mapreduce_spark.plans import (
+from k_means_in_mapreduce_spark.sources import load_table
+
+from .conftest import SF001, jobs_in_group
+from .explain import (
     count_exchanges,
     explain_string,
     has_broadcast_join,
     pushed_filters,
     read_schemas,
 )
-from k_means_in_mapreduce_spark.sources import load_table
-
-from .conftest import SF001
 
 
 def test_q1_pushdown_and_pruning(spark):
@@ -358,21 +358,6 @@ def test_exact_quantiles_cdf_is_one_key_window(spark):
         assert absent not in plan, absent
 
 
-def _jobs_in_group(spark, group, action):
-    """Run ``action`` under its own job group; return its result and the
-    number of Spark jobs it started."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job start events reach the status store asynchronously
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_exact_quantiles_job_counts(spark):
     """The quantile builder collect is 3 jobs: the distinct-count
     exchange, the window's exchange on the key (which the final agg
@@ -395,7 +380,7 @@ def test_exact_quantiles_job_counts(spark):
         ("orders-monthly-stats-warm", monthly, 6),
     ):
         action()
-        assert _jobs_in_group(spark, group, action)[1] == jobs, group
+        assert len(jobs_in_group(spark, group, action)[1]) == jobs, group
 
 
 def test_trend_and_histogram_are_single_aggregate_plans(spark):
@@ -478,20 +463,20 @@ def test_fixed_centroids_one_job_in_vec_id_order(spark, tmp_path):
     want = [[float(x) for x in by_id[i]] for i in range(registry.K_FIXED)]
 
     load_table(spark, str(tmp_path), "embeddings")  # schema inference job
-    got, n = _jobs_in_group(
+    got, jobs = jobs_in_group(
         spark, "fixed-centroids-one-job",
         lambda: registry._fixed_centroids(spark, str(tmp_path)),
     )
-    assert n == 1
+    assert len(jobs) == 1
     assert got == want
 
 
 def test_warm_ivf_queries_job_counts(spark):
-    """Serving the IVF index reads its meta and centroids on the driver and
-    starts no Spark job: a warm ``ann_ivf_topk`` is 2 jobs (the query
+    """Serving the IVF index reads its centroids on the driver and starts
+    no Spark job: a warm ``ann_ivf_topk`` is 2 jobs (the query
     vector fetch and the top-k) and a warm ``ann_ivf_knn_join`` is 3."""
     for name, jobs in (("ann_ivf_topk", 2), ("ann_ivf_knn_join", 3)):
         q = registry.QUERIES[name]
         q(spark, SF001).collect()
-        got = _jobs_in_group(spark, f"{name}-warm", lambda: q(spark, SF001).collect())
-        assert got[1] == jobs, name
+        got = jobs_in_group(spark, f"{name}-warm", lambda: q(spark, SF001).collect())
+        assert len(got[1]) == jobs, name
