@@ -20,7 +20,7 @@ MapReduce and 0.07 s/iter for sequential Python at n=100k, d=30).
 `embeddings` is deterministically tiled to 100k rows (d=64) so the scale
 matches the published grid.
 
-Artifact honesty: fingerprint-keyed artifacts (`.tmp/art_*`) persist
+Artifact honesty: fingerprint-keyed artifacts (`.tmp/<tag>/`) persist
 across runs, so a warm-only measurement of an artifact-backed query times
 a parquet read, not the computation. By default the bench DELETES the
 artifact cache first, so each ARTIFACT's first build lands in some
@@ -312,41 +312,12 @@ def bench_kmeans_iteration(
     return out
 
 
-def scratch_entry_pattern(tag: str):
-    """Compiled matcher for .tmp scratch entries belonging to the sf_dir
-    with sanitized ``tag`` — the known scratch-name families, anchored on
-    artifacts._scratch's ``--`` name/tag delimiter plus the EXACT tag.
-    A sanitized tag can never contain '-' (scratch_tag maps it to '_'),
-    and the art_/bkt_ name wildcard excludes '-', so the first ``--``
-    pins the tag boundary: clearing sf_dir A can no longer match an
-    entry of a different sf_dir B in ANY direction — including the old
-    residual where B's path ends with A's full path and the variable
-    family name absorbed B's extra prefix (ADVICE r6/r7, closed by the
-    delimiter; entries under the pre-delimiter naming are orphaned by
-    the rename and were swept once when it landed).
-
-    A tripwire test (tests/test_artifacts.py) enumerates the package's
-    actual ``_scratch(sf_dir, ...)`` call sites against this pattern, so
-    a new scratch family added without extending it fails CI instead of
-    silently corrupting the bench's cold column (its first run would time
-    a warm serve of last run's artifact)."""
-    import re
-
-    return re.compile(
-        r"^(?:art_[A-Za-z0-9_]+|bkt_[A-Za-z0-9_]+|centroids_text"
-        r"|orders_csv|events_json|orders_part|lineitem_orc"
-        r"|orders_corrupt_csv|points_text)--"
-        + re.escape(tag)
-        + r"(?:\.fingerprint)?$"
-    )
-
-
 def clear_artifact_cache(sf_dir: str) -> int:
-    """Delete EVERY fingerprint-keyed scratch entry for this sf_dir (the
-    `art_*` artifacts, the IVF index among them, bucketed table copies and
-    their .fingerprint markers — anything artifacts._scratch named with
-    the sf tag) so the first run of an artifact-backed query measures the
-    cold build, not a read of last run's output. Note the cold column is
+    """Delete sf_dir's scratch directory ``.tmp/<tag>`` (every artifact
+    the package built for it: the IVF index, the file round trips and the
+    bucketed table copies among them) and return how many entries it held,
+    so the first run of an artifact-backed query measures the cold build,
+    not a read of last run's output. Note the cold column is
     per-ARTIFACT, not per-query: when several queries share one artifact
     (e.g. the Jaccard pair list), only the first consumer's first run
     pays the build; later consumers' "cold" rows time a warm serve. The
@@ -355,23 +326,13 @@ def clear_artifact_cache(sf_dir: str) -> int:
     whichever runs second has a cold row that times a warm serve."""
     import shutil
 
-    from k_means_in_mapreduce_spark.artifacts import scratch_tag
+    from k_means_in_mapreduce_spark.artifacts import _scratch
 
-    pat = scratch_entry_pattern(scratch_tag(sf_dir))
-    tmp = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".tmp")
-    removed = 0
-    if os.path.isdir(tmp):
-        for entry in os.listdir(tmp):
-            if pat.match(entry):
-                full = os.path.join(tmp, entry)
-                if os.path.isdir(full):
-                    shutil.rmtree(full, ignore_errors=True)
-                else:
-                    try:
-                        os.remove(full)
-                    except OSError:
-                        pass
-                removed += 1
+    root = _scratch(sf_dir)
+    if not os.path.isdir(root):
+        return 0
+    removed = len(os.listdir(root))
+    shutil.rmtree(root, ignore_errors=True)
     return removed
 
 

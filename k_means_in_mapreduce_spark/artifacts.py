@@ -1,11 +1,13 @@
 """Build-once artifact machinery and the package's one in-process memo —
 a LEAF module by design.
 
-- ``artifact_dir`` keeps deterministic derived data (the parquet of
-  ``materialized_artifact``, the IVF index) under ``.tmp/``, one
-  ``v-<md5>`` directory per build, named by the source content, params
-  and producing code it was built from; ``build_lock`` serializes builds
-  across processes.
+- ``artifact_dir`` is the one path by which the package writes scratch
+  files: the parquet of ``materialized_artifact``, the IVF index, the
+  file-source round trips and the bucketed table copies. Each build is
+  one ``.tmp/<tag>/<name>/v-<md5>`` directory, named by the source
+  content, params and producing code it was built from, so every scratch
+  file of an sf_dir lives under that sf_dir's ``.tmp/<tag>``;
+  ``build_lock`` serializes builds across processes.
 - ``source_fingerprint`` is the content key every freshness check uses;
   it reads disk on every call.
 - ``session_df_memo`` / ``parquet_plan`` memoize reader PLANS (never data
@@ -28,25 +30,13 @@ _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE_ROOT = __package__
 
 
-def scratch_tag(sf_dir: str) -> str:
-    """sf_dir sanitized for use in scratch paths AND catalog table names
-    (one definition — filesources' bucketed tables embed it in a Spark
-    table identifier, which additionally forbids '-')."""
-    return (
-        sf_dir.rstrip("/").replace("/", "_").replace(".", "_").replace("-", "_")
-    )
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    # '--' delimits family name from tag in the ON-DISK naming only (the
-    # bucketed-table catalog identifiers embed the raw tag — '-' is
-    # illegal there, which is also why a sanitized tag can never contain
-    # '-'). The delimiter makes the tag boundary unambiguous for
-    # bench.clear_artifact_cache: without it, clearing sf_dir A could
-    # also match an art_/bkt_ entry of an sf_dir B whose path ends with
-    # A's full path (B's extra prefix absorbed by the variable family
-    # name) — the ADVICE r6/r7 residual this closes.
-    return os.path.join(_REPO_ROOT, ".tmp", f"{name}--{scratch_tag(sf_dir)}")
+def _scratch(sf_dir: str) -> str:
+    """``.tmp/<tag>``: the one directory that holds every scratch file
+    the package writes for ``sf_dir``. The tag is the absolute path with
+    '/' spelled '_', so it is never empty, and an sf_dir whose path ends
+    with another one's path gets a directory of its own."""
+    tag = os.path.abspath(sf_dir).replace("/", "_")
+    return os.path.join(_REPO_ROOT, ".tmp", tag)
 
 
 def source_fingerprint(path: str) -> str:
@@ -147,10 +137,10 @@ def artifact_dir(
     sf_dir: str, source_file: str, name: str, params: dict, write, module: str
 ) -> str:
     """Directory of the committed build ``<root>/v-<md5 of want>`` of
-    DETERMINISTIC derived data; ``want`` is the content fingerprint of
-    ``<sf_dir>/<source_file>``, the CODE fingerprint of ``module``'s
-    intra-package import cone, and ``params``, so the build is fresh
-    exactly when that directory exists.
+    DETERMINISTIC derived data, ``<root>`` being ``.tmp/<tag>/<name>``;
+    ``want`` is the content fingerprint of ``<sf_dir>/<source_file>``,
+    the CODE fingerprint of ``module``'s intra-package import cone, and
+    ``params``, so the build is fresh exactly when that directory exists.
 
     On a miss, under :func:`build_lock` and after a second check,
     ``write(dir)`` writes ``<dir>.tmp`` (``_``-prefixed side files
@@ -174,7 +164,7 @@ def artifact_dir(
     fp = source_fingerprint(os.path.join(sf_dir, source_file))
     want = {"fingerprint": fp, "code": code_fp, **params}
     key = hashlib.md5(json.dumps(want, sort_keys=True).encode()).hexdigest()
-    root = _scratch(sf_dir, f"art_{name}")
+    root = os.path.join(_scratch(sf_dir), name)
     data_dir = os.path.join(root, f"v-{key}")
     if os.path.isdir(data_dir):
         return data_dir

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import materialized_artifact
 from ..functions.text import normalized, tokens, word_ngrams
 from ..catalog import query
 from ..sources import load_table
@@ -289,43 +290,17 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dup_pairs(spark, sf_dir)
 
 
-def _dedup_artifact(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    params: dict,
-    build,
-    source_file: str = "documents.parquet",
-) -> DataFrame:
-    """Build-once materialization for DETERMINISTIC dedup intermediates
-    keyed on the source parquet's content fingerprint + algorithm
-    parameters — see ``artifacts.materialized_artifact`` (shared with the
-    exact k-NN truth and exact-quantile artifacts). Pair lists, signature
-    tables and component tables are first-class materialized artifacts
-    in a real pipeline — grouping, audit metrics, and keeper selection
-    all consume them — not ephemeral subqueries recomputed per consumer.
-    An artifact may build from another (the groups table from the pair
-    list); its build then takes the inner artifact's lock while holding
-    its own, never the other way round. ``source_file``
-    defaults to the documents table; embedding-keyed artifacts (cosine
-    truth, IVF pairs) pass embeddings.parquet."""
-    from ..artifacts import materialized_artifact
-
-    return materialized_artifact(
-        spark, sf_dir, source_file, f"dedup_{name}", params, build
-    )
-
-
 def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once exact near-dup pair list: :func:`jaccard_pairs` is the
     upstream of every pair consumer — the pair query itself, the
     connected-component grouping, and the three recall metrics — and
     recomputing the shingle -> posting -> verify pipeline for each was
     the single largest redundant cost in the dedup family."""
-    return _dedup_artifact(
+    return materialized_artifact(
         spark,
         sf_dir,
-        "jaccard_pairs",
+        "documents.parquet",
+        "dedup_jaccard_pairs",
         _PAIR_PARAMS,
         lambda: jaccard_pairs(_shingled(spark, sf_dir)),
     )
@@ -490,10 +465,11 @@ def dedup_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     the groups build holds its own ``build_lock`` and then takes the
     pairs lock inside :func:`near_dup_pairs`. No path takes the groups
     lock while holding the pairs lock, so two processes cannot deadlock."""
-    return _dedup_artifact(
+    return materialized_artifact(
         spark,
         sf_dir,
-        "groups_star",
+        "documents.parquet",
+        "dedup_groups_star",
         _PAIR_PARAMS,
         lambda: connected_components_star(
             near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
@@ -534,10 +510,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     MLlib's ``MinHashLSH`` is not used: it ORs single-hash tables with no
     AND inside a table, so its candidate set grows as n², not with the
     true pairs (156,861 candidates against banding's 614 at 5k docs)."""
-    return _dedup_artifact(
+    return materialized_artifact(
         spark,
         sf_dir,
-        "minhash_lsh",
+        "documents.parquet",
+        "dedup_minhash_lsh",
         {"num_perm": NUM_PERM, "bands": LSH_BANDS, "threshold": JACCARD_THRESHOLD},
         lambda: _minhash_lsh_pairs(spark, sf_dir),
     )
@@ -602,8 +579,13 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen-able. 63 bits keeps the fingerprint non-negative in a signed
     long. Deterministic — served as a build-once artifact (the recall
     metric re-derives pairs from the same fingerprint table)."""
-    return _dedup_artifact(
-        spark, sf_dir, "simhash", {"bits": 63}, lambda: _simhash_table(spark, sf_dir)
+    return materialized_artifact(
+        spark,
+        sf_dir,
+        "documents.parquet",
+        "dedup_simhash",
+        {"bits": 63},
+        lambda: _simhash_table(spark, sf_dir),
     )
 
 
@@ -670,13 +652,13 @@ def exact_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     full quadratic truth — same rationale as :func:`near_dup_pairs`,
     keyed on the embeddings content fingerprint + threshold + the
     producing module's code fingerprint."""
-    return _dedup_artifact(
+    return materialized_artifact(
         spark,
         sf_dir,
-        "cosine_truth",
+        "embeddings.parquet",
+        "dedup_cosine_truth",
         {"threshold": COSINE_THRESHOLD},
         lambda: _exact_cosine_compute(spark, sf_dir),
-        source_file="embeddings.parquet",
     )
 
 
@@ -786,13 +768,13 @@ def dedup_embedding_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe explode, cell shuffle, and per-cell gemm — same rationale as
     every other approximate dedup path (see ``near_dup_pairs``). The
     computation is :func:`_ivf_pairs_compute`."""
-    return _dedup_artifact(
+    return materialized_artifact(
         spark,
         sf_dir,
-        "cosine_ivf_pairs",
+        "embeddings.parquet",
+        "dedup_cosine_ivf_pairs",
         {"probes": DEDUP_IVF_PROBES, "threshold": COSINE_THRESHOLD},
         lambda: _ivf_pairs_compute(spark, sf_dir),
-        source_file="embeddings.parquet",
     )
 
 

@@ -384,14 +384,20 @@ def points_text_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Point.toString) -> re-ingest with the expression parser -> aggregate.
     Exact because Spark's double->string cast is shortest-roundtrip
     (Double.toString), so the parsed values equal the computed means
-    bit-for-bit and the oracle can skip the stringification."""
-    from .artifacts import _scratch
+    bit-for-bit and the oracle can skip the stringification. The sink is
+    an ``artifacts.artifact_dir`` build, so the fit-side writer runs once
+    per source and code version; the parse runs on every call."""
+    from .artifacts import artifact_dir
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = _fixed_centroids(spark, sf_dir)
-    cf = K.cluster_features(K.assign_clusters(emb, cents))
-    path = _scratch(sf_dir, "centroids_text")
-    write_points(cf, path, "centroid")
+    def write(path: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        cents = _fixed_centroids(spark, sf_dir)
+        cf = K.cluster_features(K.assign_clusters(emb, cents))
+        write_points(cf, path, "centroid")
+
+    path = artifact_dir(
+        sf_dir, "embeddings.parquet", "centroids_text", {}, write, __name__
+    )
     parsed = parse_points(spark, path)
     return (
         parsed.select(F.posexplode("features").alias("dim", "v"))

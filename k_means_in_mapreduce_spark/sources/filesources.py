@@ -3,27 +3,26 @@ formats the reference lacks, free via Spark's builtin readers — registered
 here so the coverage is *demonstrated*, not just claimed).
 
 Each query writes a slice of the canonical parquet data to the format
-under test (overwrite, deterministic content), reads it back with an
-explicit schema, and aggregates — oracle-checked against the same
-aggregate computed straight from parquet. Timestamps cross the text
-formats as explicit microsecond-precision strings (CSV/JSON have no
-timestamp type; relying on format inference would be lossy).
-
-Scratch dir: ``.tmp/`` under the repo root (gitignored) — per-sf
-subdirs so scale factors don't collide.
+under test (deterministic content) as an ``artifacts.artifact_dir``
+build, reads the committed version back with an explicit schema on every
+call, and aggregates — oracle-checked against the same aggregate
+computed straight from parquet. The writer runs once per source and code
+version; a rebuild writes a new version beside the one a held DataFrame
+reads. Timestamps cross the text formats as explicit
+microsecond-precision strings (CSV/JSON have no timestamp type; relying
+on format inference would be lossy).
 """
 
 from __future__ import annotations
 
-import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import artifact_dir, source_fingerprint
 from ..catalog import query
 from ..sources import load_table
-
-from ..artifacts import _scratch, source_fingerprint
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
@@ -39,14 +38,16 @@ def csv_roundtrip_orders_by_status(spark: SparkSession, sf_dir: str) -> DataFram
     """orders -> CSV (header, explicit timestamp format) -> read back with
     explicit schema -> aggregate; proves the CSV source/sink preserves
     values bit-for-bit for the supported types."""
-    path = _scratch(sf_dir, "orders_csv")
-    o = load_table(spark, sf_dir, "orders")
-    (
-        o.withColumn("o_orderdate", F.date_format("o_orderdate", _TS_FMT))
-        .write.mode("overwrite")
-        .option("header", True)
-        .csv(path)
-    )
+
+    def write(path: str) -> None:
+        (
+            load_table(spark, sf_dir, "orders")
+            .withColumn("o_orderdate", F.date_format("o_orderdate", _TS_FMT))
+            .write.option("header", True)
+            .csv(path)
+        )
+
+    path = artifact_dir(sf_dir, "orders.parquet", "orders_csv", {}, write, __name__)
     schema = (
         "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
         "o_totalprice double, o_orderdate string, o_orderpriority string"
@@ -76,13 +77,15 @@ def csv_roundtrip_orders_by_status(spark: SparkSession, sf_dir: str) -> DataFram
 def json_roundtrip_events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events -> JSON lines (explicit µs timestamp strings) -> read back ->
     daily per-type rollup."""
-    path = _scratch(sf_dir, "events_json")
-    ev = load_table(spark, sf_dir, "events")
-    (
-        ev.withColumn("ts", F.date_format("ts", _TS_FMT))
-        .write.mode("overwrite")
-        .json(path)
-    )
+
+    def write(path: str) -> None:
+        (
+            load_table(spark, sf_dir, "events")
+            .withColumn("ts", F.date_format("ts", _TS_FMT))
+            .write.json(path)
+        )
+
+    path = artifact_dir(sf_dir, "events.parquet", "events_json", {}, write, __name__)
     schema = (
         "event_id bigint, ts string, user_id bigint, event_type string, "
         "value double, props string"
@@ -119,13 +122,12 @@ def partitioned_sink_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipped rows read). At 100 TB this is the layout knob: partition by
     the dominant coarse filter, sort/bucket within partitions for the
     join key. Pruning is asserted in tests/test_plans.py."""
-    path = _scratch(sf_dir, "orders_part")
     o = load_table(spark, sf_dir, "orders")
-    (
-        o.write.mode("overwrite")
-        .partitionBy("o_orderstatus")
-        .parquet(path)
-    )
+
+    def write(path: str) -> None:
+        o.write.partitionBy("o_orderstatus").parquet(path)
+
+    path = artifact_dir(sf_dir, "orders.parquet", "orders_part", {}, write, __name__)
     # the schema is given, not inferred: an empty orders table writes no
     # data file to infer it from
     back = spark.read.schema(o.schema).parquet(path)
@@ -153,9 +155,11 @@ def orc_roundtrip_lineitem_status(spark: SparkSession, sf_dir: str) -> DataFrame
     """lineitem -> ORC -> read back -> aggregate. ORC has native timestamp
     and decimal encodings, so unlike CSV/JSON no string escort is needed —
     the roundtrip is schema-preserving by construction."""
-    path = _scratch(sf_dir, "lineitem_orc")
-    li = load_table(spark, sf_dir, "lineitem")
-    li.write.mode("overwrite").orc(path)
+
+    def write(path: str) -> None:
+        load_table(spark, sf_dir, "lineitem").write.orc(path)
+
+    path = artifact_dir(sf_dir, "lineitem.parquet", "lineitem_orc", {}, write, __name__)
     back = spark.read.orc(path)
     return back.groupBy("l_linestatus").agg(
         F.count(F.lit(1)).alias("n_items"),
@@ -188,41 +192,40 @@ def bucketed_join_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     local-test side, which would hide the bucketing (on the 100 TB target
     neither side broadcasts).
 
-    Reuse is keyed on a content fingerprint of the source parquet: the
-    bucketed copy is rebuilt whenever the catalog entry is missing (fresh
-    session — the catalog is in-memory) or the recorded fingerprint does
-    not match the current source, so a stale copy can never be served
-    while repeat in-session calls skip the two full rewrites. The revenue
-    sum runs in DECIMAL (exact, order-independent — prices are 2-dp) so
-    the result does not depend on merge-join row order."""
-    from ..artifacts import scratch_tag
-
-    tag = scratch_tag(sf_dir)
-    names = {}
+    Each copy is an ``artifacts.artifact_dir`` build, written by
+    ``saveAsTable`` under a throwaway name that is dropped at once (an
+    external table: its bucket files stay). Every call then declares the
+    committed directory as a bucketed catalog table named after that
+    build's content fingerprint, so a table never lists the files of a
+    version that was cleared or rebuilt, and a held DataFrame keeps
+    reading the version it planned. The revenue sum runs in DECIMAL
+    (exact, order-independent — prices are 2-dp) so the result does not
+    depend on merge-join row order."""
+    sides = {}
     for tbl, key in (("customer", "c_custkey"), ("orders", "o_custkey")):
-        name = f"bkt_{tbl}{tag}"
-        names[tbl] = name
-        fp = source_fingerprint(os.path.join(sf_dir, f"{tbl}.parquet"))
-        marker = _scratch(sf_dir, f"bkt_{tbl}") + ".fingerprint"
-        fresh = False
-        if spark.catalog.tableExists(name) and os.path.exists(marker):
-            with open(marker) as fh:
-                fresh = fh.read().strip() == fp
-        if fresh:
-            continue
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            load_table(spark, sf_dir, tbl)
-            .write.mode("overwrite")
-            .option("path", _scratch(sf_dir, f"bkt_{tbl}"))
-            .bucketBy(8, key)
-            .sortBy(key)
-            .saveAsTable(name)
+        src = load_table(spark, sf_dir, tbl)
+
+        def write(path: str, src=src, key=key) -> None:
+            throwaway = f"bkt_build_{uuid.uuid4().hex}"
+            (
+                src.write.option("path", path)
+                .bucketBy(8, key)
+                .sortBy(key)
+                .saveAsTable(throwaway)
+            )
+            spark.sql(f"DROP TABLE {throwaway}")
+
+        path = artifact_dir(sf_dir, f"{tbl}.parquet", f"bkt_{tbl}", {}, write, __name__)
+        name = f"bkt_{tbl}_{source_fingerprint(path)}"
+        cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in src.schema)
+        # Spark takes a bucket spec only with an explicit column list
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {name} ({cols}) USING parquet "
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO 8 BUCKETS "
+            f"LOCATION '{path}'"
         )
-        with open(marker, "w") as fh:
-            fh.write(fp)
-    c = spark.table(names["customer"])
-    o = spark.table(names["orders"])
+        sides[tbl] = spark.table(name)
+    c, o = sides["customer"], sides["orders"]
     joined = c.hint("merge").join(o, o.o_custkey == c.c_custkey)
     return joined.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -258,22 +261,22 @@ def csv_corrupt_records_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per status: corrupt/good row counts and the exact DECIMAL revenue of
     the rows that survived. The oracle derives the same audit from the
     clean table and the same %10 rule."""
-    path = _scratch(sf_dir, "orders_corrupt_csv")
-    o = load_table(spark, sf_dir, "orders")
-    price = F.when(
-        F.col("o_orderkey") % 10 == 0, F.lit("N/A")
-    ).otherwise(F.col("o_totalprice").cast("string"))
-    (
-        o.select(
+
+    def write(path: str) -> None:
+        price = F.when(
+            F.col("o_orderkey") % 10 == 0, F.lit("N/A")
+        ).otherwise(F.col("o_totalprice").cast("string"))
+        load_table(spark, sf_dir, "orders").select(
             F.concat_ws(
                 ",",
                 F.col("o_orderkey").cast("string"),
                 "o_orderstatus",
                 price,
             ).alias("value")
-        )
-        .write.mode("overwrite")
-        .text(path)
+        ).write.text(path)
+
+    path = artifact_dir(
+        sf_dir, "orders.parquet", "orders_corrupt_csv", {}, write, __name__
     )
     back = (
         spark.read.schema(
@@ -317,8 +320,12 @@ def text_points_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     precision."""
     from .text_points import parse_points, write_points
 
-    path = _scratch(sf_dir, "points_text")
-    write_points(load_table(spark, sf_dir, "embeddings"), path, "embedding")
+    def write(path: str) -> None:
+        write_points(load_table(spark, sf_dir, "embeddings"), path, "embedding")
+
+    path = artifact_dir(
+        sf_dir, "embeddings.parquet", "points_text", {}, write, __name__
+    )
     parsed = parse_points(spark, path)
     return parsed.select(F.size("features").alias("dim"), "features").groupBy(
         "dim"

@@ -1,6 +1,7 @@
 """Artifact build-once machinery: version-directory freshness, the
-rename commit, and the cross-process build lock (two processes sharing an
-sf_dir must not race overlapping writes into one build — ADVICE r5)."""
+rename commit, the cross-process build lock (two processes sharing an
+sf_dir must not race overlapping writes into one build — ADVICE r5), and
+the one scratch directory per sf_dir that every build lives under."""
 
 from __future__ import annotations
 
@@ -16,8 +17,8 @@ import pytest
 from k_means_in_mapreduce_spark import artifacts as A
 
 
-def _in_sf(sf_dir, name):
-    return os.path.join(sf_dir, name)
+def _in_sf(sf_dir):
+    return sf_dir
 
 
 @pytest.fixture
@@ -30,7 +31,7 @@ def sf(tmp_path, monkeypatch):
 
 
 def _build(sf_dir, write, p=1):
-    """``artifact_dir`` of entry ``art_t`` over ``<sf_dir>/src``, params
+    """``artifact_dir`` of entry ``t`` over ``<sf_dir>/src``, params
     ``{"p": p}``."""
     return A.artifact_dir(sf_dir, "src", "t", {"p": p}, write, A.__name__)
 
@@ -78,7 +79,7 @@ def test_locked_rebuild_waits_for_concurrent_builder(sf):
     shutil.rmtree(d)  # nothing committed: the next call misses
     # flock conflicts apply between separate open file descriptions even
     # within one process, so a thread faithfully models a second process
-    lock = os.path.join(sf, "art_t", ".build.lock")
+    lock = os.path.join(sf, "t", ".build.lock")
     holder_fd = os.open(lock, os.O_CREAT | os.O_RDWR)
     fcntl.flock(holder_fd, fcntl.LOCK_EX)
 
@@ -100,8 +101,8 @@ def test_locked_rebuild_ignores_leftover_lock_file(sf):
     """A lock FILE left by a crashed builder holds no flock (the kernel
     released it with the process) — acquisition is immediate, no
     staleness heuristic involved."""
-    os.makedirs(os.path.join(sf, "art_t"))
-    with open(os.path.join(sf, "art_t", ".build.lock"), "w"):
+    os.makedirs(os.path.join(sf, "t"))
+    with open(os.path.join(sf, "t", ".build.lock"), "w"):
         pass  # leftover file, nobody holds the flock
 
     built = []
@@ -181,40 +182,78 @@ def test_entry_keeps_the_two_newest_versions(sf):
     with pytest.raises(RuntimeError, match="before the commit"):
         _build(sf, dies, p=9)
     d3 = _build(sf, _fake_write([]), p=3)
-    assert sorted(os.listdir(os.path.join(sf, "art_t"))) == sorted(
+    assert sorted(os.listdir(os.path.join(sf, "t"))) == sorted(
         [".build.lock", os.path.basename(d2), os.path.basename(d3)]
     )
 
 
-def _quantiles_sf(tmp_path):
+def _sf_copy(tmp_path, *tables):
+    """A new sf_dir holding copies of sf0.001's ``tables``."""
     from .conftest import SF0001
 
     sf = str(tmp_path / "sf")
     os.makedirs(sf)
-    shutil.copyfile(f"{SF0001}/lineitem.parquet", f"{sf}/lineitem.parquet")
+    for t in tables:
+        shutil.copyfile(f"{SF0001}/{t}.parquet", f"{sf}/{t}.parquet")
     return sf
 
 
 def test_held_plan_survives_a_rebuild_on_rewritten_source(spark, tmp_path):
-    """A ``lineitem_price_quantiles`` DataFrame held across a rebuild (the
-    source rewritten with the same rows, so its fingerprint moves) still
-    collects its rows: the rebuild writes a new version beside the one
-    the held plan lists."""
+    """A ``lineitem_price_quantiles`` or ``bucketed_join_segment_revenue``
+    DataFrame held across a rebuild (its sources rewritten with the same
+    rows, so their fingerprints move) still collects its rows: the
+    rebuild writes a new version beside the one the held plan lists."""
     import pyarrow.parquet as pq
 
     import bench
     from k_means_in_mapreduce_spark import registry
 
-    sf = _quantiles_sf(tmp_path)
-    q = registry.QUERIES["lineitem_price_quantiles"]
+    sources = {
+        "lineitem_price_quantiles": ("lineitem",),
+        "bucketed_join_segment_revenue": ("customer", "orders"),
+    }
+    sf = _sf_copy(tmp_path, "lineitem", "customer", "orders")
+    try:
+        for name, tables in sources.items():
+            q = registry.QUERIES[name]
+            rows = sorted(q(spark, sf).collect())
+            held = q(spark, sf)
+            for t in tables:
+                src = f"{sf}/{t}.parquet"
+                before = A.source_fingerprint(src)
+                pq.write_table(pq.read_table(src), src)  # the same rows, a new file
+                assert A.source_fingerprint(src) != before
+            assert sorted(q(spark, sf).collect()) == rows, name  # rebuilt
+            assert sorted(held.collect()) == rows, name
+    finally:
+        bench.clear_artifact_cache(sf)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "csv_roundtrip_orders_by_status",
+        "json_roundtrip_events_daily",
+        "partitioned_sink_pruned_scan",
+        "orc_roundtrip_lineitem_status",
+        "csv_corrupt_records_audit",
+        "text_points_ingest",
+        "points_text_export_roundtrip",
+    ],
+)
+def test_held_round_trip_survives_a_second_call(spark, tmp_path, name):
+    """A file round trip's DataFrame held across a second call collects
+    the second call's rows: that call serves the committed sink instead
+    of rewriting the files the held plan lists."""
+    import bench
+    from k_means_in_mapreduce_spark import registry
+
+    sf = _sf_copy(tmp_path, "orders", "events", "lineitem", "embeddings")
+    q = registry.QUERIES[name]
     try:
         held = q(spark, sf)
-        rows = sorted(held.collect())
-        src = f"{sf}/lineitem.parquet"
-        before = A.source_fingerprint(src)
-        pq.write_table(pq.read_table(src), src)  # the same rows, a new file
-        assert A.source_fingerprint(src) != before
-        assert sorted(q(spark, sf).collect()) == rows  # rebuilt
+        rows = sorted(q(spark, sf).collect())
+        assert rows
         assert sorted(held.collect()) == rows
     finally:
         bench.clear_artifact_cache(sf)
@@ -228,7 +267,7 @@ def test_held_plan_survives_a_rebuild_under_changed_code(
     import bench
     from k_means_in_mapreduce_spark import gate_ledger, registry
 
-    sf = _quantiles_sf(tmp_path)
+    sf = _sf_copy(tmp_path, "lineitem")
     code = ["A"]
     monkeypatch.setattr(
         gate_ledger, "module_fingerprint", lambda dotted, ref=None: code[0]
@@ -299,207 +338,70 @@ def test_interrupted_ivf_rebuild_is_never_served(spark, tmp_path, monkeypatch):
         bench.clear_artifact_cache(sf)
 
 
-def test_clear_artifact_cache_matches_known_names_and_exact_tag(tmp_path):
-    """bench.clear_artifact_cache must only delete scratch entries of the
-    known name families carrying EXACTLY the requested sf_dir's tag
-    (ADVICE r6: bare endswith(tag) also cleared a different sf_dir whose
-    sanitized tag had this tag as a suffix)."""
+def test_clear_artifact_cache_removes_all_and_only_its_sf_dirs_scratch(
+    spark, tmp_path
+):
+    """Clearing sf_dir ``a`` removes all of its scratch (an artifact, a
+    file round trip and both bucketed copies) and none of an sf_dir whose
+    path ends with ``a``'s path; clearing "/" removes no other root. The
+    bucketed join still runs after its copies were cleared under the live
+    session."""
     import bench
-    from k_means_in_mapreduce_spark.artifacts import scratch_tag
+    from k_means_in_mapreduce_spark import registry
 
-    sf_dir = "/bench_test_zone/data/sf1"
-    tag = scratch_tag(sf_dir)
-    tmp = os.path.join(os.path.dirname(os.path.abspath(bench.__file__)), ".tmp")
-    os.makedirs(tmp, exist_ok=True)
+    from .conftest import SF0001
 
-    doomed = [
-        f"art_pairs--{tag}",            # artifact family
-        f"bkt_orders--{tag}.fingerprint",  # bucketed-copy marker
-        f"centroids_text--{tag}",       # fixed name, exact tag
-        f"points_text--{tag}",
-    ]
-    survivors = [
-        f"unrelated--{tag}",            # not a scratch family name
-        f"centroids_textx--{tag}",      # fixed name must match exactly
-        # a DIFFERENT sf_dir (/other/bench_test_zone/data/sf1) whose tag
-        # has ours as a suffix, behind a fixed-name entry: the old
-        # endswith(tag) deleted this
-        "centroids_text--_other" + tag,
-        f"art_pairs--{tag}_trailing",   # tag must terminate the entry
-        f"art_pairs{tag}",              # pre-delimiter legacy naming
-    ]
+    a = tmp_path / "data" / "sf"
+    b = tmp_path / "other" / str(a).lstrip("/")
+    names = (
+        "lineitem_price_quantiles",
+        "csv_roundtrip_orders_by_status",
+        "bucketed_join_segment_revenue",
+    )
+    entries = ["bkt_customer", "bkt_orders", "lineitem_quantiles", "orders_csv"]
+    bucketed = registry.QUERIES["bucketed_join_segment_revenue"]
     try:
-        for name in doomed + survivors:
-            if name.endswith(".fingerprint"):
-                with open(os.path.join(tmp, name), "w"):
-                    pass
-            else:
-                os.makedirs(os.path.join(tmp, name), exist_ok=True)
+        for sf in (a, b):
+            sf.mkdir(parents=True)
+            for t in ("lineitem", "customer", "orders"):
+                shutil.copyfile(f"{SF0001}/{t}.parquet", sf / f"{t}.parquet")
+            for n in names:
+                registry.QUERIES[n](spark, str(sf)).collect()
+            assert sorted(os.listdir(A._scratch(str(sf)))) == entries
+        joined = sorted(bucketed(spark, str(a)).collect())
 
-        removed = bench.clear_artifact_cache(sf_dir)
+        assert bench.clear_artifact_cache(str(a)) == len(entries)
+        assert not os.path.exists(A._scratch(str(a)))
+        assert sorted(os.listdir(A._scratch(str(b)))) == entries
+        assert bench.clear_artifact_cache(str(a)) == 0
 
-        assert removed == len(doomed)
-        for name in doomed:
-            assert not os.path.exists(os.path.join(tmp, name)), name
-        for name in survivors:
-            assert os.path.exists(os.path.join(tmp, name)), name
+        tmp_root = os.path.dirname(A._scratch(str(a)))
+        others = set(os.listdir(tmp_root))
+        bench.clear_artifact_cache("/")
+        assert others - {os.path.basename(A._scratch("/"))} <= set(
+            os.listdir(tmp_root)
+        )
+        assert sorted(os.listdir(A._scratch(str(b)))) == entries
+
+        assert sorted(bucketed(spark, str(a)).collect()) == joined
     finally:
-        for name in doomed + survivors:
-            full = os.path.join(tmp, name)
-            if os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
-            elif os.path.exists(full):
-                os.remove(full)
+        for sf in (a, b):
+            bench.clear_artifact_cache(str(sf))
 
 
-def test_scratch_entry_pattern_covers_every_scratch_call_site():
-    """Tripwire (r7 review): bench.scratch_entry_pattern hardcodes the
-    scratch-name families; a NEW `_scratch(sf_dir, ...)` family added in
-    any package module without extending the pattern would silently stop
-    being cleared before bench runs — the 'cold' column for its consumer
-    query would then time a warm parquet serve. Walk every call site's
-    AST and require the pattern to match a concrete sample entry name."""
-    import ast
+def test_only_artifacts_names_scratch_paths():
+    """Every scratch path comes from ``artifact_dir``: no package module
+    but ``artifacts.py`` references ``_scratch``, so every scratch file
+    lives under the directory ``bench.clear_artifact_cache`` removes."""
+    import pathlib
 
-    import bench
-
-    pkg_root = os.path.dirname(os.path.abspath(A.__file__))
-    tag = "_sample_tag"
-    pat = bench.scratch_entry_pattern(tag)
-
-    def sample_name(node):
-        # literal: "orders_csv"; f-string: f"art_{name}" -> "art_sample"
-        if isinstance(node, ast.Constant) and isinstance(node.value, str):
-            return node.value
-        if isinstance(node, ast.JoinedStr):
-            parts = []
-            for v in node.values:
-                if isinstance(v, ast.Constant):
-                    parts.append(str(v.value))
-                else:
-                    parts.append("sample")
-            return "".join(parts)
-        return None
-
-    call_sites = []
-    for dirpath, dirs, files in os.walk(pkg_root):
-        dirs[:] = [d for d in dirs if d != "__pycache__"]
-        for fn in files:
-            if not fn.endswith(".py"):
-                continue
-            full = os.path.join(dirpath, fn)
-            with open(full, encoding="utf-8") as fh:
-                tree = ast.parse(fh.read())
-            def _is_scratch_func(func):
-                # bare name `_scratch(...)` or attribute form like
-                # `artifacts._scratch(...)` — both are real call sites;
-                # matching only ast.Name would let the attribute form
-                # silently bypass this tripwire (ADVICE r7 low)
-                if isinstance(func, ast.Name):
-                    return func.id == "_scratch"
-                if isinstance(func, ast.Attribute):
-                    return func.attr == "_scratch"
-                return False
-
-            for node in ast.walk(tree):
-                if (
-                    isinstance(node, ast.Call)
-                    and _is_scratch_func(node.func)
-                    and len(node.args) >= 2
-                ):
-                    name = sample_name(node.args[1])
-                    assert name is not None, (
-                        f"{full}:{node.lineno}: _scratch name is not a "
-                        "string literal/f-string — the bench tripwire "
-                        "can't derive a sample; use a literal or extend "
-                        "this test"
-                    )
-                    call_sites.append((full, node.lineno, name))
-
-    assert call_sites, "no _scratch call sites found — walker broken?"
-    for full, lineno, name in call_sites:
-        entry = f"{name}--{tag}"  # artifacts._scratch's on-disk naming
-        assert pat.match(entry), (
-            f"{full}:{lineno}: scratch family {name!r} is NOT covered by "
-            "bench.scratch_entry_pattern — extend the pattern or the "
-            "bench cold column silently degrades to warm for it"
-        )
-        # bucketed-table markers persist as <entry>.fingerprint files
-        assert pat.match(entry + ".fingerprint"), (full, lineno, name)
-
-
-def test_scratch_entry_pattern_adversarial_suffix_dirs():
-    """Property (VERDICT r7 #6): scratch_entry_pattern against adversarial
-    sf_dir pairs where one path is a path-suffix of the other (/data/sf1
-    vs /other/data/sf1 — their sanitized tags share a suffix).
-
-    With artifacts._scratch's ``--`` name/tag delimiter, NO family —
-    fixed or variable — matches across tags in either direction: the tag
-    alphabet excludes '-' and so does the art_/bkt_ name wildcard, so the
-    delimiter pins the tag boundary exactly. (Before the delimiter, an
-    art_/bkt_ entry tagged with the longer tag matched the shorter tag's
-    pattern — the wildcard absorbed the extra path prefix; the r8 version
-    of this test pinned that residual as the red/green target.)"""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    import bench
-    from k_means_in_mapreduce_spark.artifacts import scratch_tag
-
-    FIXED = (
-        "centroids_text", "orders_csv", "events_json",
-        "orders_part", "lineitem_orc", "orders_corrupt_csv", "points_text",
+    pkg = pathlib.Path(A.__file__).parent
+    users = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if "_scratch" in p.read_text(encoding="utf-8")
     )
-    seg = st.text(alphabet="abxz059.-", min_size=1, max_size=8)
-
-    @settings(max_examples=100, deadline=None)
-    @given(
-        inner=st.lists(seg, min_size=1, max_size=3),
-        extra=st.lists(seg, min_size=1, max_size=2),
-    )
-    def run(inner, extra):
-        a = "/" + "/".join(inner)
-        b = "/" + "/".join(extra) + a  # b's path ends with a's FULL path
-        tag_a, tag_b = scratch_tag(a), scratch_tag(b)
-        assert tag_b.endswith(tag_a) and tag_b != tag_a
-        assert "-" not in tag_a  # the delimiter's load-bearing guarantee
-        pat_a, pat_b = (
-            bench.scratch_entry_pattern(tag_a),
-            bench.scratch_entry_pattern(tag_b),
-        )
-
-        for fam in FIXED:
-            # own tag always matches (dir + bucket marker forms)
-            assert pat_a.match(f"{fam}--{tag_a}")
-            assert pat_a.match(f"{fam}--{tag_a}.fingerprint")
-            # fixed names never cross tags, in either direction
-            assert not pat_a.match(f"{fam}--{tag_b}")
-            assert not pat_b.match(f"{fam}--{tag_a}")
-
-        # variable families: own tag matches; neither direction crosses —
-        # including the pre-delimiter residual direction (longer tag's
-        # entry vs shorter tag's pattern), now dead because the wildcard
-        # can't absorb past the '--'
-        assert pat_a.match(f"art_pairs--{tag_a}")
-        assert pat_a.match(f"bkt_orders--{tag_a}.fingerprint")
-        assert not pat_b.match(f"art_pairs--{tag_a}")
-        assert not pat_b.match(f"bkt_orders--{tag_a}")
-        assert not pat_a.match(f"art_pairs--{tag_b}")
-        assert not pat_a.match(f"bkt_orders--{tag_b}.fingerprint")
-
-        # pre-delimiter legacy entries never match (orphaned on rename,
-        # swept once manually when the delimiter landed)
-        assert not pat_a.match(f"art_pairs{tag_a}")
-        assert not pat_a.match(f"centroids_text{tag_a}")
-
-        # string-suffix WITHOUT the path boundary (/zdata/sf1 vs
-        # /data/sf1 style): still no cross-match
-        c = "/" + "".join(extra) + inner[0]  # first segment glued, no '/'
-        tag_c = scratch_tag(c)
-        if tag_c != tag_a and not tag_c.endswith(tag_a):
-            assert not pat_a.match(f"art_pairs--{tag_c}")
-
-    run()
+    assert users == ["artifacts.py"]
 
 
 # ---------------------------------------------------------------------------

@@ -34,7 +34,9 @@ def test_minhash_pairs_are_exact_and_recall_strong_pairs(
     served = sorted(map(tuple, registry.QUERIES[other](spark, SF001).collect()))
     # run the builder itself, not the build-once artifact it is served from
     monkeypatch.setattr(
-        dd, "_dedup_artifact", lambda spark, sf_dir, family, params, build: build()
+        dd,
+        "materialized_artifact",
+        lambda spark, sf_dir, source_file, name, params, build: build(),
     )
     cache = spark._jsparkSession.sharedState().cacheManager()
     cached_before = cache.numCachedEntries()

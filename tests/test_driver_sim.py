@@ -27,6 +27,13 @@ def test_compare_is_order_insensitive_and_float_tolerant():
     driver_sim.compare(s, o, "ok")  # no raise
 
 
+def test_compare_matches_null_with_null():
+    """NULL on both sides matches, in a string or a timestamp column, as
+    in the driver's value hash."""
+    s = pd.DataFrame({"k": ["a", None], "t": pd.to_datetime(["2020-01-01", None])})
+    driver_sim.compare(s, s.iloc[::-1].copy(), "q")  # no raise
+
+
 @pytest.mark.parametrize(
     "bad, msg",
     [
@@ -34,6 +41,7 @@ def test_compare_is_order_insensitive_and_float_tolerant():
         (pd.DataFrame({"k": ["a", "c"], "v": [1.0, 2.0]}), "col k"),
         (pd.DataFrame({"k": ["a"], "v": [1.0]}), "rows"),
         (pd.DataFrame({"k": ["a", "b"], "x": [1.0, 2.0]}), "columns"),
+        (pd.DataFrame({"k": ["a", None], "v": [1.0, 2.0]}), "col k"),
     ],
 )
 def test_compare_raises_on_each_mismatch_kind(bad, msg):

@@ -76,8 +76,23 @@ def select_names(qs: dict, subset: str, named: list[str]) -> list[str]:
     raise SystemExit(f"unknown --subset {subset}")
 
 
+def make_duck_con(sf_dir: str):
+    """The driver's oracle setup: a DuckDB connection with each table of
+    ``sf_dir`` as a view."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
 def compare(s_df, o_df, name: str) -> None:
-    """Raise AssertionError on any mismatch (same model as the driver)."""
+    """Raise AssertionError on any mismatch (same model as the driver):
+    the same column set and row count, then the values in any row order.
+    A column that is float on the Spark side matches within rtol 1e-6 and
+    atol 1e-9; every other column matches exactly. NULL matches NULL, as
+    in the driver's value hash."""
     import numpy as np
     import pandas as pd
 
@@ -91,14 +106,22 @@ def compare(s_df, o_df, name: str) -> None:
     s_df = s_df.sort_values(keys, ignore_index=True)
     o_df = o_df.sort_values(keys, ignore_index=True)
     for c in cols:
-        if pd.api.types.is_float_dtype(s_df[c]):
+        s, o = s_df[c], o_df[c]
+        if pd.api.types.is_float_dtype(s):
             assert np.allclose(
-                s_df[c], o_df[c], rtol=1e-6, atol=1e-9, equal_nan=True
+                s.to_numpy(dtype=float),
+                o.to_numpy(dtype=float),
+                rtol=1e-6,
+                atol=1e-9,
+                equal_nan=True,
             ), f"float col {c}"
         else:
-            assert (
-                s_df[c].astype(object).eq(o_df[c].astype(object)).all()
-            ), f"col {c}"
+            s, o = s.astype(object), o.astype(object)
+            bad = ~(s.eq(o) | (s.isna() & o.isna()))
+            assert not bad.any(), (
+                f"col {c}: spark={s[bad].head(3).tolist()} "
+                f"oracle={o[bad].head(3).tolist()}"
+            )
 
 
 def main(argv: list[str]) -> int:
@@ -110,8 +133,6 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--threads", type=int, default=8)
     args = ap.parse_args(argv)
-
-    import duckdb
 
     import __spark_entry__ as E
     from pyspark.sql import SparkSession
@@ -131,11 +152,7 @@ def main(argv: list[str]) -> int:
     entry_rows = len(E.entry(spark).collect())
     print(f"entry: {entry_rows} rows")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'"
-        )
+    con = make_duck_con(args.sf_dir)
     qs, oracles = E.queries(), E.oracle_sql()
     names = select_names(qs, args.subset, args.names)
     n_match = n_rows_only = 0
