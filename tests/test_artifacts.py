@@ -338,21 +338,20 @@ def test_interrupted_ivf_rebuild_is_never_served(spark, tmp_path, monkeypatch):
         bench.clear_artifact_cache(sf)
 
 
-def test_clear_artifact_cache_removes_all_and_only_its_sf_dirs_scratch(
+def test_clear_artifact_cache_matches_known_names_and_exact_tag(
     spark, tmp_path
 ):
-    """Clearing sf_dir ``a`` removes all of its scratch (an artifact, a
-    file round trip and both bucketed copies) and none of an sf_dir whose
-    path ends with ``a``'s path; clearing "/" removes no other root. The
-    bucketed join still runs after its copies were cleared under the live
-    session."""
+    """Clearing an sf_dir removes all of its scratch (an artifact, a file
+    round trip and both bucketed copies, each under its known name) and no
+    other sf_dir's scratch directory; clearing "/" removes no other root.
+    The bucketed join still runs after its copies were cleared under the
+    live session."""
     import bench
     from k_means_in_mapreduce_spark import registry
 
     from .conftest import SF0001
 
-    a = tmp_path / "data" / "sf"
-    b = tmp_path / "other" / str(a).lstrip("/")
+    sf = tmp_path / "data" / "sf"
     names = (
         "lineitem_price_quantiles",
         "csv_roundtrip_orders_by_status",
@@ -360,33 +359,80 @@ def test_clear_artifact_cache_removes_all_and_only_its_sf_dirs_scratch(
     )
     entries = ["bkt_customer", "bkt_orders", "lineitem_quantiles", "orders_csv"]
     bucketed = registry.QUERIES["bucketed_join_segment_revenue"]
+    root = A._scratch(str(sf))
+    tmp_root = os.path.dirname(root)
     try:
-        for sf in (a, b):
-            sf.mkdir(parents=True)
-            for t in ("lineitem", "customer", "orders"):
-                shutil.copyfile(f"{SF0001}/{t}.parquet", sf / f"{t}.parquet")
-            for n in names:
-                registry.QUERIES[n](spark, str(sf)).collect()
-            assert sorted(os.listdir(A._scratch(str(sf)))) == entries
-        joined = sorted(bucketed(spark, str(a)).collect())
+        sf.mkdir(parents=True)
+        for t in ("lineitem", "customer", "orders"):
+            shutil.copyfile(f"{SF0001}/{t}.parquet", sf / f"{t}.parquet")
+        for n in names:
+            registry.QUERIES[n](spark, str(sf)).collect()
+        assert sorted(os.listdir(root)) == entries
+        joined = sorted(bucketed(spark, str(sf)).collect())
 
-        assert bench.clear_artifact_cache(str(a)) == len(entries)
-        assert not os.path.exists(A._scratch(str(a)))
-        assert sorted(os.listdir(A._scratch(str(b)))) == entries
-        assert bench.clear_artifact_cache(str(a)) == 0
+        others = set(os.listdir(tmp_root)) - {os.path.basename(root)}
+        assert bench.clear_artifact_cache(str(sf)) == len(entries)
+        assert not os.path.exists(root)
+        assert others <= set(os.listdir(tmp_root))
+        assert bench.clear_artifact_cache(str(sf)) == 0
 
-        tmp_root = os.path.dirname(A._scratch(str(a)))
         others = set(os.listdir(tmp_root))
         bench.clear_artifact_cache("/")
         assert others - {os.path.basename(A._scratch("/"))} <= set(
             os.listdir(tmp_root)
         )
-        assert sorted(os.listdir(A._scratch(str(b)))) == entries
 
-        assert sorted(bucketed(spark, str(a)).collect()) == joined
+        assert sorted(bucketed(spark, str(sf)).collect()) == joined
     finally:
-        for sf in (a, b):
-            bench.clear_artifact_cache(str(sf))
+        bench.clear_artifact_cache(str(sf))
+
+
+def test_scratch_entry_pattern_adversarial_suffix_dirs():
+    """Property over adversarial sf_dir pairs where one path is a
+    path-suffix of the other (/data/sf1 vs /other/data/sf1): each gets a
+    scratch directory of its own, neither inside the other, and clearing
+    either one leaves every entry of the other in place."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    import bench
+
+    seg = st.text(alphabet="abxz059.-", min_size=1, max_size=8).filter(
+        lambda s: s not in (".", "..")  # path steps, not names
+    )
+    zone = "/bench_test_zone"
+
+    def fill(sf_dir):
+        for e in ("art_pairs", "bkt_orders", "centroids_text"):
+            os.makedirs(os.path.join(A._scratch(sf_dir), e, "v-0"))
+
+    @settings(max_examples=100, deadline=None)
+    @given(
+        inner=st.lists(seg, min_size=1, max_size=3),
+        extra=st.lists(seg, min_size=1, max_size=2),
+    )
+    def run(inner, extra):
+        a = zone + "/" + "/".join(inner)
+        b = "/" + "/".join(extra) + a  # b's path ends with a's FULL path
+        ra, rb = A._scratch(a), A._scratch(b)
+        assert ra != rb
+        assert not rb.startswith(ra + os.sep)
+        assert not ra.startswith(rb + os.sep)
+        try:
+            for first, second in ((a, b), (b, a)):
+                fill(first)
+                fill(second)
+                assert bench.clear_artifact_cache(first) == 3
+                assert not os.path.exists(A._scratch(first))
+                assert sorted(os.listdir(A._scratch(second))) == [
+                    "art_pairs", "bkt_orders", "centroids_text",
+                ]
+                assert bench.clear_artifact_cache(second) == 3
+        finally:
+            for sf_dir in (a, b):
+                shutil.rmtree(A._scratch(sf_dir), ignore_errors=True)
+
+    run()
 
 
 def test_only_artifacts_names_scratch_paths():
