@@ -32,10 +32,14 @@ PACKAGE_ROOT = __package__
 
 def _scratch(sf_dir: str) -> str:
     """``.tmp/<tag>``: the one directory that holds every scratch file
-    the package writes for ``sf_dir``. The tag is the absolute path with
-    '/' spelled '_', so it is never empty, and an sf_dir whose path ends
-    with another one's path gets a directory of its own."""
-    tag = os.path.abspath(sf_dir).replace("/", "_")
+    the package writes for ``sf_dir``. The tag is the absolute path
+    percent-encoded with no safe character ('/' is ``%2F``, '%' is
+    ``%25``): it is never empty and holds no '/', and it decodes back to
+    the path, so two sf_dirs never share a directory (``/a/b`` and
+    ``/a_b`` included) and neither's directory is inside the other's."""
+    from urllib.parse import quote
+
+    tag = quote(os.path.abspath(sf_dir), safe="")
     return os.path.join(_REPO_ROOT, ".tmp", tag)
 
 

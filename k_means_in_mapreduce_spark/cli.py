@@ -104,7 +104,7 @@ def main(argv: list[str] | None = None) -> int:
     spark.conf.set("spark.sql.shuffle.partitions", str(num_reducer))
 
     # a line that is not exactly `dim` numbers becomes a NULL vector,
-    # which fit's init-sample job counts and refuses; fit caches the rows
+    # which the fit's first job counts and refuses; fit caches the rows
     f = F.col("features")
     pts = parse_points(spark, inp).select(
         F.when((F.size(f) == dim) & ~F.exists(f, lambda x: x.isNull()), f)

@@ -391,7 +391,10 @@ def test_scratch_entry_pattern_adversarial_suffix_dirs():
     """Property over adversarial sf_dir pairs where one path is a
     path-suffix of the other (/data/sf1 vs /other/data/sf1): each gets a
     scratch directory of its own, neither inside the other, and clearing
-    either one leaves every entry of the other in place."""
+    either one leaves every entry of the other in place. Property over
+    any two distinct absolute paths, spelled from '/', '_', '%' and the
+    characters of their escapes (``/a/b`` vs ``/a_b`` among them): their
+    scratch directories are distinct siblings."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -433,6 +436,20 @@ def test_scratch_entry_pattern_adversarial_suffix_dirs():
                 shutil.rmtree(A._scratch(sf_dir), ignore_errors=True)
 
     run()
+    assert A._scratch("/a/b") != A._scratch("/a_b")
+
+    @settings(max_examples=300, deadline=None)
+    @given(st.lists(st.text(alphabet="ab_/%.-2F", max_size=10), min_size=2,
+                    max_size=2, unique_by=lambda p: os.path.abspath("/" + p)))
+    def injective(paths):
+        # distinct absolute paths: distinct sibling directories under .tmp
+        ra, rb = (A._scratch("/" + p) for p in paths)
+        assert ra != rb
+        assert os.path.dirname(ra) == os.path.dirname(rb)
+        assert not rb.startswith(ra + os.sep)
+        assert not ra.startswith(rb + os.sep)
+
+    injective()
 
 
 def test_only_artifacts_names_scratch_paths():

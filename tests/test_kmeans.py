@@ -125,17 +125,21 @@ _MID_REINIT_DRAWS = [[[7.5, 1.5], [1.5, 8.5], [3.5, 4.5]],
 
 
 def _draws_by_seed(monkeypatch, seed, draws):
-    """Make sample_initial_centroids return draws[r] for seed + 1000·r.
-    The real sample still runs first: the fit reads its row count from
-    the init sample's job, so a draw that ran no job would leave it
-    waiting for that count."""
-    real = K.sample_initial_centroids
+    """Make every draw job of a fit draw draws[r] for seed + 1000·r. The
+    real job still runs first, without rounds: the fit reads its row
+    count and checks the input on it. Its task runs no round from its own
+    draw, so the fit's loop jobs start from the given draws."""
+    import dataclasses
 
-    def drawn(df, k, s, col="embedding"):
-        real(df, k, s, col)
-        return [list(c) for c in draws[(s - seed) // 1000]]
+    real = K._draw_job
 
-    monkeypatch.setattr(K, "sample_initial_centroids", drawn)
+    def drawn(points, k, s, _rounds, tol):
+        got = real(points, k, s, 0, tol)
+        return dataclasses.replace(
+            got, centroids=[list(c) for c in draws[(s - seed) // 1000]]
+        )
+
+    monkeypatch.setattr(K, "_draw_job", drawn)
 
 
 def _numpy_replay(X, draws, max_iter, tol):
@@ -201,11 +205,17 @@ def _model_fields(m):
             m.centroid_history, m.reinit_count)
 
 
-@pytest.mark.parametrize("case", ["blobs", "tol-stop", "mid-reinit", "float"])
+@pytest.mark.parametrize(
+    "case", ["blobs", "tol-stop", "mid-reinit", "float", "fallback"]
+)
 def test_one_job_fit_equals_one_job_per_round(spark, monkeypatch, case):
-    """A one-task fit runs all its rounds in one loop job; forced to one
-    job per round over the same one partition, the model is ``==`` in
-    every field. 25k points make three Arrow batches per task."""
+    """A one-task fit runs all its rounds in its one draw job; forced to
+    a draw without rounds and one loop job per round over the same
+    partitions, the model is ``==`` in every field. 25k points make three
+    Arrow batches per task. In the fallback case the per-task limit sits
+    between the plan's size estimate and the exact n·d·8: the fit tries
+    one task, which outgrows the limit and only draws, and the loop runs
+    one job per round over two tasks."""
     batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
     assert 25_000 > 2 * batch
     cfg = K.KMeansConfig(k=4, max_iter=8, tol=0.0, seed=3)
@@ -219,26 +229,41 @@ def test_one_job_fit_equals_one_job_per_round(spark, monkeypatch, case):
                                    "embedding array<double>")
         cfg = K.KMeansConfig(k=3, max_iter=6, tol=0.0, seed=7)
         _draws_by_seed(monkeypatch, 7, _MID_REINIT_DRAWS)
+    elif case == "fallback":
+        nbytes = 25_000 * 8 * 8
+        est = K._estimated_bytes(df.select(F.col("embedding").alias("features")))
+        assert est < nbytes // 2
+        monkeypatch.setattr(K, "_TASK_BYTES", nbytes // 2)
 
-    orig = K._lloyd_job
+    draw, loop = K._draw_job, K._lloyd_job
     rounds = []
     with monkeypatch.context() as mp:
-        mp.setattr(K, "_lloyd_job",
-                   lambda p, c, r, tol: rounds.append(r) or orig(p, c, r, tol))
+        mp.setattr(K, "_draw_job", lambda p, k, s, r, tol: rounds.append(
+            ("draw", r)) or draw(p, k, s, r, tol))
+        mp.setattr(K, "_lloyd_job", lambda p, c, r, tol: rounds.append(
+            ("loop", r)) or loop(p, c, r, tol))
         one_job = K.fit(df, cfg)
     with monkeypatch.context() as mp:
-        mp.setattr(K, "_lloyd_job", lambda p, c, _r, tol: orig(p, c, 1, tol))
+        mp.setattr(K, "_draw_job", lambda p, k, s, _r, tol: draw(p, k, s, 0, tol))
+        mp.setattr(K, "_lloyd_job", lambda p, c, _r, tol: loop(p, c, 1, tol))
         per_round = K.fit(df, cfg)
     df.unpersist()
 
     assert _model_fields(one_job) == _model_fields(per_round)
     if case == "tol-stop":
         assert one_job.converged and one_job.n_iter < cfg.max_iter
-        assert rounds == [cfg.max_iter]
+        assert rounds == [("draw", cfg.max_iter)]
     elif case == "mid-reinit":
-        assert one_job.reinit_count == 1 and rounds == [6, 3]
+        # a createDataFrame input has no size estimate: the draws run no
+        # rounds, and a loop job of one task runs every remaining round
+        assert one_job.reinit_count == 1
+        assert rounds == [("draw", 0), ("loop", 6), ("draw", 0), ("loop", 3)]
+    elif case == "fallback":
+        assert one_job.n_iter == cfg.max_iter
+        assert rounds == [("draw", cfg.max_iter)] + [("loop", 1)] * 8
     else:
-        assert one_job.n_iter == cfg.max_iter and rounds == [cfg.max_iter]
+        assert one_job.n_iter == cfg.max_iter
+        assert rounds == [("draw", cfg.max_iter)]
 
 
 def test_fit_reads_through_a_cached_input(spark, monkeypatch):
@@ -246,7 +271,7 @@ def test_fit_reads_through_a_cached_input(spark, monkeypatch):
     relation appears during the fit, the caller's DataFrame stays cached
     afterwards (also when the fit fails with fewer than k rows), and the
     model equals a fit of the same rows uncached, so the seeded init
-    sample is unchanged."""
+    draw is unchanged."""
     from pyspark.storagelevel import StorageLevel
 
     sc = spark.sparkContext
@@ -268,13 +293,13 @@ def test_fit_reads_through_a_cached_input(spark, monkeypatch):
     before = cached_relations()
 
     seen = []
-    orig = K.sample_initial_centroids
+    orig = K._draw_job
 
     def spy(*a, **kw):
         seen.append(cached_relations())
         return orig(*a, **kw)
 
-    monkeypatch.setattr(K, "sample_initial_centroids", spy)
+    monkeypatch.setattr(K, "_draw_job", spy)
     try:
         got = K.fit(df, cfg)
         assert seen == [before]
@@ -437,17 +462,19 @@ def _no_conf_set(monkeypatch):
     ],
 )
 def test_fit_job_count_and_aqe_restored(spark, monkeypatch, partitions, target):
-    """With the session's AQE left on, a fit whose cached vectors fit one
-    task (1 partition kept, 12 coalesced down to it) runs 2 jobs: the init
-    sample, which also fills the cache and counts the rows, then one loop
-    job of one stage and one task that runs every round. With the target
-    forced to 3 (1 partition grown and re-cached, the path taken only when
-    cached partitions average over 128 MiB) the fit runs 3 + n_iter jobs:
-    AQE runs the repartition's map stage and the copy's cache fill as jobs
-    of their own, once per fit, then one job per round. No fit sets a
-    session conf, also one that fails with fewer than k rows, and the
-    session's AQE setting reads as before."""
+    """With the session's AQE left on, a fit whose vectors fit one task
+    (1 partition kept, 12 coalesced down to it) is 1 job of one stage and
+    one task: it fills the cache, counts and checks the rows, draws the
+    init and runs every round. With no one-task try (the plan's estimate
+    over the limit) and the loop's target forced to 3 (1 partition grown
+    and re-cached, the path taken only when cached partitions average
+    over 128 MiB) the fit runs 3 + n_iter jobs: the draw over the input's
+    one partition, then AQE runs the repartition's map stage and the
+    copy's cache fill as jobs of their own, once per fit, then one job
+    per round. No fit sets a session conf, also one that fails with fewer
+    than k rows, and the session's AQE setting reads as before."""
     if target is not None:
+        monkeypatch.setattr(K, "_TASK_BYTES", 0)
         monkeypatch.setattr(K, "_iteration_partitions", lambda _bytes: target)
     sets = _no_conf_set(monkeypatch)
     df = spark.range(0, 240, 1, partitions).select(
@@ -459,21 +486,19 @@ def test_fit_job_count_and_aqe_restored(spark, monkeypatch, partitions, target):
         lambda: K.fit(df, K.KMeansConfig(k=3, max_iter=3, tol=0.0, seed=5)),
     )
     tracker = spark.sparkContext.statusTracker()
+
+    def tasks(job):
+        return [tracker.getStageInfo(st).numTasks
+                for st in sorted(tracker.getJobInfo(job).stageIds)]
+
     assert m.n_iter == 3 and m.reinit_count == 0
-    assert len(jobs) == (2 if target is None else 3 + m.n_iter), jobs
+    assert len(jobs) == (1 if target is None else 3 + m.n_iter), jobs
     if target is None:
-        tasks = [
-            tracker.getStageInfo(st).numTasks
-            for st in sorted(tracker.getJobInfo(jobs[1]).stageIds)
-        ]
-        assert tasks == [1], (jobs[1], tasks)
+        assert tasks(jobs[0]) == [1], (jobs[0], tasks(jobs[0]))
     else:  # each round reads the re-cached copy: `target` tasks
+        assert tasks(jobs[0]) == [partitions], (jobs[0], tasks(jobs[0]))
         for job in jobs[-m.n_iter:]:
-            tasks = [
-                tracker.getStageInfo(st).numTasks
-                for st in sorted(tracker.getJobInfo(job).stageIds)
-            ]
-            assert tasks[-1] == target, (job, tasks)
+            assert tasks(job)[-1] == target, (job, tasks(job))
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
 
     with pytest.raises(ValueError, match="fewer than k"):
@@ -519,11 +544,14 @@ def test_concurrent_fits_on_one_session_equal_serial_fits(spark, monkeypatch):
 @pytest.mark.parametrize("partitions", [1, 3, 12])
 def test_fit_counts_rows_in_the_init_sample(spark, monkeypatch, partitions,
                                             cached):
-    """The fit's row count comes from the init sample's job: it sizes the
-    loop with ``n == df.count()``, and the init (a 0-iteration fit
-    returns it) is ``==`` to a standalone sample of the same df and seed.
-    An empty input still raises "empty dataset", and 2 rows with k=3
-    still raise "fewer than k"."""
+    """The fit's first job counts the rows and draws the init: the rows
+    of ``ORDER BY rand(seed) LIMIT k``, in that order, also at k == n. A
+    0-iteration fit returns the draw made without rounds over the input's
+    own partitions; the draw job's one task that loops draws the same
+    rows, and so does ``sample_initial_centroids``. With no one-task try,
+    the loop is sized with ``n == df.count()``. An empty input still
+    raises "empty dataset", and 2 rows with k=3 still raise "fewer than
+    k"."""
     df = spark.range(0, 500, 1, partitions).select(
         F.array(F.col("id").cast("double"), F.sin("id"), F.cos("id"))
         .alias("embedding")
@@ -535,14 +563,21 @@ def test_fit_counts_rows_in_the_init_sample(spark, monkeypatch, partitions,
     orig = K._iteration_partitions
     monkeypatch.setattr(K, "_iteration_partitions",
                         lambda b: sized.append(b) or orig(b))
-    cfg = K.KMeansConfig(k=4, max_iter=0, seed=partitions)
+    seed = partitions
+    base = df.select(F.col("embedding").alias("features"))
     try:
-        m = K.fit(df, cfg)
-        want = K.sample_initial_centroids(
-            df.select(F.col("embedding").alias("features")), 4, cfg.seed,
-            "features",
-        )
-        assert m.centroids == want and m.n_iter == 0
+        for k in (4, 500):
+            want = [list(r[0]) for r in df.select("embedding")
+                    .orderBy(F.rand(seed)).limit(k).collect()]
+            m = K.fit(df, K.KMeansConfig(k=k, max_iter=0, seed=seed))
+            assert m.centroids == want and m.n_iter == 0
+            looped = K._draw_job(base, k, seed, 1, 0.0)
+            assert looped.centroids == want and len(looped.rounds) == 1
+            assert K.sample_initial_centroids(df, k, seed) == want
+        assert sized == []
+        monkeypatch.setattr(K, "_estimated_bytes", lambda _p: K._TASK_BYTES + 1)
+        cfg = K.KMeansConfig(k=4, max_iter=1, seed=seed)
+        assert K.fit(df, cfg).n_iter == 1
         assert sized == [df.count() * 3 * 8]
         with pytest.raises(ValueError, match="empty dataset"):
             K.fit(empty, cfg)
@@ -571,19 +606,35 @@ _RAGGED = [[1.0], [2.0, 3.0, 4.0], [5.0, 6.0], [7.0, 8.0]]  # 8 values = 4×2
 def test_fit_refuses_ragged_and_null_vectors_in_its_first_job(
     spark, rows, k, match
 ):
-    """The init sample's job checks the data-model contract (fixed-arity,
+    """The fit's first job checks the data-model contract (fixed-arity,
     non-NULL vectors): ``fit`` raises ``ValueError`` after that one job,
-    before any loop job. Ragged rows whose values total n·d would
-    otherwise be re-sliced into d-vectors by the kernel's reshape."""
+    before any round is used. Ragged rows whose values total n·d would
+    otherwise be re-sliced into d-vectors by the kernel's reshape. Both
+    draws check it: over the input's own partitions (a createDataFrame
+    input has no size estimate) and as one task that would loop (the
+    same rows, cached)."""
     df = spark.createDataFrame([(r,) for r in rows], "embedding array<double>")
     cfg = K.KMeansConfig(k=k, max_iter=3, tol=0.0, seed=1)
+    tracker = spark.sparkContext.statusTracker()
 
     def run():
         with pytest.raises(ValueError, match=match):
             K.fit(df, cfg)
 
-    _, jobs = jobs_in_group(spark, f"fit-refuses-{k}-{match}", run)
-    assert len(jobs) == 1, jobs
+    try:
+        for cached in (False, True):
+            _, jobs = jobs_in_group(
+                spark, f"fit-refuses-{k}-{match}-{cached}", run
+            )
+            assert len(jobs) == 1, jobs
+            if cached:
+                stages = tracker.getJobInfo(jobs[0]).stageIds
+                assert [tracker.getStageInfo(st).numTasks
+                        for st in stages] == [1]
+            df = df.cache()
+            df.count()
+    finally:
+        df.unpersist()
 
 
 def test_arrow_combiner_refuses_batches_it_cannot_decode(spark):
@@ -612,11 +663,14 @@ def test_arrow_combiner_refuses_batches_it_cannot_decode(spark):
                                    "features array<double>").coalesce(1)
     with pytest.raises(PythonException, match=r"sizes 1\.\.3, not d=2"):
         K.cluster_features_arrow(ragged, cents)
-    # a NULL element passes fit's first job and stops at the loop's kernel
+    # a NULL element passes a draw without rounds and stops at the loop's
+    # kernel; a draw job's one task that would loop refuses it itself
     holed = spark.createDataFrame([([1.0, 2.0],), ([3.0, None],)],
                                   "embedding array<double>")
     with pytest.raises(PythonException, match="1 NULL element"):
         K.fit(holed, K.KMeansConfig(k=1, max_iter=2, seed=1))
+    with pytest.raises(PythonException, match="1 NULL element"):
+        K._draw_job(holed.select("embedding"), 1, 1, 2, 0.0)
 
 
 def test_config_rejects_k_below_one_and_negative_max_iter():
@@ -796,11 +850,15 @@ def test_cli_refuses_malformed_input_after_one_job(spark, tmp_path, capsys,
     assert not out.exists()
 
 
-def test_cli_run_is_three_jobs(spark, tmp_path):
+def test_cli_run_is_two_jobs(spark, tmp_path):
     """A valid CLI run at perfbench's ``kmeans_lloyd`` shape (20k×64 blobs,
-    k=8, 5 iterations, epsilon 0) is 3 Spark jobs: the init sample, which
-    also fills the fit's cache and checks the input, the loop job, and the
-    centroid write."""
+    k=8, 5 iterations, epsilon 0) is 2 Spark jobs: the fit's one job of
+    one task, which parses the text, fills the fit's cache, checks the
+    input, draws the init and runs all 5 rounds, then the centroid
+    write."""
+    import json
+    import os
+
     from k_means_in_mapreduce_spark.cli import main
     from perfbench import gen
 
@@ -813,7 +871,37 @@ def test_cli_run_is_three_jobs(spark, tmp_path):
         spark, "cli-valid-run",
         lambda: rc.append(main([text, "8", "5", out, "64", "0", "8"])),
     )
-    assert rc == [0] and len(jobs) == 3, (rc, jobs)
+    assert rc == [0] and len(jobs) == 2, (rc, jobs)
+    tracker = spark.sparkContext.statusTracker()
+    stages = tracker.getJobInfo(jobs[0]).stageIds
+    assert [tracker.getStageInfo(st).numTasks for st in stages] == [1]
+    report = json.load(open(os.path.join(out, "_run_report.json")))
+    assert report["iterations"] == 5 and report["empty_cluster_reinits"] == 0
+
+
+def test_fit_with_one_reinit_is_two_jobs(spark, tmp_path):
+    """A one-task fit that meets one empty cluster (C4) is 2 jobs of one
+    task each: the first draws and loops until the empty round, the
+    second re-draws with seed + 1000 and loops the remaining rounds
+    (perfbench's ``kmeans_lloyd`` warm fit on seed-7 blobs)."""
+    from perfbench import gen
+
+    parquet = str(tmp_path / "blobs.parquet")
+    gen.write_blobs(gen.blobs(7), parquet, str(tmp_path / "blobs.txt"))
+    df = spark.read.parquet(parquet).cache()
+    df.count()
+    cfg = K.KMeansConfig(k=8, max_iter=5, tol=0.0, seed=42)
+    tracker = spark.sparkContext.statusTracker()
+    try:
+        m, jobs = jobs_in_group(spark, "fit-one-reinit",
+                                lambda: K.fit(df, cfg))
+        assert (m.n_iter, m.reinit_count) == (5, 1)
+        assert len(jobs) == 2, jobs
+        for job in jobs:
+            stages = tracker.getJobInfo(job).stageIds
+            assert [tracker.getStageInfo(st).numTasks for st in stages] == [1]
+    finally:
+        df.unpersist()
 
 
 def test_iteration_partitions_regimes():
