@@ -312,6 +312,40 @@ def bench_kmeans_iteration(
     return out
 
 
+def bench_cli_reference(counters) -> dict:
+    """The reference's own CLI form, ``<input> <k> <max_iter> <output>
+    <dim> <epsilon> <num_reducer>``, at its 400k×30, k=4 grid point:
+    ``cli.main`` on seeded blobs written once as ``<x1, x2, …>`` text
+    (``perfbench.gen``), 10 iterations, epsilon 0. Each rep parses the
+    text, fits and writes the centroids. Returns the median and min wall
+    of 3 reps, their sorted walls and the warm reps' profile."""
+    import shutil
+    import tempfile
+
+    from k_means_in_mapreduce_spark import cli
+    from perfbench import gen
+
+    tmp = tempfile.mkdtemp(prefix="bench-cli-")
+    try:
+        txt = os.path.join(tmp, "points.txt")
+        gen.write_blobs(gen.blobs(1, n=BENCH_N_LARGE, dim=30),
+                        os.path.join(tmp, "points.parquet"), txt)
+        argv = [txt, str(BENCH_K), "10", os.path.join(tmp, "out"), "30",
+                "0", str(CPUS)]
+        walls, rcs, prof = timed_reps(counters, "cli_400k", 3,
+                                      lambda: cli.main(argv))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    if any(rcs):
+        raise RuntimeError(f"cli exit codes {rcs}")
+    return {
+        "wall": round(statistics.median(walls), 3),
+        "wall_min": round(min(walls), 3),
+        "spread": [round(w, 3) for w in sorted(walls)],
+        "profile": prof,
+    }
+
+
 def clear_artifact_cache(sf_dir: str) -> int:
     """Delete sf_dir's scratch directory ``.tmp/<tag>`` (every artifact
     the package built for it: the IVF index, the file round trips and the
@@ -375,6 +409,7 @@ def main() -> None:
     # settle sleep, so the spread list is reported as-is and the median
     # is the comparable number.
     km4 = bench_kmeans_iteration(spark, counters, BENCH_N_LARGE, repeats=5)
+    cli4 = bench_cli_reference(counters)
     hl_after_kmeans = read_host_load()
 
     per_query: dict[str, float] = {}
@@ -428,6 +463,8 @@ def main() -> None:
             "sec_per_iter_mllib": round(km["mllib"]["sec_per_iter"], 3),
             "total_wall_sec": round(km["arrow"]["wall"], 3),
         },
+        # the reference's 7-argument CLI on 400k×30 text (bench_cli_reference)
+        "cli_400k": {k: v for k, v in cli4.items() if k != "profile"},
         "kmeans_400k": {
             "n": km4["n"],
             "sec_per_iter_arrow": round(km4["arrow"]["sec_per_iter"], 3),
@@ -450,6 +487,7 @@ def main() -> None:
             "mllib_100k": km["mllib"]["profile"],
             "arrow_400k": km4["arrow"]["profile"],
             "mllib_400k": km4["mllib"]["profile"],
+            "cli_400k": cli4["profile"],
         },
         # per-method wall-clock spreads (sorted; BENCH_REPEATS fits per
         # 100k entry, 5 per 400k one) so variance is visible next to the
@@ -459,6 +497,7 @@ def main() -> None:
             "mllib_100k": km["mllib"]["spread"],
             "arrow_400k": km4["arrow"]["spread"],
             "mllib_400k": km4["mllib"]["spread"],
+            "cli_400k": cli4["spread"],
         },
         "total_query_sec": round(
             sum(v for v in per_query.values() if v > 0), 3

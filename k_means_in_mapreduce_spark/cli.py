@@ -16,10 +16,11 @@ can switch by replacing the ``hadoop jar`` prefix with
   ``KMeans.java:119-127,189-193`` — the reference appends in its working
   directory; inside the output dir it would be wiped by the next run's
   overwrite)
-- ``dim``: a line that is not exactly ``dim`` numbers parses as a NULL
-  vector, which the fit's first job refuses: exit code 1 (the reference
-  trusts each line's arity, ``Point.java:26``, and dies on a malformed
-  token, ``KMeans.java:269``)
+- ``dim``: the Arrow parse (``sources.text_points.parse_points``) makes
+  a line that is not exactly ``dim`` numbers, or has a malformed token, a
+  NULL vector, which the fit's first job refuses: exit code 1 (the
+  reference trusts each line's arity, ``Point.java:26``, and dies on a
+  malformed token, ``KMeans.java:269``)
 - ``num_reducer``: becomes ``spark.sql.shuffle.partitions``
   (``KMeans.java:133`` setNumReduceTasks)
 
@@ -89,8 +90,6 @@ def main(argv: list[str] | None = None) -> int:
         print(f"epsilon must be >= 0\n{USAGE}", file=sys.stderr)
         return 2
 
-    from pyspark.sql import functions as F
-
     from .session import get_session
     from .sources.text_points import parse_points
 
@@ -103,13 +102,10 @@ def main(argv: list[str] | None = None) -> int:
     # num_reducer mapping unconditionally (KMeans.java:133)
     spark.conf.set("spark.sql.shuffle.partitions", str(num_reducer))
 
-    # a line that is not exactly `dim` numbers becomes a NULL vector,
-    # which the fit's first job counts and refuses; fit caches the rows
-    f = F.col("features")
-    pts = parse_points(spark, inp).select(
-        F.when((F.size(f) == dim) & ~F.exists(f, lambda x: x.isNull()), f)
-        .alias("features")
-    )
+    # the parse makes a line that is not exactly `dim` numbers a NULL
+    # vector, which the fit's first job counts and refuses; the parse runs
+    # in that job's task, under the fit's cache
+    pts = parse_points(spark, inp, dim)
     return _run_fit(
         pts, spark, k, dim, max_iter, epsilon, seed, inp, out, fidelity,
     )

@@ -617,8 +617,9 @@ def _estimated_bytes(points: DataFrame) -> int:
     """The optimizer's size estimate of the one-column ``points``, scaled
     to 8-byte vector elements (a cached ``array<float>`` reads half its
     decoded size). It only decides whether a fit tries one task: measured,
-    a parquet plan reads low and a text plan high, so the task itself
-    holds to ``_TASK_BYTES``."""
+    a parquet plan reads low, and a text plan reads the text's file size
+    (its parse, a ``mapInArrow``, passes its child's size through), so the
+    task itself holds to ``_TASK_BYTES``."""
     jdf = points._jdf
     size = int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     elem = jdf.schema().fields()[0].dataType().elementType().defaultSize()

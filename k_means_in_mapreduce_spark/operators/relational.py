@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import query
 from ..sources import load_table
+from .setops import with_empty_total
 
 
 # ---------------------------------------------------------------------------
@@ -323,14 +324,17 @@ def nations_both_sides(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rollup_lineitem_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
+    aggs = {"sum_qty": F.sum("l_quantity"), "n": F.count(F.lit(1))}
+    grouped = li.rollup("l_returnflag", "l_linestatus").agg(
         F.grouping("l_returnflag").cast("int").alias("g_flag"),
         F.grouping("l_linestatus").cast("int").alias("g_status"),
-        F.sum("l_quantity").alias("sum_qty"),
-        F.count(F.lit(1)).alias("n"),
+        *(c.alias(k) for k, c in aggs.items()),
     ).select(
         "l_returnflag", "l_linestatus", "g_flag", "g_status", "sum_qty", "n"
     )
+    key = F.lit(None).cast("string")
+    return with_empty_total(grouped, li, l_returnflag=key, l_linestatus=key,
+                            g_flag=F.lit(1), g_status=F.lit(1), **aggs)
 
 
 @query(

@@ -9,7 +9,9 @@ here with Spark builtins so the engine's surface is complete).
   aggregations / left-semi / left-anti joins under AQE — no sort.
 - CUBE and GROUPING SETS over lineitem dimensions. Group-key NULLs that
   cube/rollup inject are COALESCEd to the literal 'ALL' so results are
-  total-order comparable across engines.
+  total-order comparable across engines. Over an empty table SQL still
+  gives the ``()`` grouping set its one row, and Spark's Expand gives
+  none: :func:`with_empty_total` adds it.
 """
 
 from __future__ import annotations
@@ -19,6 +21,19 @@ from pyspark.sql import functions as F
 
 from ..catalog import query
 from ..sources import load_table, register_views
+
+
+def with_empty_total(grouped: DataFrame, src: DataFrame, **row) -> DataFrame:
+    """``grouped``, a GROUP BY over ``src`` with a ``()`` grouping set,
+    plus SQL's grand-total row when ``src`` is empty. ``row`` gives each of
+    ``grouped``'s columns as an expression of a global aggregate over
+    ``src``. That aggregate always has one row, kept only when it counted
+    no input, so on a non-empty ``src`` nothing is added."""
+    total = src.agg(F.count(F.lit(1)).alias("_rows"),
+                    *(c.alias(k) for k, c in row.items()))
+    return grouped.unionByName(
+        total.filter(F.col("_rows") == 0).select(*grouped.columns)
+    )
 
 
 @query(
@@ -90,12 +105,10 @@ def cube_lineitem_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (returnflag, linestatus): all 2^2 grouping combinations
     in one pass (Spark expands to a single Expand + hash aggregate)."""
     li = load_table(spark, sf_dir, "lineitem")
-    return (
+    aggs = {"n_rows": F.count(F.lit(1)), "sum_qty": F.sum("l_quantity")}
+    grouped = (
         li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("l_quantity").alias("sum_qty"),
-        )
+        .agg(*(c.alias(k) for k, c in aggs.items()))
         .select(
             F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
             F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
@@ -103,6 +116,8 @@ def cube_lineitem_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_qty",
         )
     )
+    return with_empty_total(grouped, li, returnflag=F.lit("ALL"),
+                            linestatus=F.lit("ALL"), **aggs)
 
 
 @query(
@@ -120,7 +135,7 @@ def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS: per-status totals, per-priority totals, and
     the grand total in one aggregation pass."""
     register_views(spark, sf_dir, ("orders",))
-    return spark.sql(
+    grouped = spark.sql(
         """
         SELECT coalesce(o_orderstatus, 'ALL') AS orderstatus,
                coalesce(o_orderpriority, 'ALL') AS orderpriority,
@@ -129,4 +144,9 @@ def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         """
+    )
+    return with_empty_total(
+        grouped, spark.table("orders"), orderstatus=F.lit("ALL"),
+        orderpriority=F.lit("ALL"), n_orders=F.count(F.lit(1)),
+        total_price=F.sum("o_totalprice"),
     )

@@ -133,3 +133,23 @@ def test_zero_norm_embedding_scores_null(spark, tmp_path, zero_id):
     finally:
         con.close()
         bench.clear_artifact_cache(sf_dir)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["rollup_lineitem_status", "cube_lineitem_flags", "grouping_sets_orders"],
+)
+def test_grouping_sets_give_the_grand_total_row_on_empty_tables(
+        spark, tmp_path, name):
+    """SQL gives the ``()`` grouping set one row over an empty table (count
+    0, sums NULL); so does the engine, and on the full fixture it adds no
+    row."""
+    for n_rows in (0, 10**9):
+        (tmp_path / str(n_rows)).mkdir()
+        sf_dir = degenerate_fixture(tmp_path / str(n_rows), n_rows)
+        con = make_duck_con(sf_dir)
+        got = registry.QUERIES[name](spark, sf_dir)
+        if n_rows == 0:
+            assert got.count() == 1
+        assert_oracle_match(got, registry.ORACLES[name], con)
+        con.close()

@@ -826,6 +826,10 @@ def test_cli_rejects_non_numeric_tokens_and_negative_epsilon(spark, tmp_path):
         pytest.param("<1.0, 2.0>\n<3.0, abc>\n<5.0, 6.0>\n", 2, id="non-numeric"),
         pytest.param("<1.0, 2.0>\n<3.0>\n<5.0, 6.0>\n", 2, id="ragged"),
         pytest.param("<1.0, 2.0>\n<3.0, 4.0>\n<5.0, 6.0>\n", 3, id="wrong-dim"),
+        # `1d` sends the batch token by token, where `1_000` (which
+        # Python's float() reads) must still be malformed, as Spark reads it
+        pytest.param("<1d, 2.0>\n<3.0, 1_000>\n<5.0, 6.0>\n", 2,
+                     id="token-by-token"),
     ],
 )
 def test_cli_refuses_malformed_input_after_one_job(spark, tmp_path, capsys,
@@ -848,6 +852,37 @@ def test_cli_refuses_malformed_input_after_one_job(spark, tmp_path, capsys,
     bad = 3 if dim == 3 else 1
     assert f"{bad} of 3 vectors are NULL" in capsys.readouterr().err
     assert not out.exists()
+
+
+def test_cli_reads_java_spellings_as_the_plain_ones(spark, tmp_path):
+    """A file whose only unusual spelling is ``1d`` (Java's double suffix,
+    which Spark's cast reads and pyarrow's refuses, so its batch parses
+    token by token) fits to the same centroids and movement history as
+    the same file spelled ``1.0``."""
+    import json
+    import os
+
+    from k_means_in_mapreduce_spark.cli import main
+
+    rng = np.random.default_rng(3)
+    x = np.concatenate([rng.normal(c, 0.3, (100, 3)) for c in (0, 4, 8)])
+    lines = ["<" + ", ".join(map(repr, row)) + ">" for row in x.tolist()]
+    lines[0] = "<1.0, 2.0, 3.0>"
+    runs = []
+    for name, text in (("plain", lines),
+                       ("suffix", ["<1d, 2.0, 3.0>", *lines[1:]])):
+        inp = tmp_path / name
+        inp.mkdir()
+        (inp / "points.txt").write_text("\n".join(text) + "\n")
+        out = str(tmp_path / f"{name}_out")
+        assert main([str(inp), "3", "10", out, "3", "0", "4"]) == 0
+        report = json.load(open(os.path.join(out, "_run_report.json")))
+        cents = sorted(
+            r["value"]
+            for r in spark.read.text(os.path.join(out, "part-*")).collect()
+        )
+        runs.append((cents, report["movement_history"]))
+    assert runs[0] == runs[1]
 
 
 def test_cli_run_is_two_jobs(spark, tmp_path):
