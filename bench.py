@@ -312,29 +312,38 @@ def bench_kmeans_iteration(
     return out
 
 
-def bench_cli_reference(counters) -> dict:
+def bench_cli_reference(counters, row: str = "cli_400k",
+                        n: int = BENCH_N_LARGE, dim: int = 30) -> dict:
     """The reference's own CLI form, ``<input> <k> <max_iter> <output>
-    <dim> <epsilon> <num_reducer>``, at its 400k×30, k=4 grid point:
-    ``cli.main`` on seeded blobs written once as ``<x1, x2, …>`` text
-    (``perfbench.gen``), 10 iterations, epsilon 0. Each rep parses the
-    text, fits and writes the centroids. Returns the median and min wall
-    of 3 reps, their sorted walls and the warm reps' profile."""
+    <dim> <epsilon> <num_reducer>``, by default at its 400k×30, k=4 grid
+    point: ``cli.main`` on seeded n×dim blobs written once as
+    ``<x1, x2, …>`` text (``perfbench.gen``), 10 iterations, epsilon 0.
+    Each rep parses the text, fits and writes the centroids. Returns the
+    median and min wall of 3 reps, their sorted walls, the warm reps'
+    profile and the peak resident MB over the reps of each kind of
+    process (driver, java, python: ``perfbench.run.RssSampler``; the
+    JVM's part also holds what earlier rows left in its heap)."""
     import shutil
     import tempfile
 
     from k_means_in_mapreduce_spark import cli
     from perfbench import gen
+    from perfbench.run import RssSampler
 
     tmp = tempfile.mkdtemp(prefix="bench-cli-")
+    rss = RssSampler()
     try:
         txt = os.path.join(tmp, "points.txt")
-        gen.write_blobs(gen.blobs(1, n=BENCH_N_LARGE, dim=30),
+        gen.write_blobs(gen.blobs(1, n=n, dim=dim),
                         os.path.join(tmp, "points.parquet"), txt)
-        argv = [txt, str(BENCH_K), "10", os.path.join(tmp, "out"), "30",
+        argv = [txt, str(BENCH_K), "10", os.path.join(tmp, "out"), str(dim),
                 "0", str(CPUS)]
-        walls, rcs, prof = timed_reps(counters, "cli_400k", 3,
+        rss.start()
+        walls, rcs, prof = timed_reps(counters, row, 3,
                                       lambda: cli.main(argv))
     finally:
+        if rss.is_alive():
+            rss.stop()
         shutil.rmtree(tmp, ignore_errors=True)
     if any(rcs):
         raise RuntimeError(f"cli exit codes {rcs}")
@@ -342,6 +351,8 @@ def bench_cli_reference(counters) -> dict:
         "wall": round(statistics.median(walls), 3),
         "wall_min": round(min(walls), 3),
         "spread": [round(w, 3) for w in sorted(walls)],
+        "peak_rss_mb": {k: round(v / 1024, 1)
+                        for k, v in sorted(rss.peak_parts.items())},
         "profile": prof,
     }
 
@@ -410,6 +421,8 @@ def main() -> None:
     # is the comparable number.
     km4 = bench_kmeans_iteration(spark, counters, BENCH_N_LARGE, repeats=5)
     cli4 = bench_cli_reference(counters)
+    # a one-task CLI fit: 100k×64 text of 122 MiB, under the 128 MiB limit
+    cli1 = bench_cli_reference(counters, "cli_100k", BENCH_N, 64)
     hl_after_kmeans = read_host_load()
 
     per_query: dict[str, float] = {}
@@ -465,6 +478,7 @@ def main() -> None:
         },
         # the reference's 7-argument CLI on 400k×30 text (bench_cli_reference)
         "cli_400k": {k: v for k, v in cli4.items() if k != "profile"},
+        "cli_100k": {k: v for k, v in cli1.items() if k != "profile"},
         "kmeans_400k": {
             "n": km4["n"],
             "sec_per_iter_arrow": round(km4["arrow"]["sec_per_iter"], 3),
@@ -488,6 +502,7 @@ def main() -> None:
             "arrow_400k": km4["arrow"]["profile"],
             "mllib_400k": km4["mllib"]["profile"],
             "cli_400k": cli4["profile"],
+            "cli_100k": cli1["profile"],
         },
         # per-method wall-clock spreads (sorted; BENCH_REPEATS fits per
         # 100k entry, 5 per 400k one) so variance is visible next to the
@@ -498,6 +513,7 @@ def main() -> None:
             "arrow_400k": km4["arrow"]["spread"],
             "mllib_400k": km4["mllib"]["spread"],
             "cli_400k": cli4["spread"],
+            "cli_100k": cli1["spread"],
         },
         "total_query_sec": round(
             sum(v for v in per_query.values() if v > 0), 3

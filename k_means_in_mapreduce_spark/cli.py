@@ -16,7 +16,7 @@ can switch by replacing the ``hadoop jar`` prefix with
   ``KMeans.java:119-127,189-193`` — the reference appends in its working
   directory; inside the output dir it would be wiped by the next run's
   overwrite)
-- ``dim``: the Arrow parse (``sources.text_points.parse_points``) makes
+- ``dim``: the Arrow parse (``sources.text_points.point_parse``) makes
   a line that is not exactly ``dim`` numbers, or has a malformed token, a
   NULL vector, which the fit's first job refuses: exit code 1 (the
   reference trusts each line's arity, ``Point.java:26``, and dies on a
@@ -91,7 +91,7 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     from .session import get_session
-    from .sources.text_points import parse_points
+    from .sources.text_points import point_parse, text_lines
 
     seed = int(os.environ.get("SPARK_GRAFT_SEED", "42"))
     spark = get_session(
@@ -103,11 +103,11 @@ def main(argv: list[str] | None = None) -> int:
     spark.conf.set("spark.sql.shuffle.partitions", str(num_reducer))
 
     # the parse makes a line that is not exactly `dim` numbers a NULL
-    # vector, which the fit's first job counts and refuses; the parse runs
-    # in that job's task, under the fit's cache
-    pts = parse_points(spark, inp, dim)
+    # vector, which the fit's first job counts and refuses; a one-task fit
+    # parses in that job's own task, and other fits cache the parse
     return _run_fit(
-        pts, spark, k, dim, max_iter, epsilon, seed, inp, out, fidelity,
+        text_lines(spark, inp), point_parse(dim), spark, k, dim, max_iter,
+        epsilon, seed, inp, out, fidelity,
     )
 
 
@@ -178,9 +178,10 @@ def _write_centroid_text(spark, centroids, path) -> None:
 
 
 def _run_fit(
-    pts, spark, k, dim, max_iter, epsilon, seed, inp, out, fidelity=False,
+    lines, parse, spark, k, dim, max_iter, epsilon, seed, inp, out,
+    fidelity=False,
 ) -> int:
-    from .operators.kmeans_df import KMeansConfig, fit
+    from .operators.kmeans_df import KMeansConfig, TooFewRows, fit
 
     # --fidelity pre-flight, BEFORE any Spark work: every pre-existing
     # local <output><i> dir will either be overwrite-written (i <= final
@@ -260,15 +261,15 @@ def _run_fit(
     # `dim` numbers is a NULL vector, and fit refuses those in its first job
     try:
         model = fit(
-            pts,
-            KMeansConfig(
-                k=k,
-                max_iter=max_iter,
-                tol=epsilon,
-                seed=seed,
-                features_col="features",
-            ),
+            lines,
+            KMeansConfig(k=k, max_iter=max_iter, tol=epsilon, seed=seed),
+            parse=parse,
         )
+    except TooFewRows as ex:
+        held = f"{ex.n} point(s)" if ex.n else "no points"
+        print(f"invalid input: {inp} holds {held}, fewer than k={k}",
+              file=sys.stderr)
+        return 1
     except ValueError as ex:
         print(
             f"invalid input: {ex} (each line must be exactly dim={dim} "

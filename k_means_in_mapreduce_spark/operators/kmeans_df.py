@@ -33,12 +33,15 @@ Scale design (100 TB, 1000 executors):
   ``KMeans.java:147``); an input the caller already cached is read
   through its cache. On a real cluster use ``StorageLevel.MEMORY_AND_DISK``
   (default for ``DataFrame.cache``) so partitions spill instead of OOM.
+  A one-task fit of text lines (the CLI's) fills no cache: its task
+  parses and loops, as the reference parses each line in the map task
+  that assigns it (``KMeans.java:54-61``).
 - the fit's first job is a draw (:func:`_draw_job`): the k rows of
   smallest iid ``F.rand(seed)`` key, and the row count, NULL-vector
-  count and size range, so that one job also fills the cache and checks
-  the input contract: no separate count or validation job. The reference
-  draws its init in the process that reads the data
-  (``KMeans.java:276-312``).
+  count and size range, so that one job also reads the input (filling
+  the cache, or parsing the lines) and checks the input contract: no
+  separate count or validation job. The reference draws its init in the
+  process that reads the data (``KMeans.java:276-312``).
 - the loop runs one Arrow task per 128 MiB of vectors (``_TASK_BYTES``),
   the reference's one map task per HDFS block
   (:func:`_iteration_partitions`). Over several tasks each round is one
@@ -47,12 +50,14 @@ Scale design (100 TB, 1000 executors):
   task, the draw job is one Arrow task (:func:`_draw_kernel`), which
   holds its decoded batches while they stay within 128 MiB and then runs
   every round from its own draw: the whole fit is one job, plus one per
-  C4 re-init, since
-  per-job scheduling and planning, not the kernel, dominate a round at
-  that size. A task that outgrows the limit only draws, and the loop is
-  sized from the exact n·d·8. The fit sets no session conf: AQE stays as
-  the caller set it, and only the rare grow-and-cache path in
-  :func:`fit` has an exchange for it to run as jobs of their own.
+  C4 re-init, since per-job scheduling and planning, not the kernel,
+  dominate a round at that size. Given text lines and their parse, that
+  task parses them itself: one Python worker, where a parse below a cache
+  would run a second one beside the kernel's. A task that outgrows the
+  limit only draws, and the loop is sized from the exact n·d·8 (text
+  lines are then parsed into a cache). The fit sets no session conf:
+  AQE stays as the caller set it, and only the rare grow-and-cache path
+  in :func:`fit` has an exchange for it to run as jobs of their own.
 - each batch's step is two GEMMs: the distances by the norm expansion
   ‖x‖²−2x·Cᵀ+‖c‖² (‖x‖² computed once per decoded batch) and the
   per-cluster sums as a k×batch one-hot times the batch, both
@@ -367,9 +372,12 @@ _DRAW_SCHEMA = ("cluster_id int, n long, s array<double>, round int, "
                 "key double, nulls long, lo int, hi int")
 
 
-def _draw_kernel(k: int, rounds: int, tol: float):
+def _draw_kernel(k: int, rounds: int, tol: float, parse=None):
     """The body of a one-task draw job, over Arrow batches of two
-    columns: the vectors and an iid uniform key. In one pass the task
+    columns: the vectors and an iid uniform key. With ``parse`` the first
+    column holds text lines instead, which ``parse`` turns into the
+    vectors batch by batch, as it would below a cache: the task reads,
+    parses, draws and loops in one Python worker. In one pass the task
 
     - counts its rows and NULL vectors and takes the range of vector
       sizes: one stats row (``n``, ``nulls``, ``lo``, ``hi``);
@@ -388,11 +396,29 @@ def _draw_kernel(k: int, rounds: int, tol: float):
     limit = _TASK_BYTES
     decode, lloyd_rounds = _decode, _lloyd_rounds  # nested: by value
 
+    def parsed(batches):
+        """``parse``'s batches, each with its input batch's key beside the
+        vectors (``parse`` yields one batch of the same rows per batch)."""
+        import pyarrow as pa
+
+        keys = []
+
+        def lines():
+            for b in batches:
+                keys.append(b.column(1))
+                yield b
+
+        for p in parse(lines()):
+            yield pa.RecordBatch.from_arrays([p.column(0), keys.pop(0)],
+                                             ["features", "key"])
+
     def task(batches):
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
+        if parse is not None:
+            batches = parsed(batches)
         vec = pa.list_(pa.float64())
         schema = pa.schema([
             ("cluster_id", pa.int32()), ("n", pa.int64()), ("s", vec),
@@ -411,7 +437,7 @@ def _draw_kernel(k: int, rounds: int, tol: float):
         n = nulls = 0
         lo = hi = None
         top_keys, top_rows = np.empty(0), pa.array([], vec)
-        held = []  # None once this task cannot loop
+        held = [] if rounds else None  # None once this task cannot loop
         for b in batches:
             col, key = b.column(0), b.column(1).to_numpy()
             n += b.num_rows
@@ -487,22 +513,26 @@ class _Draw:
 
 
 def _draw_job(points: DataFrame, k: int, seed: int, rounds: int,
-              tol: float) -> _Draw:
+              tol: float, parse=None) -> _Draw:
     """One Spark job that draws the rows of ``ORDER BY rand(seed) LIMIT
     k`` over the one-column ``points`` and takes its stats.
 
-    With ``rounds > 0`` it is :func:`_draw_kernel` coalesced to one task,
-    which may also run the rounds. ``F.rand`` is evaluated below the
-    coalesce, so each row keeps its parent partition's key.
+    With ``rounds > 0`` or ``parse`` it is :func:`_draw_kernel`
+    coalesced to one task, which may also run the rounds. ``F.rand`` is
+    evaluated below the coalesce, so each row keeps its parent
+    partition's key. With ``parse``, ``points`` holds the text lines and
+    the task parses them: a parse is narrow, so the keys are those of the
+    same rows parsed.
 
-    With ``rounds == 0`` the draw stays in the JVM, over ``points``' own
-    partitions: ``ORDER BY rand LIMIT k`` plans TakeOrderedAndProject
-    (each task keeps its local top-k, the driver merges #partitions·k
-    rows), and observed metrics take the stats (``observe`` is a narrow
-    node, so ``F.rand`` sees the same partitions). A Python task would
+    Otherwise (``rounds == 0``) the draw stays in the JVM, over
+    ``points``' own partitions: ``ORDER BY rand LIMIT k`` plans
+    TakeOrderedAndProject (each task keeps its local top-k, the driver
+    merges #partitions·k rows), and observed metrics take the stats
+    (``observe`` is a narrow node, so ``F.rand`` sees the same
+    partitions). A Python task would
     read every vector only to keep k of them: at bench.py's 400k×64 row
     that draw took 0.40 s against 0.18 s (4-core VM, medians of 10)."""
-    if not rounds:
+    if not rounds and parse is None:
         seen = Observation()
         vec = points[0]
         rows = points.observe(
@@ -518,7 +548,7 @@ def _draw_job(points: DataFrame, k: int, seed: int, rounds: int,
     keyed = points.select("*", F.rand(seed).alias("key")).coalesce(1)
     stats = {"n": 0, "nulls": 0, "lo": None, "hi": None}  # no partition
     drawn, parts = [], []
-    for r in keyed.mapInArrow(_draw_kernel(k, rounds, tol),
+    for r in keyed.mapInArrow(_draw_kernel(k, rounds, tol, parse),
                               _DRAW_SCHEMA).collect():
         if r["round"] is not None:
             parts.append(r)
@@ -577,7 +607,7 @@ def sample_initial_centroids(
     in its own task."""
     got = _draw_job(df.select(features_col), k, seed, 0, 0.0)
     if got.n < k:
-        raise ValueError(f"dataset has fewer than k={k} rows")
+        raise TooFewRows(got.n, k)
     if any(c is None for c in got.centroids):
         raise ValueError("the sample drew a NULL vector")
     return got.centroids
@@ -626,11 +656,20 @@ def _estimated_bytes(points: DataFrame) -> int:
     return size * 8 // elem
 
 
+class TooFewRows(ValueError):
+    """The input holds fewer than ``k`` rows (``n`` of them, maybe 0)."""
+
+    def __init__(self, n: int, k: int) -> None:
+        super().__init__("empty dataset" if n == 0
+                         else f"dataset has {n} rows, fewer than k={k}")
+        self.n, self.k = n, k
+
+
 def _check_draw(got: _Draw, k: int) -> tuple[int, int]:
     """The input contract on the first draw job's stats; returns the row
     count and ``d``."""
     if got.n == 0:
-        raise ValueError("empty dataset")
+        raise TooFewRows(0, k)
     if got.nulls:
         raise ValueError(f"{got.nulls} of {got.n} vectors are NULL")
     if got.lo != got.hi:
@@ -638,11 +677,11 @@ def _check_draw(got: _Draw, k: int) -> tuple[int, int]:
             f"vectors are not fixed-arity: sizes {got.lo}..{got.hi}"
         )
     if got.n < k:
-        raise ValueError(f"dataset has fewer than k={k} rows")
+        raise TooFewRows(got.n, k)
     return got.n, got.hi
 
 
-def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
+def fit(df: DataFrame, config: KMeansConfig, parse=None) -> KMeansModel:
     """Iterate-until-converged driver loop (reference C2-C5).
 
     ``max_iter`` counts actual iterations (the reference's
@@ -661,6 +700,15 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
     any other input is cached for the fit and released afterwards. The
     caller's cache is never released.
 
+    With ``parse``, ``df`` holds text lines and ``parse`` is a function
+    over their Arrow batches that yields one batch of the same rows per
+    batch, the vectors in its one column (``text_points.point_parse``;
+    ``config.features_col`` is not read). The fit's vectors are then
+    ``df.mapInArrow(parse)``, built here, and that plan's size estimate
+    decides the path: a one-task fit parses the lines inside its own draw
+    task and fills no cache; a fit that needs more tasks, or whose task
+    outgrows 128 MiB, caches the parsed vectors and loops as any other.
+
     Input contract (the reference's, SURVEY §1.3): fixed-arity, non-NULL
     vectors. The first job checks it: ``ValueError`` names the count of
     NULL vectors, or the range of vector sizes, before any round is used.
@@ -668,9 +716,11 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
     executor.
 
     Jobs: when the plan's size estimate allows one task, the first job is
-    one task that fills the cache, counts and checks the rows, draws the
-    init and, if its vectors stayed within 128 MiB, runs every round: the
-    fit is 1 job, plus 1 per C4 re-init. Otherwise the first job only
+    one task that reads the input (filling the cache, or parsing the
+    lines), counts and checks the rows, draws the init and, if its
+    vectors stayed within 128 MiB, runs every round: the fit is 1 job,
+    plus 1 per C4 re-init, each a re-draw that reads the input again the
+    same way. Otherwise the first job only
     draws, over the input's partitions, and the loop is sized from the
     exact n·d·8 (:func:`_iteration_partitions`): one loop job per round
     over several tasks. ``fit`` sets no session conf, so concurrent fits
@@ -682,11 +732,19 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
     from pyspark.storagelevel import StorageLevel
 
     t_start = time.monotonic()
-    base = df.select(F.col(config.features_col).alias("features"))
+    base = (df.select(F.col(config.features_col).alias("features"))
+            if parse is None
+            else df.mapInArrow(parse, "features array<double>"))
     # The try/finally opens BEFORE the cache: a failure anywhere (empty
     # dataset, fewer-than-k rows, a dying executor) must still release
     # storage — embedded/notebook sessions outlive this call.
     owned = []  # caches this fit made, released on exit
+
+    def own(frame: DataFrame) -> DataFrame:
+        frame = frame.cache()
+        owned.append(frame)
+        return frame
+
     history: list[float] = []
     centroid_history: list[list[list[float]]] = []
     reinits = 0
@@ -694,20 +752,25 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
     n_iter = 0
 
     try:
-        if df.storageLevel == StorageLevel.NONE:
-            base = base.cache()
-            owned.append(base)
-        # Every draw is a _draw_job over `base`, which F.rand keys by
-        # base's own partitions: the init and each C4 re-draw are the rows
-        # of sample_initial_centroids(base, k, seed + 1000·r). The first
-        # job also fills the cache, counts the rows and checks the
-        # contract; tried as one task, it also runs the rounds.
         one_task = _estimated_bytes(base) <= _TASK_BYTES
-
+        # Lines tried as one task are parsed in each draw's own task;
+        # other inputs are read through a cache the first job fills.
+        fused = parse is not None and one_task
+        if not fused and (parse is not None
+                          or df.storageLevel == StorageLevel.NONE):
+            base = own(base)
+        # Every draw is a _draw_job over `base`'s partitions, which F.rand
+        # keys (the lines' partitions, when fused): the init and each C4
+        # re-draw are the rows of sample_initial_centroids(base, k, seed +
+        # 1000·r). The first job also counts the rows and checks the
+        # contract; tried as one task, it also runs the rounds.
         def draw(r: int) -> _Draw:
             rounds = config.max_iter - n_iter if one_task else 0
-            return _draw_job(base, config.k, config.seed + 1000 * r, rounds,
-                             config.tol)
+            seed = config.seed + 1000 * r
+            if fused:
+                return _draw_job(df, config.k, seed, rounds, config.tol,
+                                 parse)
+            return _draw_job(base, config.k, seed, rounds, config.tol)
 
         got = draw(0)
         n, dim = _check_draw(got, config.k)
@@ -720,6 +783,8 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
         while n_iter < config.max_iter and not converged:
             if not pending:
                 if points is None:
+                    if fused:  # the draw's task outgrew _TASK_BYTES
+                        base = own(base)
                     # Re-tile the cached points to one task per 128 MiB
                     # (see _iteration_partitions). Shrinking is a narrow
                     # coalesce straight off the cache. Growing re-caches a
@@ -738,8 +803,7 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
                     elif target > cur:
                         # no materializing count: the first loop job
                         # fills this cache
-                        points = base.repartition(target).cache()
-                        owned.append(points)
+                        points = own(base.repartition(target))
                     else:
                         points = base
                 rounds = config.max_iter - n_iter if target == 1 else 1

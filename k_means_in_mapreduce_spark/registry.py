@@ -224,10 +224,12 @@ def kmeans_fit_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full seeded Lloyd loop, reference-exact semantics; returns the
     oracle-checkable fit invariants (see ``_fit_invariants``)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    model = K.fit(
-        emb,
-        K.KMeansConfig(k=10, max_iter=10, tol=1e-3, seed=42),
-    )
+    try:
+        model = K.fit(emb, K.KMeansConfig(k=10, max_iter=10, tol=1e-3, seed=42))
+    except K.TooFewRows as ex:
+        raise ValueError(
+            f"embeddings has {ex.n} rows in {sf_dir}: the fit needs k=10"
+        ) from ex
     return _fit_invariants(K.assign_clusters(emb, model.centroids), k=10)
 
 

@@ -10,7 +10,12 @@ Ingest is one ``mapInArrow`` over a plain distributed text scan (at
 parses its own split): :func:`_parse_kernel` parses each Arrow batch with
 ``pyarrow.compute``, one vectorized cast per batch. Every token reads as
 Spark's ``try_cast(token AS double)`` reads it, NULL for a malformed one.
-Egress is Catalyst expressions (:func:`format_points`).
+:func:`parse_points` is that parse over :func:`text_lines`. The CLI hands
+the same lines and kernel (:func:`point_parse`) to ``kmeans_df.fit``
+instead, whose one-task fit runs the kernel inside its own draw task, as
+the reference parses each line in the map task that assigns it
+(``KMeans.java:54-61``). Egress is Catalyst expressions
+(:func:`format_points`).
 """
 
 from __future__ import annotations
@@ -120,17 +125,30 @@ def _parse_kernel(col: str, dim: int | None, keep: bool):
     return task
 
 
+def text_lines(spark: SparkSession, path: str) -> DataFrame:
+    """The non-blank lines of a reference-format text file or directory,
+    as one ``value`` column. The filter runs in the JVM, over the scan's
+    own partitions."""
+    return spark.read.text(path).filter(F.length(F.trim("value")) > 0)
+
+
+def point_parse(dim: int | None = None):
+    """The parse of :func:`parse_points` as a function over Arrow batches
+    of :func:`text_lines`: each batch becomes one of the same rows, a
+    ``features`` column. With ``dim``, a line that is not exactly ``dim``
+    numbers is a NULL vector (:func:`_parse_kernel`)."""
+    return _parse_kernel("value", dim, False)
+
+
 def parse_points(spark: SparkSession, path: str,
                  dim: int | None = None) -> DataFrame:
     """Read a reference-format text file into one ``features`` column,
-    skipping blank lines. No point id: the reference discards Hadoop's
-    byte-offset keys too. With ``dim``, a line that is not exactly ``dim``
-    numbers is a NULL vector (:func:`_parse_kernel`). The blank-line filter
-    runs in the JVM, and the parse is a narrow node over the scan's
-    partitions, so rows keep their partition and order."""
-    text = spark.read.text(path).filter(F.length(F.trim("value")) > 0)
-    return text.mapInArrow(_parse_kernel("value", dim, False),
-                           StructType([_FEATURES]))
+    skipping blank lines: :func:`point_parse` over :func:`text_lines`. No
+    point id: the reference discards Hadoop's byte-offset keys too. The
+    parse is a narrow node over the scan's partitions, so rows keep their
+    partition and order."""
+    return text_lines(spark, path).mapInArrow(point_parse(dim),
+                                              StructType([_FEATURES]))
 
 
 def parse_points_df(df: DataFrame, col: str = "value") -> DataFrame:

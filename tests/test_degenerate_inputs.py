@@ -153,3 +153,16 @@ def test_grouping_sets_give_the_grand_total_row_on_empty_tables(
             assert got.count() == 1
         assert_oracle_match(got, registry.ORACLES[name], con)
         con.close()
+
+
+@pytest.mark.parametrize("n_rows", [0, 3])
+def test_kmeans_fit_df_names_the_table_and_k(spark, tmp_path, n_rows):
+    """Fewer embeddings than k=10 (none, or three): ``kmeans_fit_df``
+    raises a ``ValueError`` that names the table, the sf_dir and k."""
+    sf_dir = degenerate_fixture(tmp_path, n_rows)
+    with pytest.raises(
+        ValueError,
+        match=f"^embeddings has {n_rows} rows in {re.escape(sf_dir)}: "
+              "the fit needs k=10$",
+    ):
+        registry.QUERIES["kmeans_fit_df"](spark, sf_dir)

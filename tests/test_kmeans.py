@@ -464,8 +464,9 @@ def _no_conf_set(monkeypatch):
 def test_fit_job_count_and_aqe_restored(spark, monkeypatch, partitions, target):
     """With the session's AQE left on, a fit whose vectors fit one task
     (1 partition kept, 12 coalesced down to it) is 1 job of one stage and
-    one task: it fills the cache, counts and checks the rows, draws the
-    init and runs every round. With no one-task try (the plan's estimate
+    one task: it fills the fit's cache of the uncached input, counts and
+    checks the rows, draws the init and runs every round. With no
+    one-task try (the plan's estimate
     over the limit) and the loop's target forced to 3 (1 partition grown
     and re-cached, the path taken only when cached partitions average
     over 128 MiB) the fit runs 3 + n_iter jobs: the draw over the input's
@@ -820,23 +821,39 @@ def test_cli_rejects_non_numeric_tokens_and_negative_epsilon(spark, tmp_path):
     assert rc2 == 2
 
 
+_DIM_HINT = "(each line must be exactly dim={} numbers)"
+
+
 @pytest.mark.parametrize(
-    "text,dim",
+    "text,dim,k,err",
     [
-        pytest.param("<1.0, 2.0>\n<3.0, abc>\n<5.0, 6.0>\n", 2, id="non-numeric"),
-        pytest.param("<1.0, 2.0>\n<3.0>\n<5.0, 6.0>\n", 2, id="ragged"),
-        pytest.param("<1.0, 2.0>\n<3.0, 4.0>\n<5.0, 6.0>\n", 3, id="wrong-dim"),
+        pytest.param("<1.0, 2.0>\n<3.0, abc>\n<5.0, 6.0>\n", 2, 2,
+                     "1 of 3 vectors are NULL " + _DIM_HINT.format(2),
+                     id="non-numeric"),
+        pytest.param("<1.0, 2.0>\n<3.0>\n<5.0, 6.0>\n", 2, 2,
+                     "1 of 3 vectors are NULL " + _DIM_HINT.format(2),
+                     id="ragged"),
+        pytest.param("<1.0, 2.0>\n<3.0, 4.0>\n<5.0, 6.0>\n", 3, 2,
+                     "3 of 3 vectors are NULL " + _DIM_HINT.format(3),
+                     id="wrong-dim"),
         # `1d` sends the batch token by token, where `1_000` (which
         # Python's float() reads) must still be malformed, as Spark reads it
-        pytest.param("<1d, 2.0>\n<3.0, 1_000>\n<5.0, 6.0>\n", 2,
+        pytest.param("<1d, 2.0>\n<3.0, 1_000>\n<5.0, 6.0>\n", 2, 2,
+                     "1 of 3 vectors are NULL " + _DIM_HINT.format(2),
                      id="token-by-token"),
+        pytest.param("", 2, 2, "{inp} holds no points, fewer than k=2",
+                     id="empty"),
+        pytest.param("<1.0, 2.0>\n<3.0, 4.0>\n", 2, 3,
+                     "{inp} holds 2 point(s), fewer than k=3", id="fewer-than-k"),
     ],
 )
 def test_cli_refuses_malformed_input_after_one_job(spark, tmp_path, capsys,
-                                                    text, dim):
+                                                    text, dim, k, err):
     """A line that is not exactly ``dim`` numbers parses as a NULL vector,
     which the fit's init-sample job counts: ``main`` returns 1 after that
-    one job, with the count on stderr, and writes no output."""
+    one job, with the count and the ``dim`` rule on stderr, and writes no
+    output. An empty input, or one of fewer than k points, fails the same
+    way, naming the input and k instead of the ``dim`` rule."""
     from k_means_in_mapreduce_spark.cli import main
 
     inp = tmp_path / "pts"
@@ -846,11 +863,13 @@ def test_cli_refuses_malformed_input_after_one_job(spark, tmp_path, capsys,
     rc = []
     _, jobs = jobs_in_group(
         spark, f"cli-malformed-{tmp_path.name}",
-        lambda: rc.append(main([str(inp), "2", "3", str(out), str(dim), "0", "8"])),
+        lambda: rc.append(main([str(inp), str(k), "3", str(out), str(dim), "0",
+                                "8"])),
     )
     assert rc == [1] and len(jobs) == 1, (rc, jobs)
-    bad = 3 if dim == 3 else 1
-    assert f"{bad} of 3 vectors are NULL" in capsys.readouterr().err
+    got = capsys.readouterr().err
+    assert f"invalid input: {err.format(inp=inp)}\n" in got, got
+    assert ("dim=" in got) == ("NULL" in err)
     assert not out.exists()
 
 
@@ -888,9 +907,8 @@ def test_cli_reads_java_spellings_as_the_plain_ones(spark, tmp_path):
 def test_cli_run_is_two_jobs(spark, tmp_path):
     """A valid CLI run at perfbench's ``kmeans_lloyd`` shape (20k×64 blobs,
     k=8, 5 iterations, epsilon 0) is 2 Spark jobs: the fit's one job of
-    one task, which parses the text, fills the fit's cache, checks the
-    input, draws the init and runs all 5 rounds, then the centroid
-    write."""
+    one task, which parses the text, checks the input, draws the init
+    and runs all 5 rounds, then the centroid write."""
     import json
     import os
 
@@ -937,6 +955,105 @@ def test_fit_with_one_reinit_is_two_jobs(spark, tmp_path):
             assert [tracker.getStageInfo(st).numTasks for st in stages] == [1]
     finally:
         df.unpersist()
+
+
+def _blobs_text(tmp_path, seed):
+    """perfbench's ``kmeans_lloyd`` blobs (20k×64) for ``seed``, as
+    reference-format text; returns its path."""
+    from perfbench import gen
+
+    text = str(tmp_path / f"blobs{seed}.txt")
+    gen.write_blobs(gen.blobs(seed), str(tmp_path / f"blobs{seed}.parquet"),
+                    text)
+    return text
+
+
+def _recorded_caches(spark, monkeypatch):
+    """Record every ``DataFrame.cache`` and ``persist`` call."""
+    frame = type(spark.range(1))  # the session's DataFrame class
+    calls = []
+    for name in ("cache", "persist"):
+        orig = getattr(frame, name)
+        monkeypatch.setattr(
+            frame, name,
+            lambda self, *a, _n=name, _o=orig: calls.append(_n) or _o(self, *a),
+        )
+    return calls
+
+
+@pytest.mark.parametrize("case", ["seed3", "seed7", "last-reinit", "outgrown"])
+def test_fused_text_fit_equals_the_cached_parse_fit(spark, tmp_path,
+                                                    monkeypatch, case):
+    """The CLI's fit of text lines and their parse (one task that parses,
+    draws and loops, no cache) and a fit of ``parse_points`` (cached, then
+    the same task over the cache) give ``==`` centroids, movement history
+    and re-init count on perfbench's blobs: seed 3 meets one C4 re-init at
+    k=8 in its second iteration, seed 7 none. Each job of the fused fit
+    is one task, also the re-draw after a C4 in the last iteration
+    (max_iter 2), which runs no round. In the outgrown case the task
+    limit sits below n·d·8 while the size estimate allows one task: the
+    fused task only draws, and the fit caches the parse and loops over
+    two tasks."""
+    from k_means_in_mapreduce_spark.sources.text_points import (
+        parse_points,
+        point_parse,
+        text_lines,
+    )
+
+    text = _blobs_text(tmp_path, 7 if case == "seed7" else 3)
+    cfg = K.KMeansConfig(k=8, max_iter=2 if case == "last-reinit" else 5,
+                         tol=0.0, seed=42, features_col="features")
+    if case == "outgrown":
+        monkeypatch.setattr(K, "_estimated_bytes", lambda _p: 0)
+        monkeypatch.setattr(K, "_TASK_BYTES", 20_000 * 64 * 8 // 2)
+    caches = _recorded_caches(spark, monkeypatch)
+    cached = K.fit(parse_points(spark, text, 64), cfg)
+    assert caches == ["cache"]
+    fused, jobs = jobs_in_group(
+        spark, f"fused-{case}",
+        lambda: K.fit(text_lines(spark, text), cfg, parse=point_parse(64)),
+    )
+    assert caches == ["cache"] * (2 if case == "outgrown" else 1)
+
+    assert fused.centroids == cached.centroids
+    assert fused.movement_history == cached.movement_history
+    assert fused.reinit_count == cached.reinit_count
+    assert (fused.n_iter, fused.reinit_count) == (
+        cfg.max_iter, 0 if case == "seed7" else 1)
+    if case != "outgrown":
+        tracker = spark.sparkContext.statusTracker()
+        assert len(jobs) == 1 + fused.reinit_count, jobs
+        for job in jobs:
+            assert [tracker.getStageInfo(st).numTasks
+                    for st in tracker.getJobInfo(job).stageIds] == [1], job
+
+
+def test_cli_one_task_fit_is_one_worker_without_a_cache(spark, tmp_path,
+                                                        monkeypatch):
+    """A one-task CLI run calls neither ``DataFrame.cache`` nor
+    ``persist``, and its first job's plan holds exactly one
+    ``MapInArrow`` node: the parse runs inside the fit's own task, one
+    Python worker, over the text scan."""
+    import re
+
+    from k_means_in_mapreduce_spark.cli import main
+
+    text = _blobs_text(tmp_path, 7)
+    caches = _recorded_caches(spark, monkeypatch)
+    rc = []
+    _, jobs = jobs_in_group(
+        spark, "cli-no-cache",
+        lambda: rc.append(main([text, "8", "5", str(tmp_path / "out"), "64",
+                                "0", "8"])),
+    )
+    assert rc == [0] and caches == [], (rc, caches)
+    store = spark._jsparkSession.sharedState().statusStore()
+    runs = store.executionsList()
+    plans = [runs.apply(i).physicalPlanDescription() for i in range(runs.size())
+             if runs.apply(i).jobs().contains(jobs[0])]
+    assert len(plans) == 1, plans
+    assert len(re.findall(r"MapInArrow \(\d+\)", plans[0])) == 1, plans[0]
+    assert "Scan text" in plans[0], plans[0]
 
 
 def test_iteration_partitions_regimes():
