@@ -783,8 +783,9 @@ def fit(df: DataFrame, config: KMeansConfig, parse=None) -> KMeansModel:
         while n_iter < config.max_iter and not converged:
             if not pending:
                 if points is None:
-                    if fused:  # the draw's task outgrew _TASK_BYTES
-                        base = own(base)
+                    if fused:  # the draw's task outgrew _TASK_BYTES:
+                        # the loop and later draws read a cache
+                        fused, base = False, own(base)
                     # Re-tile the cached points to one task per 128 MiB
                     # (see _iteration_partitions). Shrinking is a narrow
                     # coalesce straight off the cache. Growing re-caches a

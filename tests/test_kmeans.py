@@ -1009,11 +1009,19 @@ def test_fused_text_fit_equals_the_cached_parse_fit(spark, tmp_path,
     caches = _recorded_caches(spark, monkeypatch)
     cached = K.fit(parse_points(spark, text, 64), cfg)
     assert caches == ["cache"]
+    draw, parsed = K._draw_job, []
+    monkeypatch.setattr(K, "_draw_job", lambda *a: parsed.append(
+        len(a) > 5) or draw(*a))
     fused, jobs = jobs_in_group(
         spark, f"fused-{case}",
         lambda: K.fit(text_lines(spark, text), cfg, parse=point_parse(64)),
     )
     assert caches == ["cache"] * (2 if case == "outgrown" else 1)
+    # every draw parses the lines, except the C4 re-draw after an
+    # outgrown task, which reads the cache
+    want = ([True, False] if case == "outgrown"
+            else [True] * (1 + fused.reinit_count))
+    assert parsed == want, parsed
 
     assert fused.centroids == cached.centroids
     assert fused.movement_history == cached.movement_history
